@@ -8,7 +8,8 @@ import graft.core.{ColumnTransformation, EndpointSpec, ExpressionValidator, Migr
 import graft.engine.{TableTransferJob, TransferControl, TransferRunner}
 import graft.functions.MySqlDateFormat
 import graft.functions.Portable.fx
-import graft.ops.{Curation, Dedup, Layout, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Curation, Dedup, Layout, MediaKeys, Multimodal, Similarity, TextAnalysis}
+import graft.ops.MediaKeys.eventIds
 import graft.sinks.Upsert
 import graft.sources.Tables
 import graft.streaming.StreamingIngest
@@ -30,27 +31,6 @@ object SparkEntry {
 
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
-
-  /** Event-id scan for the synthetic-media gates, SPREAD before the
-    * generate/decode `mapPartitions` (r18 optimization round, guide
-    * §2.5 "input skew"): the events fixture is ONE parquet file with
-    * ONE row group, so every media gate's expensive per-row stage —
-    * synthetic gen + codec encode + real decode — inherited a
-    * single-task scan and ran on one core of 32 (measured: the decode
-    * stage of every video gate was a 1-task stage; spreading it cut
-    * `multimodal_video_fingerprint` 4.5 s → sub-second and every
-    * video family leg proportionally). The exchange moves 100k longs
-    * (~1 MB) — three orders of magnitude cheaper than the work it
-    * parallelizes — and hash-partitions on the deterministic id (never
-    * round-robin: guide §2.5's retry-safety rule), so results are
-    * byte-identical. The same spread-single-split move `shingleSets`
-    * has always used for the text side. */
-  private def eventIds(s: SparkSession, d: String): org.apache.spark.sql.Dataset[Long] = {
-    import s.implicits._
-    T(s, d, "events").select(col("event_id").cast("long"))
-      .repartition(s.sparkContext.defaultParallelism, col("event_id"))
-      .as[Long]
-  }
 
   /** Flagship: the product itself — a config-driven multi-table transfer
     * (YAML-shaped spec → chunked keyset read → validated expr transforms →
@@ -98,7 +78,8 @@ object SparkEntry {
   // SURVEY §2 operator ids.
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // --- S1/S2: keyset-paginated scan (WHERE pk > last ORDER BY pk LIMIT n),
     //     reference mysql.go:578-679 / postgresql.go:376-401
     "s1_keyset_scan" -> ((s, d) =>
@@ -1623,81 +1604,6 @@ object SparkEntry {
       Multimodal.imageResample(imgs, "id", "img").toDF()
     }),
 
-    // --- the scale-invariant screen, INCREMENTAL (r14): the standing
-    //     corpus's thumb index (the persistable artifact) screens a
-    //     batch of NN-2× rescaled re-uploads — each hits its original
-    //     at Hamming 0; the dimension-grouped incremental screen can
-    //     never see these
-    "dedup_image_scale_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      // id scheme (ADVICE r15 #1): original e → 2e, re-upload → 2e+1 —
-      // the id spaces provably cannot overlap at ANY sweep scale (the
-      // old fixed 2·10⁶ offset collided with original ids once the
-      // 100× sweep reached 2M events), and 2e < 2e+1 keeps the min-id
-      // keeper semantics (originals keep, re-uploads drop)
-      val base = eventIds(s, d)
-      val corpus = Multimodal.imageScaleInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
-        .localCheckpoint(true) // the standing thumb index, read per band
-      val batch = Multimodal.imageScaleInvariantHash(
-        base.filter((e: Long) => e % 7 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.syntheticBmp(e)))))
-          .toDF("id", "img"), "id", "img").toDF()
-      // materialize the screen result so the corpus thumb index's
-      // checkpoint blocks can be released NOW instead of squatting in
-      // executor storage for the JVM's remaining gates (ADVICE r14 —
-      // same release discipline as the books and the streaming twin)
-      val out = Multimodal.incrementalScaleInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- scale-invariant image dedup (r14): every 7th asset also
-    //     appears as a nearest-neighbor 2× UPSCALE at id 2e+1
-    //     (originals at 2e — disjoint at any scale, ADVICE r15 #1) — a
-    //     cross-resolution duplicate the dimension-grouped aHash pairs
-    //     provably cannot see. Fixed 8×8 NN thumbs hash every copy to
-    //     the same signature (floor-composition identity, spec-proven),
-    //     so each rescaled copy pairs with its original at Hamming 0;
-    //     the oracle replays thumbs (double-floor for the upscales),
-    //     the aHash bit rule, 16-bit bands, caps, and confirms
-    "dedup_image_scale_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
-      val up = base.filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.syntheticBmp(e)))))
-        .toDF("id", "img")
-      Multimodal.imageScaleInvariantPairs(
-        Multimodal.imageScaleInvariantHash(
-          orig.unionByName(up), "id", "img").toDF())
-    }),
-
-    // --- and the scale-invariant pair graph through the shared closure
-    //     to a keep/drop decision (r16, VERDICT r15 #4 — symmetry with
-    //     dedup_audio_rate_invariant_keep): every NN re-upload clusters
-    //     with its original at Hamming 0 — the even original id 2e is
-    //     smaller than its re-upload 2e+1, so re-uploads DROP and
-    //     originals keep
-    "dedup_image_scale_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.imageScaleInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img")
-          .unionByName(base.filter((e: Long) => e % 7 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.syntheticBmp(e)))))
-            .toDF("id", "img")), "id", "img").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.imageScaleInvariantPairs(sigs))
-    }),
-
     // --- real nearest-neighbor audio resample (r15, the audio sibling
     //     of multimodal_resample): rate-normalize every clip to 16 kHz —
     //     integer frame map f·nf0 div nf1, exact resampled sums, content
@@ -1710,769 +1616,6 @@ object SparkEntry {
         .toDF("id", "clip")
       Multimodal.audioResample(clips, "id", "clip").toDF()
     }),
-
-    // --- rate-invariant audio dedup (r15): every 7th clip also appears
-    //     as a zero-order-hold 2× UPSAMPLE at id 2e+1 (originals at
-    //     2e — disjoint at any scale, ADVICE r15 #1) — a cross-rate
-    //     duplicate the (channels, n_windows)-grouped audio pairs
-    //     provably cannot see. Fixed 64-slot NN-sampled energy delta
-    //     signs hash every copy to the same signature (floor-composition
-    //     identity, spec-proven), so each resampled copy pairs with its
-    //     original at Hamming 0; the oracle replays the double-floor
-    //     slot map, the delta-sign rule, 16-bit bands, caps, and confirms
-    "dedup_audio_rate_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticWavMixed(id))))
-        .toDF("id", "clip")
-      val up = base.filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)))))
-        .toDF("id", "clip")
-      Multimodal.audioRateInvariantPairs(
-        Multimodal.audioRateInvariantHash(
-          orig.unionByName(up), "id", "clip").toDF())
-    }),
-
-    // --- and the rate-invariant pair graph through the shared closure
-    //     to a keep/drop decision (r15): every ZOH re-upload clusters
-    //     with its original at Hamming 0 — the even original id 2e is
-    //     smaller than its re-upload 2e+1, so re-uploads DROP and
-    //     originals keep
-    "dedup_audio_rate_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.audioRateInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticWavMixed(id))))
-          .toDF("id", "clip")
-          .unionByName(base.filter((e: Long) => e % 7 == 0)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)))))
-            .toDF("id", "clip")), "id", "clip").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.audioRateInvariantPairs(sigs))
-    }),
-
-    // --- the rate-invariant screen, INCREMENTAL (r15): the standing
-    //     corpus's signature index screens a batch of ZOH-2× resampled
-    //     re-uploads — each hits its original at Hamming 0; the
-    //     rate-grouped incremental audio screen can never see these
-    "dedup_audio_rate_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.audioRateInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticWavMixed(id))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.audioRateInvariantHash(
-        base.filter((e: Long) => e % 7 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-      // materialize before releasing the corpus checkpoint — the same
-      // release discipline as the image screen (ADVICE r14)
-      val out = Multimodal.incrementalRateInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the rate-invariant screen (r15)
-    "streaming_rate_invariant_dedup" ->
-      ((s, d) => StreamingIngest.rateInvariantDedupStream(s, d)),
-
-    // --- scale-invariant VIDEO dedup (r16, VERDICT r15 #1 — the last
-    //     missing member of the invariant-key family): every 7th clip
-    //     also appears as a nearest-neighbor 2× UPSCALED transcode at
-    //     id 2e+1 (originals at 2e) — a re-scaled re-encode the
-    //     width×height-grouped perceptual pairs provably cannot see.
-    //     Each stss keyframe routes through the fixed 8×8 NN thumb
-    //     BEFORE aHash, so dimensions drop out of the signature and
-    //     every rescaled copy pairs with its original at Hamming 0
-    //     (floor-composition identity, spec-proven both directions);
-    //     the oracle replays thumbs (double-floor for the upscales),
-    //     the aHash rule, per-keyframe 16-bit folds, bands, caps,
-    //     and confirms
-    "dedup_video_scale_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e =>
-        (2 * e, Multimodal.syntheticVideoMp4(e)))).toDF("id", "vid")
-      val up = base.filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(e)))))
-        .toDF("id", "vid")
-      Multimodal.videoScaleInvariantPairs(
-        Multimodal.videoScaleInvariantHash(
-          orig.unionByName(up), "id", "vid").toDF())
-    }),
-
-    // --- and the scale-invariant video pair graph through the shared
-    //     closure to a keep/drop decision: every rescaled transcode
-    //     clusters with its original at Hamming 0 — the even original
-    //     id 2e is smaller than its re-upload 2e+1, so transcodes DROP
-    //     and originals keep
-    "dedup_video_scale_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.videoScaleInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid")
-          .unionByName(base.filter((e: Long) => e % 7 == 0)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(e)))))
-            .toDF("id", "vid")), "id", "vid").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.videoScaleInvariantPairs(sigs))
-    }),
-
-    // --- the scale-invariant video screen, INCREMENTAL: the standing
-    //     corpus's thumb-signature index screens a batch of NN-2×
-    //     rescaled transcodes — each hits its original at Hamming 0;
-    //     the dimension-grouped incremental video screen can never see
-    //     these
-    "dedup_video_scale_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.videoScaleInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.videoScaleInvariantHash(
-        base.filter((e: Long) => e % 7 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(e)))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-      // materialize before releasing the corpus checkpoint — the same
-      // release discipline as the image/audio screens (ADVICE r14)
-      val out = Multimodal.incrementalVideoScaleInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the scale-invariant video screen (r16)
-    "streaming_video_scale_invariant_dedup" ->
-      ((s, d) => StreamingIngest.videoScaleInvariantDedupStream(s, d)),
-
-    // --- scale+stride-invariant video dedup (r16): the composition key
-    //     for the transcode BOTH parents miss — rescaled AND
-    //     keyframe-re-placed. Fixtures are the keyStride-varying
-    //     syntheticVideoMp4T family (stride 1..4 across variants, which
-    //     provably breaks the stss-sampled thumb key) with NN-2×
-    //     rescaled re-muxed copies of every 7th at 2e+1 (which provably
-    //     break the dimension-grouped aligned key); slots sample the
-    //     content timeline, frames route through the fixed 8×8 thumb —
-    //     copies and cross-stride variants collide at Hamming 0; oracle
-    //     replays the slot rule (k·nf div 4 — uniform deltas cancel),
-    //     the double-floor thumbs, folds, signed slot-3 pack, bands,
-    //     caps, and confirms
-    "dedup_video_scale_time_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e =>
-        (2 * e, Multimodal.syntheticVideoMp4T(e)))).toDF("id", "vid")
-      val up = base.filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4T(e)))))
-        .toDF("id", "vid")
-      Multimodal.videoScaleTimeInvariantPairs(
-        Multimodal.videoScaleInvariantHashTimeAligned(
-          orig.unionByName(up), "id", "vid").toDF())
-    }),
-
-    // --- and the composition pair graph through the shared closure to
-    //     keep/drop: every rescaled+re-muxed copy clusters with its
-    //     original at Hamming 0 (and cross-stride variants with their
-    //     content siblings); the smallest id keeps
-    "dedup_video_scale_time_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.videoScaleInvariantHashTimeAligned(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4T(e))))
-          .toDF("id", "vid")
-          .unionByName(base.filter((e: Long) => e % 7 == 0)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4T(e)))))
-            .toDF("id", "vid")), "id", "vid").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.videoScaleTimeInvariantPairs(sigs))
-    }),
-
-    // --- the composition screen, INCREMENTAL: the standing corpus's
-    //     slot-sampled thumb index screens a batch of rescaled+re-muxed
-    //     transcodes — each hits its original at Hamming 0; neither
-    //     parent's incremental screen can see these
-    "dedup_video_scale_time_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.videoScaleInvariantHashTimeAligned(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4T(e))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.videoScaleInvariantHashTimeAligned(
-        base.filter((e: Long) => e % 7 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4T(e)))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-      // materialize before releasing the corpus checkpoint — the same
-      // release discipline as the other invariant screens (ADVICE r14)
-      val out = Multimodal.incrementalVideoScaleTimeInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the composition screen (r16)
-    "streaming_video_scale_time_invariant_dedup" ->
-      ((s, d) => StreamingIngest.videoScaleTimeInvariantDedupStream(s, d)),
-
-    // --- CROP/LETTERBOX-invariant image dedup (r17, VERDICT r16 #3):
-    //     every 5th asset also appears LETTERBOXED (uniform border,
-    //     pads 1+e%3/1+e%2/2/1) AND NN-2×-upscaled at id 2e+1 — a
-    //     layout transcode BOTH the dimension-grouped aHash pairs and
-    //     the full-frame scale-invariant key provably cannot see.
-    //     contentBox trims the border before the fixed 8×8 NN thumb,
-    //     so every copy collides with its original at Hamming 0 (trim
-    //     recovery + floor composition, spec-proven both directions);
-    //     the oracle replays the double-floor thumb over the ORIGINAL
-    //     pixel formulas (the trim provably cancels the pads entirely),
-    //     the aHash rule, 16-bit bands, caps, and confirms
-    "dedup_image_crop_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
-      val boxed = base.filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.letterbox(
-            Multimodal.syntheticBmp(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-        .toDF("id", "img")
-      Multimodal.imageCropInvariantPairs(
-        Multimodal.imageCropInvariantHash(
-          orig.unionByName(boxed), "id", "img").toDF())
-    }),
-
-    // --- and the crop-invariant pair graph through the shared closure
-    //     to keep/drop: every letterboxed re-upload clusters with its
-    //     original at Hamming 0 — the even original id 2e keeps
-    "dedup_image_crop_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.imageCropInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img")
-          .unionByName(base.filter((e: Long) => e % 5 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.letterbox(
-                Multimodal.syntheticBmp(e),
-                1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-            .toDF("id", "img")), "id", "img").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.imageCropInvariantPairs(sigs))
-    }),
-
-    // --- the crop-invariant screen, INCREMENTAL: the standing corpus's
-    //     content-box thumb index screens a batch of letterboxed
-    //     upscaled re-uploads — each hits its original at Hamming 0;
-    //     neither the dimension-grouped nor the full-frame
-    //     scale-invariant incremental screen can see these
-    "dedup_image_crop_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.imageCropInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
-        .localCheckpoint(true) // the standing thumb index, read per band
-      val batch = Multimodal.imageCropInvariantHash(
-        base.filter((e: Long) => e % 5 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.letterbox(
-            Multimodal.syntheticBmp(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-          .toDF("id", "img"), "id", "img").toDF()
-      // materialize before releasing the corpus checkpoint — the same
-      // release discipline as the other invariant screens (ADVICE r14)
-      val out = Multimodal.incrementalCropInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the crop-invariant screen (r17)
-    "streaming_crop_invariant_dedup" ->
-      ((s, d) => StreamingIngest.cropInvariantDedupStream(s, d)),
-
-    // --- CROP/LETTERBOX-invariant VIDEO dedup (r17): every 5th clip
-    //     also appears letterboxed per frame AND NN-2×-rescaled at id
-    //     2e+1 — a layout transcode invisible to the dimension-grouped
-    //     perceptual pairs AND the full-frame scale-invariant thumb
-    //     key. Per-keyframe contentBox trim before the fixed 8×8 thumb
-    //     makes every copy collide with its original at Hamming 0; the
-    //     oracle replays the double-floor thumb over the original
-    //     frame formulas (trim cancels the pads), folds, bands, caps
-    "dedup_video_crop_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e =>
-        (2 * e, Multimodal.syntheticVideoMp4(e)))).toDF("id", "vid")
-      val boxed = base.filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.letterboxVideo(
-            Multimodal.syntheticVideoMp4(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-        .toDF("id", "vid")
-      Multimodal.videoCropInvariantPairs(
-        Multimodal.videoCropInvariantHash(
-          orig.unionByName(boxed), "id", "vid").toDF())
-    }),
-
-    // --- and the crop-invariant video pair graph through the shared
-    //     closure to keep/drop: every letterboxed transcode clusters
-    //     with its original at Hamming 0 — the even original id keeps
-    "dedup_video_crop_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.videoCropInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid")
-          .unionByName(base.filter((e: Long) => e % 5 == 0)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.nnUpscaleVideo2x(Multimodal.letterboxVideo(
-                Multimodal.syntheticVideoMp4(e),
-                1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-            .toDF("id", "vid")), "id", "vid").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.videoCropInvariantPairs(sigs))
-    }),
-
-    // --- the crop-invariant video screen, INCREMENTAL
-    "dedup_video_crop_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.videoCropInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.videoCropInvariantHash(
-        base.filter((e: Long) => e % 5 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.letterboxVideo(
-            Multimodal.syntheticVideoMp4(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-      val out = Multimodal.incrementalVideoCropInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the crop-invariant video screen (r17)
-    "streaming_video_crop_invariant_dedup" ->
-      ((s, d) => StreamingIngest.videoCropInvariantDedupStream(s, d)),
-
-    // --- TRIM-invariant audio dedup (r17, VERDICT r16 #4): every 5th
-    //     clip also appears ZOH-2×-upsampled AND silence-padded
-    //     (lead 1+e%5, trail 1+e%3 frames) at id 2e+1 — an edit BOTH
-    //     the (channels, n_windows)-grouped audio pairs and the
-    //     fixed-grid rate-invariant key provably cannot see (padding
-    //     shifts every fixed slot). The energy-onset anchor removes
-    //     the padding from the key; the oracle replays the onset/span
-    //     scan over the closed-form energies, the double-floor slot
-    //     map, delta-sign bits, bands, caps, and confirms
-    "dedup_audio_trim_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-        .toDF("id", "clip")
-      val padded = base.filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.padSilence(
-            Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)),
-            1 + (e % 5).toInt, 1 + (e % 3).toInt))))
-        .toDF("id", "clip")
-      Multimodal.audioTrimInvariantPairs(
-        Multimodal.audioTrimInvariantHash(
-          orig.unionByName(padded), "id", "clip").toDF())
-    }),
-
-    // --- and the trim-invariant pair graph through the shared closure
-    //     to keep/drop: every padded re-upload clusters with its
-    //     original at Hamming 0 — the even original id keeps
-    "dedup_audio_trim_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.audioTrimInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-          .toDF("id", "clip")
-          .unionByName(base.filter((e: Long) => e % 5 == 0)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.padSilence(
-                Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)),
-                1 + (e % 5).toInt, 1 + (e % 3).toInt))))
-            .toDF("id", "clip")), "id", "clip").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.audioTrimInvariantPairs(sigs))
-    }),
-
-    // --- the trim-invariant screen, INCREMENTAL
-    "dedup_audio_trim_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.audioTrimInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.audioTrimInvariantHash(
-        base.filter((e: Long) => e % 5 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.padSilence(
-            Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)),
-            1 + (e % 5).toInt, 1 + (e % 3).toInt))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-      val out = Multimodal.incrementalTrimInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the trim-invariant screen (r17)
-    "streaming_trim_invariant_dedup" ->
-      ((s, d) => StreamingIngest.trimInvariantDedupStream(s, d)),
-
-    // --- MIRROR-invariant image dedup (r17): every 3rd asset also
-    //     appears horizontally MIRRORED and NN-2×-upscaled at id
-    //     2e+1 — an orientation transcode every current key misses
-    //     (the scale/crop keys hash the uploaded orientation; the
-    //     dimension-grouped key compares but at a large Hamming
-    //     distance). The key hashes BOTH physical orientations and
-    //     keeps the signed min — exact by orbit-set equality (mirror
-    //     is an involution) and composing with the NN 2× upscale
-    //     (mirror∘upscale = upscale∘mirror, spec-proven); the oracle
-    //     replays both orientations' thumbs and takes least()
-    "dedup_image_mirror_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
-      val flipped = base.filter((e: Long) => e % 3 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.mirrorBmp(
-            Multimodal.syntheticBmp(e))))))
-        .toDF("id", "img")
-      Multimodal.imageMirrorInvariantPairs(
-        Multimodal.imageMirrorInvariantHash(
-          orig.unionByName(flipped), "id", "img").toDF())
-    }),
-
-    // --- and the mirror-invariant pair graph through the shared
-    //     closure to keep/drop: every mirrored re-upload clusters with
-    //     its original at Hamming 0 — the even original id keeps
-    "dedup_image_mirror_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.imageMirrorInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img")
-          .unionByName(base.filter((e: Long) => e % 3 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.mirrorBmp(
-                Multimodal.syntheticBmp(e))))))
-            .toDF("id", "img")), "id", "img").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.imageMirrorInvariantPairs(sigs))
-    }),
-
-    // --- the mirror-invariant screen, INCREMENTAL
-    "dedup_image_mirror_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.imageMirrorInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
-        .localCheckpoint(true) // the standing canonical-thumb index, read per band
-      val batch = Multimodal.imageMirrorInvariantHash(
-        base.filter((e: Long) => e % 3 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.mirrorBmp(
-            Multimodal.syntheticBmp(e))))))
-          .toDF("id", "img"), "id", "img").toDF()
-      val out = Multimodal.incrementalMirrorInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the mirror-invariant screen (r17)
-    "streaming_mirror_invariant_dedup" ->
-      ((s, d) => StreamingIngest.mirrorInvariantDedupStream(s, d)),
-
-    // --- ROTATION-invariant image dedup (r18, VERDICT r17 #4 — the D4
-    //     completion): every 4th asset also appears rotated by
-    //     90°·(1 + e%3) AND NN-2×-upscaled at id 2e+1 — an orientation
-    //     transcode EVERY other key misses, including the mirror key
-    //     (its {id, mirror} orbit contains no rotation; a 90° turn also
-    //     swaps dims, so the dimension-grouped key can't compare). The
-    //     key canonicalizes over all EIGHT physical orientations and
-    //     keeps the signed min — exact by the group-orbit argument
-    //     (D4 is a group) and composing with the NN 2× upscale
-    //     (rot90∘upscale = upscale∘rot90, spec-proven); the oracle
-    //     replays all eight orientations' thumbs and takes least()
-    "dedup_image_rotation_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
-      val rotated = base.filter((e: Long) => e % 4 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.rotateBmp(
-            Multimodal.syntheticBmp(e), 1 + (e % 3).toInt)))))
-        .toDF("id", "img")
-      Multimodal.imageRotationInvariantPairs(
-        Multimodal.imageRotationInvariantHash(
-          orig.unionByName(rotated), "id", "img").toDF())
-    }),
-
-    // --- and the rotation-invariant pair graph through the shared
-    //     closure to keep/drop: every rotated re-upload clusters with
-    //     its original at Hamming 0 — the even original id keeps
-    "dedup_image_rotation_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.imageRotationInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img")
-          .unionByName(base.filter((e: Long) => e % 4 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.rotateBmp(
-                Multimodal.syntheticBmp(e), 1 + (e % 3).toInt)))))
-            .toDF("id", "img")), "id", "img").toDF()
-        .localCheckpoint(true) // two consumers — decode once (see dedup_audio_clusters)
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.imageRotationInvariantPairs(sigs))
-    }),
-
-    // --- the rotation-invariant screen, INCREMENTAL
-    "dedup_image_rotation_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.imageRotationInvariantHash(
-        base.mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
-        .localCheckpoint(true) // the standing canonical-thumb index, read per band
-      val batch = Multimodal.imageRotationInvariantHash(
-        base.filter((e: Long) => e % 4 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.rotateBmp(
-            Multimodal.syntheticBmp(e), 1 + (e % 3).toInt)))))
-          .toDF("id", "img"), "id", "img").toDF()
-      val out = Multimodal.incrementalRotationInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the rotation-invariant screen (r18)
-    "streaming_rotation_invariant_dedup" ->
-      ((s, d) => StreamingIngest.rotationInvariantDedupStream(s, d)),
-
-    // --- MIRROR-invariant VIDEO dedup (r18, VERDICT r17 #3 — the video
-    //     orientation leg): every 3rd clip also appears frame-MIRRORED
-    //     and NN-2×-rescaled at id 2e+1 — an orientation transcode the
-    //     dimension-grouped, scale-invariant AND crop-invariant video
-    //     keys all provably miss (each hashes the uploaded
-    //     orientation). Per keyframe the key hashes BOTH orientations'
-    //     fixed-grid thumbs and folds the signed min; the oracle
-    //     replays both orientations per frame and takes least() before
-    //     the fold
-    "dedup_video_mirror_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid")
-      val flipped = base.filter((e: Long) => e % 3 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.mirrorVideoMp4(
-            Multimodal.syntheticVideoMp4(e))))))
-        .toDF("id", "vid")
-      Multimodal.videoMirrorInvariantPairs(
-        Multimodal.videoMirrorInvariantHash(
-          orig.unionByName(flipped), "id", "vid").toDF())
-    }),
-
-    // --- and the mirror-invariant video pair graph through the shared
-    //     closure to keep/drop
-    "dedup_video_mirror_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.videoMirrorInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid")
-          .unionByName(base.filter((e: Long) => e % 3 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.mirrorVideoMp4(
-                Multimodal.syntheticVideoMp4(e))))))
-            .toDF("id", "vid")), "id", "vid").toDF()
-        .localCheckpoint(true) // two consumers — decode once
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.videoMirrorInvariantPairs(sigs))
-    }),
-
-    // --- the mirror-invariant video screen, INCREMENTAL
-    "dedup_video_mirror_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.videoMirrorInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-        .localCheckpoint(true) // the standing clip-signature index, read per band
-      val batch = Multimodal.videoMirrorInvariantHash(
-        base.filter((e: Long) => e % 3 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.mirrorVideoMp4(
-            Multimodal.syntheticVideoMp4(e))))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-      val out = Multimodal.incrementalVideoMirrorInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the mirror-invariant video screen (r18)
-    "streaming_video_mirror_invariant_dedup" ->
-      ((s, d) => StreamingIngest.videoMirrorInvariantDedupStream(s, d)),
-
-    // --- ROTATION-invariant VIDEO dedup (r18 — the D4 completion for
-    //     clips): every 4th clip also appears rotated by 90°·(1 + e%3)
-    //     per frame AND NN-2×-rescaled at id 2e+1 — the portrait/
-    //     landscape phone transcode, which swaps frame dims and so
-    //     escapes every other video key including the mirror key
-    //     (spec-asserted). Per keyframe the key hashes all EIGHT
-    //     physical orientations and folds the signed min; the oracle
-    //     replays the eight orientations per frame and takes least()
-    //     before the fold
-    "dedup_video_rotation_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid")
-      val rotated = base.filter((e: Long) => e % 4 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.rotateVideoMp4(
-            Multimodal.syntheticVideoMp4(e), 1 + (e % 3).toInt)))))
-        .toDF("id", "vid")
-      Multimodal.videoRotationInvariantPairs(
-        Multimodal.videoRotationInvariantHash(
-          orig.unionByName(rotated), "id", "vid").toDF())
-    }),
-
-    // --- and the rotation-invariant video pair graph through the
-    //     shared closure to keep/drop
-    "dedup_video_rotation_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.videoRotationInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid")
-          .unionByName(base.filter((e: Long) => e % 4 == 0)
-            .mapPartitions(_.map(e =>
-              (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.rotateVideoMp4(
-                Multimodal.syntheticVideoMp4(e), 1 + (e % 3).toInt)))))
-            .toDF("id", "vid")), "id", "vid").toDF()
-        .localCheckpoint(true) // two consumers — decode once
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.videoRotationInvariantPairs(sigs))
-    }),
-
-    // --- the rotation-invariant video screen, INCREMENTAL
-    "dedup_video_rotation_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.videoRotationInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-        .localCheckpoint(true) // the standing clip-signature index, read per band
-      val batch = Multimodal.videoRotationInvariantHash(
-        base.filter((e: Long) => e % 4 == 0).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.rotateVideoMp4(
-            Multimodal.syntheticVideoMp4(e), 1 + (e % 3).toInt)))))
-          .toDF("id", "vid"), "id", "vid").toDF()
-      val out = Multimodal.incrementalVideoRotationInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the rotation-invariant video screen (r18)
-    "streaming_video_rotation_invariant_dedup" ->
-      ((s, d) => StreamingIngest.videoRotationInvariantDedupStream(s, d)),
-
-    // --- CHANNEL-SWAP invariance gated through the RATE key (r18,
-    //     VERDICT r17 #3 — the audio orientation axis): every 4th
-    //     (stereo — odd events carry two channels) clip also appears
-    //     L/R-SWAPPED and ZOH-2×-resampled at id 2e+1. The energy key
-    //     folds channels, so the swap vanishes from the signature BY
-    //     CONSTRUCTION (spec-proven) — this family gates an EXISTING
-    //     key absorbing a new edit axis, not a new key — while the
-    //     composed copy defeats the (channels, n_windows)-grouped
-    //     window key (frame count changes) AND the byte-exact sample
-    //     fingerprint (interleaved order changes). The oracle replays
-    //     the channel-summed energies — the swap cancels in the sum in
-    //     closed form — through the rate key's double-floor slot map
-    "dedup_audio_channel_swap_invariant" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val orig = base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-        .toDF("id", "clip")
-      val swapped = base.filter((e: Long) => e % 4 == 1)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.swapChannels(Multimodal.zohUpsample2x(
-            Multimodal.syntheticWavMixed(e))))))
-        .toDF("id", "clip")
-      Multimodal.audioRateInvariantPairs(
-        Multimodal.audioRateInvariantHash(
-          orig.unionByName(swapped), "id", "clip").toDF())
-    }),
-
-    // --- and the channel-swap pair graph through the shared closure
-    "dedup_audio_channel_swap_invariant_keep" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val sigs = Multimodal.audioRateInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-          .toDF("id", "clip")
-          .unionByName(base.filter((e: Long) => e % 4 == 1)
-            .mapPartitions(_.map(e => (2 * e + 1,
-              Multimodal.swapChannels(Multimodal.zohUpsample2x(
-                Multimodal.syntheticWavMixed(e))))))
-            .toDF("id", "clip")), "id", "clip").toDF()
-        .localCheckpoint(true) // two consumers — decode once
-      Multimodal.mediaNearDupClusters(sigs.select("id"),
-        Multimodal.audioRateInvariantPairs(sigs))
-    }),
-
-    // --- the channel-swap screen, INCREMENTAL (the rate screen fed
-    //     swapped re-uploads)
-    "dedup_audio_channel_swap_invariant_incremental" -> ((s, d) => {
-      import s.implicits._
-      val base = eventIds(s, d)
-      val corpus = Multimodal.audioRateInvariantHash(
-        base.mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-        .localCheckpoint(true) // the standing signature index, read per band
-      val batch = Multimodal.audioRateInvariantHash(
-        base.filter((e: Long) => e % 4 == 1).mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.swapChannels(Multimodal.zohUpsample2x(
-            Multimodal.syntheticWavMixed(e))))))
-          .toDF("id", "clip"), "id", "clip").toDF()
-      val out = Multimodal.incrementalRateInvariantNearDups(corpus, batch)
-        .localCheckpoint(true)
-      Dedup.releaseOwnCheckpoint(corpus)
-      out
-    }),
-
-    // --- streaming twin of the channel-swap screen (r18)
-    "streaming_channel_swap_invariant_dedup" ->
-      ((s, d) => StreamingIngest.channelSwapInvariantDedupStream(s, d)),
 
     // --- streaming: bounded Structured Streaming run == batch oracle
     "streaming_window_counts" -> ((s, d) => StreamingIngest.windowCounts(s, d)),
@@ -2664,12 +1807,6 @@ object SparkEntry {
     //     (model from the even-id corpus, stream = odd-id docs):
     //     map-only fold through the broadcast-literal model, no state
     "streaming_dsir_score" -> ((s, d) => StreamingIngest.dsirScoreStream(s, d)),
-
-    // --- the scale-invariant screen as a STREAM: arriving NN-2×
-    //     rescaled re-uploads vs the standing thumb index; stream ≡
-    //     batch hit-for-hit (the oracle replays the uncapped screen)
-    "streaming_scale_invariant_dedup" ->
-      ((s, d) => StreamingIngest.scaleInvariantDedupStream(s, d)),
 
     // --- Bloom membership filter: per-source bit tables over the even
     //     docs' content hashes + the OR-merged ALL rows — the third
@@ -2936,7 +2073,7 @@ object SparkEntry {
       Upsert.resolve(base, updates, Seq("c_custkey"))
         .select("c_custkey", "c_name", "c_acctbal")
     })
-  )
+  ) ++ MediaKeys.all.flatMap(_.queries) // the invariant-key media families
 
   /** The surgical-decontamination pretrain book (round 10) — factored
     * so [[queries]]' `pipeline_pretrain_surgical` and the multimodal
@@ -4567,7 +3704,7 @@ object SparkEntry {
          |SELECT id_a, id_b, hamming FROM pairs""".stripMargin,
     // min-label closure over the scale-invariant pair graph → per-asset
     // keep/drop (Multimodal.mediaNearDupClusters over
-    // imageScaleInvariantPairs): every NN re-upload lands in its
+    // MediaKeys.ImageScale.key.pairs): every NN re-upload lands in its
     // original's cluster (Hamming 0), the even original id 2e is the
     // representative, so re-uploads DROP and originals keep —
     // recursive-CTE closure like dedup_audio_rate_invariant_keep
@@ -4634,7 +3771,7 @@ object SparkEntry {
          |SELECT id_a, id_b, hamming FROM pairs""".stripMargin,
     // min-label closure over the rate-invariant pair graph → per-clip
     // keep/drop (Multimodal.mediaNearDupClusters over
-    // audioRateInvariantPairs): every ZOH re-upload lands in its
+    // MediaKeys.AudioRate.key.pairs): every ZOH re-upload lands in its
     // original's cluster (Hamming 0), the smaller original id is the
     // representative, so re-uploads DROP and originals keep —
     // recursive-CTE closure like dedup_audio_clusters
@@ -6337,7 +5474,7 @@ object SparkEntry {
       |  FROM svfh GROUP BY id)""".stripMargin
 
   /** Scale-invariant video capped-pair CTEs over [[videoSiCte]]
-    * (mirrors `Multimodal.videoScaleInvariantPairs`): dimensions
+    * (mirrors `MediaKeys.VideoScale.key.pairs`): dimensions
     * dropped from the group ('vthumb:' + n_key), 4×16-bit bands,
     * buckets capped at 64 smallest ids, exact Hamming ≤ 6 confirms,
     * 4 best partners per id_a. Ends defining
@@ -6366,8 +5503,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Scale-invariant video incremental-screen CTEs over [[videoSiCte]]
-    * (mirrors `Multimodal.incrementalVideoScaleInvariantNearDups` /
-    * `StreamingIngest.videoScaleInvariantDedupStream`): corpus = the
+    * (mirrors `MediaKeys.VideoScale.key.screen` /
+    * `MediaKeys.VideoScale.stream`): corpus = the
     * originals' signatures (even ids), batch = the rescaled transcodes
     * (odd ids), corpus band buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
@@ -6402,7 +5539,7 @@ object SparkEntry {
 
   /** Scale+stride-invariant video signature + capped-pair CTEs (mirrors
     * `Multimodal.videoScaleInvariantHashTimeAligned` →
-    * `videoScaleTimeInvariantPairs` over the keyStride-varying
+    * `MediaKeys.VideoScaleTime.key.pairs` over the keyStride-varying
     * `syntheticVideoMp4T` fixtures): originals at 2e (kk = 1), NN-2×
     * re-muxed rescales of every 7th at 2e+1 (kk = 2, double-floor
     * thumb index map). Slot k of 4 samples frame `(k·nf) // 4` — the
@@ -6462,7 +5599,7 @@ object SparkEntry {
       |  FROM stfold GROUP BY id)""".stripMargin
 
   /** Capped-pair CTEs over [[videoStiCte]] (mirrors
-    * `Multimodal.videoScaleTimeInvariantPairs`): one corpus-wide
+    * `MediaKeys.VideoScaleTime.key.pairs`): one corpus-wide
     * 'vthumb_t' group, 4×16-bit bands, buckets capped at 64 smallest
     * ids, exact Hamming ≤ 6 confirms, 4 best partners per id_a. Ends
     * defining `stpairs(id_a, id_b, hamming)` — shared by the pairs
@@ -6490,8 +5627,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[videoStiCte]] (mirrors
-    * `Multimodal.incrementalVideoScaleTimeInvariantNearDups` /
-    * `StreamingIngest.videoScaleTimeInvariantDedupStream`): corpus =
+    * `MediaKeys.VideoScaleTime.key.screen` /
+    * `MediaKeys.VideoScaleTime.stream`): corpus =
     * the originals' signatures (even ids), batch = the rescaled
     * re-muxed transcodes (odd ids), corpus band buckets capped at 64
     * smallest ids (size-1 kept), Hamming ≤ 6. Ends defining
@@ -6530,8 +5667,8 @@ object SparkEntry {
     * gate caps at 4 best partners on top; the streaming twin takes
     * `conf` whole. */
   /** Scale-invariant incremental-screen CTEs (mirrors
-    * `Multimodal.incrementalScaleInvariantNearDups` /
-    * `StreamingIngest.scaleInvariantDedupStream`): corpus = every
+    * `MediaKeys.ImageScale.key.screen` /
+    * `MediaKeys.ImageScale.stream`): corpus = every
     * original's fixed 8×8 NN thumb aHash (double-floor index map for
     * the 2× upscaled batch copies; bit 63 as the two's-complement
     * constant), corpus band buckets capped at 64 smallest ids (size-1
@@ -6573,7 +5710,7 @@ object SparkEntry {
       |  FROM dd GROUP BY id)""".stripMargin
 
   /** Rate-invariant capped-pair CTEs over [[rateInvariantFpCte]]
-    * (mirrors `Multimodal.audioRateInvariantPairs`): one corpus-wide
+    * (mirrors `MediaKeys.AudioRate.key.pairs`): one corpus-wide
     * 'rate' group, 4×16-bit bands, buckets capped at 64 smallest ids,
     * exact Hamming ≤ 6 confirms, 4 best partners per id_a. Ends
     * defining `pairs(id_a, id_b, hamming)` — shared by the pairs gate
@@ -6601,8 +5738,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Rate-invariant incremental-screen CTEs over [[rateInvariantFpCte]]
-    * (mirrors `Multimodal.incrementalRateInvariantNearDups` /
-    * `StreamingIngest.rateInvariantDedupStream`): corpus = the
+    * (mirrors `MediaKeys.AudioRate.key.screen` /
+    * `MediaKeys.AudioRate.stream`): corpus = the
     * originals' signatures, batch = the ZOH-2× re-uploads, corpus band
     * buckets capped at 64 smallest ids (size-1 kept), Hamming ≤ 6.
     * Ends defining `conf(batch_id, corpus_id, hamming)` — the batch
@@ -6672,7 +5809,7 @@ object SparkEntry {
       |  FROM g JOIN tt ON g.id = tt.id GROUP BY tt.id)""".stripMargin
 
   /** Scale-invariant capped-pair CTEs over [[scaleInvariantFpCte]]
-    * (mirrors `Multimodal.imageScaleInvariantPairs`): one corpus-wide
+    * (mirrors `MediaKeys.ImageScale.key.pairs`): one corpus-wide
     * 'thumb' group, 4×16-bit bands, buckets capped at 64 smallest ids,
     * exact Hamming ≤ 6 confirms, 4 best partners per id_a. Ends
     * defining `pairs(id_a, id_b, hamming)` — shared by the pairs gate
@@ -6763,7 +5900,7 @@ object SparkEntry {
       |  FROM g JOIN tt ON g.id = tt.id GROUP BY tt.id)""".stripMargin
 
   /** Capped-pair CTEs over [[cropInvariantFpCte]] (mirrors
-    * `Multimodal.imageCropInvariantPairs`): one corpus-wide 'cbox'
+    * `MediaKeys.ImageCrop.key.pairs`): one corpus-wide 'cbox'
     * group, 4×16-bit bands, buckets capped at 64 smallest ids, exact
     * Hamming ≤ 6 confirms, 4 best partners per id_a. Ends defining
     * `pairs(id_a, id_b, hamming)`. */
@@ -6789,8 +5926,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[cropInvariantFpCte]] (mirrors
-    * `Multimodal.incrementalCropInvariantNearDups` /
-    * `StreamingIngest.cropInvariantDedupStream`): corpus = the
+    * `MediaKeys.ImageCrop.key.screen` /
+    * `MediaKeys.ImageCrop.stream`): corpus = the
     * originals' signatures, batch = the letterboxed upscaled
     * re-uploads, corpus band buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
@@ -6864,7 +6001,7 @@ object SparkEntry {
       |mah AS (SELECT id, min(ahash) AS ahash FROM oah GROUP BY id)""".stripMargin
 
   /** Capped-pair CTEs over [[mirrorInvariantFpCte]] (mirrors
-    * `Multimodal.imageMirrorInvariantPairs`): one corpus-wide 'mthumb'
+    * `MediaKeys.ImageMirror.key.pairs`): one corpus-wide 'mthumb'
     * group, 4×16-bit bands, buckets capped at 64 smallest ids, exact
     * Hamming ≤ 6 confirms, 4 best partners per id_a. Ends defining
     * `pairs(id_a, id_b, hamming)`. */
@@ -6890,8 +6027,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[mirrorInvariantFpCte]] (mirrors
-    * `Multimodal.incrementalMirrorInvariantNearDups` /
-    * `StreamingIngest.mirrorInvariantDedupStream`): corpus = the
+    * `MediaKeys.ImageMirror.key.screen` /
+    * `MediaKeys.ImageMirror.stream`): corpus = the
     * originals' canonical signatures, batch = the mirrored upscaled
     * re-uploads, corpus band buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
@@ -6982,7 +6119,7 @@ object SparkEntry {
       |rah AS (SELECT id, min(ahash) AS ahash FROM roah GROUP BY id)""".stripMargin
 
   /** Capped-pair CTEs over [[rotationInvariantFpCte]] (mirrors
-    * `Multimodal.imageRotationInvariantPairs`): one corpus-wide
+    * `MediaKeys.ImageRotation.key.pairs`): one corpus-wide
     * 'rthumb' group, 4×16-bit bands, buckets capped at 64 smallest
     * ids, exact Hamming ≤ 6 confirms, 4 best partners per id_a. Ends
     * defining `pairs(id_a, id_b, hamming)`. */
@@ -7008,8 +6145,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[rotationInvariantFpCte]] (mirrors
-    * `Multimodal.incrementalRotationInvariantNearDups` /
-    * `StreamingIngest.rotationInvariantDedupStream`): corpus = the
+    * `MediaKeys.ImageRotation.key.screen` /
+    * `MediaKeys.ImageRotation.stream`): corpus = the
     * originals' canonical signatures, batch = the rotated upscaled
     * re-uploads, corpus band buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
@@ -7100,7 +6237,7 @@ object SparkEntry {
       |  FROM vmmin GROUP BY id)""".stripMargin
 
   /** Mirror-invariant video capped-pair CTEs over [[videoMiCte]]
-    * (mirrors `Multimodal.videoMirrorInvariantPairs`): dimensions
+    * (mirrors `MediaKeys.VideoMirror.key.pairs`): dimensions
     * dropped from the group ('vmthumb:' + n_key), 4×16-bit bands,
     * buckets capped at 64 smallest ids, exact Hamming ≤ 6 confirms,
     * 4 best partners per id_a. Ends defining
@@ -7129,8 +6266,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Mirror-invariant video incremental-screen CTEs over [[videoMiCte]]
-    * (mirrors `Multimodal.incrementalVideoMirrorInvariantNearDups` /
-    * `StreamingIngest.videoMirrorInvariantDedupStream`): corpus = the
+    * (mirrors `MediaKeys.VideoMirror.key.screen` /
+    * `MediaKeys.VideoMirror.stream`): corpus = the
     * originals' signatures (even ids), batch = the mirrored transcodes
     * (odd ids), corpus band buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
@@ -7228,7 +6365,7 @@ object SparkEntry {
       |  FROM vrmin GROUP BY id)""".stripMargin
 
   /** Rotation-invariant video capped-pair CTEs over [[videoRotCte]]
-    * (mirrors `Multimodal.videoRotationInvariantPairs`): 'vrthumb:' +
+    * (mirrors `MediaKeys.VideoRotation.key.pairs`): 'vrthumb:' +
     * n_key group, 4×16-bit bands, buckets capped at 64 smallest ids,
     * Hamming ≤ 6, 4 best partners. Ends defining
     * `svpairs(id_a, id_b, hamming)`. */
@@ -7256,8 +6393,8 @@ object SparkEntry {
 
   /** Rotation-invariant video incremental-screen CTEs over
     * [[videoRotCte]] (mirrors
-    * `Multimodal.incrementalVideoRotationInvariantNearDups` /
-    * `StreamingIngest.videoRotationInvariantDedupStream`): corpus =
+    * `MediaKeys.VideoRotation.key.screen` /
+    * `MediaKeys.VideoRotation.stream`): corpus =
     * even ids, batch = odd ids, corpus band buckets capped at 64
     * smallest ids (size-1 kept), Hamming ≤ 6. Ends defining
     * `svconf2(batch_id, corpus_id, hamming)`. */
@@ -7334,7 +6471,7 @@ object SparkEntry {
       |  FROM svfh GROUP BY id)""".stripMargin
 
   /** Capped-pair CTEs over [[videoCiCte]] (mirrors
-    * `Multimodal.videoCropInvariantPairs`): 'vcbox:'+n_key group,
+    * `MediaKeys.VideoCrop.key.pairs`): 'vcbox:'+n_key group,
     * 4×16-bit bands, buckets capped at 64 smallest ids, Hamming ≤ 6,
     * 4 best partners. Ends defining `svpairs(id_a, id_b, hamming)`. */
   private def videoCiPairsCte: String =
@@ -7360,8 +6497,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[videoCiCte]] (mirrors
-    * `Multimodal.incrementalVideoCropInvariantNearDups` /
-    * `StreamingIngest.videoCropInvariantDedupStream`): corpus = even
+    * `MediaKeys.VideoCrop.key.screen` /
+    * `MediaKeys.VideoCrop.stream`): corpus = even
     * ids, batch = odd, buckets capped at 64 smallest ids (size-1
     * kept), Hamming ≤ 6. Ends defining
     * `svconf2(batch_id, corpus_id, hamming)`. */
@@ -7440,7 +6577,7 @@ object SparkEntry {
       |  GROUP BY c.id)""".stripMargin
 
   /** Capped-pair CTEs over [[trimInvariantFpCte]] (mirrors
-    * `Multimodal.audioTrimInvariantPairs`): one corpus-wide 'trim'
+    * `MediaKeys.AudioTrim.key.pairs`): one corpus-wide 'trim'
     * group, 4×16-bit bands, buckets capped at 64 smallest ids,
     * Hamming ≤ 6, 4 best partners. Ends defining
     * `pairs(id_a, id_b, hamming)`. */
@@ -7467,8 +6604,8 @@ object SparkEntry {
       |  WHERE rnk <= 4)""".stripMargin
 
   /** Incremental-screen CTEs over [[trimInvariantFpCte]] (mirrors
-    * `Multimodal.incrementalTrimInvariantNearDups` /
-    * `StreamingIngest.trimInvariantDedupStream`): corpus = the
+    * `MediaKeys.AudioTrim.key.screen` /
+    * `MediaKeys.AudioTrim.stream`): corpus = the
     * originals' signatures, batch = the padded ZOH re-uploads, corpus
     * band buckets capped at 64 smallest ids (size-1 kept), Hamming
     * ≤ 6. Ends defining `conf(batch_id, corpus_id, hamming)`. */

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 
@@ -115,4 +115,12 @@ object ExpressionValidator {
     }
     require(errs.isEmpty, s"invalid transform expression(s):\n  ${errs.mkString("\n  ")}")
   }
+
+  /** Apply a table spec's transforms in declaration order — the ONE
+    * transform fold of every transfer path. Validate with
+    * [[validateAll]] first. */
+  def applyAll(df: DataFrame, t: TableMapping): DataFrame =
+    t.columnTransformations.foldLeft(df) { (d, ct) =>
+      d.withColumn(ct.sourceColumn, org.apache.spark.sql.functions.expr(ct.expression))
+    }
 }

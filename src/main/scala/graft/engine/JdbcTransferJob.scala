@@ -365,13 +365,7 @@ final class JdbcTransferJob(
     val pk = table.primaryKeyCols.getOrElse(JdbcCatalog.primaryKey(url, table.name))
     require(pk.nonEmpty,
       s"table '${table.name}' has no primary key — refusing (mysql.go:216-218)")
-    table.columnTransformations.foreach { ct =>
-      ExpressionValidator.validate(spark, ct.expression) match {
-        case Left(reason) => sys.error(
-          s"rejected transform for ${table.name}.${ct.sourceColumn}: $reason")
-        case Right(()) => ()
-      }
-    }
+    ExpressionValidator.validateAll(spark, table)
     if (table.evolveSchema) { // S8 + additive evolution (opt-in)
       val added = JdbcCatalog.evolveTable(url, table.name, table.target, destUrl)
       if (added.nonEmpty)
@@ -572,9 +566,7 @@ final class JdbcTransferJob(
     * a second planning pass per chunk, VERDICT r4 #5). */
   private def writeChunk(chunk: DataFrame, pk: Seq[String],
                          chunkPartitions: Int, chunkConcurrency: Int): Long = {
-    val out = table.columnTransformations.foldLeft(chunk) { (d, ct) =>
-      d.withColumn(ct.sourceColumn, expr(ct.expression))
-    }
+    val out = ExpressionValidator.applyAll(chunk, table)
     val wp = JdbcUpsert.effectiveWriteParallelism(destUrl, writeParallelism)
     val target = JdbcTransferJob.coalesceTarget(wp, chunkPartitions)
     val toWrite = if (target > 0) out.coalesce(target) else out

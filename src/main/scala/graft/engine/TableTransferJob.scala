@@ -135,13 +135,7 @@ final class TableTransferJob(
       return TransferOutcome.SkippedComplete
     }
 
-    table.columnTransformations.foreach { ct =>
-      ExpressionValidator.validate(spark, ct.expression) match {
-        case Left(reason) => sys.error(
-          s"rejected transform for ${table.name}.${ct.sourceColumn}: $reason")
-        case Right(()) => ()
-      }
-    }
+    ExpressionValidator.validateAll(spark, table)
 
     val source = spark.read.parquet(srcFile)
     // S8: DDL mirror — schema sidecar written once (CREATE TABLE IF NOT
@@ -149,7 +143,8 @@ final class TableTransferJob(
     Files.createDirectories(Paths.get(destDir))
     val ddlPath = Paths.get(destDir, "_schema.ddl")
     if (!Files.exists(ddlPath))
-      Files.writeString(ddlPath, transformed(source).schema.toDDL + "\n")
+      Files.writeString(ddlPath,
+        ExpressionValidator.applyAll(source, table).schema.toDDL + "\n")
     // S9: Cassandra destinations also get the dependency migration DDL —
     // CREATE TYPE per reachable struct (innermost first) + the table DDL
     // referencing them (`cassandra.go:293-443`); a deployment executes
@@ -159,7 +154,7 @@ final class TableTransferJob(
       if (!Files.exists(cqlPath)) {
         val ks = if (spec.destination.database.nonEmpty)
           spec.destination.database else "graft"
-        val schema = transformed(source).schema
+        val schema = ExpressionValidator.applyAll(source, table).schema
         val stmts = graft.sinks.CassandraDdl.createTypeDdl(ks, table.target, schema) :+
           graft.sinks.CassandraDdl.createTableDdl(ks, table.target, schema, pkCols)
         Files.writeString(cqlPath, stmts.mkString(";\n") + ";\n")
@@ -279,11 +274,6 @@ final class TableTransferJob(
         graft.util.Fs.deleteRecursive(f)
     }
   }
-
-  private def transformed(df: DataFrame): DataFrame =
-    table.columnTransformations.foldLeft(df) { (d, ct) =>
-      d.withColumn(ct.sourceColumn, expr(ct.expression))
-    }
 
   private def chunkRows(total: Long): Long =
     ChunkSizing.chunkRows(total, mig.batchSize, mig.checkpointRowThreshold)
@@ -465,7 +455,7 @@ final class TableTransferJob(
           case (None, false)    => source.where(col(pkCol) <= lit(hi))
           case (None, true)     => source
         }
-        val chunk = transformed(filtered)
+        val chunk = ExpressionValidator.applyAll(filtered, table)
         val idx = chunkIdx
         disp.submit(idx, hi)(writeChunk(chunk, idx))
         lo = Some(hi); chunkIdx += 1
@@ -507,7 +497,7 @@ final class TableTransferJob(
           saveCp(None, b - 1, complete = false, bucketCount = n, totalRows = total)
           return TransferOutcome.Interrupted(b - doneBucket - 1)
         }
-        val chunk = transformed(source.where(bucketExpr === b))
+        val chunk = ExpressionValidator.applyAll(source.where(bucketExpr === b), table)
         disp.submit(b, ())(writeChunk(chunk, b))
       }
       disp.drainAll()

@@ -8,7 +8,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.TransferSpec
+import graft.core.{TableMapping, TransferSpec}
 
 /** Multi-table transfer with bounded parallelism (R1): the reference runs
   * one goroutine per table behind a counting semaphore of width `workers`
@@ -34,33 +34,10 @@ object TransferRunner {
   def run(spark: SparkSession, spec: TransferSpec,
           control: TransferControl = new TransferControl,
           log: String => Unit = s => System.err.println(s"[transfer] $s"))
-      : Seq[TableResult] = {
-    val tables = spec.source.tables
-    require(tables.nonEmpty, "spec declares no tables")
-    val pool = Executors.newFixedThreadPool(math.max(1, spec.migration.workers))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // ONE limiter for the whole run — the budget is process-wide
-    // (reference's global limiter, migration.go:212-268), not per table.
-    val limiter = new RateLimiter(spec.migration.rateLimit.toLong)
-    try {
-      val futures = tables.map { t =>
-        Future {
-          // All table pipelines share the DECLARED `transfers` pool
-          // (fairscheduler.xml), which schedules FAIR within the pool —
-          // long tables still can't starve short ones, and no
-          // per-table pool is created undeclared (each such creation
-          // logged a FairSchedulableBuilder warning, VERDICT r4 #9).
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", "transfers")
-          control.jobStarted()
-          try TableResult(t.name,
-            Try(new TableTransferJob(spark, spec, t, control, log,
-              Some(limiter)).run()))
-          finally control.jobFinished()
-        }
-      }
-      Await.result(Future.sequence(futures), Duration.Inf)
-    } finally pool.shutdown()
-  }
+      : Seq[TableResult] =
+    perTable(spark, spec, control) { (t, limiter) =>
+      new TableTransferJob(spark, spec, t, control, log, Some(limiter)).run()
+    }
 
   /** JDBC-backed run (live database source+destination): per-table
     * chunked [[JdbcTransferJob]] on the same bounded pool, with the SAME
@@ -73,7 +50,23 @@ object TransferRunner {
               dialect: graft.sinks.JdbcUpsert.Dialect = graft.sinks.JdbcUpsert.Derby,
               log: String => Unit = s => System.err.println(s"[transfer] $s"),
               control: TransferControl = new TransferControl)
-      : Seq[TableResult] = {
+      : Seq[TableResult] =
+    perTable(spark, spec, control) { (t, limiter) =>
+      val job = new JdbcTransferJob(spark, spec.source.path, t,
+        spec.migration, dialect, destinationUrl = jdbcDestUrl(spec),
+        control = control, log = log, sharedLimiter = Some(limiter))
+      val outcome = job.run()
+      log(s"${t.name}: ${job.rowsWritten} rows upserted into ${t.target} ($outcome)")
+      outcome
+    }
+
+  /** The ONE per-table loop of both runners: each table's `job` runs as
+    * a Future on a pool of `workers` threads, all sharing ONE rate
+    * limiter — the budget is process-wide (reference's global limiter,
+    * migration.go:212-268), not per table. */
+  private def perTable(spark: SparkSession, spec: TransferSpec,
+                       control: TransferControl)(
+      job: (TableMapping, RateLimiter) => TransferOutcome): Seq[TableResult] = {
     val tables = spec.source.tables
     require(tables.nonEmpty, "spec declares no tables")
     val pool = Executors.newFixedThreadPool(math.max(1, spec.migration.workers))
@@ -82,19 +75,14 @@ object TransferRunner {
     try {
       val futures = tables.map { t =>
         Future {
-          // same declared pool as the parquet runner (see note there)
+          // All table pipelines share the DECLARED `transfers` pool
+          // (fairscheduler.xml), which schedules FAIR within the pool —
+          // long tables still can't starve short ones, and no
+          // per-table pool is created undeclared (each such creation
+          // logged a FairSchedulableBuilder warning, VERDICT r4 #9).
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", "transfers")
           control.jobStarted()
-          try TableResult(t.name, Try {
-            val destUrl = TransferRunner.jdbcDestUrl(spec)
-            val job = new JdbcTransferJob(spark, spec.source.path, t,
-              spec.migration, dialect, destinationUrl = destUrl,
-              control = control, log = log,
-              sharedLimiter = Some(limiter))
-            val outcome = job.run()
-            log(s"${t.name}: ${job.rowsWritten} rows upserted into ${t.target} ($outcome)")
-            outcome
-          })
+          try TableResult(t.name, Try(job(t, limiter)))
           finally control.jobFinished()
         }
       }

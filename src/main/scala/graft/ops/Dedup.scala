@@ -490,21 +490,8 @@ object Dedup {
         .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head
       if (r.isNullAt(0)) BigDecimal(0) else BigDecimal(r.getDecimal(0))
     }
-    // Opt-in per-iteration timers (-Dgraft.dedup.timers=1): bench-drift
-    // attribution needs to see WHERE a wall-clock delta lands (edge
-    // build? a specific propagation round? the final checkpoint) without
-    // paying a stderr line per round in normal runs.
-    val timers = sys.props.get("graft.dedup.timers").contains("1")
-    def timed[A](tag: String)(body: => A): A =
-      if (!timers) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[dedup-timer] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     try {
-      var prevSum = timed("labelSum(init)")(labelSum(labels))
+      var prevSum = labelSum(labels)
       var it = 0
       var converged = false
       while (it < maxIters && !converged) {
@@ -559,11 +546,10 @@ object Dedup {
         // the metric ever fails to post
         val obs = org.apache.spark.sql.Observation(
           "graft-prop-" + java.util.UUID.randomUUID().toString)
-        val next = timed(s"iter $it checkpoint")(
-          jump(hop).observe(obs, sum(col("cluster")
-              .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("ls"))
-            .localCheckpoint(true))
-        val nextSum = timed(s"iter $it")(
+        val next = jump(hop).observe(obs, sum(col("cluster")
+            .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("ls"))
+          .localCheckpoint(true)
+        val nextSum =
           try {
             observationGet(obs)("ls") match {
               case null => BigDecimal(0)
@@ -575,7 +561,7 @@ object Dedup {
               s"probe unavailable (${e2.getMessage}); falling back to an " +
               "aggregation job")
             labelSum(next)
-          })
+          }
         // Release the PREVIOUS round's materialization NOW (ADVICE r9):
         // after the switch to localCheckpoint, Dataset.unpersist is a
         // no-op on checkpoint-backed frames (cacheManager never saw
@@ -601,7 +587,7 @@ object Dedup {
       // hand back a SELF-CONTAINED checkpoint and release the loop's
       // final round explicitly (same no-op-unpersist reason as above);
       // only `out`'s own blocks stay resident, and the caller owns them
-      val out = timed("localCheckpoint")(labels.localCheckpoint(true))
+      val out = labels.localCheckpoint(true)
       labels.unpersist()
       releaseLocalCheckpoint(labels)
       out
@@ -843,7 +829,6 @@ object Dedup {
       a.withColumn("m", least(col("u"), min(col("v")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("u")))))
     while (it < maxIters && !converged) {
-      val t0r = System.nanoTime()
       // LARGE-STAR: (v, m(u)) for every strictly-larger neighbor v of u.
       // NOT materialized on its own (r18, guide §2.4/§2.6): the phase
       // pair used to cost TWO actions per round — one localCheckpoint
@@ -885,9 +870,6 @@ object Dedup {
       converged = next == probe
       probe = next
       it += 1
-      if (sys.props.get("graft.dedup.timers").contains("1"))
-        System.err.println(f"[contract-timer] round $it edges=${next._1} " +
-          f"took ${(System.nanoTime() - t0r) / 1e9}%.2f s")
     }
     if (!converged)
       System.err.println(s"[dedup] WARNING: star contraction hit " +

@@ -1497,6 +1497,38 @@ object Multimodal {
 
   final case class ScaleInvariantHash(id: Long, ahash: Long)
 
+  /** The invariant-key signatures' ONE per-payload pass: (id, payload)
+    * rows → `sign` per row, partition-local, no shuffle. */
+  private def signPayloads[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      df: DataFrame, idCol: String, binCol: String)(
+      sign: (Long, Array[Byte]) => T): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, bytes) => sign(id, bytes) })
+  }
+
+  /** [[signPayloads]] for the video keys: a clip `one` cannot sign
+    * (no keyframes / no samples — no perceptual identity) DROPS,
+    * counted under the observed metric `drops`<uuid> as `counter`, so
+    * a bad clip is visible instead of a task failure. */
+  private def clipSigs(df: DataFrame, idCol: String, binCol: String,
+                       drops: String, counter: String)(
+      one: (Long, Array[Byte]) => Option[VideoScaleInvariantHash])
+      : Dataset[VideoScaleInvariantHash] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    signPayloads(df, idCol, binCol)((id, bytes) => (id, one(id, bytes)))
+      .toDF("id", "v")
+      .observe(drops + java.util.UUID.randomUUID().toString.replace("-", ""),
+        sum(when(col("v").isNull, 1L).otherwise(0L)).as(counter))
+      .where(col("v").isNotNull)
+      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
+        col("v.sig").as("sig"))
+      .as[VideoScaleInvariantHash]
+  }
+
   /** The invariant-key family's ONE fixed-grid thumb rule (factored
     * per ADVICE r16 #3 — previously duplicated across the image, video
     * and time-aligned keys, where a drift would silently desynchronize
@@ -1556,44 +1588,12 @@ object Multimodal {
     * closed form. Brightness invariance is inherited from aHash. */
   def imageScaleInvariantHash(df: DataFrame, idCol: String, binCol: String,
                               thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val (w0, h0, px) = decodeImagePayload(bytes)
-        ScaleInvariantHash(id, nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH))
-      })
+    signPayloads(df, idCol, binCol) { (id, bytes) =>
+      val (w0, h0, px) = decodeImagePayload(bytes)
+      ScaleInvariantHash(id, nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH))
+    }
   }
-
-  /** Near-dup pairs over the scale-invariant signatures — the shared
-    * [[bandedHammingPairs]] machinery with ONE corpus-wide group (the
-    * fixed thumb domain replaces the dimensions key) and the video
-    * path's 16-bit × 4 banding over the 64-bit hash. `maxHamming` 6:
-    * ≤3 exhaustive, 4-6 probabilistic — the family posture. */
-  def imageScaleInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                               bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "ahash", group = lit("thumb"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "img_si")
-
-  /** [[incrementalBandedHamming]] over the scale-invariant
-    * signatures — the steady-state screen for the CROSS-RESOLUTION
-    * key: a new batch's fixed-grid thumbs against the standing
-    * corpus's persisted thumb index (the artifact), same fixed group
-    * and 16-bit banding as [[imageScaleInvariantPairs]]. A rescaled
-    * re-upload of standing content hits at Hamming 0, which the
-    * dimension-grouped [[incrementalImageNearDups]] can never see. */
-  def incrementalScaleInvariantNearDups(corpusSigs: DataFrame,
-                                        batchSigs: DataFrame,
-                                        maxHamming: Int = 6,
-                                        bucketCap: Int = 64,
-                                        candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "ahash",
-      group = lit("thumb"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "img_si_incr")
 
   /** Nearest-neighbor 2× upscale (decode → re-encode at doubled dims,
     * target (x, y) reads source (x/2, y/2)) — the cross-resolution
@@ -1677,45 +1677,13 @@ object Multimodal {
     * unchanged by the box rule. */
   def imageCropInvariantHash(df: DataFrame, idCol: String, binCol: String,
                              thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val (w0, h0, px) = decodeImagePayload(bytes)
-        val (bx, by, bw, bh) = contentBox(w0.toInt, h0.toInt, px)
-        ScaleInvariantHash(id, nnThumbAHash(w0, px, bx, by, bw, bh, thumbW, thumbH))
-      })
+    signPayloads(df, idCol, binCol) { (id, bytes) =>
+      val (w0, h0, px) = decodeImagePayload(bytes)
+      val (bx, by, bw, bh) = contentBox(w0.toInt, h0.toInt, px)
+      ScaleInvariantHash(id, nnThumbAHash(w0, px, bx, by, bw, bh, thumbW, thumbH))
+    }
   }
-
-  /** Near-dup pairs over the crop-invariant signatures — the shared
-    * [[bandedHammingPairs]] machinery with ONE corpus-wide group (the
-    * content-box thumb domain carries no dimensions) and the family's
-    * 16-bit × 4 banding. `maxHamming` 6: ≤3 exhaustive, 4-6
-    * probabilistic — the family posture. */
-  def imageCropInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                              bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "ahash", group = lit("cbox"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "img_ci")
-
-  /** [[incrementalBandedHamming]] over the crop-invariant signatures —
-    * the steady-state screen for the CROSS-LAYOUT key: a new batch's
-    * content-box thumbs against the standing corpus's persisted index,
-    * same fixed group and banding as [[imageCropInvariantPairs]]. A
-    * letterboxed (even letterboxed-and-rescaled) re-upload of standing
-    * content hits at Hamming 0, which neither the dimension-grouped
-    * NOR the full-frame scale-invariant screen can see. */
-  def incrementalCropInvariantNearDups(corpusSigs: DataFrame,
-                                       batchSigs: DataFrame,
-                                       maxHamming: Int = 6,
-                                       bucketCap: Int = 64,
-                                       candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "ahash",
-      group = lit("cbox"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "img_ci_incr")
 
   /** Horizontal mirror of a decoded pixel array — the orbit element
     * the mirror-invariant key canonicalizes over. */
@@ -1750,46 +1718,15 @@ object Multimodal {
     * current key provably misses it. */
   def imageMirrorInvariantHash(df: DataFrame, idCol: String, binCol: String,
                                thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val (w0, h0, px) = decodeImagePayload(bytes)
-        val plain = nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH)
-        val flipped = nnThumbAHash(w0, mirrorH(w0.toInt, h0.toInt, px),
-          0, 0, w0, h0, thumbW, thumbH)
-        ScaleInvariantHash(id, math.min(plain, flipped))
-      })
+    signPayloads(df, idCol, binCol) { (id, bytes) =>
+      val (w0, h0, px) = decodeImagePayload(bytes)
+      val plain = nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH)
+      val flipped = nnThumbAHash(w0, mirrorH(w0.toInt, h0.toInt, px),
+        0, 0, w0, h0, thumbW, thumbH)
+      ScaleInvariantHash(id, math.min(plain, flipped))
+    }
   }
-
-  /** Near-dup pairs over the mirror-invariant signatures — the shared
-    * [[bandedHammingPairs]] machinery with ONE corpus-wide group (the
-    * canonical orientation carries no dimensions) and the family's
-    * 16-bit × 4 banding. */
-  def imageMirrorInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                                bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "ahash", group = lit("mthumb"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "img_mi")
-
-  /** [[incrementalBandedHamming]] over the mirror-invariant
-    * signatures — the steady-state screen for the CROSS-ORIENTATION
-    * key: a new batch's canonical thumbs against the standing corpus's
-    * persisted index, same fixed group and banding as
-    * [[imageMirrorInvariantPairs]]. A mirrored (even
-    * mirrored-and-rescaled) re-upload of standing content hits at
-    * Hamming 0, which no other image screen can see. */
-  def incrementalMirrorInvariantNearDups(corpusSigs: DataFrame,
-                                         batchSigs: DataFrame,
-                                         maxHamming: Int = 6,
-                                         bucketCap: Int = 64,
-                                         candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "ahash",
-      group = lit("mthumb"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "img_mi_incr")
 
   /** Horizontal-mirror generator (decode → flip each row → re-encode) —
     * the cross-orientation duplicate generator the mirror-invariant
@@ -1815,6 +1752,31 @@ object Multimodal {
       y += 1
     }
     out
+  }
+
+  /** Signed minimum of the fixed-grid thumb hash over all EIGHT
+    * physical orientations of a decoded frame — the four rotations and
+    * their mirrors, the full dihedral orbit (iterated [[rot90]] +
+    * [[mirrorH]]; never by permuting thumb cells, which NN sampling
+    * does not commute with). */
+  private[graft] def d4MinThumb(w0: Int, h0: Int, px: Array[Int],
+                                thumbW: Int, thumbH: Int): Long = {
+    var arr = px
+    var w = w0
+    var h = h0
+    var best = Long.MaxValue
+    var r = 0
+    while (r < 4) {
+      val plain = nnThumbAHash(w, arr, 0, 0, w, h, thumbW, thumbH)
+      val mirrored = nnThumbAHash(w, mirrorH(w, h, arr), 0, 0, w, h,
+        thumbW, thumbH)
+      if (plain < best) best = plain
+      if (mirrored < best) best = mirrored
+      arr = rot90(w, h, arr)
+      val t = w; w = h; h = t
+      r += 1
+    }
+    best
   }
 
   /** ROTATION-INVARIANT image signature (r18, VERDICT r17 #4 — the D4
@@ -1843,60 +1805,13 @@ object Multimodal {
     * incomparable grids). */
   def imageRotationInvariantHash(df: DataFrame, idCol: String, binCol: String,
                                  thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW == thumbH, "rotation orbit needs a square thumb grid")
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val (w0, h0, px) = decodeImagePayload(bytes)
-        var arr = px
-        var w = w0.toInt
-        var h = h0.toInt
-        var best = Long.MaxValue
-        var r = 0
-        while (r < 4) {
-          val plain = nnThumbAHash(w, arr, 0, 0, w, h, thumbW, thumbH)
-          val mirrored = nnThumbAHash(w, mirrorH(w, h, arr), 0, 0, w, h,
-            thumbW, thumbH)
-          if (plain < best) best = plain
-          if (mirrored < best) best = mirrored
-          arr = rot90(w, h, arr)
-          val t = w; w = h; h = t
-          r += 1
-        }
-        ScaleInvariantHash(id, best)
-      })
+    signPayloads(df, idCol, binCol) { (id, bytes) =>
+      val (w0, h0, px) = decodeImagePayload(bytes)
+      ScaleInvariantHash(id, d4MinThumb(w0.toInt, h0.toInt, px, thumbW, thumbH))
+    }
   }
-
-  /** Near-dup pairs over the rotation-invariant signatures — the
-    * shared [[bandedHammingPairs]] machinery with ONE corpus-wide
-    * group (the canonical orientation carries no dimensions) and the
-    * family's 16-bit × 4 banding. */
-  def imageRotationInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                                  bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "ahash", group = lit("rthumb"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "img_ri")
-
-  /** [[incrementalBandedHamming]] over the rotation-invariant
-    * signatures — the steady-state screen for the CROSS-ORIENTATION
-    * key's full dihedral orbit: a new batch's canonical thumbs against
-    * the standing corpus's persisted index, same fixed group and
-    * banding as [[imageRotationInvariantPairs]]. A rotated (even
-    * rotated-and-rescaled, or rotated-and-mirrored) re-upload of
-    * standing content hits at Hamming 0, which no other image screen —
-    * including the mirror screen — can see. */
-  def incrementalRotationInvariantNearDups(corpusSigs: DataFrame,
-                                           batchSigs: DataFrame,
-                                           maxHamming: Int = 6,
-                                           bucketCap: Int = 64,
-                                           candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "ahash",
-      group = lit("rthumb"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "img_ri_incr")
 
   /** 90°-clockwise-rotation generator over encoded bytes (decode →
     * [[rot90]] → re-encode, applied `turns` times mod 4) — the
@@ -1968,24 +1883,11 @@ object Multimodal {
   def videoScaleInvariantHash(df: DataFrame, idCol: String, binCol: String,
                               maxKeyframes: Int = 4, thumbW: Int = 8,
                               thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
     require(maxKeyframes >= 1 && maxKeyframes <= 4,
       s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, videoSiOne(id, bytes, maxKeyframes, thumbW, thumbH))
-      })
-      .toDF("id", "v")
-      .observe("video_si_drops_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("keyframeless_dropped"))
-      .where(col("v").isNotNull)
-      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
-        col("v.sig").as("sig"))
-      .as[VideoScaleInvariantHash]
+    clipSigs(df, idCol, binCol, "video_si_drops_", "keyframeless_dropped")(
+      videoSiOne(_, _, maxKeyframes, thumbW, thumbH))
   }
 
   /** Per-clip body of [[videoScaleInvariantHash]] (factored for the
@@ -2010,37 +1912,6 @@ object Multimodal {
     }
   }
 
-  /** Near-dup pairs over the scale-invariant video signatures — the
-    * shared [[bandedHammingPairs]] machinery with the dimensions
-    * DROPPED from the group (the fixed thumb domain replaces them;
-    * `n_key` stays — signatures with different keyframe counts occupy
-    * different bit ranges and a Hamming compare between them is
-    * meaningless) and the video path's 16-bit × 4 banding. `maxHamming`
-    * 6: ≤3 exhaustive, 4-6 probabilistic — the family posture. */
-  def videoScaleInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                               bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "sig",
-      group = concat(lit("vthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_si")
-
-  /** [[incrementalBandedHamming]] over the scale-invariant video
-    * signatures — the steady-state screen for the CROSS-RESOLUTION
-    * video key: a new batch's fixed-grid clip signatures against the
-    * standing corpus's persisted index, same group and banding as
-    * [[videoScaleInvariantPairs]]. An NN-rescaled transcode of
-    * standing content hits at Hamming 0, which the dimension-grouped
-    * [[incrementalVideoPerceptualNearDups]] can never see. */
-  def incrementalVideoScaleInvariantNearDups(corpusSigs: DataFrame,
-                                             batchSigs: DataFrame,
-                                             maxHamming: Int = 6,
-                                             bucketCap: Int = 64,
-                                             candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "sig",
-      group = concat(lit("vthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_si_incr")
-
   /** SCALE- AND STRIDE-INVARIANT video signature (r16) — the
     * composition of [[videoScaleInvariantHash]]'s fixed-grid thumb with
     * [[videoPerceptualHashTimeAligned]]'s content-timeline sampling: a
@@ -2058,7 +1929,7 @@ object Multimodal {
     * no dimension key at all. Sample-less clips DROP with an
     * observable counter (ADVICE r16 #2 — the [[videoScaleInvariantHash]]
     * posture; the old throw would poison-retry a micro-batch forever
-    * in [[graft.streaming.StreamingIngest.videoScaleTimeInvariantDedupStream]],
+    * in the `MediaKeys.VideoScaleTime` stream leg,
     * the exact hazard the r12 quarantine tier was built for). */
   def videoScaleInvariantHashTimeAligned(df: DataFrame, idCol: String,
                                          binCol: String, nSamples: Int = 4,
@@ -2067,21 +1938,8 @@ object Multimodal {
     require(nSamples >= 1 && nSamples <= 4,
       s"nSamples must be in [1, 4] (16-bit folds in one BIGINT), got $nSamples")
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, videoStiOne(id, bytes, nSamples, thumbW, thumbH))
-      })
-      .toDF("id", "v")
-      .observe("video_sti_drops_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("sampleless_dropped"))
-      .where(col("v").isNotNull)
-      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
-        col("v.sig").as("sig"))
-      .as[VideoScaleInvariantHash]
+    clipSigs(df, idCol, binCol, "video_sti_drops_", "sampleless_dropped")(
+      videoStiOne(_, _, nSamples, thumbW, thumbH))
   }
 
   /** Per-clip body of [[videoScaleInvariantHashTimeAligned]] (factored
@@ -2116,35 +1974,6 @@ object Multimodal {
       Some(VideoScaleInvariantHash(id, nSamples.toLong, sig))
     }
   }
-
-  /** Near-dup pairs over the scale+stride-invariant signatures — the
-    * shared [[bandedHammingPairs]] machinery with ONE corpus-wide
-    * group (`n_key` is the constant slot count and dimensions are
-    * thumbed away, so nothing distinguishes comparable clips) and the
-    * family's 16-bit × 4 banding. */
-  def videoScaleTimeInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                                   bucketCap: Int = 64,
-                                   candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "sig", group = lit("vthumb_t"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_sti")
-
-  /** [[incrementalBandedHamming]] over the scale+stride-invariant
-    * signatures — the steady-state screen for the composition key: a
-    * new batch's slot-sampled thumb signatures against the standing
-    * corpus's persisted index, same corpus-wide group and banding as
-    * [[videoScaleTimeInvariantPairs]]. A rescaled AND
-    * keyframe-re-placed transcode of standing content hits at
-    * Hamming 0, which neither parent's screen can see. */
-  def incrementalVideoScaleTimeInvariantNearDups(corpusSigs: DataFrame,
-                                                 batchSigs: DataFrame,
-                                                 maxHamming: Int = 6,
-                                                 bucketCap: Int = 64,
-                                                 candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "sig",
-      group = lit("vthumb_t"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "vid_sti_incr")
 
   /** Nearest-neighbor 2× video upscale: parse the container, decode
     * every sample payload, NN 2× upscale each frame ([[nnUpscale2x]]'s
@@ -2195,24 +2024,11 @@ object Multimodal {
   def videoCropInvariantHash(df: DataFrame, idCol: String, binCol: String,
                              maxKeyframes: Int = 4, thumbW: Int = 8,
                              thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
     require(maxKeyframes >= 1 && maxKeyframes <= 4,
       s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, videoCiOne(id, bytes, maxKeyframes, thumbW, thumbH))
-      })
-      .toDF("id", "v")
-      .observe("video_ci_drops_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("keyframeless_dropped"))
-      .where(col("v").isNotNull)
-      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
-        col("v.sig").as("sig"))
-      .as[VideoScaleInvariantHash]
+    clipSigs(df, idCol, binCol, "video_ci_drops_", "keyframeless_dropped")(
+      videoCiOne(_, _, maxKeyframes, thumbW, thumbH))
   }
 
   /** Per-clip body of [[videoCropInvariantHash]] (factored for the
@@ -2237,36 +2053,6 @@ object Multimodal {
       Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
     }
   }
-
-  /** Near-dup pairs over the crop-invariant video signatures — the
-    * shared [[bandedHammingPairs]] machinery with dimensions dropped
-    * from the group (the content-box thumb domain replaces them;
-    * `n_key` stays — different keyframe counts occupy different bit
-    * ranges) and the family's 16-bit × 4 banding. */
-  def videoCropInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                              bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "sig",
-      group = concat(lit("vcbox:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_ci")
-
-  /** [[incrementalBandedHamming]] over the crop-invariant video
-    * signatures — the steady-state screen for the CROSS-LAYOUT video
-    * key: a new batch's content-box clip signatures against the
-    * standing corpus's persisted index, same group and banding as
-    * [[videoCropInvariantPairs]]. A letterboxed-and-rescaled transcode
-    * of standing content hits at Hamming 0, which neither the
-    * dimension-grouped NOR the full-frame scale-invariant screen can
-    * see. */
-  def incrementalVideoCropInvariantNearDups(corpusSigs: DataFrame,
-                                            batchSigs: DataFrame,
-                                            maxHamming: Int = 6,
-                                            bucketCap: Int = 64,
-                                            candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "sig",
-      group = concat(lit("vcbox:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_ci_incr")
 
   /** Letterbox every frame and re-encode — the cross-layout duplicate
     * generator the video crop-invariant gates and spec share (the
@@ -2322,24 +2108,11 @@ object Multimodal {
   def videoMirrorInvariantHash(df: DataFrame, idCol: String, binCol: String,
                                maxKeyframes: Int = 4, thumbW: Int = 8,
                                thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
     require(maxKeyframes >= 1 && maxKeyframes <= 4,
       s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, videoMiOne(id, bytes, maxKeyframes, thumbW, thumbH))
-      })
-      .toDF("id", "v")
-      .observe("video_mi_drops_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("keyframeless_dropped"))
-      .where(col("v").isNotNull)
-      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
-        col("v.sig").as("sig"))
-      .as[VideoScaleInvariantHash]
+    clipSigs(df, idCol, binCol, "video_mi_drops_", "keyframeless_dropped")(
+      videoMiOne(_, _, maxKeyframes, thumbW, thumbH))
   }
 
   /** Per-clip body of [[videoMirrorInvariantHash]] (factored for the
@@ -2367,35 +2140,6 @@ object Multimodal {
     }
   }
 
-  /** Near-dup pairs over the mirror-invariant video signatures — the
-    * shared [[bandedHammingPairs]] machinery with dimensions dropped
-    * from the group (the canonical-orientation thumb domain carries
-    * none; `n_key` stays — different keyframe counts occupy different
-    * bit ranges) and the family's 16-bit × 4 banding. */
-  def videoMirrorInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                                bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "sig",
-      group = concat(lit("vmthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_mi")
-
-  /** [[incrementalBandedHamming]] over the mirror-invariant video
-    * signatures — the steady-state screen for the CROSS-ORIENTATION
-    * video key: a new batch's canonical clip signatures against the
-    * standing corpus's persisted index, same group and banding as
-    * [[videoMirrorInvariantPairs]]. A frame-mirrored (even
-    * mirrored-and-rescaled) transcode of standing content hits at
-    * Hamming 0, which no other video screen can see. */
-  def incrementalVideoMirrorInvariantNearDups(corpusSigs: DataFrame,
-                                              batchSigs: DataFrame,
-                                              maxHamming: Int = 6,
-                                              bucketCap: Int = 64,
-                                              candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "sig",
-      group = concat(lit("vmthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_mi_incr")
-
   /** ROTATION-INVARIANT video signature (r18 — the D4 completion for
     * clips, pairing [[imageRotationInvariantHash]] with
     * [[videoMirrorInvariantHash]]): per `stss` keyframe, hash ALL
@@ -2417,25 +2161,12 @@ object Multimodal {
   def videoRotationInvariantHash(df: DataFrame, idCol: String, binCol: String,
                                  maxKeyframes: Int = 4, thumbW: Int = 8,
                                  thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(thumbW == thumbH, "rotation orbit needs a square thumb grid")
     require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
     require(maxKeyframes >= 1 && maxKeyframes <= 4,
       s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, videoRoOne(id, bytes, maxKeyframes, thumbW, thumbH))
-      })
-      .toDF("id", "v")
-      .observe("video_roti_drops_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("keyframeless_dropped"))
-      .where(col("v").isNotNull)
-      .select(col("v.id").as("id"), col("v.n_key").as("n_key"),
-        col("v.sig").as("sig"))
-      .as[VideoScaleInvariantHash]
+    clipSigs(df, idCol, binCol, "video_roti_drops_", "keyframeless_dropped")(
+      videoRoOne(_, _, maxKeyframes, thumbW, thumbH))
   }
 
   /** Per-clip body of [[videoRotationInvariantHash]] (factored for the
@@ -2453,53 +2184,12 @@ object Multimodal {
       var k = 0
       while (k < keys.length) {
         val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, keys(k)))
-        var arr = px
-        var w = w0.toInt
-        var h = h0.toInt
-        var best = Long.MaxValue
-        var r = 0
-        while (r < 4) {
-          val plain = nnThumbAHash(w, arr, 0, 0, w, h, thumbW, thumbH)
-          val mirrored = nnThumbAHash(w, mirrorH(w, h, arr), 0, 0, w, h,
-            thumbW, thumbH)
-          if (plain < best) best = plain
-          if (mirrored < best) best = mirrored
-          arr = rot90(w, h, arr)
-          val t = w; w = h; h = t
-          r += 1
-        }
-        sig |= fold16(best) << (16 * k)
+        sig |= fold16(d4MinThumb(w0.toInt, h0.toInt, px, thumbW, thumbH)) << (16 * k)
         k += 1
       }
       Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
     }
   }
-
-  /** Near-dup pairs over the rotation-invariant video signatures — the
-    * shared [[bandedHammingPairs]] machinery with dimensions dropped
-    * from the group (the orbit-canonical thumb domain carries none;
-    * `n_key` stays) and the family's 16-bit × 4 banding. */
-  def videoRotationInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                                  bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "sig",
-      group = concat(lit("vrthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_roti")
-
-  /** [[incrementalBandedHamming]] over the rotation-invariant video
-    * signatures — the steady-state screen for the full dihedral video
-    * orbit: a rotated (even rotated-and-rescaled, or rotated-and-
-    * mirrored) transcode of standing content hits at Hamming 0, which
-    * no other video screen — including the mirror screen — can see. */
-  def incrementalVideoRotationInvariantNearDups(corpusSigs: DataFrame,
-                                                batchSigs: DataFrame,
-                                                maxHamming: Int = 6,
-                                                bucketCap: Int = 64,
-                                                candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "sig",
-      group = concat(lit("vrthumb:"), col("n_key").cast("string")),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "vid_roti_incr")
 
   /** Rotate every frame by `turns`×90° clockwise and re-encode — the
     * cross-rotation duplicate generator the video rotation-invariant
@@ -2578,14 +2268,9 @@ object Multimodal {
     * energy) — both spec-proven. */
   def audioRateInvariantHash(df: DataFrame, idCol: String, binCol: String,
                              slots: Int = 64): Dataset[RateInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(slots <= 64, "delta bits must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        RateInvariantHash(id, rateInvariantBits(Wav.decode(bytes), slots))
-      })
+    signPayloads(df, idCol, binCol)((id, bytes) =>
+      RateInvariantHash(id, rateInvariantBits(Wav.decode(bytes), slots)))
   }
 
   /** Per-clip body of [[audioRateInvariantHash]] (factored for the
@@ -2611,34 +2296,6 @@ object Multimodal {
     }
     fp
   }
-
-  /** Near-dup pairs over the rate-invariant signatures — the shared
-    * [[bandedHammingPairs]] machinery with ONE corpus-wide group (the
-    * fixed slot grid replaces the (channels, n_windows) key) and the
-    * scale-invariant image path's 16-bit × 4 banding. `maxHamming` 6:
-    * ≤3 exhaustive, 4-6 probabilistic — the family posture. */
-  def audioRateInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                              bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs, hashCol = "rfp", group = lit("rate"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "aud_ri")
-
-  /** [[incrementalBandedHamming]] over the rate-invariant signatures —
-    * the steady-state screen for the CROSS-RATE key: a new batch's
-    * fixed-grid signatures against the standing corpus's persisted
-    * index, same fixed group and banding as
-    * [[audioRateInvariantPairs]]. A ZOH-resampled re-upload of
-    * standing content hits at Hamming 0, which the rate-grouped
-    * [[incrementalAudioNearDups]] can never see. */
-  def incrementalRateInvariantNearDups(corpusSigs: DataFrame,
-                                       batchSigs: DataFrame,
-                                       maxHamming: Int = 6,
-                                       bucketCap: Int = 64,
-                                       candCap: Int = 4): DataFrame =
-    incrementalBandedHamming(corpusSigs, batchSigs, hashCol = "rfp",
-      group = lit("rate"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "aud_ri_incr")
 
   /** Zero-order-hold 2× upsample (decode → re-encode at doubled rate,
     * frame f reads source frame f/2 — the cheap sample-and-hold
@@ -2682,14 +2339,9 @@ object Multimodal {
     * signature 0. */
   def audioTrimInvariantHash(df: DataFrame, idCol: String, binCol: String,
                              slots: Int = 64): Dataset[RateInvariantHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(slots <= 64, "delta bits must fit one 64-bit hash")
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        RateInvariantHash(id, trimInvariantBits(Wav.decode(bytes), slots))
-      })
+    signPayloads(df, idCol, binCol)((id, bytes) =>
+      RateInvariantHash(id, trimInvariantBits(Wav.decode(bytes), slots)))
   }
 
   /** Per-clip body of [[audioTrimInvariantHash]] (factored for the
@@ -2722,45 +2374,6 @@ object Multimodal {
     }
     fp
   }
-
-  /** Near-dup pairs over the trim-invariant signatures — the shared
-    * [[bandedHammingPairs]] machinery with ONE corpus-wide group (the
-    * onset-anchored fixed grid carries neither frame count nor rate)
-    * and the family's 16-bit × 4 banding. Signature-0 clips are
-    * EXCLUDED from pairing (ADVICE r17 #2): 0 is both the degenerate
-    * sentinel (silence-only / headers-only clips, which have no onset
-    * and hence no trim key) and the contentless all-flat profile —
-    * either way the signature carries no discriminative bits, and in
-    * the single corpus-wide 'trim' group every such clip would pair
-    * with every other at Hamming 0 and the keep closure would collapse
-    * all degenerate clips into one cluster. */
-  def audioTrimInvariantPairs(sigs: DataFrame, maxHamming: Int = 6,
-                              bucketCap: Int = 64, candCap: Int = 4): DataFrame =
-    bandedHammingPairs(sigs.filter(col("rfp") =!= 0L), hashCol = "rfp",
-      group = lit("trim"),
-      bandBits = 16, numBands = 4, maxHamming = maxHamming,
-      bucketCap = bucketCap, candCap = candCap, metric = "aud_ti")
-
-  /** [[incrementalBandedHamming]] over the trim-invariant signatures —
-    * the steady-state screen for the CROSS-TRIM key: a new batch's
-    * onset-anchored signatures against the standing corpus's persisted
-    * index, same fixed group and banding as
-    * [[audioTrimInvariantPairs]]. A silence-padded (even
-    * padded-and-resampled) re-upload of standing content hits at
-    * Hamming 0, which neither the frame-count-grouped NOR the
-    * fixed-grid rate-invariant screen can see. */
-  def incrementalTrimInvariantNearDups(corpusSigs: DataFrame,
-                                       batchSigs: DataFrame,
-                                       maxHamming: Int = 6,
-                                       bucketCap: Int = 64,
-                                       candCap: Int = 4): DataFrame =
-    // signature-0 clips (degenerate: no energy onset) never screen —
-    // same exclusion as audioTrimInvariantPairs (ADVICE r17 #2)
-    incrementalBandedHamming(corpusSigs.filter(col("rfp") =!= 0L),
-      batchSigs.filter(col("rfp") =!= 0L), hashCol = "rfp",
-      group = lit("trim"), bandBits = 16, numBands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap, candCap = candCap,
-      metric = "aud_ti_incr")
 
   /** Silence-pad generator: re-encode with `leadFrames` zero frames
     * before and `trailFrames` after the decoded content, same rate and

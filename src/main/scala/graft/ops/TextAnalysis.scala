@@ -254,15 +254,11 @@ object TextAnalysis {
     * lineage truncated to the materialized vocabulary every round) and
     * releases the superseded round's blocks, so plan size AND executor
     * storage stay bounded by ONE vocabulary-sized materialization
-    * regardless of numMerges. `checkpointEvery` is retained for source
-    * compatibility (the cadence property test now pins that it cannot
-    * change results) but no longer selects a growing-lineage path.
+    * regardless of numMerges.
     * The returned frame is a SELF-CONTAINED checkpoint the caller owns —
     * release it with `Dedup.releaseLocalCheckpoint` when done. */
-  private[graft] def bpeTrainState(docs: DataFrame, numMerges: Int,
-                                   checkpointEvery: Int = 4)
+  private[graft] def bpeTrainState(docs: DataFrame, numMerges: Int)
       : (Seq[(String, String, Long)], DataFrame) = {
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     var vocab = docs.select(explode(words).as("word"))
       .where(length(col("word")) >= 1 && !col("word").contains("|"))
       .groupBy("word").agg(count(lit(1)).cast("bigint").as("wc"))

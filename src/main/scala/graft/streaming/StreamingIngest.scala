@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ops.MediaKeys
+
 /** Structured Streaming ingest of the `events` table (SURVEY §2.7: the
   * reference has no streaming; its resumable-cursor + checkpoint file is
   * a poor-man's offset store. Here the real thing: `readStream` →
@@ -64,11 +66,24 @@ object StreamingIngest {
   private[graft] val WorkDirPurposes =
     Seq("stream_append", "sjdbc", "stream_img_dedup", "stream_vid_dedup",
       "stream_span_index", "stream_media_quarantine", "stream_ann_index",
-      "stream_vid_quarantine", "stream_si_dedup", "stream_ri_dedup",
-      "stream_vsi_dedup", "stream_vsti_dedup", "stream_ci_dedup",
-      "stream_vci_dedup", "stream_ati_dedup", "stream_mi_dedup",
-      "stream_roti_dedup", "stream_vmi_dedup", "stream_acs_dedup",
-      "stream_vroti_dedup")
+      "stream_vid_quarantine") ++ MediaKeys.all.map(_.streamWorkDir)
+
+  /** Run a bounded append-mode stream into a DURABLE parquet sink under
+    * a fresh [[workDir]] and read the sink back; `afterRun` runs once
+    * the stream has terminated (release static-side checkpoints
+    * there). */
+  private[graft] def runToParquet(stream: DataFrame, purpose: String,
+                                  dir: String)(afterRun: => Unit): DataFrame = {
+    val work = workDir(purpose, dir)
+    val q = stream.writeStream
+      .format("parquet")
+      .option("path", s"$work/out")
+      .option("checkpointLocation", s"$work/checkpoint")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    afterRun
+    stream.sparkSession.read.parquet(s"$work/out")
+  }
 
   /** GC terminated streaming work dirs (VERDICT r6 #7): the durable
     * sinks key scratch space (checkpoints + parquet out dirs) by
@@ -272,8 +287,7 @@ object StreamingIngest {
     import spark.implicits._
     val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
     def hashes(df: DataFrame) = Multimodal.imageAHash(
-      df.select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
+      MediaKeys.spread(df)
         .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
         .toDF("id", "img"), "id", "img").toDF()
     // MATERIALIZE the standing index (eager localCheckpoint): the
@@ -316,627 +330,9 @@ object StreamingIngest {
       .withWatermark("arr_ts", "1 second")
       .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
       .drop("arr_ts")
-    val work = workDir("stream_img_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The SCALE-INVARIANT screen as a stream (r14) — the streaming leg
-    * of the cross-resolution key, completing its batch / incremental /
-    * streaming triple: the standing corpus's fixed-grid thumb index
-    * (checkpointed static side, shuffle-join shape) screens arriving
-    * NN-2× rescaled re-uploads; each hits its original at Hamming 0 —
-    * invisible to [[imageDedupStream]]'s dimension-grouped key. Same
-    * bounded-micro-batch + watermark-aged co-batch dedup posture as
-    * the image stream; oracle = the batch screen without the candCap
-    * (stream ≡ batch hit-for-hit). */
-  def scaleInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // id scheme (ADVICE r15 #1): original e → 2e, re-upload → 2e+1 —
-    // provably disjoint at any sweep scale (matches the batch gates)
-    val corpus = Multimodal.imageScaleInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img"), "id", "img").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.imageScaleInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.syntheticBmp(e)))))
-        .toDF("id", "img"), "id", "img").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "ahash", group = lit("thumb"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "img_si_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_si_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The RATE-INVARIANT screen as a stream (r15) — the audio leg of
-    * the scale-invariant streaming family, completing the cross-rate
-    * key's batch / incremental / streaming triple exactly as
-    * [[scaleInvariantDedupStream]] did for images: the standing
-    * corpus's fixed-grid signature index (checkpointed static side,
-    * shuffle-join shape) screens arriving ZOH-2× resampled re-uploads;
-    * each hits its original at Hamming 0 — invisible to the
-    * rate-grouped audio screen. Same bounded-micro-batch +
-    * watermark-aged co-batch dedup posture; oracle = the batch screen
-    * without the candCap (stream ≡ batch hit-for-hit). */
-  def rateInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // id scheme (ADVICE r15 #1): original e → 2e, re-upload → 2e+1 —
-    // provably disjoint at any sweep scale (matches the batch gates)
-    val corpus = Multimodal.audioRateInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticWavMixed(id))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.audioRateInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "rfp", group = lit("rate"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "aud_ri_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_ri_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The SCALE-INVARIANT VIDEO screen as a stream (r16) — the video
-    * leg of the invariant-key streaming family, completing the
-    * cross-resolution video key's batch / incremental / streaming
-    * triple exactly as [[scaleInvariantDedupStream]] did for images:
-    * the standing corpus's fixed-grid thumb-signature index
-    * (checkpointed static side, shuffle-join shape) screens arriving
-    * NN-2× rescaled transcodes; each hits its original at Hamming 0 —
-    * invisible to [[videoDedupStream]]'s dimension-grouped key. Same
-    * bounded-micro-batch + watermark-aged co-batch dedup posture;
-    * oracle = the batch screen without the candCap (stream ≡ batch
-    * hit-for-hit). Ids: original e → 2e, transcode → 2e+1 (disjoint
-    * at any sweep scale). */
-  def videoScaleInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.videoScaleInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.videoScaleInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(e)))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig",
-        group = concat(lit("vthumb:"), col("n_key").cast("string")),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "vid_si_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_vsi_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The SCALE+STRIDE-INVARIANT video screen as a stream (r16) — the
-    * composition key's streaming leg, completing its batch /
-    * incremental / streaming triple: the standing corpus's
-    * slot-sampled thumb-signature index (checkpointed static side,
-    * shuffle-join shape) screens arriving NN-2× re-muxed rescales of
-    * the keyStride-varying fixtures; each hits its original at
-    * Hamming 0 — invisible to both parent keys' streams. Same
-    * bounded-micro-batch + watermark-aged co-batch dedup posture;
-    * oracle = the batch screen without the candCap. */
-  def videoScaleTimeInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.videoScaleInvariantHashTimeAligned(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4T(e))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.videoScaleInvariantHashTimeAligned(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 7 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4T(e)))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig", group = lit("vthumb_t"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "vid_sti_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_vsti_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The CROP/LETTERBOX-INVARIANT image screen as a stream (r17,
-    * VERDICT r16 #3) — the streaming leg of the cross-layout key,
-    * completing its batch / incremental / streaming triple: the
-    * standing corpus's content-box thumb index (checkpointed static
-    * side, shuffle-join shape) screens arriving NN-2×-upscaled
-    * LETTERBOXED re-uploads; each hits its original at Hamming 0 —
-    * invisible to both [[imageDedupStream]]'s dimension-grouped key
-    * AND [[scaleInvariantDedupStream]]'s full-frame thumb. Same
-    * bounded-micro-batch + watermark-aged co-batch dedup posture;
-    * oracle = the batch screen without the candCap. */
-  def cropInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.imageCropInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img"), "id", "img").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.imageCropInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.letterbox(
-            Multimodal.syntheticBmp(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-        .toDF("id", "img"), "id", "img").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "ahash", group = lit("cbox"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "img_ci_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_ci_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The CROP/LETTERBOX-INVARIANT video screen as a stream (r17) —
-    * the video leg of the cross-layout streaming family: the standing
-    * corpus's content-box clip-signature index screens arriving
-    * letterboxed-and-NN-2×-rescaled transcodes; each hits its original
-    * at Hamming 0 — invisible to the dimension-grouped AND the
-    * full-frame scale-invariant video streams. Same posture as
-    * [[videoScaleInvariantDedupStream]]. */
-  def videoCropInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.videoCropInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.videoCropInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.letterboxVideo(
-            Multimodal.syntheticVideoMp4(e),
-            1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig",
-        group = concat(lit("vcbox:"), col("n_key").cast("string")),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "vid_ci_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_vci_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The MIRROR-INVARIANT image screen as a stream (r17) — the
-    * orientation leg of the invariant-key streaming family: the
-    * standing corpus's canonical-orientation thumb index screens
-    * arriving mirrored-and-NN-2×-upscaled re-uploads; each hits its
-    * original at Hamming 0 — invisible to every other image stream
-    * (the scale/crop keys hash the uploaded orientation only). Same
-    * posture as [[scaleInvariantDedupStream]]. */
-  def mirrorInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.imageMirrorInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img"), "id", "img").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.imageMirrorInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 3 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.mirrorBmp(
-            Multimodal.syntheticBmp(e))))))
-        .toDF("id", "img"), "id", "img").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "ahash", group = lit("mthumb"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "img_mi_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_mi_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The TRIM-INVARIANT audio screen as a stream (r17, VERDICT
-    * r16 #4) — the audio leg of the cross-edit streaming family: the
-    * standing corpus's onset-anchored signature index screens arriving
-    * silence-padded ZOH-2× re-uploads; each hits its original at
-    * Hamming 0 — invisible to the frame-count-grouped AND the
-    * fixed-grid rate-invariant audio streams. Same posture as
-    * [[rateInvariantDedupStream]]. */
-  def trimInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // signature-0 clips (degenerate: no energy onset) are excluded
-    // from both sides, mirroring audioTrimInvariantPairs (ADVICE
-    // r17 #2) — in the single 'trim' group two distinct silent clips
-    // would otherwise confirm against each other at Hamming 0
-    val corpus = Multimodal.audioTrimInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticWavMixed(e))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-      .filter(col("rfp") =!= 0L)
-      .localCheckpoint(true)
-    val batch = Multimodal.audioTrimInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.padSilence(
-            Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(e)),
-            1 + (e % 5).toInt, 1 + (e % 3).toInt))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-      .filter(col("rfp") =!= 0L)
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "rfp", group = lit("trim"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "aud_ti_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_ati_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The ROTATION-INVARIANT image screen as a stream (r18, VERDICT
-    * r17 #4) — the dihedral-orbit leg of the invariant-key streaming
-    * family: the standing corpus's D4-canonical thumb index screens
-    * arriving rotated-and-NN-2×-upscaled re-uploads; each hits its
-    * original at Hamming 0 — invisible to every other image stream
-    * including the mirror stream (whose orbit contains no rotation).
-    * Same posture as [[mirrorInvariantDedupStream]]. */
-  def rotationInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.imageRotationInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img"), "id", "img").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.imageRotationInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 4 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.rotateBmp(
-            Multimodal.syntheticBmp(e), 1 + (e % 3).toInt)))))
-        .toDF("id", "img"), "id", "img").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "ahash", group = lit("rthumb"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "img_roti_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_roti_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The MIRROR-INVARIANT video screen as a stream (r18, VERDICT
-    * r17 #3) — the orientation leg of the video streaming family: the
-    * standing corpus's per-frame-orbit-canonical clip-signature index
-    * screens arriving frame-mirrored-and-NN-2×-rescaled transcodes;
-    * each hits its original at Hamming 0 — invisible to the
-    * dimension-grouped, scale-invariant AND crop-invariant video
-    * streams (all hash the uploaded orientation). Same posture as
-    * [[videoScaleInvariantDedupStream]]. */
-  def videoMirrorInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.videoMirrorInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.videoMirrorInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 3 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.mirrorVideoMp4(
-            Multimodal.syntheticVideoMp4(e))))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig",
-        group = concat(lit("vmthumb:"), col("n_key").cast("string")),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "vid_mi_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_vmi_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The ROTATION-INVARIANT video screen as a stream (r18) — the
-    * dihedral-orbit video leg: the standing corpus's per-frame
-    * D4-canonical clip-signature index screens arriving
-    * rotated-and-NN-2×-rescaled transcodes; each hits its original at
-    * Hamming 0 — invisible to every other video stream including the
-    * mirror stream. Same posture as
-    * [[videoMirrorInvariantDedupStream]]. */
-  def videoRotationInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.videoRotationInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(e => (2 * e, Multimodal.syntheticVideoMp4(e))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.videoRotationInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .filter((e: Long) => e % 4 == 0)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.nnUpscaleVideo2x(Multimodal.rotateVideoMp4(
-            Multimodal.syntheticVideoMp4(e), 1 + (e % 3).toInt)))))
-        .toDF("id", "vid"), "id", "vid").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig",
-        group = concat(lit("vrthumb:"), col("n_key").cast("string")),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "vid_roti_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_vroti_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
-  }
-
-  /** The CHANNEL-SWAP axis at the STREAM boundary (r18, VERDICT
-    * r17 #3 — the audio orientation leg): arriving L/R-swapped AND
-    * ZOH-2×-resampled re-uploads screen against the standing corpus's
-    * rate-invariant signature index and hit their originals at
-    * Hamming 0 — the energy key folds channels, so the swap vanishes
-    * from the signature by construction (spec-proven), while the
-    * composed copy is invisible to both the (channels, n_windows)-
-    * grouped exact window screen (frame count changes) and the
-    * byte-exact sample fingerprint (interleaved order changes). Same
-    * machinery as [[rateInvariantDedupStream]] — deliberately: the
-    * gate demonstrates the EXISTING key absorbing a new edit axis, not
-    * a new key. */
-  def channelSwapInvariantDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val corpus = Multimodal.audioRateInvariantHash(
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        .mapPartitions(_.map(id => (2 * id, Multimodal.syntheticWavMixed(id))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-      .localCheckpoint(true)
-    val batch = Multimodal.audioRateInvariantHash(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")
-        .select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
-        // stereo rows only: swap on mono is the identity, and the
-        // fixture plan gives odd events two channels
-        .filter((e: Long) => e % 4 == 1)
-        .mapPartitions(_.map(e =>
-          (2 * e + 1, Multimodal.swapChannels(Multimodal.zohUpsample2x(
-            Multimodal.syntheticWavMixed(e))))))
-        .toDF("id", "clip"), "id", "clip").toDF()
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "rfp", group = lit("rate"),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "aud_cs_stream", observed = false, noBroadcast = true)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    val work = workDir("stream_acs_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
+    runToParquet(confirmed, "stream_img_dedup", dir) {
+      graft.ops.Dedup.releaseLocalCheckpoint(corpus)
+    }
   }
 
   /** The QUARANTINE tier at the STREAM boundary (round 12, completing
@@ -978,8 +374,7 @@ object StreamingIngest {
       .where(expr("event_id div 20") % 2 === 1)
     val q = incoming.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val assets = b.select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
+        val assets = MediaKeys.spread(b)
           .mapPartitions(_.flatMap { e =>
             val clean = Seq((e, Multimodal.syntheticBmp(e)))
             val poison =
@@ -1039,8 +434,7 @@ object StreamingIngest {
     import spark.implicits._
     val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
     def sigs(df: DataFrame) = Multimodal.videoPerceptualHash(
-      df.select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
+      MediaKeys.spread(df)
         .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
         .toDF("id", "vid"), "id", "vid").toDF()
     // (id div 2) parity puts each content's {v0, v1} in the corpus and
@@ -1069,15 +463,9 @@ object StreamingIngest {
       .withWatermark("arr_ts", "1 minute")
       .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
       .drop("arr_ts")
-    val work = workDir("stream_vid_dedup", dir)
-    val q = confirmed.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    spark.read.parquet(s"$work/out")
+    runToParquet(confirmed, "stream_vid_dedup", dir) {
+      graft.ops.Dedup.releaseLocalCheckpoint(corpus)
+    }
   }
 
   /** Streaming INTO a live database: watermark-closed windows upserted
@@ -1380,8 +768,7 @@ object StreamingIngest {
       .where(expr("event_id div 2") % 2 === 1)
     val q = incoming.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val assets = b.select(col("event_id").cast("long"))
-        .repartition(spark.sparkContext.defaultParallelism, col("event_id")).as[Long]
+        val assets = MediaKeys.spread(b)
           .mapPartitions(_.flatMap { e =>
             val clean = Seq((e, Multimodal.syntheticVideoMp4(e)))
             val poison =

@@ -4,8 +4,7 @@ package graft
   * times target queries at sf0.1 in two suite positions inside ONE
   * JVM —
   * (A) immediately after the standard Bench warmup, ×3;
-  * (B) after a load-bearing prefix of heavy queries, ×2 —
-  * with `-Dgraft.dedup.timers=1` so per-iteration wall time is visible.
+  * (B) after a load-bearing prefix of heavy queries, ×2.
   * If A≈B and both ≪ the BENCH number, the drift is cross-entry JVM load
   * (GC/codegen-cache pressure), not a plan or position effect.
   *
@@ -16,7 +15,6 @@ package graft
   */
 object DriftProbe {
   def main(args: Array[String]): Unit = {
-    System.setProperty("graft.dedup.timers", "1")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val targets = if (args.length > 1) args.drop(1).toSeq else Seq("dedup_clusters")
     val spark = Sessions.builder("graft-drift-probe", Sessions.cores).getOrCreate()

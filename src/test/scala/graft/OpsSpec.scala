@@ -2167,7 +2167,7 @@ class OpsSpec extends SparkTestBase {
     // distinct contents stay distinct
     assert(ids.map(sigs(_)).distinct.size == ids.size)
     // the pairs gate surfaces each cross-resolution duplicate at 0
-    val pairs = Multimodal.imageScaleInvariantPairs(
+    val pairs = MediaKeys.ImageScale.key.pairs(
       Multimodal.imageScaleInvariantHash(
         orig.unionByName(up), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2182,7 +2182,7 @@ class OpsSpec extends SparkTestBase {
       "dimension-grouped pairs unexpectedly matched across resolutions")
     // the INCREMENTAL screen: a batch of rescaled re-uploads hits the
     // standing corpus's thumb index at hamming 0, one row per upload
-    val screened = Multimodal.incrementalScaleInvariantNearDups(
+    val screened = MediaKeys.ImageScale.key.screen(
         Multimodal.imageScaleInvariantHash(orig, "id", "img").toDF(),
         Multimodal.imageScaleInvariantHash(up, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2210,7 +2210,7 @@ class OpsSpec extends SparkTestBase {
     // distinct contents stay distinct
     assert(ids.map(id => sigs(2 * id)).distinct.size == ids.size)
     // the pairs gate surfaces each cross-resolution transcode at 0
-    val pairs = Multimodal.videoScaleInvariantPairs(
+    val pairs = MediaKeys.VideoScale.key.pairs(
       Multimodal.videoScaleInvariantHash(
         orig.unionByName(up), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2227,7 +2227,7 @@ class OpsSpec extends SparkTestBase {
       "dimension-grouped perceptual pairs unexpectedly matched across resolutions")
     // the INCREMENTAL screen: a batch of rescaled transcodes hits the
     // standing corpus's signature index at hamming 0, one row per clip
-    val screened = Multimodal.incrementalVideoScaleInvariantNearDups(
+    val screened = MediaKeys.VideoScale.key.screen(
         Multimodal.videoScaleInvariantHash(orig, "id", "vid").toDF(),
         Multimodal.videoScaleInvariantHash(up, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2282,7 +2282,7 @@ class OpsSpec extends SparkTestBase {
         r.getLong(0) % 2 == 0 && r.getLong(1) == r.getLong(0) + 1),
       "dimension-grouped aligned pairs unexpectedly matched across resolutions")
     // the combo pairs gate surfaces every rescaled copy at Hamming 0
-    val pairs = Multimodal.videoScaleTimeInvariantPairs(
+    val pairs = MediaKeys.VideoScaleTime.key.pairs(
       Multimodal.videoScaleInvariantHashTimeAligned(
         orig.unionByName(up), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2291,7 +2291,7 @@ class OpsSpec extends SparkTestBase {
         s"missing rescale+re-mux pair for $id: ${pairs.mkString(",")}")
     // the INCREMENTAL screen: a batch of rescaled+re-muxed transcodes
     // hits the standing corpus index at hamming 0, one row per clip
-    val screened = Multimodal.incrementalVideoScaleTimeInvariantNearDups(
+    val screened = MediaKeys.VideoScaleTime.key.screen(
         Multimodal.videoScaleInvariantHashTimeAligned(orig, "id", "vid").toDF(),
         Multimodal.videoScaleInvariantHashTimeAligned(up, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2359,7 +2359,7 @@ class OpsSpec extends SparkTestBase {
     val scaleBlind = ids.count(e => scaleBoth(2 * e) != scaleBoth(2 * e + 1))
     info(s"scale-invariant parent blind on $scaleBlind/${ids.size} letterboxed copies")
     // 4) the pairs gate surfaces each cross-layout duplicate at 0
-    val pairs = Multimodal.imageCropInvariantPairs(
+    val pairs = MediaKeys.ImageCrop.key.pairs(
       Multimodal.imageCropInvariantHash(
         orig.unionByName(boxed), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2368,7 +2368,7 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-layout pair for $e: ${pairs.mkString(",")}")
     // 5) the INCREMENTAL screen: boxed re-uploads hit the standing
     //    content-box index at hamming 0
-    val screened = Multimodal.incrementalCropInvariantNearDups(
+    val screened = MediaKeys.ImageCrop.key.screen(
         Multimodal.imageCropInvariantHash(orig, "id", "img").toDF(),
         Multimodal.imageCropInvariantHash(boxed, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2419,7 +2419,7 @@ class OpsSpec extends SparkTestBase {
     info(s"video scale-invariant parent blind on " +
       s"${ids.count(e => scaleBoth(2 * e) != scaleBoth(2 * e + 1))}/${ids.size} copies")
     // the pairs gate surfaces each transcode at 0
-    val pairs = Multimodal.videoCropInvariantPairs(
+    val pairs = MediaKeys.VideoCrop.key.pairs(
       Multimodal.videoCropInvariantHash(
         orig.unionByName(boxed), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2427,7 +2427,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * e, 2 * e + 1, 0L)),
         s"missing cross-layout video pair for $e: ${pairs.mkString(",")}")
     // the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalVideoCropInvariantNearDups(
+    val screened = MediaKeys.VideoCrop.key.screen(
         Multimodal.videoCropInvariantHash(orig, "id", "vid").toDF(),
         Multimodal.videoCropInvariantHash(boxed, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2478,7 +2478,7 @@ class OpsSpec extends SparkTestBase {
     info(s"scale key blind on ${ids.count(e => scaleBoth(2 * e) != scaleBoth(3000L + e))}/" +
       s"${ids.size}, crop key blind on ${ids.count(e => cropBoth(2 * e) != cropBoth(3000L + e))}/${ids.size}")
     // 3) the pairs gate surfaces each cross-orientation duplicate at 0
-    val pairs = Multimodal.imageMirrorInvariantPairs(
+    val pairs = MediaKeys.ImageMirror.key.pairs(
       Multimodal.imageMirrorInvariantHash(
         orig.unionByName(flipped), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2486,7 +2486,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * e, 2 * e + 1, 0L)),
         s"missing cross-orientation pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalMirrorInvariantNearDups(
+    val screened = MediaKeys.ImageMirror.key.screen(
         Multimodal.imageMirrorInvariantHash(orig, "id", "img").toDF(),
         Multimodal.imageMirrorInvariantHash(flipped, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2560,7 +2560,7 @@ class OpsSpec extends SparkTestBase {
     // 4) the pairs gate surfaces each cross-rotation duplicate at 0
     val upRot = ids.map(e => (2 * e + 1, Multimodal.nnUpscale2x(
       Multimodal.rotateBmp(Multimodal.syntheticBmp(e), 1 + (e % 3).toInt))))
-    val pairs = Multimodal.imageRotationInvariantPairs(
+    val pairs = MediaKeys.ImageRotation.key.pairs(
       Multimodal.imageRotationInvariantHash(
         (origRows ++ upRot).toDF("id", "img"), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2568,7 +2568,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * e, 2 * e + 1, 0L)),
         s"missing cross-rotation pair for $e: ${pairs.mkString(",")}")
     // 5) the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalRotationInvariantNearDups(
+    val screened = MediaKeys.ImageRotation.key.screen(
         Multimodal.imageRotationInvariantHash(
           origRows.toDF("id", "img"), "id", "img").toDF(),
         Multimodal.imageRotationInvariantHash(
@@ -2625,7 +2625,7 @@ class OpsSpec extends SparkTestBase {
     info(s"video scale key blind on ${blind(scaleBoth)}/${ids.size}, " +
       s"crop key blind on ${blind(cropBoth)}/${ids.size} mirrored transcodes")
     // 3) the pairs gate surfaces each cross-orientation transcode at 0
-    val pairs = Multimodal.videoMirrorInvariantPairs(
+    val pairs = MediaKeys.VideoMirror.key.pairs(
       Multimodal.videoMirrorInvariantHash(
         (origRows ++ mirUp).toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2633,7 +2633,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * e, 2 * e + 1, 0L)),
         s"missing cross-orientation video pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalVideoMirrorInvariantNearDups(
+    val screened = MediaKeys.VideoMirror.key.screen(
         Multimodal.videoMirrorInvariantHash(
           origRows.toDF("id", "vid"), "id", "vid").toDF(),
         Multimodal.videoMirrorInvariantHash(
@@ -2696,7 +2696,7 @@ class OpsSpec extends SparkTestBase {
     val upRot = ids.map(e => (2 * e + 1, Multimodal.nnUpscaleVideo2x(
       Multimodal.rotateVideoMp4(Multimodal.syntheticVideoMp4(e),
         1 + (e % 3).toInt))))
-    val pairs = Multimodal.videoRotationInvariantPairs(
+    val pairs = MediaKeys.VideoRotation.key.pairs(
       Multimodal.videoRotationInvariantHash(
         (origRows ++ upRot).toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2704,7 +2704,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * e, 2 * e + 1, 0L)),
         s"missing cross-rotation video pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalVideoRotationInvariantNearDups(
+    val screened = MediaKeys.VideoRotation.key.screen(
         Multimodal.videoRotationInvariantHash(
           origRows.toDF("id", "vid"), "id", "vid").toDF(),
         Multimodal.videoRotationInvariantHash(
@@ -2759,7 +2759,7 @@ class OpsSpec extends SparkTestBase {
       (2 * e + 1, Multimodal.swapChannels(Multimodal.zohUpsample2x(
         Multimodal.syntheticWav(e)))))
       .toDF("id", "clip")
-    val pairs = Multimodal.audioRateInvariantPairs(
+    val pairs = MediaKeys.AudioChannelSwap.key.pairs(
       Multimodal.audioRateInvariantHash(
         orig.unionByName(swapped), "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2773,7 +2773,7 @@ class OpsSpec extends SparkTestBase {
       assert(fps(2 * e) != fps(2 * e + 1),
         s"window-grouped parent could compare the swapped+ZOH pair for $e")
     // 4) the INCREMENTAL rate screen catches the composed copies too
-    val screened = Multimodal.incrementalRateInvariantNearDups(
+    val screened = MediaKeys.AudioChannelSwap.key.screen(
         Multimodal.audioRateInvariantHash(orig, "id", "clip").toDF(),
         Multimodal.audioRateInvariantHash(swapped, "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2829,7 +2829,7 @@ class OpsSpec extends SparkTestBase {
         Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(id)),
         1 + (id % 5).toInt, 1 + (id % 3).toInt)))
       .toDF("id", "clip")
-    val pairs = Multimodal.audioTrimInvariantPairs(
+    val pairs = MediaKeys.AudioTrim.key.pairs(
       Multimodal.audioTrimInvariantHash(
         orig.unionByName(padded), "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2837,7 +2837,7 @@ class OpsSpec extends SparkTestBase {
       assert(pairs.contains((2 * id, 2 * id + 1, 0L)),
         s"missing cross-trim pair for $id: ${pairs.mkString(",")}")
     // 5) the INCREMENTAL screen mirrors the batch hits
-    val screened = Multimodal.incrementalTrimInvariantNearDups(
+    val screened = MediaKeys.AudioTrim.key.screen(
         Multimodal.audioTrimInvariantHash(orig, "id", "clip").toDF(),
         Multimodal.audioTrimInvariantHash(padded, "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2854,10 +2854,10 @@ class OpsSpec extends SparkTestBase {
       .toDF("id", "clip")
     val mixed = Multimodal.audioTrimInvariantHash(
       orig.unionByName(silents), "id", "clip").toDF()
-    val silentPairs = Multimodal.audioTrimInvariantPairs(mixed)
+    val silentPairs = MediaKeys.AudioTrim.key.pairs(mixed)
       .filter(col("id_a") >= 100L || col("id_b") >= 100L).count()
     assert(silentPairs == 0L, "silence-only clips paired with each other")
-    val silentScreen = Multimodal.incrementalTrimInvariantNearDups(
+    val silentScreen = MediaKeys.AudioTrim.key.screen(
         Multimodal.audioTrimInvariantHash(silents, "id", "clip").toDF(),
         Multimodal.audioTrimInvariantHash(silents, "id", "clip").toDF())
       .count()
@@ -2909,7 +2909,7 @@ class OpsSpec extends SparkTestBase {
         s"ZOH 2x upsample of $id changed the rate-invariant signature")
     assert(ids.map(sigs(_)).distinct.size == ids.size,
       "distinct clips should keep distinct signatures")
-    val pairs = Multimodal.audioRateInvariantPairs(
+    val pairs = MediaKeys.AudioRate.key.pairs(
       Multimodal.audioRateInvariantHash(
         orig.unionByName(up), "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2925,7 +2925,7 @@ class OpsSpec extends SparkTestBase {
       "rate-grouped pairs unexpectedly matched across sample rates")
     // 5) the INCREMENTAL screen: a batch of resampled re-uploads hits
     //    the standing corpus index at hamming 0, one row per upload
-    val screened = Multimodal.incrementalRateInvariantNearDups(
+    val screened = MediaKeys.AudioRate.key.screen(
         Multimodal.audioRateInvariantHash(orig, "id", "clip").toDF(),
         Multimodal.audioRateInvariantHash(up, "id", "clip").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
