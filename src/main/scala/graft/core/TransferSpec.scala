@@ -68,10 +68,12 @@ final case class MigrationSpec(
     progressIntervalSec: Int = 10,
     checkpointRowThreshold: Int = 1000,
     checkpointIntervalSec: Int = 1,
-    /** Chunk writes in flight per table (no reference analog — its read
-      * loop is strictly serial per table, `mysql.go:302-368`; chunks here
-      * are disjoint + idempotent, so pipelining them is safe and hides
-      * per-chunk job-submit + checkpoint latency). */
+    /** Plan chunks per wave: consecutive chunks written by ONE query
+      * per table (no reference analog — its read loop is strictly serial
+      * per table, `mysql.go:302-368`; chunks here are disjoint +
+      * idempotent, so one query can write several of them, paying one
+      * query's fixed cost instead of one per chunk). Also the most chunks
+      * ever uncommitted. */
     chunkParallelism: Int = 4,
     /** R9: interface language, `zh`/`en`/`""` (= detect from env) —
       * reference config `language:` (`main.go:94,256-258`). */
@@ -198,7 +200,7 @@ object TransferSpec {
        |  progress_interval: 10   # seconds between progress reports
        |  checkpoint_row_threshold: 1000
        |  checkpoint_interval: 1
-       |  chunk_parallelism: 4    # chunk writes in flight per table
+       |  chunk_parallelism: 4    # plan chunks per wave (one query)
        |  language: "en"          # interface language (zh: 中文, en: English)
        |""".stripMargin
 }

@@ -52,10 +52,11 @@ final class CheckpointFormatException(msg: String)
 /** Atomic JSON checkpoint files, one per table:
   * `<dir>/<kind>_<table>.checkpoint` (naming per `mysql.go:533-576`).
   *
-  * Save is write-tmp → fsync → atomic rename, matching the
-  * MySQL/PG/Mongo engines (`mysql.go:554-573`) and deliberately FIXING
-  * the reference's Cassandra path, which writes in place and can tear on
-  * crash (`cassandra.go:1059-1061`).
+  * Save is write-tmp → fsync → atomic rename → fsync of the directory,
+  * matching the MySQL/PG/Mongo engines (`mysql.go:554-573`) and
+  * deliberately FIXING the reference's Cassandra path, which writes in
+  * place and can tear on crash (`cassandra.go:1059-1061`). Without the
+  * directory fsync a power loss can undo the rename.
   */
 object Checkpoint {
 
@@ -79,8 +80,18 @@ object Checkpoint {
       try ch.force(true) finally ch.close()
       Files.move(tmp, target,
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      forceDir(target.getParent)
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** fsync a directory so a rename inside it is durable. Best-effort:
+    * false where the file system refuses to open a directory (Windows). */
+  private[graft] def forceDir(dir: Path): Boolean =
+    try {
+      val ch = FileChannel.open(dir, StandardOpenOption.READ)
+      try ch.force(true) finally ch.close()
+      true
+    } catch { case _: java.io.IOException => false }
 
   def load(dir: String, kind: String, table: String): Option[Checkpoint] = {
     val p = path(dir, kind, table)

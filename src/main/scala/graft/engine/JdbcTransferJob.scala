@@ -13,13 +13,14 @@ import graft.sources.JdbcCatalog
   * reference's headline resume feature (断点续传, `mysql.go:533-576`,
   * checkpoint save `internal/migration/migration.go:30-34`) on the live
   * JDBC path, with the same contract as the parquet engine
-  * ([[TableTransferJob]]): plan persisted at start, per-chunk idempotent
-  * writes, prefix-only checkpoint, cancel checks between chunks, rate
-  * limiting and progress on the drain thread.
+  * ([[TableTransferJob]]): plan persisted at start, idempotent writes in
+  * [[Waves]] of up to `chunk_parallelism` chunks (one JDBC read + one
+  * MERGE pass per wave), prefix-only checkpoint, cancel checks between
+  * chunks, rate limiting and progress on the table thread.
   *
   * Pipeline: existence probe (S7) → checkpoint load, skip-if-complete
   * (R6) → PK introspection (S6) → transform validation (P6) → DDL mirror
-  * (S8) → chunk PLAN (typed, persisted) → chunked read→transform→MERGE
+  * (S8) → chunk PLAN (typed, persisted) → wave read→transform→MERGE
   * loop with checkpoint cadence (R4/R5), rate limit (R2), progress (R7),
   * cancel (R8) → complete marker in the checkpoint.
   *
@@ -472,36 +473,24 @@ final class JdbcTransferJob(
     if (startChunk >= bounds.size) { save(bounds.size - 1, complete = true)
       return TransferOutcome.Completed }
 
-    val stats = new ProgressStats(table.name, total)
-    val policy = new CheckpointPolicy(mig.checkpointRowThreshold.toLong,
-      mig.checkpointIntervalSec * 1000L)
-    val disp = new ChunkDispatcher[Unit](mig.chunkParallelism,
-      (idx, _) => save(idx, complete = false), stats, policy,
-      limiter, log, mig.progressIntervalSec * 1000L)
-
-    try {
-      for (i <- startChunk until bounds.size) {
-        if (control.isCancelled) {
-          disp.drainAll()
-          save(i - 1, complete = false)
-          written = stats.processedRows
-          log(s"${table.name}: interrupted, checkpoint at chunk ${i - 1}")
-          return TransferOutcome.Interrupted(i - startChunk)
-        }
-        val preds = chunkPredicates(key, bounds, i)
-        // actual chunk concurrency of THIS run: a 1-chunk plan (small
-        // table, incremental delta, resumed tail) must not split its
-        // pace budget across phantom parallel chunks
-        val conc = math.min(math.max(1, mig.chunkParallelism),
-          bounds.size - startChunk)
-        disp.submit(i, ())(writeChunk(readChunk(preds), pk, preds.length, conc))
-      }
-      disp.drainAll()
-      log(stats.report())
-      written = stats.processedRows
-      save(bounds.size - 1, complete = true)
-      TransferOutcome.Completed
-    } finally disp.shutdown()
+    // a wave's read is one predicate-partitioned scan over the
+    // concatenated chunk predicates, its write one MERGE pass
+    val waves = new Waves(mig, table.name, total, control, limiter, log)
+    val outcome = waves.run(bounds.size - startChunk) { (f, l) =>
+      val preds = (startChunk + f to startChunk + l)
+        .flatMap(chunkPredicates(key, bounds, _)).toArray
+      writeWave(readWave(preds), pk, preds.length, l - f + 1)
+    }(l => save(startChunk + l, complete = false))
+    written = waves.stats.processedRows
+    outcome match {
+      case Some(k) =>
+        log(s"${table.name}: interrupted, checkpoint at chunk ${startChunk + k - 1}")
+        TransferOutcome.Interrupted(k)
+      case None =>
+        log(waves.stats.report())
+        save(bounds.size - 1, complete = true)
+        TransferOutcome.Completed
+    }
   }
 
   /** Server-side predicates for chunk `i`: the chunk range, sub-split
@@ -547,10 +536,10 @@ final class JdbcTransferJob(
     }
   }
 
-  /** One chunk's read: predicate-partitioned JDBC scan (each predicate is
+  /** One wave's read: predicate-partitioned JDBC scan (each predicate is
     * one partition, pushed verbatim into the store's WHERE clause),
     * column names folded to lower case for the engine's expressions. */
-  private def readChunk(predicates: Array[String]): DataFrame = {
+  private def readWave(predicates: Array[String]): DataFrame = {
     val props = new java.util.Properties()
     props.setProperty("fetchsize", mig.batchSize.toString)
     props.setProperty("queryTimeout", mig.timeoutSec.toString)
@@ -558,30 +547,30 @@ final class JdbcTransferJob(
     df.toDF(df.columns.map(_.toLowerCase): _*)
   }
 
-  /** Transform + MERGE one chunk; returns rows written. Chunk-level retry
-    * on top of the sink's per-statement retry — the keyed MERGE makes a
-    * partial replay a no-op. `chunkPartitions` is the predicate count of
-    * the chunk's read — the partition count is known STATICALLY, so the
-    * coalesce decision never materializes RDD lineage (`.rdd` here cost
-    * a second planning pass per chunk, VERDICT r4 #5). */
-  private def writeChunk(chunk: DataFrame, pk: Seq[String],
-                         chunkPartitions: Int, chunkConcurrency: Int): Long = {
-    val out = ExpressionValidator.applyAll(chunk, table)
+  /** Transform + MERGE one wave of `chunks` chunks; returns rows
+    * written. Wave-level retry on top of the sink's per-statement retry —
+    * the keyed MERGE makes a partial replay a no-op. `partitions` is the
+    * predicate count of the wave's read — the partition count is known
+    * STATICALLY, so the coalesce decision never materializes RDD lineage
+    * (`.rdd` here cost a second planning pass per chunk, VERDICT r4 #5).
+    * `writeParallelism` is a per-chunk writer budget, so a wave of
+    * `chunks` chunks gets `chunks` times it. */
+  private def writeWave(wave: DataFrame, pk: Seq[String], partitions: Int,
+                         chunks: Int): Long = {
+    val out = ExpressionValidator.applyAll(wave, table)
     val wp = JdbcUpsert.effectiveWriteParallelism(destUrl, writeParallelism)
-    val target = JdbcTransferJob.coalesceTarget(wp, chunkPartitions)
+    val target = JdbcTransferJob.coalesceTarget(wp * chunks, partitions)
     val toWrite = if (target > 0) out.coalesce(target) else out
-    // Sub-chunk pacing (VERDICT r5 #4): each writing partition gets an
+    // Sub-wave pacing (VERDICT r5 #4): each writing partition gets an
     // equal slice of the global rows/sec budget, charged per statement
     // batch — the reference's per-batch throttle (`migration.go:232-268`)
-    // reproduced executor-side. Driver-side chunk-level acquire stays
-    // the global enforcement; this bounds the burst INSIDE a chunk.
-    // `chunkConcurrency` is the run's REAL concurrent-chunk count, not
-    // the configured maximum — a 1-chunk run keeps its whole budget.
-    val writers = math.max(1, if (target > 0) target else chunkPartitions) *
-      math.max(1, chunkConcurrency)
+    // reproduced executor-side. Driver-side per-wave acquire stays the
+    // global enforcement; this bounds the burst INSIDE a wave. One wave
+    // is in flight per table, so its writers are all the writers.
+    val writers = math.max(1, if (target > 0) target else partitions)
     val pace = math.max(1L, mig.rateLimit.toLong / writers)
     Retry(attempts = 3, delayMs = 1000,
-      onError = (i, e) => log(s"${table.name}: chunk attempt $i failed: ${e.getMessage}")) {
+      onError = (i, e) => log(s"${table.name}: wave attempt $i failed: ${e.getMessage}")) {
       JdbcUpsert.write(toWrite, sinkDialect, table.target, pk,
         mig.batchSize, paceRowsPerSec = pace)(factory)
     }

@@ -6,12 +6,13 @@ package graft.engine
   * `limit * elapsed`, sleep until the ideal time catches up.
   *
   * Divergence from the reference, documented (SURVEY §7.4.4): Spark
-  * executes chunks as distributed jobs, so the budget is enforced at
-  * chunk granularity on the driver — between chunks, never inside a
-  * task. Per-row pacing on executors would serialize the cluster; this
-  * bounds sustained throughput while leaving tasks free to run at full
-  * speed within a chunk. Thread-safe across concurrent table jobs
-  * (process-wide budget, like the reference's global limiter).
+  * executes each wave of chunks ([[Waves]]) as one distributed query, so
+  * the budget is enforced at wave granularity on the driver — between
+  * waves, never inside a task. Per-row pacing on executors would
+  * serialize the cluster; this bounds sustained throughput while leaving
+  * tasks free to run at full speed within a wave. Thread-safe across
+  * concurrent table jobs (process-wide budget, like the reference's
+  * global limiter).
   */
 final class RateLimiter(rowsPerSec: Long,
                         now: () => Long = () => System.currentTimeMillis(),

@@ -71,17 +71,19 @@ object TransferControl {
   * (Long/Decimal), never through Double: snowflake-scale ids >= 2^53
   * would round, and a rounded-down resume bound re-transfers rows.
   *
-  * Chunks are range-disjoint and idempotent (each writes
-  * `mode=overwrite` into its own subdirectory), so up to
-  * `chunk_parallelism` of them are IN FLIGHT at once; completions are
-  * drained strictly in submission order so the checkpoint only ever
-  * records a fully-completed PREFIX. Out-of-order completions above a
-  * crash's checkpoint are dropped by `cleanupChunksAbove` on resume.
+  * Chunks are range-disjoint, so up to `chunk_parallelism` consecutive
+  * chunks run as one [[Waves]] wave: one query over the wave's key range
+  * (or bucket range) writing `mode=overwrite` into ONE subdirectory,
+  * `chunk-<first chunk index>`. The checkpoint only ever records a
+  * fully-committed prefix and always lands on a wave's last chunk, so a
+  * wave dir is either wholly at or below the checkpoint or wholly above
+  * it; dirs above a crash's checkpoint are dropped by
+  * `cleanupChunksAbove` on resume.
   *
-  * 100 TB posture: no `.collect()` of data (only per-chunk counts and
+  * 100 TB posture: no `.collect()` of data (only per-wave counts and
   * quantile bounds reach the driver); chunk count is capped so checkpoint
   * cadence adapts upward with table size instead of producing millions of
-  * tiny jobs; within a chunk Spark parallelism is untouched.
+  * tiny jobs; within a wave Spark parallelism is untouched.
   */
 final class TableTransferJob(
     spark: SparkSession,
@@ -326,13 +328,6 @@ final class TableTransferJob(
     case _ => DoubleKey
   }
 
-  // -- parallel chunk dispatch: shared [[ChunkDispatcher]] ---------------
-
-  private def dispatcher[B](save: (Int, B) => Unit, stats: ProgressStats,
-                            policy: CheckpointPolicy): ChunkDispatcher[B] =
-    new ChunkDispatcher[B](mig.chunkParallelism, save, stats, policy,
-      limiter, log, mig.progressIntervalSec * 1000L)
-
   /** Numeric-PK path: contiguous key ranges, resume via `pk > lastKey`.
     *
     * The chunk PLAN (quantile upper bounds, last = exact key max) is
@@ -366,16 +361,22 @@ final class TableTransferJob(
           case Some(k) => source.where(col(pkCol) > lit(k))
           case None => source
         }
-        // One pass: row count, TRUE max of the key in its native type
-        // (the plan's final bound must cover every row — a quantile max
-        // can undershoot), and a NULL-key probe (range predicates are
-        // null-rejecting, so NULL keys would be silently dropped —
-        // refuse them, like the reference refuses PK-less tables,
-        // mysql.go:216-218).
+        // ONE aggregate plans the table: row count, TRUE max of the key
+        // in its native type (the plan's final bound must cover every row
+        // — a quantile max can undershoot), a NULL-key probe (range
+        // predicates are null-rejecting, so NULL keys would be silently
+        // dropped — refuse them, like the reference refuses PK-less
+        // tables, mysql.go:216-218), and the quantile sketch of the
+        // REMAINING rows. The chunk count n depends on the row count of
+        // this same pass, so the sketch is read on a fixed maxChunks-point
+        // grid: bound j of n is grid point ceil(j·maxChunks/n) − 1, i.e.
+        // exactly the j/n quantile whenever n divides maxChunks.
+        val grid = (1 to maxChunks).map(g => lit(g.toDouble / maxChunks))
         val probe = remaining.agg(
           count(lit(1)).as("n"),
           max(col(pkCol)).as("mx"),
-          count(when(col(pkCol).isNull, 1)).as("nulls")).head()
+          count(when(col(pkCol).isNull, 1)).as("nulls"),
+          percentile_approx(col(pkCol), array(grid: _*), lit(10000)).as("q")).head()
         val n0 = probe.getLong(0)
         require(probe.getLong(2) == 0,
           s"table '${table.name}' has ${probe.getLong(2)} NULL values in key " +
@@ -395,14 +396,10 @@ final class TableTransferJob(
         val trueMax = codec.fromRow(probe.get(1))
         val n = math.max(1, math.min(maxChunks,
           math.ceil(n0.toDouble / chunkRows(n0)).toInt))
-        // Quantile bounds over the REMAINING rows only, computed in the
-        // key's native type (percentile_approx preserves it — no Double
+        // percentile_approx keeps the key's native type (no Double
         // round-trip); the last bound is replaced by the exact max.
-        val probes = (1 to n).map(_.toDouble / n)
-        val qb = remaining
-          .agg(percentile_approx(col(pkCol), array(probes.map(lit): _*),
-            lit(math.max(10000, 4 * n))).as("b"))
-          .head().getSeq[Any](0)
+        val sketch = probe.getSeq[Any](3)
+        val qb = (1 to n).map(j => sketch((j * maxChunks + n - 1) / n - 1))
           .map(codec.fromRow).distinct.sortWith(codec.lt)
         ((qb.dropRight(1) :+ trueMax).distinct, n0)
     }
@@ -424,46 +421,30 @@ final class TableTransferJob(
     if (todo.isEmpty)
       return finish(startChunk, Some(Map(pkCol -> codec.fmt(planBounds.last))))
 
-    val stats = new ProgressStats(table.name, total)
-    val policy = new CheckpointPolicy(mig.checkpointRowThreshold.toLong,
-      mig.checkpointIntervalSec * 1000L)
-    val disp = dispatcher[Any](
-      (idx, bound) => save(Some(bound), idx, complete = false), stats, policy)
-
-    try {
-      var lo: Option[Any] = lastKey
-      var chunkIdx = startChunk
-      for ((hi, i) <- todo.zipWithIndex) {
-        if (control.isCancelled) {
-          // stop submitting; everything already in flight completes (the
-          // submitted set IS the prefix), then checkpoint at its end
-          disp.drainAll()
-          save(lo, chunkIdx - 1, complete = false)
-          log(s"${table.name}: interrupted, checkpoint at chunk ${chunkIdx - 1}")
-          return TransferOutcome.Interrupted(chunkIdx - startChunk)
-        }
-        val isLast = i == todo.length - 1
-        // Both bounds on the SOURCE key, BEFORE transformation — a
-        // transform targeting the PK column must not shift chunk
-        // membership (ADVICE r2; reference paginates on the raw PK,
-        // mysql.go:599-631). The last chunk takes everything above lo
-        // (its planned bound is the exact max; the open top end also
-        // absorbs any rows above a legacy checkpoint's undershot max).
-        val filtered = (lo, isLast) match {
-          case (Some(l), false) => source.where(col(pkCol) > lit(l) && col(pkCol) <= lit(hi))
-          case (Some(l), true)  => source.where(col(pkCol) > lit(l))
-          case (None, false)    => source.where(col(pkCol) <= lit(hi))
-          case (None, true)     => source
-        }
-        val chunk = ExpressionValidator.applyAll(filtered, table)
-        val idx = chunkIdx
-        disp.submit(idx, hi)(writeChunk(chunk, idx))
-        lo = Some(hi); chunkIdx += 1
-      }
-      disp.drainAll()
-      log(stats.report())
-      finish(chunkIdx - 1, Some(Map(pkCol -> codec.fmt(planBounds.last))))
-    } finally disp.shutdown()
+    // bound of todo chunk j (j = -1: the resume cursor)
+    def bound(j: Int): Option[Any] = if (j < 0) lastKey else Some(todo(j))
+    val waves = new Waves(mig, table.name, total, control, limiter, log)
+    waves.run(todo.length) { (f, l) =>
+      // Both bounds on the SOURCE key, BEFORE transformation — a
+      // transform targeting the PK column must not shift chunk
+      // membership (ADVICE r2; reference paginates on the raw PK,
+      // mysql.go:599-631). A wave ending at the last chunk takes
+      // everything above its lower bound (the planned bound is the exact
+      // max; the open top end also absorbs any rows above a legacy
+      // checkpoint's undershot max).
+      val lo = bound(f - 1).map(col(pkCol) > lit(_))
+      val hi = if (l == todo.length - 1) None else bound(l).map(col(pkCol) <= lit(_))
+      val wave = (lo ++ hi).reduceOption(_ && _).fold(source)(source.where)
+      writeWave(ExpressionValidator.applyAll(wave, table), startChunk + f)
+    }(l => save(bound(l), startChunk + l, complete = false)) match {
+      case Some(k) =>
+        log(s"${table.name}: interrupted, checkpoint at chunk ${startChunk + k - 1}")
+        TransferOutcome.Interrupted(k)
+      case None =>
+        log(waves.stats.report())
+        finish(startChunk + todo.length - 1,
+          Some(Map(pkCol -> codec.fmt(planBounds.last))))
+    }
   }
 
   /** Non-numeric-PK path: deterministic hash buckets (token-range
@@ -481,41 +462,32 @@ final class TableTransferJob(
       math.max(1, math.min(maxChunks,
         math.ceil(total.toDouble / chunkRows(total)).toInt)))
     val doneBucket = cp.map(_.chunkIndex).getOrElse(-1)
-    val stats = new ProgressStats(table.name, total)
-    val policy = new CheckpointPolicy(mig.checkpointRowThreshold.toLong,
-      mig.checkpointIntervalSec * 1000L)
     val bucketExpr = pmod(hash(pk.map(col): _*), lit(n))
-    val disp = dispatcher[Unit](
-      (idx, _) => saveCp(None, idx, complete = false, bucketCount = n,
-        totalRows = total),
-      stats, policy)
-
-    try {
-      for (b <- (doneBucket + 1) until n) {
-        if (control.isCancelled) {
-          disp.drainAll()
-          saveCp(None, b - 1, complete = false, bucketCount = n, totalRows = total)
-          return TransferOutcome.Interrupted(b - doneBucket - 1)
-        }
-        val chunk = ExpressionValidator.applyAll(source.where(bucketExpr === b), table)
-        disp.submit(b, ())(writeChunk(chunk, b))
-      }
-      disp.drainAll()
-      log(stats.report())
-      finish(n - 1, None, bucketCount = n, totalRows = total)
-    } finally disp.shutdown()
+    val waves = new Waves(mig, table.name, total, control, limiter, log)
+    waves.run(n - doneBucket - 1) { (f, l) =>
+      val (b0, b1) = (doneBucket + 1 + f, doneBucket + 1 + l)
+      writeWave(ExpressionValidator.applyAll(
+        source.where(bucketExpr.between(b0, b1)), table), b0)
+    }(l => saveCp(None, doneBucket + 1 + l, complete = false, bucketCount = n,
+      totalRows = total)) match {
+      case Some(k) => TransferOutcome.Interrupted(k)
+      case None =>
+        log(waves.stats.report())
+        finish(n - 1, None, bucketCount = n, totalRows = total)
+    }
   }
 
-  /** Idempotent chunk write with retry; returns rows written. The count
-    * rides the write itself via `observe` — no caching, no second scan
-    * (a cache would materialize the whole chunk into executor storage,
-    * which does not survive the 100 TB posture). */
-  private def writeChunk(chunk: DataFrame, idx: Int): Long = {
+  /** Idempotent wave write into `chunk-<idx>` (idx = the wave's first
+    * chunk) with retry; returns rows written. The count rides the write
+    * itself via `observe` — no caching, no second scan (a cache would
+    * materialize the whole wave into executor storage, which does not
+    * survive the 100 TB posture). */
+  private def writeWave(wave: DataFrame, idx: Int): Long = {
     val dir = f"$destDir/chunk-$idx%05d"
     Retry(attempts = 3, delayMs = 1000,
-      onError = (i, e) => log(s"${table.name}: chunk $idx attempt $i failed: ${e.getMessage}")) {
+      onError = (i, e) => log(s"${table.name}: wave $idx attempt $i failed: ${e.getMessage}")) {
       val obs = org.apache.spark.sql.Observation(f"chunk-$idx%05d-${System.nanoTime()}")
-      chunk.observe(obs, count(lit(1)).as("rows"))
+      wave.observe(obs, count(lit(1)).as("rows"))
         .write.mode("overwrite").parquet(dir)
       obs.get("rows").asInstanceOf[Long]
     }

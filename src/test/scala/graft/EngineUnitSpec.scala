@@ -30,6 +30,22 @@ class EngineUnitSpec extends AnyFunSuite {
     assert(Checkpoint.load(dir, "parquet", "users").exists(_.chunkIndex == 9))
   }
 
+  test("checkpoint save fsyncs its directory after the rename; round-trips, leaves no tmp") {
+    val dir = java.nio.file.Files.createTempDirectory("cpdur")
+    // the directory fsync is best-effort; on this platform's file
+    // systems a directory opens, and a missing one reports false
+    assert(Checkpoint.forceDir(dir))
+    assert(!Checkpoint.forceDir(dir.resolve("absent")))
+    val cp = Checkpoint(Map("id" -> "99"), 1723400000000L, complete = false, 5,
+      bounds = Seq("10", "20", "99"), totalRows = 30L, keyCols = Seq("id"))
+    (1 to 5).foreach { i =>
+      Checkpoint.save(dir.toString, "jdbc", "t", cp.copy(chunkIndex = i))
+      assert(Checkpoint.load(dir.toString, "jdbc", "t").contains(cp.copy(chunkIndex = i)))
+    }
+    assert(dir.toFile.list().toSeq == Seq("jdbc_t.checkpoint"),
+      s"left behind: ${dir.toFile.list().toSeq}")
+  }
+
   test("checkpoint timestamp serializes as RFC3339; legacy epoch-millis still parses") {
     val cp = Checkpoint(Map("id" -> "7"), 1723400000000L, complete = false, 2)
     val json = Checkpoint.toJson(cp)

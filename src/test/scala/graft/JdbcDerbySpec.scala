@@ -653,6 +653,44 @@ class JdbcDerbySpec extends SparkTestBase {
     }
   }
 
+  test("live wave contract: every chunk_parallelism and kill point") {
+    import org.apache.spark.sql.Row
+    import graft.engine.{Checkpoint, JdbcTransferJob, TransferControl, TransferOutcome}
+    // 400 dense keys / 100-row chunks → 4-chunk plan; a wave is up to
+    // chunk_parallelism chunks read by one JDBC scan and MERGEd once
+    seedUsers("users_wave", 400)
+    def rows(target: String): Map[Row, Int] =
+      JdbcTransfer.readAll(spark, url, target).collect().toSeq
+        .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def mapping(target: String) = TableMapping("users_wave", targetName = Some(target),
+      columnTransformations = Seq(ColumnTransformation("bal", "bal * 3")))
+    for (p <- 1 to 4) {
+      def mig2(tag: String) = MigrationSpec(batchSize = 100, checkpointRowThreshold = 100,
+        rateLimit = 1000000000, chunkParallelism = p, checkpointDir = s"$work/cp_wave_$tag")
+      val ref = mapping(s"users_wave_${p}_ref")
+      assert(new JdbcTransferJob(spark, url, ref, mig2(s"${p}_ref"), log = _ => ()).run() ==
+        TransferOutcome.Completed)
+      val expect = rows(ref.target)
+      assert(expect.values.sum == 400)
+      for (k <- 0 to 4) withClue(s"chunk_parallelism $p, kill point $k: ") {
+        val t = mapping(s"users_wave_${p}_$k")
+        val m = mig2(s"${p}_$k")
+        val out = new JdbcTransferJob(spark, url, t, m,
+          control = TransferControl.cancelAfterChecks(k), log = _ => ()).run()
+        if (k == 4) assert(out == TransferOutcome.Completed)
+        else {
+          assert(out == TransferOutcome.Interrupted(k))
+          val cp = Checkpoint.load(m.checkpointDir, "jdbc",
+            JdbcTransferJob.checkpointName(url, t)).get
+          assert(!cp.complete && cp.chunkIndex == k - 1 && cp.bounds.size == 4, cp.toString)
+          assert(new JdbcTransferJob(spark, url, t, m, log = _ => ()).run() ==
+            TransferOutcome.Completed)
+        }
+        assert(rows(t.target) == expect, "resumed destination differs from an uninterrupted run")
+      }
+    }
+  }
+
   test("live chunk writes retry through transient failures and converge") {
     import graft.engine.{JdbcTransferJob, TransferOutcome}
     seedUsers("users_fl", 300)

@@ -38,6 +38,17 @@ class TransferJobSpec extends SparkTestBase {
     (spec, work)
   }
 
+  /** Indices of the `chunk-<first chunk index>` wave dirs of a target. */
+  private def chunkDirs(spec: TransferSpec, target: String): Set[Int] =
+    new java.io.File(s"${spec.destination.path}/$target").listFiles()
+      .filter(_.getName.startsWith("chunk-"))
+      .map(_.getName.stripPrefix("chunk-").toInt).toSet
+
+  /** First chunk of every wave of `width` chunks over plan chunks
+    * `from until to`. */
+  private def waveStarts(from: Int, to: Int, width: Int): Set[Int] =
+    (from until to by width).toSet
+
   private val customerXform = TableMapping("customer",
     targetName = Some("customer_new"),
     columnTransformations = Seq(
@@ -64,10 +75,14 @@ class TransferJobSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(spec.destination.path, "customer_new", "_GRAFT_COMPLETE")))
     assert(Checkpoint.load(spec.migration.checkpointDir, "parquet", TableTransferJob.checkpointName(spec, customerXform))
       .exists(_.complete))
-    // multiple chunks actually happened (150 rows / 50 per chunk)
-    val chunks = new java.io.File(s"${spec.destination.path}/customer_new")
-      .listFiles().count(_.getName.startsWith("chunk-"))
-    assert(chunks >= 2, s"expected chunked layout, got $chunks chunk dirs")
+    // multiple plan chunks actually happened (150 rows / 50 per chunk;
+    // the complete checkpoint sits at the plan's last chunk), written as
+    // waves into one dir per wave, named by its first chunk
+    val planChunks = Checkpoint.load(spec.migration.checkpointDir, "parquet",
+      TableTransferJob.checkpointName(spec, customerXform)).get.chunkIndex + 1
+    assert(planChunks >= 2, s"expected a chunked plan, got $planChunks chunks")
+    assert(chunkDirs(spec, "customer_new") ==
+      waveStarts(0, planChunks, spec.migration.chunkParallelism))
   }
 
   test("completed table is skipped on rerun (R6)") {
@@ -234,9 +249,9 @@ class TransferJobSpec extends SparkTestBase {
     val bound = cp.lastKey("c_custkey").toDouble
     val written = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"${spec.destination.path}/customer_new")
-    val dirs = new java.io.File(s"${spec.destination.path}/customer_new")
-      .listFiles().count(_.getName.startsWith("chunk-"))
-    assert(dirs == cp.chunkIndex + 1, "checkpoint index matches written chunks")
+    assert(chunkDirs(spec, "customer_new") ==
+      waveStarts(0, cp.chunkIndex + 1, spec.migration.chunkParallelism),
+      "checkpoint index matches written waves")
     val overBound = written.where(col("c_custkey") > bound).count()
     assert(overBound == 0,
       s"$overBound rows above checkpoint bound $bound would duplicate on resume")
@@ -578,5 +593,179 @@ class TransferJobSpec extends SparkTestBase {
       s"expected the range mode, got $cp")
     assert(new TableTransferJob(spark, spec, t, new TransferControl, _ => ()).run()
       == TransferOutcome.Completed)
+  }
+
+  // --- waves: up to chunk_parallelism plan chunks per query -------------
+
+  /** The wave contract for one table, over every chunk_parallelism
+    * p ∈ 1..4 and every kill point k: `cancelAfterChecks(k)` ends
+    * `Interrupted(k)` with the checkpoint at chunk k − 1 (unless k covers
+    * the whole plan); a wave dir planted above that checkpoint (a crash
+    * after an unrecorded write) is removed by the resume and never read;
+    * the resumed destination equals an uninterrupted run, laid out as
+    * the killed run's waves followed by the resume's. */
+  private def checkWaveContract(t: TableMapping, batch: Int): Unit = {
+    import org.apache.spark.sql.Row
+    def specFor(p: Int): TransferSpec = {
+      val (s, _) = freshSpec(Seq(t), batch)
+      s.copy(migration = s.migration.copy(chunkParallelism = p))
+    }
+    def cpOf(spec: TransferSpec): Checkpoint = Checkpoint.load(
+      spec.migration.checkpointDir, "parquet", TableTransferJob.checkpointName(spec, t)).get
+    def rows(spec: TransferSpec): Map[Row, Int] =
+      TableTransferJob.readTarget(spark, spec, t.target).collect().toSeq
+        .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def run(spec: TransferSpec, control: TransferControl): TransferOutcome =
+      new TableTransferJob(spark, spec, t, control, _ => ()).run()
+    for (p <- 1 to 4) {
+      val ref = specFor(p)
+      assert(run(ref, new TransferControl) == TransferOutcome.Completed)
+      val done = cpOf(ref)
+      val chunks = done.chunkIndex + 1
+      assert(done.complete && chunks == 4, s"expected a 4-chunk plan, got $done")
+      assert(chunkDirs(ref, t.target) == waveStarts(0, chunks, p))
+      val expect = rows(ref)
+      assert(expect.values.sum == expectedCustomer.count())
+      for (k <- 0 to chunks) withClue(s"chunk_parallelism $p, kill point $k: ") {
+        val spec = specFor(p)
+        val out = run(spec, KillAfter(k))
+        if (k == chunks) assert(out == TransferOutcome.Completed)
+        else {
+          assert(out == TransferOutcome.Interrupted(k))
+          val cp = cpOf(spec)
+          assert(!cp.complete && cp.chunkIndex == k - 1, cp.toString)
+          assert(chunkDirs(spec, t.target) == waveStarts(0, k, p))
+          // simulated crash: a wave dir above the checkpoint holding a
+          // copy of a real row — reading it would duplicate that row
+          val stale = f"${spec.destination.path}/${t.target}/chunk-${k + 1}%05d"
+          TableTransferJob.readTarget(spark, ref, t.target).limit(1)
+            .write.parquet(stale)
+          assert(run(spec, new TransferControl) == TransferOutcome.Completed)
+          assert(chunkDirs(spec, t.target) ==
+            waveStarts(0, k, p) ++ waveStarts(k, chunks, p))
+        }
+        assert(rows(spec) == expect, "resumed destination differs from an uninterrupted run")
+      }
+    }
+  }
+
+  test("wave contract on the range path: every chunk_parallelism and kill point") {
+    checkWaveContract(customerXform.copy(targetName = Some("cust_waves_range")), batch = 38)
+  }
+
+  test("wave contract on the hash path: every chunk_parallelism and kill point") {
+    checkWaveContract(customerXform.copy(targetName = Some("cust_waves_hash"),
+      primaryKey = Some("c_name")), batch = 38)
+  }
+
+  /** Runs `body` and returns the Spark jobs it submitted plus, per query,
+    * its name (the output dir for a file write, else the action) and the
+    * rows its file scans produced — counters, not timings, so they do not
+    * depend on host load. */
+  private def countQueries(body: => Unit): (Long, Seq[(String, Long)]) = {
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener
+        with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = {
+        var scanned = 0L
+        def visit(p: SparkPlan): Unit = foreach(p) {
+          case c: CommandResultExec => visit(c.commandPhysicalPlan)
+          case f: FileSourceScanExec =>
+            scanned += f.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+          case other => other.subqueries.foreach(visit)
+        }
+        visit(qe.executedPlan)
+        val name = qe.logical match {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName
+          case _ => funcName
+        }
+        queries.add((name, scanned)); ()
+      }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    spark.listenerManager.register(listener)
+    val jobs = graft.util.JobCounter.install(sc)
+    try body finally {
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(listener)
+    }
+    (jobs.count, queries.toArray.toSeq.map(_.asInstanceOf[(String, Long)]))
+  }
+
+  test("counters: an 8-chunk range table at chunk_parallelism 4 runs one planning aggregate and two wave writes") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("xferwave").toString
+    (1L to 800L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+      .write.parquet(s"$work/src/t.parquet")
+    val t = TableMapping("t", primaryKey = Some("id"))
+    val spec = TransferSpec(
+      EndpointSpec("parquet", path = s"$work/src", tables = Seq(t)),
+      EndpointSpec("parquet", path = s"$work/dest"),
+      MigrationSpec(batchSize = 100, checkpointRowThreshold = 100,
+        checkpointDir = s"$work/cp", rateLimit = 100000000, chunkParallelism = 4))
+    val (jobs, queries) = countQueries {
+      assert(new TableTransferJob(spark, spec, t, log = _ => ()).run() ==
+        TransferOutcome.Completed)
+    }
+    assert(Checkpoint.load(s"$work/cp", "parquet", TableTransferJob.checkpointName(spec, t))
+      .get.chunkIndex == 7, "expected an 8-chunk plan")
+    assert(queries.map(_._1) == Seq("head", "chunk-00000", "chunk-00004"), queries)
+    // opening the source infers its schema (one job), the aggregate is
+    // two (AQE submits its partial-aggregate stage on its own), each wave
+    // write one
+    assert(jobs == 5, s"$jobs jobs for $queries")
+    assert(TableTransferJob.readTarget(spark, spec, "t").count() == 800)
+  }
+
+  test("counters: a hash table's file scans read every row once per wave plus the count") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("xferwaveh").toString
+    (1 to 400).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
+      .write.parquet(s"$work/src/items.parquet")
+    val t = TableMapping("items", primaryKey = Some("sku"))
+    val spec = TransferSpec(
+      EndpointSpec("parquet", path = s"$work/src", tables = Seq(t)),
+      EndpointSpec("parquet", path = s"$work/dest"),
+      MigrationSpec(batchSize = 40, checkpointRowThreshold = 40,
+        checkpointDir = s"$work/cp", rateLimit = 100000000, chunkParallelism = 4))
+    val (_, queries) = countQueries {
+      assert(new TableTransferJob(spark, spec, t, log = _ => ()).run() ==
+        TransferOutcome.Completed)
+    }
+    val n = Checkpoint.load(s"$work/cp", "parquet", TableTransferJob.checkpointName(spec, t))
+      .get.bucketCount
+    assert(n == 10)
+    val waves = (n + 3) / 4
+    assert(queries.map(_._1).count(_.startsWith("chunk-")) == waves, queries)
+    assert(queries.map(_._2).sum == (waves + 1) * 400L, queries)
+  }
+
+  test("an empty source completes; a one-bucket empty wave leaves a readable destination") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("xferempty").toString
+    Seq.empty[(String, Long, Double)].toDF("sku", "id", "price")
+      .write.parquet(s"$work/src/items.parquet")
+    val hashT = TableMapping("items", primaryKey = Some("sku"))
+    val rangeT = TableMapping("items", targetName = Some("items_by_id"), primaryKey = Some("id"))
+    val spec = TransferSpec(
+      EndpointSpec("parquet", path = s"$work/src", tables = Seq(hashT, rangeT)),
+      EndpointSpec("parquet", path = s"$work/dest"),
+      MigrationSpec(checkpointDir = s"$work/cp", rateLimit = 100000000))
+    Seq(hashT, rangeT).foreach { t =>
+      assert(new TableTransferJob(spark, spec, t, log = _ => ()).run() ==
+        TransferOutcome.Completed, t.target)
+    }
+    val dest = TableTransferJob.readTarget(spark, spec, "items")
+    assert(dest.count() == 0 && dest.columns.toSeq == Seq("sku", "id", "price"))
   }
 }
