@@ -9,7 +9,7 @@ import graft.engine.{TableTransferJob, TransferControl, TransferRunner}
 import graft.functions.MySqlDateFormat
 import graft.functions.Portable.fx
 import graft.ops.{Curation, Dedup, Layout, MediaKeys, Multimodal, Similarity, TextAnalysis}
-import graft.ops.MediaKeys.eventIds
+import graft.ops.MediaKeys.{eventIds, payloads}
 import graft.sinks.Upsert
 import graft.sources.Tables
 import graft.streaming.StreamingIngest
@@ -974,28 +974,18 @@ object SparkEntry {
     //     from-scratch bomb GIF) become per-asset quarantine rows with
     //     classified reasons; caps fire before any allocation.
     "multimodal_quarantine_codecs" -> ((s, d) => {
-      import s.implicits._
-      val QBase = 10000000L
-      def assets(gen: Long => Array[Byte]) =
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, gen(id)))).toDF("id", "img")
-      def poisoned(gen: (Long, Int) => Array[Byte], k: Int) =
-        eventIds(s, d)
-          .filter((e: Long) => e % 5 == 0)
-          .mapPartitions(_.map(e => (QBase + e, gen(e, ((e / 5) % k).toInt))))
-          .toDF("id", "img")
       import graft.ops.Multimodal._
-      val jpegBin = assets(syntheticJpeg).unionByName(
-        poisoned((e, kind) => kind match {
+      val jpegBin = payloads(eventIds(s, d), syntheticJpeg, "img").unionByName(
+        poisonedPayloads(s, d, "img", 2)((e, kind) => kind match {
           case 0 => poisonJpegTruncatedEntropy(syntheticJpeg(QBase + e))
           case _ => poisonJpegBomb(syntheticJpeg(QBase + e))
-        }, 2))
-      val gifBin = assets(syntheticGif).unionByName(
-        poisoned((e, kind) => kind match {
+        }))
+      val gifBin = payloads(eventIds(s, d), syntheticGif, "img").unionByName(
+        poisonedPayloads(s, d, "img", 3)((e, kind) => kind match {
           case 0 => poisonTruncated(syntheticGif(QBase + e))
           case 1 => poisonGifBadMagic(QBase + e)
           case _ => poisonGifBomb()
-        }, 3))
+        }))
       jpegStatsSafe(jpegBin, "id", "img").toDF()
         .withColumn("codec", lit("jpeg"))
         .unionByName(gifStatsSafe(gifBin, "id", "img").toDF()
@@ -1188,18 +1178,13 @@ object SparkEntry {
     // --- multimodal: binary payload plumbing + JSON field extraction
     "multimodal_binary" -> ((s, d) => Multimodal.binaryFeatures(T(s, d, "events"))),
     "json_extract" -> ((s, d) => Multimodal.jsonExtract(T(s, d, "events"))),
-    // stub-decoder pipeline (no SQL oracle — rows-only check): binary →
-    // per-partition batch decode → typed features
     // --- REAL image decode (VERDICT r4 #4): per-row deterministic BMP
     //     fixtures (closed-form pixels) are ENCODED, then DECODED by the
     //     pure-JVM Bmp codec per partition; the oracle recomputes the
     //     pixel statistics from the generating formula — any error in
     //     row order, BGR layout, or padding breaks the hash.
     "multimodal_decode" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
+      payloads(eventIds(s, d), Multimodal.syntheticBmp, "img")
         .transform(df => Multimodal.imageStats(df, "id", "img").toDF())
     }),
 
@@ -1207,22 +1192,16 @@ object SparkEntry {
     //     brightness-threshold bits (gray·n > Σgray), closed-form
     //     replayable — the image modality's near-dup fingerprint
     "multimodal_ahash" -> ((s, d) => {
-      import s.implicits._
       Multimodal.imageAHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
     }),
 
     // --- image near-dup pairs: simhash-style 4×12-bit bands over the
     //     aHash, capped buckets, exact Hamming confirm — dedup extended
     //     to the image modality
     "dedup_image_pairs" -> ((s, d) => {
-      import s.implicits._
       val hashes = Multimodal.imageAHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
       Multimodal.imageAHashPairs(hashes)
     }),
 
@@ -1233,7 +1212,6 @@ object SparkEntry {
     //     the media modalities); oracle replays the closure with a
     //     recursive CTE over the pairs oracle
     "dedup_image_clusters" -> ((s, d) => {
-      import s.implicits._
       // signature frame checkpointed: it fans out into the pair screen
       // AND the cluster-membership ids join, and unmaterialized each
       // consumer re-runs the full corpus decode (round 11, the media
@@ -1241,9 +1219,7 @@ object SparkEntry {
       // gate). At 100 TB this frame IS the persisted index artifact
       // the *_index_lifecycle ops maintain — decode runs once.
       val hashes = Multimodal.imageAHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
         .localCheckpoint(true)
       Multimodal.mediaNearDupClusters(hashes.select("id"),
         Multimodal.imageAHashPairs(hashes))
@@ -1256,13 +1232,10 @@ object SparkEntry {
     //     (dims repeat with period 20, so a parity split would never
     //     straddle a same-dimension pair)
     "dedup_image_incremental" -> ((s, d) => {
-      import s.implicits._
       // checkpointed: corpus and batch sides filter the SAME signature
       // frame — decode once (see dedup_image_clusters)
       val hashes = Multimodal.imageAHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-          .toDF("id", "img"), "id", "img").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
         .localCheckpoint(true)
       Multimodal.incrementalImageNearDups(
         hashes.where(expr("id div 20") % 2 === 0),
@@ -1304,10 +1277,7 @@ object SparkEntry {
     //     the generating formula — an error in inflate handling,
     //     filter reconstruction, or channel order breaks the hash.
     "multimodal_png" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticPng(id))))
-        .toDF("id", "img")
+      payloads(eventIds(s, d), Multimodal.syntheticPng, "img")
         .transform(df => Multimodal.pngStats(df, "id", "img").toDF())
     }),
 
@@ -1317,10 +1287,7 @@ object SparkEntry {
     //     Jpeg codec; the oracle composes the block formula with the
     //     fixed-point YCbCr→RGB integers.
     "multimodal_jpeg" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticJpeg(id))))
-        .toDF("id", "img")
+      payloads(eventIds(s, d), Multimodal.syntheticJpeg, "img")
         .transform(df => Multimodal.jpegStats(df, "id", "img").toDF())
     }),
 
@@ -1329,10 +1296,7 @@ object SparkEntry {
     //     sample tables, mdat payload extraction, keyframe sampling;
     //     the oracle recomputes sample layout + byte sums in closed form.
     "multimodal_mp4" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-        .toDF("id", "vid")
+      payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid")
         .transform(df => Multimodal.mp4Stats(df, "id", "vid").toDF())
     }),
 
@@ -1341,21 +1305,15 @@ object SparkEntry {
     //     re-muxed copies (metadata/timescale changes, same frames)
     //     fingerprint identically; the video modality's near-dup key
     "multimodal_video_fingerprint" -> ((s, d) => {
-      import s.implicits._
       Multimodal.videoFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
     }),
 
     // --- re-mux duplicate pairs: exact-equality buckets on the video
     //     fingerprint through the shared capped-bucket machinery
     "dedup_video_pairs" -> ((s, d) => {
-      import s.implicits._
       val fps = Multimodal.videoFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
       Multimodal.videoNearDupPairs(fps)
     }),
 
@@ -1368,11 +1326,8 @@ object SparkEntry {
     //     star closure is a footnote). Oracle unchanged: it replays
     //     the all-pairs closure, which yields the same labels.
     "dedup_video_clusters" -> ((s, d) => {
-      import s.implicits._
       val fps = Multimodal.videoFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
         .localCheckpoint(true) // two consumers — decode once (see dedup_image_clusters)
       Multimodal.mediaNearDupClusters(fps.select("id"),
         Multimodal.videoNearDupStarEdges(fps))
@@ -1385,11 +1340,8 @@ object SparkEntry {
     //     8960 with an odd quotient, so colliding pairs straddle the
     //     split) — every modality now has its incremental screen
     "dedup_video_incremental" -> ((s, d) => {
-      import s.implicits._
       val fps = Multimodal.videoFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
         .localCheckpoint(true) // both split sides — decode once (see dedup_image_clusters)
       Multimodal.incrementalVideoNearDups(
         fps.where(expr("id div 256") % 2 === 0),
@@ -1401,11 +1353,8 @@ object SparkEntry {
     //     (codec sniffed — the fixture transcodes between BMP and PNG)
     //     → the shared aHash bits per frame → one BIGINT clip signature
     "multimodal_video_phash" -> ((s, d) => {
-      import s.implicits._
       Multimodal.videoPerceptualHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
     }),
 
     // --- perceptual video near-dup pairs: the clip signature through
@@ -1413,11 +1362,8 @@ object SparkEntry {
     //     16-bit folded hashes) — catches transcodes/brightness-shifted
     //     re-encodes the exact fingerprint is blind to
     "dedup_video_perceptual" -> ((s, d) => {
-      import s.implicits._
       val sigs = Multimodal.videoPerceptualHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
       Multimodal.videoPerceptualPairs(sigs)
     }),
 
@@ -1425,11 +1371,8 @@ object SparkEntry {
     //     keep/drop — every modality now has a PERCEPTUAL pairs →
     //     clusters → keep path, not just image/audio
     "dedup_video_perceptual_clusters" -> ((s, d) => {
-      import s.implicits._
       val sigs = Multimodal.videoPerceptualHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
         .localCheckpoint(true) // two consumers — decode once (see dedup_image_clusters)
       Multimodal.mediaNearDupClusters(sigs.select("id"),
         Multimodal.videoPerceptualPairs(sigs))
@@ -1441,11 +1384,8 @@ object SparkEntry {
     //     corpus and {v2,v3} in the batch — every transcode family
     //     straddles the split
     "dedup_video_perceptual_incremental" -> ((s, d) => {
-      import s.implicits._
       val sigs = Multimodal.videoPerceptualHash(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
         .localCheckpoint(true) // both split sides — decode once (see dedup_image_clusters)
       Multimodal.incrementalVideoPerceptualNearDups(
         sigs.where(expr("id div 2") % 2 === 0),
@@ -1480,11 +1420,8 @@ object SparkEntry {
     //     KEYFRAME RE-PLACEMENT (the fixtures vary keyStride 1..4,
     //     which provably breaks the stride-aligned sampler; spec'd)
     "multimodal_video_phash_aligned" -> ((s, d) => {
-      import s.implicits._
       Multimodal.videoPerceptualHashTimeAligned(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4T(id))))
-          .toDF("id", "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4T, "vid"), "id", "vid").toDF()
     }),
 
     // --- REAL LZW decode: GIF fixtures (variable-width code stream,
@@ -1493,20 +1430,14 @@ object SparkEntry {
     //     than PNG's DEFLATE; oracle composes the index and palette
     //     formulas in closed form.
     "multimodal_gif" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticGif(id))))
-        .toDF("id", "img")
+      payloads(eventIds(s, d), Multimodal.syntheticGif, "img")
         .transform(df => Multimodal.gifStats(df, "id", "img").toDF())
     }),
 
     // --- frame sampling over a REAL multi-frame container: animated
     //     GIF fixtures, every 2nd frame kept (video keyframe shape)
     "multimodal_gif_frames" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticGifAnim(id))))
-        .toDF("id", "img")
+      payloads(eventIds(s, d), Multimodal.syntheticGifAnim, "img")
         .transform(df => Multimodal.gifFrameSample(df, "id", "img").toDF())
     }),
 
@@ -1514,20 +1445,14 @@ object SparkEntry {
     //     interleaved channels) — per-clip sample statistics the oracle
     //     recomputes from the fixture formula.
     "multimodal_audio" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-        .toDF("id", "clip")
+      payloads(eventIds(s, d), Multimodal.syntheticWav, "clip")
         .transform(df => Multimodal.audioStats(df, "id", "clip").toDF())
     }),
 
     // --- decode → framed features: per-window exact integer energy
     //     (16-frame windows, all channels) — the VAD/loudness shape
     "multimodal_audio_energy" -> ((s, d) => {
-      import s.implicits._
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-        .toDF("id", "clip")
+      payloads(eventIds(s, d), Multimodal.syntheticWav, "clip")
         .transform(df => Multimodal.audioEnergyWindows(df, "id", "clip").toDF())
     }),
 
@@ -1535,11 +1460,8 @@ object SparkEntry {
     //     energies over REAL decoded samples — integer-only, the audio
     //     analog of the image aHash
     "multimodal_audio_fingerprint" -> ((s, d) => {
-      import s.implicits._
       Multimodal.audioFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-          .toDF("id", "clip"), "id", "clip").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
     }),
 
     // --- audio near-dup pairs: the fingerprint through the SAME
@@ -1547,11 +1469,8 @@ object SparkEntry {
     //     capped buckets, exact Hamming confirm) — every modality now
     //     has a gated PAIRS operator, not just a signature
     "dedup_audio_pairs" -> ((s, d) => {
-      import s.implicits._
       val fps = Multimodal.audioFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-          .toDF("id", "clip"), "id", "clip").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
       Multimodal.audioFingerprintPairs(fps)
     }),
 
@@ -1560,12 +1479,9 @@ object SparkEntry {
     //     blocks — 66 = lcm(2, 33) keeps (channels, n_windows) groups
     //     straddling the split); the shared incrementalScreen core
     "dedup_audio_incremental" -> ((s, d) => {
-      import s.implicits._
       // checkpointed: both split sides — decode once (see dedup_image_clusters)
       val fps = Multimodal.audioFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-          .toDF("id", "clip"), "id", "clip").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
         .localCheckpoint(true)
       Multimodal.incrementalAudioNearDups(
         fps.where(expr("id div 66") % 2 === 0),
@@ -1575,18 +1491,15 @@ object SparkEntry {
     // --- and the audio pair graph through the shared closure to a
     //     keep/drop decision, like dedup_image_clusters
     "dedup_audio_clusters" -> ((s, d) => {
-      import s.implicits._
       val fps = Multimodal.audioFingerprint(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-          .toDF("id", "clip"), "id", "clip").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
         .localCheckpoint(true) // two consumers — decode once (see dedup_image_clusters)
       Multimodal.mediaNearDupClusters(fps.select("id"),
         Multimodal.audioFingerprintPairs(fps))
     }),
 
-    // --- multimodal resize stage: fit stub-decoded dims inside 32px,
-    //     integer-exact → oracle-gated (decode → feature → resize chain)
+    // --- multimodal resize stage: fit byte-derived pseudo dims inside
+    //     32px, integer-exact → oracle-gated (payload → dims → resize)
     "multimodal_resize" -> ((s, d) =>
       Multimodal.resizePlan(T(s, d, "events"))),
 
@@ -1597,10 +1510,7 @@ object SparkEntry {
     //     dims, the sx/sy index map, the fixture pixel formulas, and
     //     the md5 string from closed form
     "multimodal_resample" -> ((s, d) => {
-      import s.implicits._
-      val imgs = eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img")
+      val imgs = payloads(eventIds(s, d), Multimodal.syntheticBmp, "img")
       Multimodal.imageResample(imgs, "id", "img").toDF()
     }),
 
@@ -1610,10 +1520,7 @@ object SparkEntry {
     //     identity through the one sampleMd5 definition; oracle replays
     //     the closed-form samples through the same index map
     "multimodal_audio_resample" -> ((s, d) => {
-      import s.implicits._
-      val clips = eventIds(s, d)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticWav(id))))
-        .toDF("id", "clip")
+      val clips = payloads(eventIds(s, d), Multimodal.syntheticWav, "clip")
       Multimodal.audioResample(clips, "id", "clip").toDF()
     }),
 
@@ -1673,11 +1580,8 @@ object SparkEntry {
     //     payload byte sum; the oracle replays the sample-table walk
     //     (keyframes f%2=0 under the fixture's keyStride) in closed form
     "multimodal_frames" -> ((s, d) => {
-      import s.implicits._
       Multimodal.sampleKeyframes(
-        eventIds(s, d)
-          .mapPartitions(_.map(id => (id, Multimodal.syntheticMp4(id))))
-          .toDF("id", "vid"), "id", "vid")
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid")
         .toDF().select(col("id"), col("frameIdx").as("frame_idx"),
           col("dts"), col("frameLen").as("frame_len"),
           col("byteSum").as("byte_sum"))
@@ -2133,9 +2037,6 @@ object SparkEntry {
     * (ADVICE r11 #2; same shape as Dedup.lshRecall). */
   private def mediaAdmissionBook(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    def assets(gen: Long => Array[Byte], c: String) =
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, gen(id)))).toDF("id", c)
     // image and audio decode ONCE via the fused passes (r14): the
     // pinned fused frame serves BOTH tiers (the exact tier's
     // groupBy+join-back previously re-ran its unpinned decode twice —
@@ -2148,13 +2049,13 @@ object SparkEntry {
     // next instead of leaving cores idle between three serial actions
     val Seq(imgSig, audSig, vidSigs) = graft.util.Par.map(Seq(
       () => Multimodal.imageSignatures(
-        assets(Multimodal.syntheticBmp, "img"), "id", "img").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
         .localCheckpoint(true),
       () => Multimodal.audioSignatures(
-        assets(Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
         .localCheckpoint(true),
       () => Multimodal.videoPerceptualHash(
-        assets(Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
+        payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
         .localCheckpoint(true)))
     val out = composeMediaBook(
       imgSig.select("id", "width", "height", "ahash"),
@@ -2165,7 +2066,7 @@ object SparkEntry {
       audSig.select(col("id"), col("channels"), col("n_samples"),
         col("sfp").as("fp")),
       Multimodal.videoFingerprint(
-        assets(Multimodal.syntheticMp4, "vid"), "id", "vid").toDF())
+        payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF())
     Seq(imgSig, audSig, vidSigs)
       .foreach(graft.ops.Dedup.releaseOwnCheckpoint)
     out
@@ -2246,13 +2147,8 @@ object SparkEntry {
     val ev = new java.io.File(s"$d/events.parquet")
     val key = s"$d:${ev.length}:${ev.lastModified}"
     mediaIndexCache.computeIfAbsent(key, _ => {
-      val dir = d
-      import s.implicits._
       val out = graft.util.Fs.workDir("media_index", key)
       graft.util.Fs.deleteRecursive(new java.io.File(out))
-      def assets(gen: Long => Array[Byte], c: String) =
-        eventIds(s, dir)
-          .mapPartitions(_.map(id => (id, gen(id)))).toDF("id", c)
       // fused decode (r14): bytes parse ONCE per modality; the pinned
       // fused frame writes both tier artifacts (identical rows to the
       // separate passes — shared per-asset bodies, spec-pinned), so
@@ -2264,7 +2160,7 @@ object SparkEntry {
       graft.util.Par.run(Seq(
         () => {
           val imgSig = Multimodal.imageSignatures(
-            assets(Multimodal.syntheticBmp, "img"), "id", "img").toDF()
+            payloads(eventIds(s, d), Multimodal.syntheticBmp, "img"), "id", "img").toDF()
             .localCheckpoint(true)
           imgSig.select("id", "width", "height", "ahash")
             .write.mode("overwrite").parquet(s"$out/img_ahash")
@@ -2274,7 +2170,7 @@ object SparkEntry {
         },
         () => {
           val audSig = Multimodal.audioSignatures(
-            assets(Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
+            payloads(eventIds(s, d), Multimodal.syntheticWav, "clip"), "id", "clip").toDF()
             .localCheckpoint(true)
           audSig.select(col("id"), col("channels"), col("n_windows"),
               col("wfp").as("fp"))
@@ -2285,13 +2181,29 @@ object SparkEntry {
           graft.ops.Dedup.releaseOwnCheckpoint(audSig)
         },
         () => Multimodal.videoPerceptualHash(
-            assets(Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
+            payloads(eventIds(s, d), Multimodal.syntheticVideoMp4, "vid"), "id", "vid").toDF()
           .write.mode("overwrite").parquet(s"$out/vid_phash"),
         () => Multimodal.videoFingerprint(
-            assets(Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
+            payloads(eventIds(s, d), Multimodal.syntheticMp4, "vid"), "id", "vid").toDF()
           .write.mode("overwrite").parquet(s"$out/vid_fp")))
       out
     })
+  }
+
+  /** Id offset of the poisoned-ingest fixtures' corrupt assets: every
+    * 5th event `e` adds one at `QBase + e`, disjoint from the clean ids. */
+  private val QBase = 10000000L
+
+  /** The corrupt half of a poisoned-ingest fixture: for every 5th event
+    * `e`, `gen(e, kind)` at id `QBase + e`, `kind = (e/5) mod k` cycling
+    * through the modality's `k` corruption kinds; columns `id` and `c`. */
+  private def poisonedPayloads(s: SparkSession, d: String, c: String, k: Int)(
+      gen: (Long, Int) => Array[Byte]): DataFrame = {
+    import s.implicits._
+    eventIds(s, d)
+      .filter((e: Long) => e % 5 == 0)
+      .mapPartitions(_.map(e => (QBase + e, gen(e, ((e / 5) % k).toInt))))
+      .toDF("id", c)
   }
 
   /** The shared poisoned-ingest fixture: the clean synthetic corpus per
@@ -2303,40 +2215,30 @@ object SparkEntry {
     * frames) — one definition, one oracle. */
   private def poisonedMediaCorpora(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    val QBase = 10000000L
-    def assets(gen: Long => Array[Byte], c: String) =
-      eventIds(s, d)
-        .mapPartitions(_.map(id => (id, gen(id)))).toDF("id", c)
-    def poisoned(gen: (Long, Int) => Array[Byte], c: String, k: Int) =
-      eventIds(s, d)
-        .filter((e: Long) => e % 5 == 0)
-        .mapPartitions(_.map(e => (QBase + e, gen(e, ((e / 5) % k).toInt))))
-        .toDF("id", c)
     import graft.ops.Multimodal._
-    val imgBin = assets(syntheticBmp, "img").unionByName(
-      poisoned((e, kind) => kind match {
+    val imgBin = payloads(eventIds(s, d), syntheticBmp, "img").unionByName(
+      poisonedPayloads(s, d, "img", 3)((e, kind) => kind match {
         case 0 => poisonTruncated(syntheticBmp(QBase + e))
         case 1 => poisonPngBomb()
         case _ => poisonPngBadCrc(QBase + e)
-      }, "img", 3))
-    val audBin = assets(syntheticWav, "clip").unionByName(
-      poisoned((e, kind) => kind match {
+      }))
+    val audBin = payloads(eventIds(s, d), syntheticWav, "clip").unionByName(
+      poisonedPayloads(s, d, "clip", 2)((e, kind) => kind match {
         case 0 => poisonTruncated(syntheticWav(QBase + e))
         case _ => poisonWavBadMagic(QBase + e)
-      }, "clip", 2))
-    val vidPBin = assets(syntheticVideoMp4, "vid").unionByName(
-      poisoned((e, kind) => kind match {
+      }))
+    val vidPBin = payloads(eventIds(s, d), syntheticVideoMp4, "vid").unionByName(
+      poisonedPayloads(s, d, "vid", 3)((e, kind) => kind match {
         case 0 => poisonTruncated(syntheticVideoMp4(QBase + e), 16)
         case 1 => poisonMp4Bomb(syntheticVideoMp4(QBase + e))
         case _ => poisonMp4Keyframe(syntheticVideoMp4(QBase + e))
-      }, "vid", 3))
-    val vidEBin = assets(syntheticMp4, "vid").unionByName(
-      poisoned((e, kind) => kind match {
+      }))
+    val vidEBin = payloads(eventIds(s, d), syntheticMp4, "vid").unionByName(
+      poisonedPayloads(s, d, "vid", 3)((e, kind) => kind match {
         case 0 => poisonTruncated(syntheticMp4(QBase + e), 16)
         case 1 => poisonMp4Bomb(syntheticMp4(QBase + e))
         case _ => syntheticMp4(QBase + e) // exact tier stays good
-      }, "vid", 3))
+      }))
     (imgBin, audBin, vidPBin, vidEBin)
   }
 
@@ -3611,8 +3513,8 @@ object SparkEntry {
     "json_extract" ->
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k_val
         |FROM events""".stripMargin,
-    // dims replicate stubDecoder arithmetic: props is ASCII, so byte
-    // values == code points; fit-to-32 mirrors Multimodal.resizePlan
+    // dims replicate Multimodal.resizePlan's byte arithmetic: props is
+    // ASCII, so byte values == code points; fit-to-32 mirrors it too
     "multimodal_resize" ->
       """WITH d AS (SELECT event_id AS id,
         |    CAST(1 + list_sum(list_transform(range(1, length(props)+1),

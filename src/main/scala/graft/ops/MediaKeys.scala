@@ -170,6 +170,15 @@ object MediaKeys {
   def eventIds(spark: SparkSession, dir: String): Dataset[Long] =
     spread(graft.sources.Tables(spark, dir, "events"))
 
+  /** The media gates' fixture frame: `(id, gen(id))` for every id, as
+    * columns `id` and `c`. The payloads are generated per partition of
+    * `ids` — after [[spread]], the synthetic encode spreads like the
+    * decode that consumes it. Works on batch and streaming frames. */
+  def payloads(ids: Dataset[Long], gen: Long => Array[Byte], c: String): DataFrame = {
+    import ids.sparkSession.implicits._
+    ids.mapPartitions(_.map(e => (e, gen(e)))).toDF("id", c)
+  }
+
   private def videoGroup(prefix: String): Column =
     concat(lit(prefix), col("n_key").cast("string"))
 

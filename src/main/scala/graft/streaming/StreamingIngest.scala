@@ -287,9 +287,8 @@ object StreamingIngest {
     import spark.implicits._
     val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
     def hashes(df: DataFrame) = Multimodal.imageAHash(
-      MediaKeys.spread(df)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticBmp(id))))
-        .toDF("id", "img"), "id", "img").toDF()
+      MediaKeys.payloads(MediaKeys.spread(df), Multimodal.syntheticBmp, "img"),
+      "id", "img").toDF()
     // MATERIALIZE the standing index (eager localCheckpoint): the
     // corpus feeds BOTH sides of the screen (band index + hash confirm)
     // and a lazy plan re-decodes it per consumer per micro-batch —
@@ -434,9 +433,8 @@ object StreamingIngest {
     import spark.implicits._
     val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
     def sigs(df: DataFrame) = Multimodal.videoPerceptualHash(
-      MediaKeys.spread(df)
-        .mapPartitions(_.map(id => (id, Multimodal.syntheticVideoMp4(id))))
-        .toDF("id", "vid"), "id", "vid").toDF()
+      MediaKeys.payloads(MediaKeys.spread(df), Multimodal.syntheticVideoMp4, "vid"),
+      "id", "vid").toDF()
     // (id div 2) parity puts each content's {v0, v1} in the corpus and
     // {v2, v3} in the batch — every transcode family straddles
     // same eager materialization as the image twin (see the comment

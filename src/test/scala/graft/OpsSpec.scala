@@ -891,16 +891,14 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
-  test("multimodal stub decode: plumbing preserves ids, deterministic features") {
-    val f = Multimodal.extractFeatures(events, "event_id", "props").cache()
-    assert(f.count() == events.count())
-    val one = events.select("event_id", "props").where("event_id = 1").head()
-    val bytes = one.getString(1).getBytes("UTF-8")
-    val expect = Multimodal.stubDecoder(Iterator((1L, bytes))).next()
-    val got = f.filter(_.id == 1L).head()
-    assert(got.byteLen == expect.byteLen && got.width == expect.width &&
-      got.height == expect.height && got.feat.sameElements(expect.feat))
-    f.unpersist()
+  test("resize plan: byte-derived pseudo dims, fitted inside maxDim with aspect kept") {
+    import spark.implicits._
+    // "AB": Σ bytes 131 → w = 1 + 131 % 64 = 4, h = 1 + 2 = 3 (already fits);
+    // 40 × 'z': Σ 4880 → w = 1 + 16 = 17, h = 41 → w1 = ⌊17·32/41⌋ = 13, h1 = 32;
+    // a null payload counts as empty → 1 × 1
+    val df = Seq((1L, "AB"), (2L, "z" * 40), (3L, null)).toDF("event_id", "props")
+    val got = Multimodal.resizePlan(df).as[(Long, Int, Int, Int, Int)].collect().toSet
+    assert(got == Set((1L, 4, 3, 4, 3), (2L, 17, 41, 13, 32), (3L, 1, 1, 1, 1)))
   }
 
   test("TTL shadow columns: validation, expiry semantics (K4)") {
@@ -2174,9 +2172,16 @@ class OpsSpec extends SparkTestBase {
     for (id <- ids)
       assert(pairs.contains((id, 1000L + id, 0L)),
         s"missing cross-resolution pair for $id: ${pairs.mkString(",")}")
-    // the DIMENSION-GROUPED path provably cannot: dims differ, no pair
+    // the DIMENSION-GROUPED path provably cannot: a 2× copy over 64
+    // pixels has no one-word aHash (refused `malformed`), and where both
+    // sides sign, dims differ — no pair
+    val dimSigs = Multimodal.imageAHashSafe(orig.unionByName(up), "id", "img")
+    val refused = dimSigs.where(!col("ok")).select("id", "reason")
+      .as[(Long, String)].collect().toMap
+    assert(refused.keySet == ids.map(1000L + _).toSet &&
+      refused.values.forall(_ == "decode:malformed"), s"refused: $refused")
     val dimPairs = Multimodal.imageAHashPairs(
-      Multimodal.imageAHash(orig.unionByName(up), "id", "img").toDF())
+      dimSigs.where(col("ok")).drop("ok", "reason"))
       .collect()
     assert(!dimPairs.exists(r => r.getLong(1) >= 1000L && r.getLong(0) < 1000L),
       "dimension-grouped pairs unexpectedly matched across resolutions")
@@ -2219,9 +2224,13 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-resolution pair for $id: ${pairs.mkString(",")}")
     // the DIMENSION-GROUPED perceptual path provably cannot: the
     // rescaled transcode doubles width×height, so original and copy
-    // never share a band group → no cross pair
+    // never share a band group → no cross pair (copies whose keyframes
+    // exceed 64 pixels have no one-word aHash and quarantine instead)
+    val dimSigs = Multimodal.videoPerceptualHashSafe(orig.unionByName(up), "id", "vid")
+    assert(dimSigs.where(!col("ok")).select("reason").distinct().as[String]
+      .collect().toSeq == Seq("decode:malformed"))
     val dimPairs = Multimodal.videoPerceptualPairs(
-      Multimodal.videoPerceptualHash(orig.unionByName(up), "id", "vid").toDF())
+      dimSigs.where(col("ok")).drop("ok", "reason"))
       .collect()
     assert(!dimPairs.exists(r => r.getLong(0) % 2 == 0 && r.getLong(1) == r.getLong(0) + 1),
       "dimension-grouped perceptual pairs unexpectedly matched across resolutions")
@@ -2273,14 +2282,14 @@ class OpsSpec extends SparkTestBase {
     assert(stssSigs(2 * 4L) != stssSigs(2 * 5L),
       "stss-sampled thumb key unexpectedly absorbed keyframe re-placement")
     // …and the dimension-grouped ALIGNED key provably cannot absorb the
-    // rescale (width×height differ → no shared band group → no pair)
-    val alignedPairs = Multimodal.videoPerceptualPairs(
-      Multimodal.videoPerceptualHashTimeAligned(
-        orig.unionByName(up), "id", "vid").toDF())
-      .collect()
-    assert(!alignedPairs.exists(r =>
-        r.getLong(0) % 2 == 0 && r.getLong(1) == r.getLong(0) + 1),
-      "dimension-grouped aligned pairs unexpectedly matched across resolutions")
+    // rescale: every 2× copy's frames exceed the 64 pixels of a one-word
+    // aHash, so the key refuses them (`malformed`) rather than signing
+    val refused = intercept[org.apache.spark.SparkException] {
+      Multimodal.videoPerceptualHashTimeAligned(up, "id", "vid").collect()
+    }
+    assert(Iterator.iterate[Throwable](refused)(_.getCause).takeWhile(_ != null)
+      .exists { case d: graft.ops.DecodeException => d.kind == "malformed"; case _ => false },
+      s"expected a malformed refusal, got $refused")
     // the combo pairs gate surfaces every rescaled copy at Hamming 0
     val pairs = MediaKeys.VideoScaleTime.key.pairs(
       Multimodal.videoScaleInvariantHashTimeAligned(

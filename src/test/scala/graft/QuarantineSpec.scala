@@ -90,6 +90,56 @@ class QuarantineSpec extends SparkTestBase {
       .exceptAll(Multimodal.gifStats(gbin, "id", "img").toDF()).count() == 0)
   }
 
+  test("aHash refuses a raster over 64 pixels: strict throws malformed, safe quarantines") {
+    // 9×8 = 72 pixels: bit 64 would fold onto bit 0 of the one-word hash
+    val big = Bmp.encode(9, 8, (x, y) => ((x * 29) % 256, (y * 31) % 256, (x * y) % 256))
+    val df = Seq((7L, big)).toDF("id", "img")
+    val e = intercept[org.apache.spark.SparkException] {
+      Multimodal.imageAHash(df, "id", "img").collect()
+    }
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case d: graft.ops.DecodeException => d }
+    assert(cause.map(_.kind).contains("malformed"),
+      s"expected a malformed DecodeException, got $e")
+    val safe = Multimodal.imageAHashSafe(df, "id", "img")
+      .select("id", "ok", "reason").as[(Long, Boolean, String)].collect().toSeq
+    assert(safe == Seq((7L, false, "decode:malformed")))
+  }
+
+  test("safe passes keep the quarantine row schema: names, types, nullability") {
+    import org.apache.spark.sql.types.StructType
+    val img = bin(Multimodal.syntheticBmp, "img")
+    val aud = bin(Multimodal.syntheticWav, "clip")
+    val vid = bin(Multimodal.syntheticVideoMp4, "vid")
+    def schema(sig: String) = StructType.fromDDL(
+      s"id BIGINT NOT NULL, ok BOOLEAN NOT NULL, reason STRING, $sig")
+    val stats = "width BIGINT NOT NULL, height BIGINT NOT NULL, sum_r BIGINT NOT NULL, " +
+      "sum_g BIGINT NOT NULL, sum_b BIGINT NOT NULL, px_min BIGINT NOT NULL, " +
+      "px_max BIGINT NOT NULL"
+    val expected = Seq(
+      Multimodal.imageAHashSafe(img, "id", "img") ->
+        "width BIGINT NOT NULL, height BIGINT NOT NULL, ahash BIGINT NOT NULL",
+      Multimodal.imagePixelFingerprintSafe(img, "id", "img") ->
+        "width BIGINT NOT NULL, height BIGINT NOT NULL, fp STRING",
+      Multimodal.imageSignaturesSafe(img, "id", "img") ->
+        "width BIGINT NOT NULL, height BIGINT NOT NULL, ahash BIGINT NOT NULL, fp STRING",
+      Multimodal.audioFingerprintSafe(aud, "id", "clip") ->
+        "channels BIGINT NOT NULL, n_windows BIGINT NOT NULL, fp BIGINT NOT NULL",
+      Multimodal.audioSampleFingerprintSafe(aud, "id", "clip") ->
+        "channels BIGINT NOT NULL, n_samples BIGINT NOT NULL, fp STRING",
+      Multimodal.audioSignaturesSafe(aud, "id", "clip") ->
+        ("channels BIGINT NOT NULL, n_windows BIGINT NOT NULL, wfp BIGINT NOT NULL, " +
+          "n_samples BIGINT NOT NULL, sfp STRING"),
+      Multimodal.videoFingerprintSafe(vid, "id", "vid") ->
+        "n_samples BIGINT NOT NULL, fp STRING",
+      Multimodal.videoPerceptualHashSafe(vid, "id", "vid") ->
+        ("width BIGINT NOT NULL, height BIGINT NOT NULL, n_key BIGINT NOT NULL, " +
+          "sig BIGINT NOT NULL"),
+      Multimodal.jpegStatsSafe(img, "id", "img") -> stats,
+      Multimodal.gifStatsSafe(img, "id", "img") -> stats)
+    for ((df, sig) <- expected) assert(df.schema == schema(sig), df.schema.treeString)
+  }
+
   // ---- safe variants == strict variants on clean fixtures -------------
 
   private def bin(gen: Long => Array[Byte], c: String): DataFrame =
