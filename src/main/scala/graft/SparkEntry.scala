@@ -804,7 +804,8 @@ object SparkEntry {
     "dedup_near_keep" -> ((s, d) => Dedup.nearDedupKeep(T(s, d, "documents"))),
 
     // --- transitive near-dup clusters (connected components over the
-    //     LSH pair graph, min-label propagation to fixpoint)
+    //     LSH pair graph through Dedup.propagateMinLabels, the shared
+    //     closure core: union-find seeding, driver finish, star rounds)
     "dedup_clusters" -> ((s, d) => Dedup.nearDupClusters(T(s, d, "documents"))),
 
     // --- cluster-size histogram: the dedup pass's corpus-health report
@@ -1206,7 +1207,7 @@ object SparkEntry {
     }),
 
     // --- pairs → a per-asset keep/drop decision: the image near-dup
-    //     pair graph through the shared min-label transitive closure
+    //     pair graph through the shared connected-components core
     //     (Dedup.propagateMinLabels), keep = cluster representative —
     //     the shape a curation pipeline consumes (dedup_clusters for
     //     the media modalities); oracle replays the closure with a
@@ -3222,9 +3223,10 @@ object SparkEntry {
          |FROM events WHERE event_id % 5 = 0 AND (event_id // 20) % 2 = 1""".stripMargin,
       extraCte = true),
 
-    // min-label closure over the image pair graph → per-asset
-    // keep/drop; recursive CTE replays Dedup.propagateMinLabels'
-    // fixpoint exactly (same shape as the text clustersOracleSql)
+    // min-id closure over the image pair graph → per-asset keep/drop;
+    // an independent recursive CTE computes the component minima
+    // Dedup.propagateMinLabels returns (same shape as the text
+    // clustersOracleSql)
     "dedup_image_clusters" -> ahashOracleSql(
       s"""$ahashPairsCte,
          |${minLabelClosureSql("pairs", "ah")}""".stripMargin,
@@ -3994,8 +3996,8 @@ object SparkEntry {
          |SELECT doc_id FROM documents
          |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)""".stripMargin,
     // transitive closure over the pair graph via recursive CTE; cluster =
-    // min reachable id (self for singletons) — equals Spark's min-label
-    // propagation fixpoint
+    // min reachable id (self for singletons) — the labels
+    // Dedup.propagateMinLabels returns
     "dedup_clusters" -> clustersOracleSql,
     // survivorship: clusters CTE (nested WITH RECURSIVE, the
     // dedup_cluster_stats pattern) joined with the quality CTE, best

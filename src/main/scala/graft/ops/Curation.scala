@@ -876,7 +876,9 @@ object Curation {
     * per cluster; singletons keep themselves).
     *
     * Scale shape: the closure's cost is [[graft.ops.Dedup.nearDupClusters]]'
-    * (bounded-round label propagation over the capped pair graph); the
+    * (the shared connected-components core over the capped pair graph:
+    * union-find seeding, a driver finish once the residual fits a
+    * broadcast, star-contraction rounds above that); the
     * survivorship choice itself is one quality pass (narrow, codegen'd)
     * + one window over the cluster key — a single extra shuffle. */
   def keepBestInClusters(docs: DataFrame, threshold: Double = 0.5,

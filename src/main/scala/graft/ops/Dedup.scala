@@ -150,20 +150,6 @@ object Dedup {
       explode(array(bandKeys: _*)).as("bk"))
   }
 
-  /** MinHash + banded LSH near-dup pairs with an exact n-gram Jaccard
-    * confirmation on the candidates.
-    *
-    * shingle → k minhashes (Carter-Wegman over the shingle md5, min over
-    * ints) → b bands of r rows; docs sharing a band key become
-    * candidates (equi-join on the band key = the bucket-join; with
-    * k=12, b=4, r=3 a 0.9-Jaccard pair is missed with probability
-    * (1-0.9³)⁴ ≈ 5e-3, a 0.98 pair with ≈ 1.3e-5) → exact Jaccard on
-    * candidate pairs only, threshold filter kills LSH false positives.
-    *
-    * Shape at scale: explode shingles → per-shingle hash ONCE → map-side
-    * partial min-agg, one shuffle on doc_id → band explode → shuffle
-    * equi-join on band key. No cartesian anywhere.
-    */
   /** Gated recall of the banded-minhash SCREEN against the exhaustive
     * exact-Jaccard pair set — the text-dedup sibling of
     * `Similarity.annRecall` (round 11): "more bands → more recall" as
@@ -240,6 +226,20 @@ object Dedup {
     out
   }
 
+  /** MinHash + banded LSH near-dup pairs with an exact n-gram Jaccard
+    * confirmation on the candidates.
+    *
+    * shingle → k minhashes (Carter-Wegman over the shingle md5, min over
+    * ints) → b bands of r rows; docs sharing a band key become
+    * candidates (equi-join on the band key = the bucket-join; with
+    * k=12, b=4, r=3 a 0.9-Jaccard pair is missed with probability
+    * (1-0.9³)⁴ ≈ 5e-3, a 0.98 pair with ≈ 1.3e-5) → exact Jaccard on
+    * candidate pairs only, threshold filter kills LSH false positives.
+    *
+    * Shape at scale: explode shingles → per-shingle hash ONCE → map-side
+    * partial min-agg, one shuffle on doc_id → band explode → shuffle
+    * equi-join on band key. No cartesian anywhere.
+    */
   def minhashLsh(docs: DataFrame, numHashes: Int = 12, bands: Int = 4,
                  shingleLen: Int = 3, threshold: Double = 0.5,
                  bucketCap: Int = 256): DataFrame = {
@@ -436,14 +436,8 @@ object Dedup {
     * This is the production dedup rule — keep one representative per
     * duplicate cluster — and strictly subsumes the greedy pairwise rule
     * in [[nearDedupKeep]] for chains A~B~C where the A~C pair was
-    * band-missed.
-    *
-    * Min-label propagation to fixpoint, the standard distributed CC:
-    * each round is one join + one min-aggregation (both shuffle-on-key,
-    * no cartesian); rounds are bounded by the cluster diameter, which
-    * for near-dup graphs is small. Convergence is detected by the sum
-    * of labels, which is strictly decreasing until fixpoint — one
-    * scalar per round on the driver, never rows. */
+    * band-missed. The closure is [[propagateMinLabels]], the one
+    * connected-components core that text and media clusters share. */
   def nearDupClusters(docs: DataFrame, threshold: Double = 0.5,
                       maxIters: Int = 15): DataFrame =
     propagateMinLabels(docs.select("doc_id"),
@@ -461,299 +455,50 @@ object Dedup {
       .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
 
-  /** The propagation core, separated so tests can drive exact edge sets:
-    * min-label propagation over an undirected pair graph to fixpoint. */
+  /** The ONE connected-components core, shared by text
+    * ([[nearDupClusters]]) and media (`Multimodal.mediaNearDupClusters`)
+    * clusters. Labels every id of `ids` (one id column) with the
+    * smallest id reachable through the undirected `pairs` (two id
+    * columns); an id with no edge labels itself. Returns
+    * `(doc_id, cluster)` as a self-contained local checkpoint the
+    * caller owns. (The name predates the star core; the benchmark
+    * harness calls it by this name.)
+    *
+    * 1. Seeding: [[contractEdges]]' union-find passes rewrite the pairs
+    *    as a near-star forest with the same components; its canonical
+    *    edge set (a < b, deduped, self-loops dropped) is checkpointed.
+    * 2. Driver finish: the checkpoint's observed probe carries the
+    *    residual edge count. Once 16 bytes × count fits
+    *    `spark.sql.autoBroadcastJoinThreshold` — the conf that already
+    *    bounds what a broadcast may carry; -1 disables the finish — the
+    *    residual edges are collected, [[ufStarEdges]] labels them on the
+    *    driver and the labels go back by broadcast join. Near-dup graphs
+    *    of a few thousand edges finish here, right after the seeding.
+    * 3. Above that size, ALTERNATING STAR CONTRACTION rounds (Kiveris
+    *    et al. 2014, "Connected Components in MapReduce and Beyond"):
+    *    large-star points every node's strictly-larger neighbors at its
+    *    neighborhood minimum, small-star points the node and its smaller
+    *    neighbors at that minimum. Components halve per round pair, so
+    *    any topology converges in O(log² n) rounds; every round re-checks
+    *    the driver finish (the residual only shrinks). At the edge
+    *    fixpoint every component is a star rooted at its minimum, and a
+    *    node's label is `min(self, neighbors)`.
+    *
+    * Every round is one fused large-star + small-star plan whose edge
+    * frame is localCheckpointed (the rewrite embeds the previous plan
+    * several times — truncation keeps the plan bounded), and the
+    * superseded round's blocks are released explicitly. Convergence
+    * probe: (count, Σa, Σb, Σ of a 60-bit md5 per edge) of the
+    * canonical edge set, observed on the checkpoint itself — a
+    * deterministic rewrite with an unchanged probe is the fixpoint.
+    * Labels are partition-independent (spec-tested against an
+    * independent union-find under several shuffle layouts). A closure
+    * still unconverged after `maxIters` rounds throws
+    * `IllegalStateException`: its labels would not be the closure. */
   private[graft] def propagateMinLabels(ids: DataFrame, pairs: DataFrame,
                                         maxIters: Int): DataFrame = {
-    // union-find pre-contraction (r19, [[contractEdges]] with the FREE
-    // narrow pass only — gather = 0): propagation rounds are bounded by
-    // the min-node's eccentricity of the graph it walks, so collapsing
-    // every co-partitioned chain to depth 1 first trims rounds at zero
-    // shuffle cost. The full 2-pass gather seeding was measured a
-    // REGRESSION here (contractEdges scaladoc) — this core is kept for
-    // shallow graphs where per-round cost, not round count, dominates.
-    // The contraction rides the persisted edge frame's first
-    // materialization — no extra action — and preserves components and
-    // the node set exactly, so the fixpoint labels are unchanged.
-    val contracted = contractEdges(pairs.toDF("doc_a", "doc_b"), gather = 0)
-    val edges = contracted
-      .union(contracted.select(col("b"), col("a")))
-      .toDF("src", "dst")
-      .persist()
-    var labels = ids.select(col("doc_id"), col("doc_id").as("cluster")).persist()
-    // Convergence scalar summed as DECIMAL(38,0) INSIDE Spark — a Long
-    // sum() overflows (ANSI error / silent wrap) at billion-doc id scale,
-    // which is exactly where the probe must stay exact (ADVICE r3). An
-    // empty ids set sums to NULL → 0, and the loop exits immediately.
-    def labelSum(df: DataFrame): BigDecimal = {
-      val r = df.agg(sum(col("cluster")
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head
-      if (r.isNullAt(0)) BigDecimal(0) else BigDecimal(r.getDecimal(0))
-    }
-    try {
-      var prevSum = labelSum(labels)
-      var it = 0
-      var converged = false
-      while (it < maxIters && !converged) {
-        val prop = edges.join(labels, edges("src") === labels("doc_id"))
-          .select(col("dst").as("doc_id"), col("cluster"))
-        val hop = labels.union(prop)
-          .groupBy("doc_id").agg(min(col("cluster")).as("cluster"))
-        // Pointer-jumping shortcut (the Hash-to-Min / pointer-jumping
-        // idea, Rastogi et al. 2013): follow one more level of
-        // indirection — label(label(x)). MEASURED guarantee, not the
-        // textbook 2^k one: new label information still travels the
-        // GRAPH one hop per round (the jump only compresses
-        // indirection chains that are already known), so rounds are
-        // bounded by ~the min-node's eccentricity with the jump
-        // trimming constants — BENCH_NOTES: 23 rounds for the r9
-        // image graph, vs maxIters=15 exceeded without the jump (the
-        // driver gate caught that divergence; the non-convergence
-        // warning below is the safety net). The exponential 2^k bound
-        // holds only for chain-shaped label structures (the path-graph
-        // test) — do NOT lower maxIters on its strength.
-        // Every cluster value is itself a doc_id, so the lookup is a
-        // self-join on the label; labels only ever decrease (hop takes
-        // a min over {self} ∪ neighbors; the jump substitutes
-        // hop(hop(x)) ≤ hop(x)), so the labelSum convergence probe's
-        // strict-decrease argument is unchanged.
-        val lookup = hop.toDF("lk", "lv") // renamed: self-join disambiguation
-        def jump(df: DataFrame): DataFrame = df
-          .join(lookup, col("cluster") === col("lk"), "left")
-          .select(col("doc_id"),
-            coalesce(col("lv"), col("cluster")).as("cluster"))
-        // localCheckpoint, not persist: `next` embeds `labels` twice
-        // and `hop` several times more, so with persist alone the
-        // LOGICAL plan grows geometrically per round — by round ~13
-        // the driver OOMs just RENDERING the plan string for the SQL
-        // UI (measured on the r9 image-pair graph: 8 GB heap gone in
-        // explainString, zero data involved). The eager checkpoint
-        // truncates lineage to the materialized one-row-per-doc
-        // result, and the labelSum probe was already forcing a
-        // per-round action. The jump applies ONCE: a second
-        // application was measured a wash on the r9 image graph
-        // (rounds 23 → 21 for one extra join per round) — label
-        // information fundamentally travels the GRAPH one hop per
-        // round; the jump only compresses already-known indirection
-        // chains. Rounds are therefore bounded by the min-node's
-        // eccentricity — the same contract as GraphX/Pregel connected
-        // components — and the bucketCap/candCap pair design is what
-        // keeps near-dup component diameters small at scale.
-        // the convergence scalar rides the checkpoint as an observed
-        // metric (r14, same move as starContractLabels): Observation
-        // fires when localCheckpoint(true) materializes, so the probe
-        // costs zero extra jobs; fallback to the aggregation probe if
-        // the metric ever fails to post
-        val obs = org.apache.spark.sql.Observation(
-          "graft-prop-" + java.util.UUID.randomUUID().toString)
-        val next = jump(hop).observe(obs, sum(col("cluster")
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("ls"))
-          .localCheckpoint(true)
-        val nextSum =
-          try {
-            observationGet(obs)("ls") match {
-              case null => BigDecimal(0)
-              case v: java.math.BigDecimal => BigDecimal(v)
-              case v => BigDecimal(v.toString)
-            }
-          } catch { case scala.util.control.NonFatal(e2) =>
-            System.err.println("[dedup] WARNING: checkpoint-observed " +
-              s"probe unavailable (${e2.getMessage}); falling back to an " +
-              "aggregation job")
-            labelSum(next)
-          }
-        // Release the PREVIOUS round's materialization NOW (ADVICE r9):
-        // after the switch to localCheckpoint, Dataset.unpersist is a
-        // no-op on checkpoint-backed frames (cacheManager never saw
-        // them), so without the explicit RDD release every round's
-        // label table would squat in executor storage until GC — a
-        // soft leak proportional to rounds × participants. Safe order:
-        // `next` is already eagerly materialized (its own blocks), so
-        // nothing references the old blocks again.
-        labels.unpersist()            // round 0: the initial persist()
-        releaseLocalCheckpoint(labels) // rounds ≥ 1: checkpoint blocks
-        labels = next
-        converged = nextSum == prevSum
-        prevSum = nextSum
-        it += 1
-      }
-      if (!converged)
-        // a non-fixpoint labeling diverges from the transitive closure for
-        // chains deeper than maxIters hops — surface it instead of
-        // silently returning (ADVICE r3)
-        System.err.println(s"[dedup] WARNING: min-label propagation hit " +
-          s"maxIters=$maxIters without converging; labels may not be the " +
-          "transitive-closure fixpoint (raise maxIters for deep chains)")
-      // hand back a SELF-CONTAINED checkpoint and release the loop's
-      // final round explicitly (same no-op-unpersist reason as above);
-      // only `out`'s own blocks stay resident, and the caller owns them
-      val out = labels.localCheckpoint(true)
-      labels.unpersist()
-      releaseLocalCheckpoint(labels)
-      out
-    } finally edges.unpersist()
-  }
-
-  /** Transitive closure by ALTERNATING STAR CONTRACTION (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond" — the
-    * public two-phase algorithm): repeatedly rewrite the EDGE SET with
-    * the large-star operation (every node points its strictly-larger
-    * neighbors at its neighborhood minimum) then the small-star
-    * operation (every node points itself and its smaller neighbors at
-    * that minimum), until the edges stop changing — at which point
-    * every component is a star rooted at its minimum id, and the label
-    * of a node is simply `min(self, neighbors)`.
-    *
-    * Same output contract as [[propagateMinLabels]] (per-node minimum
-    * component id; equivalence property-tested against an independent
-    * union-find on random graphs), different round bound: plain
-    * propagation needs ~eccentricity rounds — new label information
-    * travels ONE graph hop per round, pointer jump or not — while star
-    * contraction HALVES component structure per phase pair, converging
-    * in O(log² n) rounds on ANY topology. That difference is why this
-    * core exists: the r10 perceptual-video pair graph's candCap-pruned
-    * chains exceeded eccentricity 30 at sf0.1 and propagation hit its
-    * round cap (loudly); contraction converges in a handful of phase
-    * pairs. Trade: each phase pair costs 3 shuffles (one window-min
-    * exchange per star + the round's dedup — r18; the groupBy-min +
-    * join-back shape cost 5) against propagation's ~2, and the
-    * shuffled unit is the EDGE set, so for shallow graphs (text LSH
-    * near-dup cliques) propagation stays the cheaper core — both are
-    * kept, both gate-covered. The global loop is seeded by a
-    * partition-local union-find pre-contraction (r18) — one narrow
-    * pass, no shuffle — so co-partitioned chains collapse before the
-    * first exchange, followed by two neighborhood-gather union-find
-    * passes (r19: shuffle both edge orientations by endpoint, union-find
-    * per partition) that ride the initial checkpoint's action and leave
-    * typical pair graphs needing ~2 global rounds (one real, one
-    * confirming — measured ledgers in OPTIMIZATION_r19.md: the r18
-    * video-crop keep graph ran 8 rounds / 49 jobs, now 2 / 27).
-    *
-    * Storage discipline matches the propagation loop: every ROUND
-    * (one fused large-star + small-star plan — r18: the phases used to
-    * checkpoint separately, two actions per round, and per-action job
-    * overhead dominated every closure gate) localCheckpoints the edge
-    * frame (the rewrite embeds the previous plan several times —
-    * geometric plan growth without truncation) and the superseded
-    * round's blocks are released explicitly.
-    * Convergence probe: (count, Σu, Σv) of the canonical edge set as
-    * DECIMAL — a deterministic rewrite with an unchanged triple is
-    * treated as the fixpoint; the per-gate oracles and the union-find
-    * property tests back that judgment with exact checks. */
-  /** UNION-FIND PRE-CONTRACTION, shared by both closure cores (r18
-    * local pass; r19 gather passes + factoring): rewrite a (possibly
-    * huge) edge multiset as near-star edges whose components equal the
-    * input's, so the iterative global loops start from a
-    * near-converged forest instead of raw pair chains.
-    *
-    * Pass 0 (r18, guide §2.3 "aggregate before you shuffle" applied to
-    * connected components): a union-find over each INPUT partition's
-    * edges rewrites them as star edges to the partition-local
-    * component minimum — one narrow mapPartitions pass, NO shuffle,
-    * state bounded by the partition's node count.
-    *
-    * Passes 1-2 (r19, NEIGHBORHOOD-GATHER): duplicate both edge
-    * orientations and hash-shuffle by the first endpoint, so EVERY
-    * edge incident to a node lands in that node's partition, then
-    * union-find again — any two partition-local stars sharing a node
-    * merge (a single-column shuffle provably misses root-to-child
-    * links: stars (1,2),(1,3) and (3,4),(3,5) connect through node 3
-    * yet no (a) or (b) hash co-locates the witnessing edges; the
-    * orientation duplicate does). Each pass is one exchange of the
-    * tiny (long, long) edge frame riding INSIDE the caller's first
-    * action — the global loops' rounds cost one checkpoint + 2-3
-    * exchanges EACH, so every round these passes shave repays them
-    * several times over (measured ledgers in OPTIMIZATION_r19.md).
-    *
-    * Correctness: replacing a partition's edge multiset with a star
-    * over the same nodes preserves global connectivity (outputs only
-    * connect nodes witnessed connected — a—root—b replaces a—b — and
-    * every input edge (u,v) is witnessed in u's partition, where both
-    * orientations co-locate); the node set is preserved (every node of
-    * an input edge appears in some output edge of its partition);
-    * min-root union is deterministic regardless of edge order, and
-    * hash partitioning on a deterministic column is retry-safe (guide
-    * §2.5). The global fixpoint labels are partition-independent
-    * (equivalence property-tested against an independent union-find).
-    * Null-id edges are dropped explicitly (ADVICE r18: the bare
-    * `.as[(Long, Long)]` turned a null id into an encoder crash; no
-    * current caller produces one). The gather partition count follows
-    * `spark.sql.shuffle.partitions` (scale-adaptive, not a local-mode
-    * constant).
-    *
-    * `gather`: number of gather passes. 2 for the star-contraction
-    * core (its per-round cost is high — one checkpoint + 3 exchanges —
-    * so deep seeding pays); 0 for the min-label-propagation core
-    * (measured on dedup_clusters at sf0.1: the full 2-pass seeding
-    * REGRESSED the gate 4.2 s → 7.8 s — its LSH-clique graphs are
-    * shallow, propagation was already 2-3 rounds, and the two gather
-    * exchanges plus the doubled post-exchange pass cost more than the
-    * round they saved; the free narrow pass 0 keeps what does pay). */
-  private[graft] def contractEdges(pairs: DataFrame,
-                                   gather: Int = 2): DataFrame = {
     val ss = pairs.sparkSession
     import ss.implicits._
-    // one union-find pass over whatever edges land in a partition,
-    // rewriting them as star edges to the partition-local minimum
-    def ufStarEdges(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-      // parent(x) always points at a STRICTLY smaller node, so the
-      // map's keys are exactly the partition's non-root nodes
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrElse(x, x)
-        while (p != x) { // path halving
-          val gp = parent.getOrElse(p, p)
-          parent(x) = gp
-          x = gp
-          p = parent.getOrElse(x, x)
-        }
-        x
-      }
-      it.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val ks = parent.keysIterator.toArray
-      ks.iterator.map(x => (find(x), x))
-    }
-    val pre0 = pairs.toDF("a", "b")
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .where(col("a").isNotNull && col("b").isNotNull)
-      .as[(Long, Long)]
-      .mapPartitions(ufStarEdges)
-      .toDF("a", "b")
-    def gatherPass(e: DataFrame): DataFrame =
-      e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-        .repartition(col("u"))
-        .as[(Long, Long)]
-        .mapPartitions(ufStarEdges)
-        .toDF("a", "b")
-    if (gather <= 0) pre0
-    else (1 to gather).foldLeft(pre0)((e, _) => gatherPass(e))
-  }
-
-  private[graft] def starContractLabels(ids: DataFrame, pairs: DataFrame,
-                                        maxIters: Int = 25): DataFrame = {
-    val ss = pairs.sparkSession
-    import ss.implicits._
-    // union-find pre-contraction ([[contractEdges]]): the loop starts
-    // from a near-star forest; typical pair graphs finish in ~2 global
-    // rounds (one real, one confirming)
-    val pre = contractEdges(pairs)
-    // canonical undirected edge list (a < b), self-loops dropped;
-    // checkpointed below with the initial probe riding the
-    // materialization as observed metrics (r18: previously a separate
-    // aggregation job over the checkpointed frame)
-    val edges0 = pre
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("b"), col("a")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-
     def adj(e: DataFrame): DataFrame =
       e.select(col("a").as("u"), col("b").as("v"))
         .union(e.select(col("b").as("u"), col("a").as("v")))
@@ -763,122 +508,92 @@ object Dedup {
         .where(col("a") =!= col("b"))
         .distinct()
 
-    // Convergence probe: an order-independent fingerprint of the
-    // canonical edge set. Unlike propagateMinLabels' labelSum (sound
-    // via monotone-decreasing labels), edge sets carry no monotonicity
-    // argument, so the probe must make collisions between DIFFERENT
-    // edge sets negligible, not just unlikely (ADVICE r10 #3): on top
-    // of (count, Σa, Σb) it sums a 60-bit md5-derived integer per
-    // canonical edge (portable integer arithmetic, repo convention) —
-    // a false fixpoint now needs a simultaneous coincidence in all
-    // four components across a distinct edge set.
+    // Edge sets carry no monotonicity argument, so the probe must make
+    // collisions between DIFFERENT edge sets negligible: on top of
+    // (count, Σa, Σb) it sums a 60-bit md5-derived integer per canonical
+    // edge, as DECIMAL so billion-id sums stay exact.
     val probeDec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def probeExprs: Seq[Column] = {
+    val probeExprs: Seq[Column] = {
       val edgeHash = conv(substring(
         md5(concat_ws(":", col("a"), col("b"))), 1, 15), 16, 10).cast(probeDec)
       Seq(count(lit(1)).as("cnt"), sum(col("a").cast(probeDec)).as("sa"),
         sum(col("b").cast(probeDec)).as("sb"), sum(edgeHash).as("sh"))
     }
-    def edgeProbe(e: DataFrame): (Long, BigDecimal, BigDecimal, BigDecimal) = {
-      val r = e.agg(probeExprs.head, probeExprs.tail: _*).head
-      def d(i: Int): BigDecimal =
-        if (r.isNullAt(i)) BigDecimal(0) else BigDecimal(r.getDecimal(i))
-      (r.getLong(0), d(1), d(2), d(3))
-    }
-    // The per-round probe rides the small-star CHECKPOINT as observed
-    // metrics (r14): `Observation` fires when localCheckpoint(true)
-    // materializes the frame, so convergence detection costs ZERO extra
-    // jobs — previously a separate aggregation job per round, and on
-    // the near-dup subgraphs the per-round fixed job cost (not data)
-    // dominates the cluster gates. Values are the SAME four aggregates
-    // over the same canonical edge rows. Defensive fallback: if the
-    // metrics ever fail to post (a future Spark changing checkpoint
-    // execution paths), fall back LOUDLY to the aggregation probe
-    // rather than hanging on Observation.get.
-    def observedProbe(obs: org.apache.spark.sql.Observation,
-                      e: DataFrame): (Long, BigDecimal, BigDecimal, BigDecimal) =
-      try {
-        val m = observationGet(obs)
-        def d(k: String): BigDecimal = m(k) match {
-          case null => BigDecimal(0)
-          case v: java.math.BigDecimal => BigDecimal(v)
-          case v => BigDecimal(v.toString)
-        }
-        (m("cnt").asInstanceOf[Long], d("sa"), d("sb"), d("sh"))
-      } catch { case scala.util.control.NonFatal(e2) =>
+    // The probe rides the checkpoint as observed metrics: `Observation`
+    // fires when localCheckpoint(true) materializes the frame, so it
+    // costs no extra job. If the metrics ever fail to post, fall back
+    // LOUDLY to the aggregation job rather than hang on Observation.get.
+    def checkpointed(e: DataFrame): (DataFrame, (Long, BigDecimal, BigDecimal, BigDecimal)) = {
+      val obs = org.apache.spark.sql.Observation(
+        "graft-contract-" + java.util.UUID.randomUUID().toString)
+      val c = e.observe(obs, probeExprs.head, probeExprs.tail: _*)
+        .localCheckpoint(true)
+      val m = try observationGet(obs) catch { case scala.util.control.NonFatal(e2) =>
         System.err.println("[dedup] WARNING: checkpoint-observed probe " +
           s"unavailable (${e2.getMessage}); falling back to an aggregation job")
-        edgeProbe(e)
+        c.agg(probeExprs.head, probeExprs.tail: _*).head
+          .getValuesMap[Any](Seq("cnt", "sa", "sb", "sh"))
       }
-
-    val obs0 = org.apache.spark.sql.Observation(
-      "graft-contract-" + java.util.UUID.randomUUID().toString)
-    var edges = edges0.observe(obs0, probeExprs.head, probeExprs.tail: _*)
-      .localCheckpoint(true)
-    var probe = observedProbe(obs0, edges)
-    var it = 0
-    var converged = probe._1 == 0L // no edges: everything is a singleton
-    // m(u) = min(Γ(u) ∪ {u}) computed as a WINDOW over the adjacency
-    // rows (r18, guide §2.4): the old [groupBy(u).min + join-back on u]
-    // pair cost TWO exchanges per star (partial-agg exchange + raw-rows
-    // exchange for the join); a min window over partitionBy(u) delivers
-    // m on every adjacency row with ONE exchange + an in-partition
-    // sort of (long, long) rows. Skew posture unchanged: either shape
-    // routes a star root's whole neighborhood to one reducer task.
+      def d(k: String): BigDecimal = m(k) match {
+        case null => BigDecimal(0)
+        case v: java.math.BigDecimal => BigDecimal(v)
+        case v => BigDecimal(v.toString)
+      }
+      (c, (m("cnt").asInstanceOf[Long], d("sa"), d("sb"), d("sh")))
+    }
+    // m(u) = min(Γ(u) ∪ {u}) as a WINDOW over the adjacency rows: one
+    // exchange + an in-partition sort per star, where groupBy-min +
+    // join-back cost two. Either shape routes a star root's whole
+    // neighborhood to one reducer task.
     def withM(a: DataFrame): DataFrame =
       a.withColumn("m", least(col("u"), min(col("v")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("u")))))
-    while (it < maxIters && !converged) {
-      // LARGE-STAR: (v, m(u)) for every strictly-larger neighbor v of u.
-      // NOT materialized on its own (r18, guide §2.4/§2.6): the phase
-      // pair used to cost TWO actions per round — one localCheckpoint
-      // per star — and on the near-dup subgraphs the per-round fixed
-      // job overhead (AQE stage jobs × scheduler round-trips), not
-      // data, dominates every closure gate. Fusing both stars into ONE
-      // plan per round halves the actions, and plan depth stays bounded
-      // at two star rewrites over the previous round's CHECKPOINTED
-      // edges, so the geometric-plan-growth hazard the old per-phase
-      // checkpoint guarded against cannot return.
-      // The large-star output is NOT deduped (r18): min() over a
-      // multiset equals min() over its set and the small-star's
-      // canonical() dedups the round's final edge set, so dropping the
-      // intermediate distinct removes one Exchange+Aggregate per round
-      // without changing the edge SET any round produces. Duplicate
-      // large rows are bounded by the (deduped) previous round's edge
-      // count — no growth across rounds.
-      val large =
-        withM(adj(edges)).where(col("v") > col("u"))
-          .select(least(col("v"), col("m")).as("a"),
-            greatest(col("v"), col("m")).as("b"))
-          .where(col("a") =!= col("b"))
-      // SMALL-STAR: (v, m(u)) for every ≤ neighbor v ≠ m, plus (u, m) —
-      // the (u, m) leg rides the same window rows (one per adjacency
-      // row; duplicates collapse in canonical()'s distinct, exactly the
-      // set the old one-row-per-u m2 union produced)
+    // one fused round. LARGE-STAR: (v, m(u)) for every strictly-larger
+    // neighbor v of u, not deduped (min over a multiset equals min over
+    // its set, and canonical() dedups the round's final edge set).
+    // SMALL-STAR: (v, m(u)) for every ≤ neighbor v ≠ m, plus (u, m).
+    def starRound(e: DataFrame): DataFrame = {
+      val large = withM(adj(e)).where(col("v") > col("u"))
+        .select(least(col("v"), col("m")).as("a"),
+          greatest(col("v"), col("m")).as("b"))
+        .where(col("a") =!= col("b"))
       val s2 = withM(adj(large))
-      val obs = org.apache.spark.sql.Observation(
-        "graft-contract-" + java.util.UUID.randomUUID().toString)
-      val small = canonical(
-        s2.where(col("v") <= col("u") && col("v") =!= col("m"))
-          .select(col("v").as("x"), col("m").as("y"))
-          .union(s2.select(col("u").as("x"), col("m").as("y"))))
-        .observe(obs, probeExprs.head, probeExprs.tail: _*)
-        .localCheckpoint(true)
+      canonical(s2.where(col("v") <= col("u") && col("v") =!= col("m"))
+        .select(col("v").as("x"), col("m").as("y"))
+        .union(s2.select(col("u").as("x"), col("m").as("y"))))
+    }
+    val broadcastMax = {
+      val t = ss.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+      if (t.startsWith("-")) t.toLong
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(t)
+    }
+    def fitsDriver(edgeCount: Long): Boolean = 16L * edgeCount <= broadcastMax
+
+    var (edges, probe) = checkpointed(canonical(contractEdges(pairs).toDF("x", "y")))
+    var converged = probe._1 == 0L // no edges: everything is a singleton
+    var it = 0
+    while (!converged && !fitsDriver(probe._1) && it < maxIters) {
+      val (next, nextProbe) = checkpointed(starRound(edges))
       releaseLocalCheckpoint(edges)
-      edges = small
-      val next = observedProbe(obs, edges)
-      converged = next == probe
-      probe = next
+      edges = next
+      converged = nextProbe == probe
+      probe = nextProbe
       it += 1
     }
-    if (!converged)
-      System.err.println(s"[dedup] WARNING: star contraction hit " +
-        s"maxIters=$maxIters without an edge fixpoint; labels may not be " +
-        "the transitive closure (raise maxIters)")
-    // fixpoint edges are stars rooted at component minima:
-    // label = min(self, neighbors); non-participants label themselves
-    val lab = adj(edges).groupBy("u").agg(min(col("v")).as("mn"))
-      .select(col("u").as("doc_id_l"), col("mn"))
+    // (node, its component minimum) for every node of a residual edge
+    val lab =
+      if (converged)
+        adj(edges).groupBy("u").agg(min(col("v")).as("mn"))
+          .select(col("u").as("doc_id_l"), col("mn"))
+      else if (fitsDriver(probe._1))
+        broadcast(ufStarEdges(edges.as[(Long, Long)].collect().iterator)
+          .toSeq.toDF("mn", "doc_id_l"))
+      else {
+        releaseLocalCheckpoint(edges)
+        throw new IllegalStateException(s"closure hit maxIters=$maxIters " +
+          s"with ${probe._1} residual edges unconverged; its labels would " +
+          "not be the transitive closure (raise maxIters)")
+      }
     val out = ids.toDF("doc_id")
       .join(lab, col("doc_id") === col("doc_id_l"), "left")
       .select(col("doc_id"),
@@ -886,6 +601,87 @@ object Dedup {
       .localCheckpoint(true)
     releaseLocalCheckpoint(edges)
     out
+  }
+
+  /** One union-find pass over an edge multiset, rewriting it as star
+    * edges `(root, node)` to each component's minimum — one edge per
+    * non-root node. State is bounded by the input's node count. Runs
+    * per partition in [[contractEdges]] and over the collected residual
+    * in [[propagateMinLabels]]' driver finish. */
+  private[graft] def ufStarEdges(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    // parent(x) always points at a STRICTLY smaller node, so the
+    // map's keys are exactly the non-root nodes
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElse(x, x)
+      while (p != x) { // path halving
+        val gp = parent.getOrElse(p, p)
+        parent(x) = gp
+        x = gp
+        p = parent.getOrElse(x, x)
+      }
+      x
+    }
+    it.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val ks = parent.keysIterator.toArray
+    ks.iterator.map(x => (find(x), x))
+  }
+
+  /** UNION-FIND SEEDING of [[propagateMinLabels]]: rewrite a (possibly
+    * huge) edge multiset as near-star edges whose components equal the
+    * input's, so the closure starts from a near-converged forest
+    * instead of raw pair chains.
+    *
+    * Pass 0 ("aggregate before you shuffle" applied to connected
+    * components): [[ufStarEdges]] over each INPUT partition's edges —
+    * one narrow mapPartitions pass, NO shuffle.
+    *
+    * Passes 1-2 (NEIGHBORHOOD passes): duplicate both edge orientations
+    * and hash-shuffle by the first endpoint, so EVERY edge incident to
+    * a node lands in that node's partition, then union-find again — any
+    * two partition-local stars sharing a node merge (a single-column
+    * shuffle provably misses root-to-child links: stars (1,2),(1,3) and
+    * (3,4),(3,5) connect through node 3 yet no (a) or (b) hash
+    * co-locates the witnessing edges; the orientation duplicate does).
+    * Each pass is one exchange of the (long, long) edge frame riding
+    * inside the closure's first checkpoint (measured ledgers in
+    * OPTIMIZATION_r19.md).
+    *
+    * Correctness: replacing a partition's edge multiset with a star
+    * over the same nodes preserves global connectivity (outputs only
+    * connect nodes witnessed connected — a—root—b replaces a—b — and
+    * every input edge (u,v) is witnessed in u's partition, where both
+    * orientations co-locate); the node set is preserved (every node of
+    * an input edge appears in some output edge of its partition);
+    * min-root union is deterministic regardless of edge order, and
+    * hash partitioning on a deterministic column is retry-safe. The
+    * closure's labels are partition-independent (spec-tested against an
+    * independent union-find under several shuffle layouts). Null-id
+    * edges are dropped explicitly (a bare `.as[(Long, Long)]` turns a
+    * null id into an encoder crash). The neighborhood passes' partition
+    * count follows `spark.sql.shuffle.partitions`. */
+  private[graft] def contractEdges(pairs: DataFrame): DataFrame = {
+    val ss = pairs.sparkSession
+    import ss.implicits._
+    def neighborhoodPass(e: DataFrame): DataFrame =
+      e.select(col("a").as("u"), col("b").as("v"))
+        .union(e.select(col("b").as("u"), col("a").as("v")))
+        .repartition(col("u"))
+        .as[(Long, Long)]
+        .mapPartitions(ufStarEdges)
+        .toDF("a", "b")
+    neighborhoodPass(neighborhoodPass(pairs.toDF("a", "b")
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .where(col("a").isNotNull && col("b").isNotNull)
+      .as[(Long, Long)]
+      .mapPartitions(ufStarEdges)
+      .toDF("a", "b")))
   }
 
   /** Suppress ONLY the three benign WARN texts an intentional release

@@ -1267,78 +1267,41 @@ object Multimodal {
 
   /** Pair lists → a per-asset KEEP/DROP decision — what a curation
     * pipeline actually consumes (the text path's `nearDupClusters`
-    * extended to media assets): min-label propagation
-    * (`Dedup.propagateMinLabels`, the ONE transitive-closure
-    * implementation) over the near-dup pair graph assigns every asset
-    * the smallest id in its connected component; `keep` is true
-    * exactly for that representative. Assets with no near-dup edges
-    * are their own singleton cluster (kept). Both inputs are id
-    * frames: `ids` the full asset universe (one column `id`), `pairs`
-    * any [[bandedHammingPairs]] output (`id_a`, `id_b`). Scale shape:
-    * inherited from the propagation core — per round one shuffle-on-key
-    * join + one min-agg, rounds bounded by component diameter (tiny
-    * for near-dup cliques), convergence probed by a one-scalar
-    * DECIMAL sum, never collected rows.
+    * extended to media assets): `Dedup.propagateMinLabels`, the ONE
+    * connected-components core, assigns every asset the smallest id in
+    * its near-dup component; `keep` is true exactly for that
+    * representative. Assets with no near-dup edge are their own
+    * singleton cluster (kept) — the core labels an id with no edge
+    * with its own id, so they never enter its iterative stage. Both
+    * inputs are id frames: `ids` the full asset universe (one column
+    * `id`), `pairs` any [[bandedHammingPairs]] output (`id_a`, `id_b`).
     *
-    * Both inputs are localCheckpointed first: the propagation loop
-    * re-embeds its inputs' plans once per round, and a decode-pipeline
-    * plan (mapPartitions codec → banded join → window) re-embedded ~6×
-    * per iteration grows the logical plan past what the driver can
-    * even render — measured: the UNtruncated sf0.001 image graph OOMed
-    * an 8 GB driver in `explainString`, pure plan bloat, zero data.
-    * The checkpoint inputs are small by construction (ids: one long
-    * per asset; pairs: capped at candCap per asset).
-    *
-    * The closure core is `Dedup.starContractLabels` (alternating
-    * large-star/small-star contraction — O(log² n) rounds on ANY
-    * topology), NOT the text path's min-label propagation: candCap
-    * prunes perceptual-hash cliques into long chain-like subgraphs
-    * whose eccentricity grows with corpus size — the r10
-    * perceptual-video graph exceeded eccentricity 30 at sf0.1, where
-    * propagation (rounds ~ eccentricity, pointer jump or not) hit its
-    * round cap while contraction converges in a handful of phase
-    * pairs. `maxIters` 25 bounds log²-many contraction rounds with a
-    * wide margin; non-convergence warns loudly. */
+    * Scale shape: union-find seeding, then a driver-side finish once
+    * the residual graph fits a broadcast, else star-contraction rounds
+    * — O(log² n) on ANY topology, which matters here: candCap prunes
+    * perceptual-hash cliques into long chain-like subgraphs whose
+    * eccentricity grows with corpus size. `maxIters` 25 bounds the
+    * log²-many rounds with a wide margin; an unconverged closure
+    * throws. */
   def mediaNearDupClusters(ids: DataFrame, pairs: DataFrame,
-                           maxIters: Int = 25): DataFrame = {
-    val p = pairs
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      .localCheckpoint(true)
-    // Contract over PARTICIPANTS only — assets appearing in at least
-    // one pair. Assets with no near-dup edge (the overwhelming bulk of
-    // a real corpus) are singleton clusters by definition and never
-    // enter the iterative loop; they rejoin at the end with
-    // cluster = own id. This keeps every per-round shuffle
-    // proportional to the near-dup SUBGRAPH, not the corpus — at
-    // sf0.1, 35k participants of 100k images; at 100 TB the ratio is
-    // far more lopsided.
-    val participants = p.select(col("doc_a").as("doc_id"))
-      .union(p.select(col("doc_b").as("doc_id")))
-      .distinct()
-    val lab = Dedup.starContractLabels(participants, p, maxIters)
-      .withColumnRenamed("doc_id", "id")
-    val out = ids.select(col("id"))
-      .join(lab, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("cluster"), col("id")).as("cluster"))
+                           maxIters: Int = 25): DataFrame =
+    Dedup.propagateMinLabels(ids.select("id"), pairs.select("id_a", "id_b"),
+        maxIters)
+      .toDF("id", "cluster")
       .withColumn("keep", col("id") === col("cluster"))
-    Dedup.releaseLocalCheckpoint(p)
-    out
-  }
 
   /** ONE transitive closure over SEVERAL modalities' pair graphs — the
     * admission book's composition shape. The per-modality graphs are
     * disjoint by construction (an image never pairs with an audio
     * clip), so running [[mediaNearDupClusters]] once per modality pays
-    * the iterative contraction's fixed per-round cost (3 actions ×
-    * O(log² n) phases — measured ~37 s of the sf0.1 book's ~52 s,
-    * dominated by per-round job overhead, not data) THREE times over.
-    * This variant makes the union id space collision-free by encoding
-    * `id·k + code` (k = number of modalities, code = position in
-    * `parts`; ANSI arithmetic makes a never-expected Long overflow
-    * loud), contracts the UNION graph once — rounds become the MAX
-    * over modalities instead of the sum, per-round shuffle volume is
-    * the sum of the (tiny) subgraphs — and decodes back.
+    * the closure's fixed per-call job cost (seeding checkpoint, finish,
+    * any star rounds — job overhead, not data, on near-dup subgraphs)
+    * THREE times over. This variant makes the union id space
+    * collision-free by encoding `id·k + code` (k = number of
+    * modalities, code = position in `parts`; ANSI arithmetic makes a
+    * never-expected Long overflow loud), closes the UNION graph once —
+    * rounds become the MAX over modalities instead of the sum, shuffle
+    * volume is the sum of the (tiny) subgraphs — and decodes back.
     * Component minima stay within one modality (disjointness), so the
     * decoded (id, cluster, keep) rows are exactly the per-modality
     * results — spec-pinned, and the book's oracle replays the

@@ -161,16 +161,16 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     // a 60-node path graph: diameter 59 with one-hop propagation needs
     // 59 rounds — the r9 image graph hit exactly this (a diameter-17
-    // component silently exceeded maxIters=15 and the driver gate
-    // caught the divergence). Pointer doubling reaches 2^k hops in k
-    // rounds, so 15 iterations cover diameter 2^15.
+    // component exceeded maxIters=15). The closure core's star rounds
+    // need O(log² n), so 15 rounds cover it on the distributed path too.
     val n = 60L
     val ids = (0L until n).toDF("doc_id")
     val path = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cl = Dedup.propagateMinLabels(ids, path, maxIters = 15)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cl.values.forall(_ == 0L),
-      s"path graph must collapse to cluster 0; got ${cl.filter(_._2 != 0L)}")
+    for (p <- closurePaths) {
+      val cl = onPath(p)(labelMap(Dedup.propagateMinLabels(ids, path, maxIters = 15)))
+      assert(cl.values.forall(_ == 0L),
+        s"$p: path graph must collapse to cluster 0; got ${cl.filter(_._2 != 0L)}")
+    }
   }
 
   test("media clusters: keep marks exactly one representative per component") {
@@ -446,7 +446,17 @@ class OpsSpec extends SparkTestBase {
       s"recall curve is flat ($ivfByProbe) — query window saturated")
   }
 
-  /** Independent ground truth for closure cores: plain Scala
+  /** The closure core's two paths: the default conf finishes small
+    * residual graphs on the driver; a broadcast threshold of -1
+    * disables that finish, so every round runs distributed. */
+  private val closurePaths = Seq("driver-finish", "distributed")
+  private def onPath[T](path: String)(body: => T): T =
+    if (path == "distributed") withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    else body
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Independent ground truth for the closure core: plain Scala
     * union-find over the same node/edge sets. */
   private def dsuClusters(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map((0L until n).map(i => i -> i): _*)
@@ -458,71 +468,177 @@ class OpsSpec extends SparkTestBase {
     (0L until n).map(i => i -> find(i)).toMap
   }
 
-  test("property: star contraction == union-find on random graphs, chains, cliques") {
-    import spark.implicits._
+  private def closureCases: Seq[(String, Long, Seq[(Long, Long)])] = {
     val rnd = new scala.util.Random(29)
-    val cases: Seq[(String, Long, Seq[(Long, Long)])] =
-      Seq.tabulate(6) { s =>
-        val n = 60L
-        val m = 20 + rnd.nextInt(80)
-        (s"random-$s", n, Seq.fill(m)((rnd.nextLong(n), rnd.nextLong(n)))
-          .filter { case (a, b) => a != b })
-      } ++ Seq(
-        // the propagation killer: a 300-node path needs ~300
-        // propagation rounds but only O(log^2) contraction rounds —
-        // maxIters 25 must converge and label everything 0
-        ("path-300", 300L, (0L until 299L).map(i => (i, i + 1))),
-        ("clique-40", 50L, for (a <- 0L until 40L; b <- a + 1 until 40L) yield (a, b)),
-        ("two-comps", 20L, Seq((0L, 1L), (1L, 2L), (10L, 11L), (11L, 12L), (12L, 10L))),
-        ("no-edges", 10L, Seq.empty),
-        ("dup-and-reversed", 8L, Seq((3L, 4L), (4L, 3L), (3L, 4L), (6L, 7L))))
-    for ((tag, n, edges) <- cases) {
-      val ids = (0L until n).toDF("doc_id")
-      val pairs = if (edges.isEmpty)
-        Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-      else edges.toDF("doc_a", "doc_b")
-      val got = Dedup.starContractLabels(ids, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = dsuClusters(n, edges)
-      assert(got == want, s"$tag: star contraction diverges from union-find: " +
-        s"${(got.toSet -- want.toSet).take(5)} vs ${(want.toSet -- got.toSet).take(5)}")
+    Seq.tabulate(6) { s =>
+      val n = 60L
+      val m = 20 + rnd.nextInt(80)
+      (s"random-$s", n, Seq.fill(m)((rnd.nextLong(n), rnd.nextLong(n)))
+        .filter { case (a, b) => a != b })
+    } ++ Seq(
+      // the propagation killer: a 300-node path needs ~300
+      // propagation rounds but only O(log^2) contraction rounds —
+      // maxIters 25 must converge and label everything 0
+      ("path-300", 300L, (0L until 299L).map(i => (i, i + 1))),
+      ("clique-40", 50L, for (a <- 0L until 40L; b <- a + 1 until 40L) yield (a, b)),
+      ("two-comps", 20L, Seq((0L, 1L), (1L, 2L), (10L, 11L), (11L, 12L), (12L, 10L))),
+      ("no-edges", 10L, Seq.empty),
+      ("dup-and-reversed", 8L, Seq((3L, 4L), (4L, 3L), (3L, 4L), (6L, 7L))))
+  }
+  private def closureInput(n: Long, edges: Seq[(Long, Long)]): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    ((0L until n).toDF("doc_id"), edges.toDF("doc_a", "doc_b"))
+  }
+  private def assertUnionFind(tag: String, got: Map[Long, Long], want: Map[Long, Long]): Unit =
+    assert(got == want, s"$tag: closure diverges from union-find: " +
+      s"${(got.toSet -- want.toSet).take(5)} vs ${(want.toSet -- got.toSet).take(5)}")
+
+  test("property: star contraction == union-find on random graphs, chains, cliques") {
+    for ((tag, n, edges) <- closureCases) {
+      val (ids, pairs) = closureInput(n, edges)
+      assertUnionFind(tag, labelMap(Dedup.propagateMinLabels(ids, pairs, 25)),
+        dsuClusters(n, edges))
       Dedup.releaseLocalCheckpoint(
-        Dedup.starContractLabels(ids, pairs)) // exercise release path
+        Dedup.propagateMinLabels(ids, pairs, 25)) // exercise release path
     }
   }
 
-  test("star contraction matches min-label propagation on the media pair-graph shape") {
+  /** Runs `body` with the given session confs, restoring them after. */
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+  /** AQE would coalesce a small graph's shuffle partitions into one; off,
+    * the union-find seeding really runs over `spark.sql.shuffle.partitions`. */
+  private val noCoalesce = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+
+  /** The edges spread over `parts` partitions by a seeded hash of the
+    * edge: a reproducible layout that differs per seed. */
+  private def scatter(pairs: DataFrame, parts: Int, seed: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{lit, xxhash64}
+    pairs.repartition(parts, xxhash64(col("doc_a"), col("doc_b"), lit(seed)))
+  }
+
+  test("closure labels are partition-independent on both paths") {
+    for (parts <- Seq(1, 3, 16); path <- closurePaths;
+         ((tag, n, edges), seed) <- closureCases.zipWithIndex) {
+      val (ids, pairs) = closureInput(n, edges)
+      // scatter the edges over a seeded layout first, so the union-find
+      // seeding sees a different partitioning per case
+      val scattered = scatter(pairs, 1 + seed % 7, seed.toLong)
+      val got = withConfs("spark.sql.shuffle.partitions" -> parts.toString, noCoalesce)(
+        onPath(path)(labelMap(Dedup.propagateMinLabels(ids, scattered, 25))))
+      assertUnionFind(s"$tag/$parts partitions/$path", got, dsuClusters(n, edges))
+    }
+  }
+
+  test("driver finish matches distributed star rounds on the media pair-graph shape") {
     import spark.implicits._
     // a candCap-pruned-like graph: several chains + one dense clique
-    val edges = ((0L until 30L).map(i => (i * 2, i * 2 + 2)).filter(_._2 < 60) ++
+    val edges = (0L until 30L).map(i => (i * 2, i * 2 + 2)).filter(_._2 < 60) ++
       (for (a <- 100L until 110L; b <- a + 1 until 110L) yield (a, b)) ++
-      Seq((59L, 100L))).map { case (a, b) => (a, b) }
-    val n = 120L
+      Seq((59L, 100L))
+    val ids = (0L until 120L).toDF("doc_id")
+    val pairs = edges.toDF("doc_a", "doc_b")
+    val Seq(driver, distributed) = closurePaths.map(p =>
+      onPath(p)(labelMap(Dedup.propagateMinLabels(ids, pairs, 25))))
+    assert(driver == distributed, "the closure core's two paths must agree")
+    assert(driver == dsuClusters(120L, edges))
+    // the default conf really takes the driver finish: with no star
+    // round allowed it still closes the graph, where -1 cannot
+    assert(labelMap(Dedup.propagateMinLabels(ids, pairs, maxIters = 0)) == driver)
+    intercept[IllegalStateException](
+      onPath("distributed")(Dedup.propagateMinLabels(ids, pairs, maxIters = 0)))
+  }
+
+  test("closure that hits maxIters throws instead of returning non-closure labels") {
+    import spark.implicits._
+    // a 2000-node path scattered over 16 partitions, gathered over 64:
+    // the seeding's union-find passes each see only short fragments, so
+    // its output is not yet a star forest and one distributed round
+    // cannot reach the fixpoint
+    val n = 2000L
+    val edges = (0L until n - 1).map(i => (i, i + 1))
+    val ids = (0L until n).toDF("doc_id")
+    val pairs = scatter(edges.toDF("doc_a", "doc_b"), 16, 3L)
+    withConfs("spark.sql.shuffle.partitions" -> "64", noCoalesce) {
+      val seeded = Dedup.contractEdges(pairs).collect()
+        .map(r => math.min(r.getLong(0), r.getLong(1)))
+      assert(seeded.exists(_ != 0L),
+        "fixture broken: the seeding alone already reached the star fixpoint")
+      val err = intercept[IllegalStateException] {
+        onPath("distributed")(Dedup.propagateMinLabels(ids, pairs, maxIters = 1))
+      }
+      assert(err.getMessage.contains("maxIters=1"), err.getMessage)
+      assert(err.getMessage.contains("residual edges"), err.getMessage)
+      // the same graph with room to converge is the closure
+      assert(onPath("distributed")(labelMap(Dedup.propagateMinLabels(ids, pairs, 25)))
+        == dsuClusters(n, edges))
+    }
+  }
+
+  test("closure on a planted hub graph equals union-find on the distributed path") {
+    import spark.implicits._
+    // one root with 20k leaves plus a 200-node chain tail: the star
+    // rounds route the root's whole neighborhood to one reducer task.
+    // Reports the largest per-task shuffle-read record count of the
+    // closure's stages over 16 uncoalesced shuffle partitions (the
+    // closure-skew measurement).
+    val leaves = 20000L
+    val n = leaves + 201L
+    val edges = (1L to leaves).map(i => (0L, i)) ++
+      (leaves until n - 1).map(i => (i, i + 1))
     val ids = (0L until n).toDF("doc_id")
     val pairs = edges.toDF("doc_a", "doc_b")
-    val star = Dedup.starContractLabels(ids, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.propagateMinLabels(ids, pairs, maxIters = 60)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == prop, "the two closure cores must agree")
+    import org.apache.spark.scheduler._
+    val maxRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    val totalRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    val (started, ended) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          val r = m.shuffleReadMetrics.recordsRead
+          maxRead.accumulateAndGet(r, math.max(_, _))
+          totalRead.addAndGet(r)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val labels = withConfs("spark.sql.shuffle.partitions" -> "16", noCoalesce)(
+        onPath("distributed")(labelMap(Dedup.propagateMinLabels(ids, pairs, 25))))
+      // a job's task-end events reach the listener before its job-end
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (ended.get < started.get && System.nanoTime() < deadline) Thread.sleep(20)
+      labels
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assertUnionFind("hub-20k", got, dsuClusters(n, edges))
+    info(s"largest per-task shuffle-read records in the closure: ${maxRead.get} " +
+      s"(all tasks: ${totalRead.get})")
   }
 
   test("closure releases every superseded round's storage (no soft leak)") {
     import spark.implicits._
-    // a 40-node path graph forces many propagation rounds, each of which
-    // localCheckpoints a label table; after the call only the RESULT's
-    // own checkpoint may remain resident (ADVICE r9: Dataset.unpersist
-    // was a no-op on checkpoint-backed frames)
+    // a 40-node path graph: the distributed path runs several rounds,
+    // each of which localCheckpoints an edge frame; on either path only
+    // the RESULT's own checkpoint may remain resident afterwards
+    // (Dataset.unpersist is a no-op on checkpoint-backed frames)
     val n = 40L
     val ids = (0L until n).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Dedup.propagateMinLabels(ids, pairs, maxIters = 50)
-    assert(out.collect().forall(_.getLong(1) == 0L), "path graph → one cluster")
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1,
-      s"superseded rounds leaked cached blocks: $before -> $after persistent RDDs")
-    Dedup.releaseLocalCheckpoint(out)
+    for (path <- closurePaths) onPath(path) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val out = Dedup.propagateMinLabels(ids, pairs, maxIters = 50)
+      assert(out.collect().forall(_.getLong(1) == 0L), s"$path: path graph → one cluster")
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after - before <= 1,
+        s"$path: superseded rounds leaked cached blocks: $before -> $after persistent RDDs")
+      Dedup.releaseLocalCheckpoint(out)
+    }
   }
 
   test("banded-Hamming guarantee: under non-binding caps, NO pair within maxHamming = bands-1 is missed") {
