@@ -101,33 +101,61 @@ object Curation {
   private[graft] def ngramJaccardScored(docs: DataFrame, n: Int = 3,
                                         dfCap: Int = 256,
                                         maxPairs: Long = DefaultMaxPairs): DataFrame =
-    sharedShinglePairs(docs, n, dfCap, maxPairs)
-      .withColumn("jaccard", fx(col("common").cast("double") /
-        (col("sa") + col("sb") - col("common")).cast("double"), 6))
+    withJaccard(sharedShinglePairs(docs, n, dfCap, maxPairs))
 
-  /** Threshold + per-doc-cap tail over a [[ngramJaccardScored]] frame. */
+  /** Scores a candidate frame `(doc_a, doc_b, common, sa, sb)` from
+    * either candidate source ([[sharedShinglePairs]],
+    * [[screenedCommonPairs]]) with its exact Jaccard
+    * `common / (sa + sb - common)`, rounded to 6 dp. */
+  private def withJaccard(common: DataFrame): DataFrame =
+    common.withColumn("jaccard", fx(col("common").cast("double") /
+      (col("sa") + col("sb") - col("common")).cast("double"), 6))
+
+  /** The Jaccard tail over a [[withJaccard]]-scored frame: threshold,
+    * then each doc_a keeps its `candCap` strongest pairs (shared-shingle
+    * count desc, doc_b) — only threshold-passing pairs reach the cap's
+    * window, so the sort is over the (small) result set. */
   private[graft] def ngramJaccardPairsAt(scored: DataFrame, threshold: Double,
-                                         candCap: Int = 64): DataFrame = {
-    // per-doc result cap — only threshold-passing pairs reach this
-    // window, so the sort is over the (small) result set
-    val wCand = Window.partitionBy(col("doc_a"))
-      .orderBy(col("common").desc, col("doc_b"))
-    scored
-      .where(col("jaccard") >= threshold)
-      .withColumn("rnk", row_number().over(wCand))
-      .observe("ngram_jaccard_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
+                                         candCap: Int = 64,
+                                         metricPrefix: String =
+                                           "ngram_jaccard_cands_"): DataFrame =
+    Dedup.capPerKey(scored.where(col("jaccard") >= threshold), "doc_a",
+        Seq(col("common").desc, col("doc_b")), candCap, metricPrefix)
       .select("doc_a", "doc_b", "jaccard")
+
+  /** The containment tail over either candidate source: each pair is
+    * directed smaller shingle set → larger (ties → doc_a), scored
+    * `common / min(sa, sb)` (6 dp), thresholded, and each contained doc
+    * keeps its `candCap` strongest containers (shared-shingle count
+    * desc, container_id). */
+  private def containmentPairsAt(common: DataFrame, threshold: Double,
+                                 candCap: Int, metricPrefix: String): DataFrame = {
+    val directed = common
+      .withColumn("contained_id",
+        when(col("sa") <= col("sb"), col("doc_a")).otherwise(col("doc_b")))
+      .withColumn("container_id",
+        when(col("sa") <= col("sb"), col("doc_b")).otherwise(col("doc_a")))
+      .withColumn("containment", fx(col("common").cast("double") /
+        least(col("sa"), col("sb")).cast("double"), 6))
+      .where(col("containment") >= threshold)
+    Dedup.capPerKey(directed, "contained_id",
+        Seq(col("common").desc, col("container_id")), candCap, metricPrefix)
+      .select("contained_id", "container_id", "containment")
   }
 
-  /** Shared pair-candidate pipeline for the exact n-gram family:
-    * inverted index on md5 shingle hashes, df-capped, equi-joined
-    * against itself → one row per unordered candidate pair
-    * `(doc_a < doc_b, common, sa, sb)`. The df cap removes
-    * ubiquitous (boilerplate) shingles from the universe ENTIRELY:
-    * `common` counts shared rare shingles and `sa`/`sb` are the
+  /** Default refusal bound for the exhaustive exact-pair ops: ~50M
+    * candidate rows (≈ a GB-scale shuffle) — generous for any corpus
+    * these precision tools should ever see, tiny next to what an
+    * unguarded Σ df² would happily try to materialize at 100×. */
+  val DefaultMaxPairs: Long = 50000000L
+
+  /** The EXHAUSTIVE candidate source of the exact n-gram family (the
+    * band-screened one is [[screenedCommonPairs]]; both feed the same
+    * Jaccard and containment tails): inverted index on md5 shingle
+    * hashes, df-capped, equi-joined against itself → one row per
+    * unordered candidate pair `(doc_a < doc_b, common, sa, sb)`. The df
+    * cap removes ubiquitous (boilerplate) shingles from the universe
+    * ENTIRELY: `common` counts shared rare shingles and `sa`/`sb` are the
     * rare-subuniverse set sizes — numerator and denominator agree, so
     * a short doc embedded in boilerplate-heavy context still scores
     * its full containment over the shingles that remain (counting
@@ -139,12 +167,6 @@ object Curation {
     * broadcasts at test scale and degrades to a shuffle join on a
     * corpus too big to broadcast, instead of hitting the 8 GB
     * broadcast hard limit). */
-  /** Default refusal bound for the exhaustive exact-pair ops: ~50M
-    * candidate rows (≈ a GB-scale shuffle) — generous for any corpus
-    * these precision tools should ever see, tiny next to what an
-    * unguarded Σ df² would happily try to materialize at 100×. */
-  val DefaultMaxPairs: Long = 50000000L
-
   private def sharedShinglePairs(docs: DataFrame, n: Int, dfCap: Int,
                                  maxPairs: Long = DefaultMaxPairs): DataFrame = {
     val ws = withWords(docs)
@@ -202,25 +224,9 @@ object Curation {
     * TOCTOU caveats). */
   def ngramContainmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
                             dfCap: Int = 256, candCap: Int = 64,
-                            maxPairs: Long = DefaultMaxPairs): DataFrame = {
-    val directed = sharedShinglePairs(docs, n, dfCap, maxPairs)
-      .withColumn("contained_id",
-        when(col("sa") <= col("sb"), col("doc_a")).otherwise(col("doc_b")))
-      .withColumn("container_id",
-        when(col("sa") <= col("sb"), col("doc_b")).otherwise(col("doc_a")))
-      .withColumn("containment", fx(col("common").cast("double") /
-        least(col("sa"), col("sb")).cast("double"), 6))
-      .where(col("containment") >= threshold)
-    val wCand = Window.partitionBy(col("contained_id"))
-      .orderBy(col("common").desc, col("container_id"))
-    directed
-      .withColumn("rnk", row_number().over(wCand))
-      .observe("ngram_containment_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
-      .select("contained_id", "container_id", "containment")
-  }
+                            maxPairs: Long = DefaultMaxPairs): DataFrame =
+    containmentPairsAt(sharedShinglePairs(docs, n, dfCap, maxPairs),
+      threshold, candCap, "ngram_containment_cands_")
 
   /** Band-SCREENED exact-pair confirm (VERDICT r6 #2) — the bounded
     * variant of the exact-pair family for corpora where the exhaustive
@@ -241,8 +247,8 @@ object Curation {
   private def screenedCommonPairs(docs: DataFrame, n: Int, dfCap: Int,
                                   numHashes: Int, bands: Int,
                                   bucketCap: Int): DataFrame = {
-    val cand = Dedup.lshCandidatePairs(docs, numHashes, bands, n,
-      bucketCap, "screened_pairs_buckets")
+    val cand = Dedup.lshCandidatePairs(Dedup.bandedKeys(docs, numHashes, bands, n),
+      bucketCap, "screened_pairs_buckets_")
     val ws = withWords(docs)
     val idx = ws.select(col("doc_id"), explode(shingleHashes(col("w"), n)).as("s"))
     // df cap over the FULL corpus — the rare subuniverse must match the
@@ -269,21 +275,10 @@ object Curation {
   def screenedJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
                            dfCap: Int = 256, candCap: Int = 64,
                            numHashes: Int = 12, bands: Int = 4,
-                           bucketCap: Int = 256): DataFrame = {
-    val common = screenedCommonPairs(docs, n, dfCap, numHashes, bands, bucketCap)
-    val wCand = Window.partitionBy(col("doc_a"))
-      .orderBy(col("common").desc, col("doc_b"))
-    common
-      .withColumn("jaccard", fx(col("common").cast("double") /
-        (col("sa") + col("sb") - col("common")).cast("double"), 6))
-      .where(col("jaccard") >= threshold)
-      .withColumn("rnk", row_number().over(wCand))
-      .observe("screened_jaccard_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
-      .select("doc_a", "doc_b", "jaccard")
-  }
+                           bucketCap: Int = 256): DataFrame =
+    ngramJaccardPairsAt(
+      withJaccard(screenedCommonPairs(docs, n, dfCap, numHashes, bands, bucketCap)),
+      threshold, candCap, "screened_jaccard_cands_")
 
   /** [[ngramContainmentPairs]] restricted to band-screened candidates.
     * Note the recall caveat is SHARPER here than for Jaccard: a short
@@ -295,25 +290,10 @@ object Curation {
   def screenedContainmentPairs(docs: DataFrame, n: Int = 3,
                                threshold: Double = 0.8, dfCap: Int = 256,
                                candCap: Int = 64, numHashes: Int = 12,
-                               bands: Int = 4, bucketCap: Int = 256): DataFrame = {
-    val directed = screenedCommonPairs(docs, n, dfCap, numHashes, bands, bucketCap)
-      .withColumn("contained_id",
-        when(col("sa") <= col("sb"), col("doc_a")).otherwise(col("doc_b")))
-      .withColumn("container_id",
-        when(col("sa") <= col("sb"), col("doc_b")).otherwise(col("doc_a")))
-      .withColumn("containment", fx(col("common").cast("double") /
-        least(col("sa"), col("sb")).cast("double"), 6))
-      .where(col("containment") >= threshold)
-    val wCand = Window.partitionBy(col("contained_id"))
-      .orderBy(col("common").desc, col("container_id"))
-    directed
-      .withColumn("rnk", row_number().over(wCand))
-      .observe("screened_containment_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
-      .select("contained_id", "container_id", "containment")
-  }
+                               bands: Int = 4, bucketCap: Int = 256): DataFrame =
+    containmentPairsAt(
+      screenedCommonPairs(docs, n, dfCap, numHashes, bands, bucketCap),
+      threshold, candCap, "screened_containment_cands_")
 
   /** Benchmark-contamination check: which corpus documents share ≥
     * `minShared` word n-grams with a benchmark/eval document (the

@@ -352,26 +352,17 @@ object Multimodal {
     val index = hashes.select(
       explode(array(bandKeys: _*)).as("bk"),
       struct(col("id").as("doc_id"), col(hashCol).as("h")).as("doc_id_h"))
-    val cand = Dedup.cappedBucketsFromIndex(index, bucketCap,
+    val cand = Dedup.bucketPairs(Dedup.cappedBucketsFromIndex(index, bucketCap,
         observed = true, metricPrefix = s"${metric}_buckets_",
-        idExpr = col("doc_id_h"))
-      .select(explode(expr(
-        "filter(flatten(transform(ids, a -> transform(ids, b -> " +
-          "struct(a AS a, b AS b)))), p -> p.a.doc_id < p.b.doc_id)")).as("p"))
+        idExpr = col("doc_id_h")), idField = "doc_id")
       .select(col("p.a.doc_id").as("id_a"), col("p.b.doc_id").as("id_b"),
         col("p.a.h").as("ha"), col("p.b.h").as("hb"))
       .distinct()
-    cand
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("bigint").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id_a"))
-          .orderBy(col("hamming"), col("id_b"))))
-      .observe(s"${metric}_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
+    Dedup.capPerKey(cand
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("bigint").as("hamming"))
+        .where(col("hamming") <= maxHamming),
+        "id_a", Seq(col("hamming"), col("id_b")), candCap, s"${metric}_cands_")
       .select("id_a", "id_b", "hamming")
   }
 
@@ -442,16 +433,10 @@ object Multimodal {
                                               maxHamming: Int, bucketCap: Int,
                                               candCap: Int,
                                               metric: String): DataFrame =
-    incrementalScreen(corpus, batch, hashCol, group, bandBits, numBands,
-        maxHamming, bucketCap, metric, observed = true)
-      .distinct()
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("batch_id"))
-          .orderBy(col("hamming"), col("corpus_id"))))
-      .observe(s"${metric}_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
+    Dedup.capPerKey(incrementalScreen(corpus, batch, hashCol, group, bandBits,
+        numBands, maxHamming, bucketCap, metric, observed = true).distinct(),
+        "batch_id", Seq(col("hamming"), col("corpus_id")), candCap,
+        s"${metric}_cands_")
       .select("batch_id", "corpus_id", "hamming")
 
   /** [[incrementalBandedHamming]] for image aHashes — same band/cap
@@ -714,12 +699,9 @@ object Multimodal {
     * full-precision fingerprint. */
   def videoNearDupPairs(fps: DataFrame, bucketCap: Int = 64): DataFrame = {
     val index = fps.select(col("id").as("doc_id"), col("fp").as("bk"))
-    Dedup.cappedBucketsFromIndex(index, bucketCap,
-        observed = true, metricPrefix = "video_fp_buckets_")
-      .select(col("bk").as("fp"), explode(expr(
-        "filter(flatten(transform(ids, a -> transform(ids, b -> " +
-          "struct(a AS a, b AS b)))), p -> p.a < p.b)")).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("fp"))
+    Dedup.bucketPairs(Dedup.cappedBucketsFromIndex(index, bucketCap,
+        observed = true, metricPrefix = "video_fp_buckets_"))
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"), col("bk").as("fp"))
   }
 
   /** Equality-clique STAR edges for the closure (round 11): each
@@ -766,17 +748,11 @@ object Multimodal {
       col("fp").as("bk"))
     val cBuckets = Dedup.cappedBucketsFromIndex(corpusIndex, bucketCap,
       observed = true, metricPrefix = "video_fp_incr_buckets_")
-    batchFps.select(col("id").as("batch_id"), col("fp").as("bk"))
-      .join(cBuckets, "bk")
-      .select(col("batch_id"), col("bk").as("fp"),
-        explode(col("ids")).as("corpus_id"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("batch_id"))
-          .orderBy(col("corpus_id"))))
-      .observe("video_fp_incr_cands_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""),
-        sum(when(col("rnk") > candCap, 1L).otherwise(0L)).as("pairs_over_cap"))
-      .where(col("rnk") <= candCap)
+    Dedup.capPerKey(batchFps.select(col("id").as("batch_id"), col("fp").as("bk"))
+        .join(cBuckets, "bk")
+        .select(col("batch_id"), col("bk").as("fp"),
+          explode(col("ids")).as("corpus_id")),
+        "batch_id", Seq(col("corpus_id")), candCap, "video_fp_incr_cands_")
       .select("batch_id", "corpus_id", "fp")
   }
 

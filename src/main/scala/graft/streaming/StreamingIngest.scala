@@ -250,9 +250,7 @@ object StreamingIngest {
       .select(col("doc_id").as("batch_id"), col("sh").as("shb"),
         explode(col("ids")).as("corpus_id"))
       .join(cSh, "corpus_id")
-      .withColumn("jaccard", graft.functions.Portable.fx(
-        size(array_intersect(col("shb"), col("shc"))).cast("double") /
-          size(array_union(col("shb"), col("shc"))).cast("double"), 6))
+      .withColumn("jaccard", Dedup.jaccard(col("shb"), col("shc")))
       .where(col("jaccard") >= 0.5)
       .withColumn("arr_ts", current_timestamp())
       .withWatermark("arr_ts", "1 second")

@@ -20,6 +20,46 @@ class OpsSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Runs `df` once into the noop sink and returns the observed metrics
+    * its query posted, read through a `QueryExecutionListener`:
+    * (observation name, field, value), one entry per numeric field. */
+  private def observedMetrics(df: => DataFrame): Seq[(String, String, Long)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Long)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (name, row) =>
+          row.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
+            row.get(i) match {
+              case n: java.lang.Number => seen.add((name, f, n.longValue))
+              case _ => ()
+            }
+          }
+        }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** The summed `field` of the observations named `prefix<32 hex>`, and
+    * how many such observations posted. */
+  private def observedSum(obs: Seq[(String, String, Long)], prefix: String,
+                          field: String): (Long, Int) = {
+    val hits = obs.filter { case (n, f, _) =>
+      f == field && n.startsWith(prefix) && n.drop(prefix.length).matches("[0-9a-f]{32}") }
+    (hits.map(_._3).sum, hits.size)
+  }
+
   test("Fnv1a32 expression: pinned cross-engine values, codegen + interpreted, nulls") {
     import spark.implicits._
     import graft.functions.Fnv
@@ -69,6 +109,9 @@ class OpsSpec extends SparkTestBase {
     assert(pairs.agg(max("doc_b")).head.getLong(0) <= 16L)
     assert(pairs.where(col("jaccard") =!= 1.0).count() == 0)
     pairs.unpersist()
+    // each of the 4 band buckets cuts 1000 - 16 ids, observed once
+    val obs = observedMetrics(Dedup.minhashLsh(boiler, bucketCap = 16))
+    assert(observedSum(obs, "minhash_lsh_buckets_", "ids_over_cap") == (4L * 984, 1), obs)
   }
 
   test("simhash is a 16-hex 64-bit fingerprint; distance-3 pairs share a band (pigeonhole)") {
@@ -113,6 +156,8 @@ class OpsSpec extends SparkTestBase {
     assert(pairs.where(col("hamming") =!= 0L).count() == 0,
       "identical docs have identical fingerprints")
     pairs.unpersist()
+    val obs = observedMetrics(Dedup.simhashPairs(boiler, bucketCap = 16))
+    assert(observedSum(obs, "simhash_pairs_buckets_", "ids_over_cap") == (4L * 984, 1), obs)
   }
 
   test("pathological embedding bucket (1k same-sign vectors) is capped") {
@@ -130,6 +175,55 @@ class OpsSpec extends SparkTestBase {
     assert(pairs.where(col("cos") =!= 1.0).count() == 0,
       "identical vectors have cosine 1")
     pairs.unpersist()
+    // one sign bucket holds all 1000 vectors
+    val obs = observedMetrics(Similarity.embeddingNearDup(same, bucketCap = 16))
+    assert(observedSum(obs, "embedding_neardup_buckets_", "ids_over_cap") == (984L, 1), obs)
+  }
+
+  /** Σ over keys of the rows a per-key cap of `cap` cuts, when key i of
+    * a clique of `n` sorted ids pairs with every larger id. */
+  private def cliqueOverCap(n: Int, cap: Int): Long =
+    (0 until n).map(i => math.max(0, n - 1 - i - cap).toLong).sum
+
+  test("per-key candidate cap: observed pairs_over_cap equals a direct recount") {
+    import spark.implicits._
+    // text: a 12-doc duplicate cluster among distinct docs, candCap 3
+    val cluster = (1L to 12L).map(i => (i, "one shared cluster text of several words"))
+    val others = (13L to 20L).map(i => (i, s"distinct doc $i with private words w$i x$i"))
+    val text = (cluster ++ others).toDF("doc_id", "text")
+    val jac = Curation.ngramJaccardPairs(text, candCap = 3)
+    assert(jac.count() == (0 until cluster.size).map(i => math.min(3, cluster.size - 1 - i)).sum,
+      "each cluster doc keeps at most 3 larger partners")
+    val tObs = observedMetrics(Curation.ngramJaccardPairs(text, candCap = 3))
+    assert(observedSum(tObs, "ngram_jaccard_cands_", "pairs_over_cap") ==
+      (cliqueOverCap(cluster.size, 3), 1), tObs)
+    // media: 10 identical images share every band; candCap 4
+    val img = (1L to 10L).map(i => (i, 6L, 8L, 0x5a5a5a5a5aL))
+      .toDF("id", "width", "height", "ahash")
+    val iObs = observedMetrics(Multimodal.imageAHashPairs(img, candCap = 4))
+    assert(observedSum(iObs, "image_ahash_cands_", "pairs_over_cap") ==
+      (cliqueOverCap(10, 4), 1), iObs)
+    assert(observedSum(iObs, "image_ahash_buckets_", "ids_over_cap") == (0L, 1), iObs)
+  }
+
+  test("screens refuse a bucketCap or candCap below 1 when the frame is built") {
+    import spark.implicits._
+    val text = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
+    val img = Seq((1L, 6L, 8L, 7L)).toDF("id", "width", "height", "ahash")
+    val ops: Seq[(String, Int => DataFrame)] = Seq(
+      "minhash_lsh_buckets_" -> (c => Dedup.minhashLsh(text, bucketCap = c)),
+      "simhash_pairs_buckets_" -> (c => Dedup.simhashPairs(text, bucketCap = c)),
+      "embedding_neardup_buckets_" ->
+        (c => Similarity.embeddingNearDup(vecs, bucketCap = c)),
+      "screened_pairs_buckets_" -> (c => Curation.screenedJaccardPairs(text, bucketCap = c)),
+      "ngram_jaccard_cands_" -> (c => Curation.ngramJaccardPairs(text, candCap = c)),
+      "image_ahash_buckets_" -> (c => Multimodal.imageAHashPairs(img, bucketCap = c)),
+      "image_ahash_cands_" -> (c => Multimodal.imageAHashPairs(img, candCap = c)))
+    for ((prefix, op) <- ops; cap <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](op(cap))
+      assert(e.getMessage.contains(prefix), s"$prefix cap=$cap: ${e.getMessage}")
+    }
   }
 
   test("near-dup clusters: labels are fixpoint-consistent and cover all docs") {
