@@ -89,9 +89,11 @@ object Curation {
     * similarity with a linear-ish plan. */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
                         dfCap: Int = 256, candCap: Int = 64,
-                        maxPairs: Long = DefaultMaxPairs): DataFrame =
+                        maxPairs: Long = DefaultMaxPairs): DataFrame = {
+    Dedup.requireCandCap(candCap, "ngram_jaccard_cands_")
     ngramJaccardPairsAt(ngramJaccardScored(docs, n, dfCap, maxPairs),
       threshold, candCap)
+  }
 
   /** The threshold-INDEPENDENT front of [[ngramJaccardPairs]]: every
     * candidate pair with its exact Jaccard score, no threshold filter
@@ -224,9 +226,11 @@ object Curation {
     * TOCTOU caveats). */
   def ngramContainmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
                             dfCap: Int = 256, candCap: Int = 64,
-                            maxPairs: Long = DefaultMaxPairs): DataFrame =
+                            maxPairs: Long = DefaultMaxPairs): DataFrame = {
+    Dedup.requireCandCap(candCap, "ngram_containment_cands_")
     containmentPairsAt(sharedShinglePairs(docs, n, dfCap, maxPairs),
       threshold, candCap, "ngram_containment_cands_")
+  }
 
   /** Band-SCREENED exact-pair confirm (VERDICT r6 #2) — the bounded
     * variant of the exact-pair family for corpora where the exhaustive

@@ -218,14 +218,16 @@ object Dedup {
         s"lsh_recall_b${b}_buckets_").localCheckpoint(true)
     }
     releaseOwnCheckpoint(sig)
-    val totals = thresholdsPct.map { t =>
-      graft.ops.Curation.ngramJaccardPairsAt(scored, t / 100.0)
-        .agg(count(lit(1)).as("n_truth"))
+    // one truth frame (and so one capped-pairs observation) per
+    // threshold, shared by its total and every band cell
+    val truths = thresholdsPct.map(t =>
+      t -> graft.ops.Curation.ngramJaccardPairsAt(scored, t / 100.0))
+    val totals = truths.map { case (t, truth) =>
+      truth.agg(count(lit(1)).as("n_truth"))
         .select(lit(t.toLong).as("threshold_pct"), col("n_truth"))
     }.reduce(_ unionByName _)
-    val cells = (for (t <- thresholdsPct; (b, cand) <- cands) yield {
-      graft.ops.Curation.ngramJaccardPairsAt(scored, t / 100.0)
-        .select("doc_a", "doc_b")
+    val cells = (for ((t, truth) <- truths; (b, cand) <- cands) yield {
+      truth.select("doc_a", "doc_b")
         .join(cand, Seq("doc_a", "doc_b"), "left_semi")
         .agg(count(lit(1)).as("hits"))
         .select(lit(t.toLong).as("threshold_pct"),
@@ -359,6 +361,11 @@ object Dedup {
           s"struct(a AS a, b AS b)))), p -> p.a$id < p.b$id)")).as("p"))
   }
 
+  /** Refuses a per-key candidate cap below 1 — checked by the entry
+    * points before they build (or pre-flight) anything. */
+  private[graft] def requireCandCap(cap: Int, metricPrefix: String): Unit =
+    require(cap >= 1, s"candCap must be >= 1, got $cap ($metricPrefix)")
+
   /** The ONE per-key result cap of the confirmed-pair ops: each `key`
     * keeps its first `cap` rows under `order` (which ends in a total
     * tie-break, so the cut is deterministic); the count of rows cut is
@@ -366,7 +373,7 @@ object Dedup {
     * when the frame is built. */
   private[graft] def capPerKey(pairs: DataFrame, key: String, order: Seq[Column],
                                cap: Int, metricPrefix: String): DataFrame = {
-    require(cap >= 1, s"candCap must be >= 1, got $cap ($metricPrefix)")
+    requireCandCap(cap, metricPrefix)
     pairs
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(key)).orderBy(order: _*)))

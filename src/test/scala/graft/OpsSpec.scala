@@ -218,11 +218,20 @@ class OpsSpec extends SparkTestBase {
         (c => Similarity.embeddingNearDup(vecs, bucketCap = c)),
       "screened_pairs_buckets_" -> (c => Curation.screenedJaccardPairs(text, bucketCap = c)),
       "ngram_jaccard_cands_" -> (c => Curation.ngramJaccardPairs(text, candCap = c)),
+      "ngram_containment_cands_" -> (c => Curation.ngramContainmentPairs(text, candCap = c)),
       "image_ahash_buckets_" -> (c => Multimodal.imageAHashPairs(img, bucketCap = c)),
       "image_ahash_cands_" -> (c => Multimodal.imageAHashPairs(img, candCap = c)))
+    val sc = spark.sparkContext
     for ((prefix, op) <- ops; cap <- Seq(0, -1)) {
-      val e = intercept[IllegalArgumentException](op(cap))
-      assert(e.getMessage.contains(prefix), s"$prefix cap=$cap: ${e.getMessage}")
+      // the refusal comes before any Spark job (no pre-flight pass first)
+      org.apache.spark.TestBus.drain(sc)
+      val jobs = graft.util.JobCounter.install(sc)
+      try {
+        val e = intercept[IllegalArgumentException](op(cap))
+        assert(e.getMessage.contains(prefix), s"$prefix cap=$cap: ${e.getMessage}")
+        org.apache.spark.TestBus.drain(sc)
+        assert(jobs.count == 0, s"$prefix cap=$cap: ${jobs.count} jobs before the refusal")
+      } finally sc.removeSparkListener(jobs)
     }
   }
 
