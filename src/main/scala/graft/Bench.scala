@@ -218,13 +218,14 @@ object Bench {
         System.err.println(s"[bench] transfer warmup failed: ${e.getMessage}") }
     }
 
-    // Plan-shape warmup (r6, diagnosing the dedup_clusters drift: DriftProbe
-    // measured its first-ever run in a JVM at 8.4 s — 5.3 s of it iteration-0
-    // whole-stage-codegen compilation — vs 2.4-3.5 s steady state; the
-    // r4 4.61 → r5 6.15 s "drift" was variance in that one-time compile, not
-    // a plan change). Run every headline query once at sf0.001 first: tiny
-    // data, same plan shapes → codegen classes compile OUTSIDE the timed
-    // region, so per-query numbers measure the operator at sfDir, uniformly.
+    // Plan-shape warmup (r6, diagnosing the dedup_clusters drift: a
+    // fresh-JVM probe measured the gate's first run in a JVM at 8.4 s —
+    // 5.3 s of it iteration-0 whole-stage-codegen compilation — vs
+    // 2.4-3.5 s steady state; the r4 4.61 → r5 6.15 s "drift" was
+    // variance in that one-time compile, not a plan change). Run every
+    // headline query once at sf0.001 first: tiny data, same plan shapes →
+    // codegen classes compile OUTSIDE the timed region, so per-query
+    // numbers measure the operator at sfDir, uniformly.
     // Disclosed methodology change: r6+ numbers are warmed; expect small
     // across-the-board drops vs r5 for codegen-heavy entries.
     locally {
@@ -251,8 +252,8 @@ object Bench {
     // De-confound the standing-artifact BUILDS from the gates that READ
     // them (VERDICT r13 #1): whichever *_from_index gate ran first in a
     // JVM paid the full decode+build inside its timed region (r13 driver:
-    // 44.1 s vs the 16.7-17.4 s steady read-compose cost the DriftProbe
-    // measured). Build the measured dir's artifacts BEFORE the timed
+    // 44.1 s vs the 16.7-17.4 s steady read-compose cost a fresh-JVM
+    // probe measured). Build the measured dir's artifacts BEFORE the timed
     // loop and report each build as its own line item, so the from-index
     // gates measure what they claim to: composing from a persisted index.
     locally {

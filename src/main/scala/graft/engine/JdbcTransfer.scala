@@ -20,11 +20,9 @@ import graft.sources.{JdbcCatalog, JdbcSource}
 object JdbcTransfer {
 
   def transfer(spark: SparkSession, url: String, table: TableMapping,
-               mig: MigrationSpec, dialect: JdbcUpsert.Dialect = JdbcUpsert.Derby,
-               writeParallelism: Int = 1): Long = {
+               mig: MigrationSpec, dialect: JdbcUpsert.Dialect = JdbcUpsert.Derby): Long = {
     val job = new JdbcTransferJob(spark, url, table,
-      mig.copy(checkpointDir = ""), dialect,
-      writeParallelism = writeParallelism, log = _ => ())
+      mig.copy(checkpointDir = ""), dialect, log = _ => ())
     job.run()
     job.rowsWritten
   }

@@ -443,6 +443,9 @@ final class TableTransferJob(
             log(s"${table.name}: incremental — no rows above the last synced key")
             return TransferOutcome.Completed
           }
+          // one empty wave, like the hash path's, so the destination
+          // reads back as an empty table with the source's columns
+          writeWave(ExpressionValidator.applyAll(source, table).limit(0), startChunk)
           return finish(startChunk, lastKey.map(k => Map(pkCol -> codec.fmt(k))))
         }
         (plan.bounds(chunkCount(n0)), n0)

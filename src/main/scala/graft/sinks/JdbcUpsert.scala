@@ -169,8 +169,7 @@ object JdbcUpsert {
   /** Writer parallelism a sink should actually use: the caller's
     * explicit request, else 1 for in-process embedded stores (whose
     * writes the executor serializes anyway), else 0 = keep the data's
-    * own partitioning. ONE place for the policy — every JDBC writer
-    * (batch chunk writes, streaming foreachBatch) routes through it. */
+    * own partitioning. */
   def effectiveWriteParallelism(url: String, requested: Int): Int =
     if (requested > 0) requested
     else if (isEmbeddedUrl(url)) 1

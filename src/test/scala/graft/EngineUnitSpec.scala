@@ -110,15 +110,6 @@ class EngineUnitSpec extends AnyFunSuite {
     assert(Checkpoint.load(dir, "jdbc", "t").isEmpty)
   }
 
-  test("writer-coalesce decision is static (no .rdd planning pass, VERDICT r4 #5)") {
-    import graft.engine.JdbcTransferJob.coalesceTarget
-    assert(coalesceTarget(0, 4) == 0, "auto parallelism keeps chunk partitioning")
-    assert(coalesceTarget(1, 4) == 1, "embedded URLs serialize to one writer")
-    assert(coalesceTarget(4, 4) == 0, "equal width needs no coalesce")
-    assert(coalesceTarget(8, 4) == 0, "coalesce can only narrow")
-    assert(coalesceTarget(2, 1) == 0, "single-partition chunk stays put")
-  }
-
   test("JDBC URL subprotocol derives the destination dialect (ADVICE r4)") {
     import graft.sinks.JdbcUpsert
     assert(JdbcTransferJob.dialectFor("jdbc:mysql://h/db").contains(JdbcUpsert.MySql))

@@ -59,12 +59,13 @@ class FooterPlanSpec extends SparkTestBase {
   private def rows(n: Int) = (1L to n).map(i => (i, s"v$i")).toDF("id", "v")
 
   /** Transfers `t` from `src` once; returns the outcome (or the error
-    * message), the planner line and the destination rows. */
+    * message), the planner line, the destination rows and the
+    * destination's columns (none when the transfer failed). */
   private def transfer(src: String, mapping: TableMapping = TableMapping("t",
                          primaryKey = Some("id")),
                        control: TransferControl = new TransferControl,
                        work: String = Files.createTempDirectory("fplanx").toString)
-      : (Either[String, TransferOutcome], String, Map[Row, Int]) = {
+      : (Either[String, TransferOutcome], String, Map[Row, Int], Seq[String]) = {
     val spec = TransferSpec(
       EndpointSpec("parquet", path = src.stripSuffix("/t.parquet"), tables = Seq(mapping)),
       EndpointSpec("parquet", path = s"$work/dest"),
@@ -75,9 +76,10 @@ class FooterPlanSpec extends SparkTestBase {
       s => { lines.add(s); () }).run()).toEither.left.map(_.getMessage)
     val planner = lines.toArray.map(_.toString).filter(_.contains(": planner ")).toSeq
     assert(planner.size <= 1, planner)
-    val dest = Try(TableTransferJob.readTarget(spark, spec, mapping.target).collect().toSeq)
-      .getOrElse(Nil).groupBy(identity).map { case (r, rs) => r -> rs.size }
-    (out, planner.headOption.getOrElse(""), dest)
+    val dest = out.toOption.map(_ => TableTransferJob.readTarget(spark, spec, mapping.target))
+    (out, planner.headOption.getOrElse(""),
+      dest.fold(Seq.empty[Row])(_.collect().toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size },
+      dest.fold(Seq.empty[String])(_.columns.toSeq))
   }
 
   private val notInt = Declines("key 'id' is not a signed INT32/INT64 column")
@@ -157,6 +159,9 @@ class FooterPlanSpec extends SparkTestBase {
           assert(!sizes.contains(-1) && sizes.values.sum == keys.length)
           val targets = (0 to n).map(j => (j.toLong * keys.length + n - 1) / n)
           assert(sizes == (0 until n).map(c => c -> (targets(c + 1) - targets(c)).toInt).toMap)
+        } else Seq(viaFooters, viaAggregate).foreach { v =>
+          // an empty source still leaves a readable, empty destination
+          assert(v._3.isEmpty && v._4 == inferred.columns.toSeq, v)
         }
       case Declines(reason) =>
         assert(viaFooters._2.endsWith(s"planner aggregate: $reason"), viaFooters._2)
@@ -185,7 +190,7 @@ class FooterPlanSpec extends SparkTestBase {
   test("every fallback to the aggregate planner logs its reason") {
     def planner(dir: String, mapping: TableMapping = TableMapping("t", primaryKey = Some("id")),
                 work: String = Files.createTempDirectory("fplanr").toString): String = {
-      val (out, line, dest) = transfer(dir, mapping, work = work)
+      val (out, line, dest, _) = transfer(dir, mapping, work = work)
       assert(out == Right(TransferOutcome.Completed), out)
       assert(dest.values.sum == spark.read.parquet(dir).count())
       line.replaceFirst(".*: planner ", "")

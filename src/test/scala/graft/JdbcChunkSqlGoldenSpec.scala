@@ -7,21 +7,23 @@ import graft.engine.JdbcTransferJob.{CharKey, NumericKey, PlanKey, TemporalKey}
 import graft.sinks.JdbcUpsert.{Derby, MySql, Postgres}
 
 /** Golden-SQL conformance for the SOURCE side of the live transfer —
-  * the chunk planner's keyset probes and chunk predicates. Like the
+  * the one keyset planner every key style goes through, and the single
+  * `key > lo AND key <= hi` predicate each chunk reads with. Like the
   * upsert goldens ([[JdbcDialectGoldenSpec]]), the MySQL/PostgreSQL
   * variants cannot execute in this sandbox, so the exact statement text
   * is pinned instead: pagination shape per dialect (`LIMIT k,1` on
   * MySQL — `mysql.go:599-631` pages with LIMIT — vs ANSI
   * `OFFSET … FETCH`), row-value vs expanded tuple comparisons, and the
-  * per-style key literals. The Derby shapes are additionally live-proven
-  * by JdbcDerbySpec.
+  * per-style key literals (numeric keys of every SQL type share one
+  * style). The Derby shapes are additionally live-proven by
+  * JdbcDerbySpec.
   */
 class JdbcChunkSqlGoldenSpec extends AnyFunSuite {
 
-  private val single = PlanKey(Seq("id"), Seq(NumericKey(0)), Derby)
+  private val single = PlanKey(Seq("id"), Seq(NumericKey), Derby)
   private def comp(d: graft.sinks.JdbcUpsert.Dialect) = PlanKey(
     Seq("region", "id"),
-    Seq(CharKey(backslashEscape = d == MySql), NumericKey(0)), d)
+    Seq(CharKey(backslashEscape = d == MySql), NumericKey), d)
 
   test("golden: keyset probe SQL — ANSI OFFSET/FETCH vs MySQL LIMIT, ? binds") {
     assert(single.probeSql("users", hasPrev = false, 250) ==
@@ -55,7 +57,7 @@ class JdbcChunkSqlGoldenSpec extends AnyFunSuite {
     // (region > ? OR (region = ? AND id > ?)): params 1, 2 = region; 3 = id
     assert(comp(Derby).gtBindIdx == Seq(0, 0, 1))
     val k3 = PlanKey(Seq("a", "b", "c"),
-      Seq(NumericKey(0), NumericKey(0), NumericKey(0)), Derby)
+      Seq(NumericKey, NumericKey, NumericKey), Derby)
     assert(k3.gtBindIdx == Seq(0, 0, 1, 1, 2))
     assert(single.gtBindIdx == Seq(0))
   }
@@ -78,7 +80,7 @@ class JdbcChunkSqlGoldenSpec extends AnyFunSuite {
 
   test("golden: three-column expanded comparison nests correctly") {
     val k3 = PlanKey(Seq("a", "b", "c"),
-      Seq(NumericKey(0), NumericKey(0), NumericKey(0)), Derby)
+      Seq(NumericKey, NumericKey, NumericKey), Derby)
     assert(k3.gt(Seq("1", "2", "3")) ==
       "(a > 1 OR (a = 1 AND (b > 2 OR (b = 2 AND c > 3))))")
     assert(k3.le(Seq("1", "2", "3")) ==
@@ -94,7 +96,7 @@ class JdbcChunkSqlGoldenSpec extends AnyFunSuite {
     assert(TemporalKey("ts").literal("2024-01-02 03:04:05.0") ==
       "{ts '2024-01-02 03:04:05.0'}")
     assert(TemporalKey("d").literal("2024-01-02") == "{d '2024-01-02'}")
-    assert(NumericKey(2).literal("100.25") == "100.25")
+    assert(NumericKey.literal("100.25") == "100.25")
   }
 
   test("golden: first chunk has no lower bound; single-column shapes unchanged") {
@@ -107,9 +109,9 @@ class JdbcChunkSqlGoldenSpec extends AnyFunSuite {
   test("keyStyle maps introspected SQL types to plan styles (dialect-aware strings)") {
     import graft.sources.JdbcCatalog.ColumnMeta
     def m(t: String, scale: Int = 0) = ColumnMeta(0, "k", t, 10, scale, nullable = false)
-    assert(JdbcTransferJob.keyStyle(m("BIGINT"), Derby) == NumericKey(0))
-    assert(JdbcTransferJob.keyStyle(m("DECIMAL", 3), Derby) == NumericKey(3))
-    assert(JdbcTransferJob.keyStyle(m("DOUBLE"), Derby) == NumericKey(6))
+    assert(JdbcTransferJob.keyStyle(m("BIGINT"), Derby) == NumericKey)
+    assert(JdbcTransferJob.keyStyle(m("DECIMAL", 3), Derby) == NumericKey)
+    assert(JdbcTransferJob.keyStyle(m("DOUBLE"), Derby) == NumericKey)
     assert(JdbcTransferJob.keyStyle(m("DATE"), Derby) == TemporalKey("d"))
     assert(JdbcTransferJob.keyStyle(m("TIMESTAMP"), Derby) == TemporalKey("ts"))
     assert(JdbcTransferJob.keyStyle(m("VARCHAR"), Derby) ==

@@ -509,7 +509,7 @@ class JdbcDerbySpec extends SparkTestBase {
       s"statement batches were not paced within the chunk (spread $spreadMs ms)")
   }
 
-  test("numeric chunk plan balances key skew via the adaptive histogram") {
+  test("numeric chunk plan is row-exact under key skew (keyset bounds)") {
     import graft.engine.{Checkpoint, JdbcTransferJob, TransferOutcome}
     // 900 keys packed into 0.1% of the range + 100 spread to 1M: an even
     // VALUE-split would put 90% of the rows in the first chunk
@@ -531,27 +531,67 @@ class JdbcDerbySpec extends SparkTestBase {
     // 1000 rows / 200-row chunks → 5 bounds; the dense region must be
     // CUT — at least 3 bounds land inside keys <= 1000 (an even split
     // would put every bound far above it)
-    val dense = cp.bounds.count(_.toDouble <= 1000)
-    assert(cp.bounds.size >= 4 && dense >= 3,
-      s"histogram plan failed to split the dense region: ${cp.bounds}")
-    // per-chunk row balance: no chunk above 2x the ideal
-    val boundsL = cp.bounds.map(_.toDouble)
-    val counts = boundsL.zipWithIndex.map { case (b, i) =>
-      val lo = if (i == 0) Double.MinValue else boundsL(i - 1)
+    val dense = cp.bounds.count(BigDecimal(_) <= 1000)
+    assert(cp.bounds.size == 5 && dense >= 3,
+      s"plan failed to split the dense region: ${cp.bounds}")
+    // row-exact chunks: every chunk but the last holds exactly total / n
+    // rows (the last takes the remainder)
+    val counts = cp.bounds.indices.map { i =>
+      val lo = if (i == 0) "" else s"k > ${cp.bounds(i - 1)} AND "
       JdbcCatalog.withConnection(url) { c =>
         val st = c.createStatement()
         try {
-          val rs = st.executeQuery(
-            s"SELECT COUNT(*) FROM skew WHERE k > $lo AND k <= $b")
+          val rs = st.executeQuery(s"SELECT COUNT(*) FROM skew WHERE ${lo}k <= ${cp.bounds(i)}")
           rs.next(); rs.getLong(1)
         } finally st.close()
       }
     }
     assert(counts.sum == 1000)
-    assert(counts.max <= 2 * (1000 / counts.size),
-      s"chunk rows unbalanced: $counts (bounds ${cp.bounds})")
+    val per = 1000L / counts.size
+    assert(counts.init.forall(_ == per) && counts.last == 1000L - per * (counts.size - 1),
+      s"chunks are not row-exact: $counts (bounds ${cp.bounds})")
     val back = JdbcTransfer.readAll(spark, url, "skew_new")
     assert(back.count() == 1000)
+  }
+
+  test("resume continues a stored numeric plan whose bounds are not stored keys") {
+    import graft.engine.{Checkpoint, JdbcTransferJob, TransferControl, TransferOutcome}
+    // even keys 2..2000; the planted plan's inner bounds are odd — range
+    // edges of an older numeric planner that no row carries
+    JdbcCatalog.execute(url, "CREATE TABLE oddb (" +
+      "id BIGINT NOT NULL PRIMARY KEY, v DOUBLE)")
+    JdbcCatalog.withConnection(url) { c =>
+      val ps = c.prepareStatement("INSERT INTO oddb VALUES (?, ?)")
+      (1 to 1000).foreach { i => ps.setLong(1, 2L * i); ps.setDouble(2, i); ps.addBatch() }
+      ps.executeBatch()
+    }
+    val cpDir = s"$work/cp_oddb"
+    val mig2 = MigrationSpec(batchSize = 200, checkpointRowThreshold = 200,
+      rateLimit = 1000000000, chunkParallelism = 1, checkpointDir = cpDir)
+    val t = TableMapping("oddb", targetName = Some("oddb_new"))
+    val name = JdbcTransferJob.checkpointName(url, t)
+    // an interrupted run lands ids <= 800 at the destination…
+    assert(new JdbcTransferJob(spark, url, t, mig2,
+      control = TransferControl.cancelAfterChecks(2), log = _ => ()).run() ==
+      TransferOutcome.Interrupted(2))
+    // …and the checkpoint it left is replaced by the older planner's
+    // in-flight plan, two chunks done (ids <= 701)
+    val planted = Seq("301", "701", "1101", "1501", "2000")
+    Checkpoint.save(cpDir, "jdbc", name, Checkpoint(Map("id" -> "701"),
+      System.currentTimeMillis(), complete = false, chunkIndex = 1,
+      bounds = planted, totalRows = 1000, keyCols = Seq("id")))
+    CountingExec.statements.set(0)
+    assert(new JdbcTransferJob(spark, url, t, mig2, log = _ => (),
+      executorFactory = CountingExec.factory(url)).run() == TransferOutcome.Completed)
+    // ids 702..2000; a fresh plan would resume above 800 (600 rows)
+    assert(CountingExec.statements.get == 650,
+      s"resume must merge exactly the 650 rows above 701, merged ${CountingExec.statements.get}")
+    val done = Checkpoint.load(cpDir, "jdbc", name).get
+    assert(done.complete && done.bounds == planted, done.toString)
+    val back = JdbcTransfer.readAll(spark, url, "oddb_new")
+    val src = JdbcTransfer.readAll(spark, url, "oddb")
+    assert(back.count() == 1000)
+    assert(back.except(src).isEmpty && src.except(back).isEmpty)
   }
 
   test("DECIMAL PK gets an exact numeric chunk plan at the key's scale") {
@@ -1213,11 +1253,11 @@ class JdbcDerbySpec extends SparkTestBase {
       val tbl = s"prop_x$width"
       val colsAll = Seq("c0", "c1", "c2")
       val ddlAll = Seq("c0 INT NOT NULL", "c1 VARCHAR(8) NOT NULL", "c2 BIGINT NOT NULL")
-      val stylesAll = Seq(NumericKey(0), CharKey(backslashEscape = false), NumericKey(0))
+      val stylesAll = Seq(NumericKey, CharKey(backslashEscape = false), NumericKey)
       // width 4 repeats the narrow INT at the end to keep ties everywhere
       val cols = if (width == 4) colsAll :+ "c3" else colsAll.take(width)
       val ddl = if (width == 4) ddlAll :+ "c3 INT NOT NULL" else ddlAll.take(width)
-      val styles = if (width == 4) stylesAll :+ NumericKey(0) else stylesAll.take(width)
+      val styles = if (width == 4) stylesAll :+ NumericKey else stylesAll.take(width)
       def toRow(t: (Int, String, Long)): Seq[String] = {
         val full = Seq(t._1.toString, t._2, t._3.toString, (t._1 % 2).toString)
         if (width == 4) full else full.take(width)

@@ -85,7 +85,7 @@ class JdbcRealServerItSpec extends AnyFunSuite {
         s"upsert was not last-writer-wins: ($nm, $bal)")
       // golden keyset probe (JdbcChunkSqlGoldenSpec text + bind order):
       // the key at rank 2 strictly above id 0 is id 2
-      val key = PlanKey(Seq("id"), Seq(NumericKey(0)), dialect)
+      val key = PlanKey(Seq("id"), Seq(NumericKey), dialect)
       val probed = queryOne(c, key.probeSql(T, hasPrev = true, per = 2),
         ps => key.bindPrev(ps, Seq("0")))(_.getLong(1))
       assert(probed == 2L, s"keyset probe returned $probed, want 2")
