@@ -977,16 +977,14 @@ object SparkEntry {
     "multimodal_quarantine_codecs" -> ((s, d) => {
       import graft.ops.Multimodal._
       val jpegBin = payloads(eventIds(s, d), syntheticJpeg, "img").unionByName(
-        poisonedPayloads(s, d, "img", 2)((e, kind) => kind match {
-          case 0 => poisonJpegTruncatedEntropy(syntheticJpeg(QBase + e))
-          case _ => poisonJpegBomb(syntheticJpeg(QBase + e))
-        }))
+        poisonedPayloads(s, d, "img", Seq(
+          e => poisonJpegTruncatedEntropy(syntheticJpeg(QBase + e)),
+          e => poisonJpegBomb(syntheticJpeg(QBase + e)))))
       val gifBin = payloads(eventIds(s, d), syntheticGif, "img").unionByName(
-        poisonedPayloads(s, d, "img", 3)((e, kind) => kind match {
-          case 0 => poisonTruncated(syntheticGif(QBase + e))
-          case 1 => poisonGifBadMagic(QBase + e)
-          case _ => poisonGifBomb()
-        }))
+        poisonedPayloads(s, d, "img", Seq(
+          e => poisonTruncated(syntheticGif(QBase + e)),
+          e => poisonGifBadMagic(QBase + e),
+          _ => poisonGifBomb())))
       jpegStatsSafe(jpegBin, "id", "img").toDF()
         .withColumn("codec", lit("jpeg"))
         .unionByName(gifStatsSafe(gifBin, "id", "img").toDF()
@@ -2191,19 +2189,14 @@ object SparkEntry {
     })
   }
 
-  /** Id offset of the poisoned-ingest fixtures' corrupt assets: every
-    * 5th event `e` adds one at `QBase + e`, disjoint from the clean ids. */
-  private val QBase = 10000000L
-
-  /** The corrupt half of a poisoned-ingest fixture: for every 5th event
-    * `e`, `gen(e, kind)` at id `QBase + e`, `kind = (e/5) mod k` cycling
-    * through the modality's `k` corruption kinds; columns `id` and `c`. */
-  private def poisonedPayloads(s: SparkSession, d: String, c: String, k: Int)(
-      gen: (Long, Int) => Array[Byte]): DataFrame = {
+  /** The corrupt half of a poisoned-ingest fixture: each event's
+    * [[graft.ops.Multimodal.poisoned]] asset over the modality's
+    * corruption `kinds`; columns `id` and `c`. */
+  private def poisonedPayloads(s: SparkSession, d: String, c: String,
+                               kinds: Seq[Long => Array[Byte]]): DataFrame = {
     import s.implicits._
     eventIds(s, d)
-      .filter((e: Long) => e % 5 == 0)
-      .mapPartitions(_.map(e => (QBase + e, gen(e, ((e / 5) % k).toInt))))
+      .mapPartitions(_.flatMap(e => Multimodal.poisoned(e, kinds)))
       .toDF("id", c)
   }
 
@@ -2218,28 +2211,18 @@ object SparkEntry {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.ops.Multimodal._
     val imgBin = payloads(eventIds(s, d), syntheticBmp, "img").unionByName(
-      poisonedPayloads(s, d, "img", 3)((e, kind) => kind match {
-        case 0 => poisonTruncated(syntheticBmp(QBase + e))
-        case 1 => poisonPngBomb()
-        case _ => poisonPngBadCrc(QBase + e)
-      }))
+      poisonedPayloads(s, d, "img", ImagePoisons))
     val audBin = payloads(eventIds(s, d), syntheticWav, "clip").unionByName(
-      poisonedPayloads(s, d, "clip", 2)((e, kind) => kind match {
-        case 0 => poisonTruncated(syntheticWav(QBase + e))
-        case _ => poisonWavBadMagic(QBase + e)
-      }))
+      poisonedPayloads(s, d, "clip", Seq(
+        e => poisonTruncated(syntheticWav(QBase + e)),
+        e => poisonWavBadMagic(QBase + e))))
     val vidPBin = payloads(eventIds(s, d), syntheticVideoMp4, "vid").unionByName(
-      poisonedPayloads(s, d, "vid", 3)((e, kind) => kind match {
-        case 0 => poisonTruncated(syntheticVideoMp4(QBase + e), 16)
-        case 1 => poisonMp4Bomb(syntheticVideoMp4(QBase + e))
-        case _ => poisonMp4Keyframe(syntheticVideoMp4(QBase + e))
-      }))
+      poisonedPayloads(s, d, "vid", VideoPoisons))
     val vidEBin = payloads(eventIds(s, d), syntheticMp4, "vid").unionByName(
-      poisonedPayloads(s, d, "vid", 3)((e, kind) => kind match {
-        case 0 => poisonTruncated(syntheticMp4(QBase + e), 16)
-        case 1 => poisonMp4Bomb(syntheticMp4(QBase + e))
-        case _ => syntheticMp4(QBase + e) // exact tier stays good
-      }))
+      poisonedPayloads(s, d, "vid", Seq(
+        e => poisonTruncated(syntheticMp4(QBase + e), 16),
+        e => poisonMp4Bomb(syntheticMp4(QBase + e)),
+        e => syntheticMp4(QBase + e)))) // exact tier stays good
     (imgBin, audBin, vidPBin, vidEBin)
   }
 

@@ -105,32 +105,15 @@ final case class MediaKey(family: String, key: SigKey,
   }
 
   def stream(spark: SparkSession, dir: String): DataFrame = {
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // MATERIALIZED static side: a lazy corpus re-decodes per consumer
-    // per micro-batch, and its size underestimate would plan the
-    // stream-static joins as broadcasts (no AQE on streams to re-plan)
-    val corpus = key.validOnly(signed(originals(
-      MediaKeys.spread(spark.read.parquet(s"$dir/events.parquet")))))
-      .localCheckpoint(true)
-    // file-granular micro-batches keep a source row's band hits co-batch
-    val batch = key.validOnly(signed(copies(MediaKeys.spread(
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"$dir/events.*")))))
-    val confirmed = incrementalScreen(corpus, batch, key.hashCol, key.group,
-        MediaKeys.BandBits, MediaKeys.NumBands, MediaKeys.MaxHamming,
-        MediaKeys.BucketCap, streamTag, observed = false, noBroadcast = true)
-      // multi-band hits of one pair are born in one micro-batch, so
-      // watermark-aged dedup is exact while bounding state to ~one
-      // micro-batch of pairs (current_timestamp() is the batch trigger
-      // time)
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    graft.streaming.StreamingIngest.runToParquet(confirmed, streamWorkDir, dir) {
-      Dedup.releaseLocalCheckpoint(corpus)
-    }
+    import graft.streaming.StreamingIngest
+    StreamingIngest.screenStream(
+      key.validOnly(signed(originals(
+        MediaKeys.spread(spark.read.parquet(s"$dir/events.parquet"))))),
+      key.validOnly(signed(copies(
+        MediaKeys.spread(StreamingIngest.mediaEvents(spark, dir))))),
+      StreamingIngest.Screen(key.hashCol, key.group, MediaKeys.BandBits,
+        MediaKeys.MaxHamming),
+      streamTag, streamWorkDir, dir)
   }
 }
 

@@ -2655,6 +2655,33 @@ object Multimodal {
     b
   }
 
+  /** Id offset of the poisoned-ingest fixtures' corrupt assets: every
+    * 5th event `e` adds one at `QBase + e`, disjoint from the clean ids. */
+  val QBase = 10000000L
+
+  /** The corrupt asset event `e` adds to a poisoned-ingest fixture, if
+    * any: for every 5th event, kind `(e/5) mod k` of the modality's `k`
+    * corruption `kinds`, at id `QBase + e`. */
+  def poisoned(e: Long, kinds: Seq[Long => Array[Byte]]): Option[(Long, Array[Byte])] =
+    if (e % 5 == 0) Some((QBase + e, kinds(((e / 5) % kinds.length).toInt)(e)))
+    else None
+
+  /** The image fixture's corruption kinds: truncated BMP, CRC-valid PNG
+    * bomb, flipped PNG checksum. */
+  val ImagePoisons: Seq[Long => Array[Byte]] = Seq(
+    e => poisonTruncated(syntheticBmp(QBase + e)),
+    _ => poisonPngBomb(),
+    e => poisonPngBadCrc(QBase + e))
+
+  /** The perceptual video fixture's corruption kinds: truncated
+    * container, `stsz` bomb (the cap fires before table
+    * materialization), corrupt keyframe payload inside a VALID container
+    * (parse succeeds, the keyframe image decode quarantines). */
+  val VideoPoisons: Seq[Long => Array[Byte]] = Seq(
+    e => poisonTruncated(syntheticVideoMp4(QBase + e), 16),
+    e => poisonMp4Bomb(syntheticVideoMp4(QBase + e)),
+    e => poisonMp4Keyframe(syntheticVideoMp4(QBase + e)))
+
   /** The media admission book with the quarantine tier threaded through
     * (VERDICT r11 #1): per-asset verdicts across all three modalities
     * where an asset that fails decode in EITHER tier (exact content

@@ -166,14 +166,11 @@ object JdbcUpsert {
   def isEmbeddedUrl(url: String): Boolean =
     url.startsWith("jdbc:derby:") && !url.startsWith("jdbc:derby://")
 
-  /** Writer parallelism a sink should actually use: the caller's
-    * explicit request, else 1 for in-process embedded stores (whose
-    * writes the executor serializes anyway), else 0 = keep the data's
-    * own partitioning. */
-  def effectiveWriteParallelism(url: String, requested: Int): Int =
-    if (requested > 0) requested
-    else if (isEmbeddedUrl(url)) 1
-    else 0
+  /** Writer parallelism a sink should use: 1 for in-process embedded
+    * stores (whose writes the executor serializes anyway), else 0 =
+    * keep the data's own partitioning. */
+  def effectiveWriteParallelism(url: String): Int =
+    if (isEmbeddedUrl(url)) 1 else 0
 
   /** Derby SQL type for a Catalyst type — used to give MERGE key
     * parameters an explicit CAST (Derby refuses untyped `?` in the ON

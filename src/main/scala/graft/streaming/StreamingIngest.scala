@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.MediaKeys
+import graft.ops.{Dedup, MediaKeys, Multimodal}
 
 /** Structured Streaming ingest of the `events` table (SURVEY §2.7: the
   * reference has no streaming; its resumable-cursor + checkpoint file is
@@ -53,16 +53,20 @@ object StreamingIngest {
   /** Work dir unique to (purpose, identity strings): a real digest, not
     * a 32-bit `hashCode` — colliding identities would wipe each other's
     * ACTIVE streaming checkpoint mid-run (found once on the JDBC sink,
-    * then AGAIN on the append sink in review; now one definition). */
-  private def workDir(purpose: String, identity: String): String = {
+    * then AGAIN on the append sink in review; now one definition).
+    * Refuses a purpose missing from [[WorkDirPurposes]]: the prune GC
+    * would never collect its dirs. */
+  private[graft] def workDir(purpose: String, identity: String): String = {
+    require(WorkDirPurposes.contains(purpose),
+      s"streaming work-dir purpose '$purpose' is not in WorkDirPurposes, " +
+        "so pruneWorkDirs would never collect it")
     val work = graft.util.Fs.workDir(purpose, identity)
     graft.util.Fs.deleteRecursive(new java.io.File(work))
     work
   }
 
-  /** The streaming work-dir purposes [[workDir]] is called with — the
-    * prune target set. Kept next to the call sites so a new purpose
-    * cannot silently escape GC. */
+  /** The streaming work-dir purposes [[workDir]] accepts — the prune
+    * target set. */
   private[graft] val WorkDirPurposes =
     Seq("stream_append", "sjdbc", "stream_img_dedup", "stream_vid_dedup",
       "stream_span_index", "stream_media_quarantine", "stream_ann_index",
@@ -72,8 +76,8 @@ object StreamingIngest {
     * a fresh [[workDir]] and read the sink back; `afterRun` runs once
     * the stream has terminated (release static-side checkpoints
     * there). */
-  private[graft] def runToParquet(stream: DataFrame, purpose: String,
-                                  dir: String)(afterRun: => Unit): DataFrame = {
+  private def runToParquet(stream: DataFrame, purpose: String,
+                           dir: String)(afterRun: => Unit): DataFrame = {
     val work = workDir(purpose, dir)
     val q = stream.writeStream
       .format("parquet")
@@ -83,6 +87,182 @@ object StreamingIngest {
     q.awaitTermination()
     afterRun
     stream.sparkSession.read.parquet(s"$work/out")
+  }
+
+  /** The one idempotent per-batch sink: runs `stream` bounded with its
+    * checkpoint under `work`, hands every micro-batch to `body` with a
+    * writer that OVERWRITES `<work>/<sub>/batch_<id>`, and returns every
+    * directory under `<work>/<sub>` (sorted). Exactly-once by
+    * composition, like the JDBC sink's MERGE: a checkpoint-replayed
+    * batch keeps its id, so it rewrites its own directory instead of
+    * appending duplicate rows. The dirs are listed, never globbed: a
+    * glob path makes `FileStreamSink` probe the glob's
+    * `_spark_metadata` and log a fatal-looking `FileNotFoundException`
+    * trace on every passing run. */
+  private[graft] def perBatchSink(stream: DataFrame, work: String, sub: String)(
+      body: (DataFrame, DataFrame => Unit) => Unit): Seq[String] = {
+    val q = stream.writeStream
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        body(b, _.write.mode("overwrite").parquet(s"$work/$sub/batch_$id"))
+      }
+      .option("checkpointLocation", s"$work/checkpoint")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    Option(new java.io.File(s"$work/$sub").listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory).map(_.getAbsolutePath).sorted.toSeq
+  }
+
+  /** The `events` table as a file stream in file-granular micro-batches
+    * (`maxFilesPerTrigger` 4), the source of every media stream. A
+    * corpus-scale source in ONE AvailableNow batch holds the whole run's
+    * pair state at once no matter how the dedup ages it (measured OOM at
+    * 10×); file-granular batches keep a source row's band hits co-batch
+    * while the watermark purges pair state between batches. */
+  private[graft] def mediaEvents(spark: SparkSession, dir: String): DataFrame = {
+    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "4")
+      .parquet(s"$dir/events.*")
+  }
+
+  /** A stream-static band screen over a 64-bit signature: `hashCol`
+    * cut into 4 bands of `bandBits` within `group`, corpus buckets
+    * capped at 64, hits confirmed at Hamming ≤ `maxHamming`. */
+  private[graft] final case class Screen(hashCol: String, group: Column,
+                                         bandBits: Int, maxHamming: Int) {
+
+    /** Every `(batch_id, corpus_id, hamming)` hit of `batch` against
+      * `corpus`, uncapped (`row_number` windows are illegal on streams),
+      * through [[graft.ops.Multimodal.incrementalScreen]] with the batch
+      * hash carried through the band join, so both joins are
+      * stream-static. The static sides always shuffle: streaming has no
+      * AQE to re-plan the planner's size underestimate, which picked a
+      * broadcast that died at 10× data (measured). */
+    def hits(corpus: DataFrame, batch: DataFrame, tag: String): DataFrame =
+      Multimodal.incrementalScreen(corpus, batch, hashCol, group,
+        bandBits = bandBits, numBands = 4, maxHamming = maxHamming,
+        bucketCap = 64, metric = tag, observed = false, noBroadcast = true)
+  }
+
+  /** The one stream-static near-dup screen: `batch` signatures (a
+    * stream) against the standing `corpus` signatures, uncapped, into a
+    * durable parquet sink under `purpose`. The corpus is MATERIALIZED
+    * first (eager localCheckpoint): it feeds both sides of the screen,
+    * a lazy plan would re-derive it per consumer per micro-batch, and
+    * the checkpoint's conservative stats keep the joins shuffled.
+    *
+    * A pair confirms once per shared band, and its multi-band hits are
+    * born in ONE micro-batch (a source row's band rows never straddle
+    * batches), so watermark-aged dedup on `current_timestamp()` (the
+    * batch-constant trigger time) is EXACT, not the lossy
+    * [[streamingDedupLive]] trade, while holding state to ~one
+    * micro-batch of pairs: 1 second of slack lets it purge between
+    * batches. The plain stateful `dropDuplicates` kept every emitted
+    * pair forever, so state grew with the OUTPUT and OOMed the 10× run
+    * (measured). The parquet sink, not the memory sink, because the
+    * uncapped pair stream is corpus-sized. Stream ≡ the batch screen
+    * minus its candidate cap, hit for hit. */
+  private[graft] def screenStream(corpus: DataFrame, batch: DataFrame, screen: Screen,
+                                  tag: String, purpose: String, dir: String): DataFrame = {
+    val index = corpus.localCheckpoint(true)
+    val confirmed = screen.hits(index, batch, tag)
+      .withColumn("arr_ts", current_timestamp())
+      .withWatermark("arr_ts", "1 second")
+      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
+      .drop("arr_ts")
+    runToParquet(confirmed, purpose, dir)(Dedup.releaseLocalCheckpoint(index))
+  }
+
+  /** One media modality as the dedup and quarantine streams see it:
+    * the `(event_id div parity)` split into corpus (even) and incoming
+    * (odd), the clean payload generator, the strict signer, the
+    * fault-isolated `*Safe` decoder and its persisted artifact under
+    * [[graft.SparkEntry.quarantineSignatureIndex]], the corruption
+    * kinds, the signature columns and the band screen. */
+  private final case class Modality(parity: Int, clean: Long => Array[Byte],
+                                    sign: (DataFrame, String, String) => DataFrame,
+                                    safe: (DataFrame, String, String) => DataFrame,
+                                    artifact: String, poisons: Seq[Long => Array[Byte]],
+                                    sigCols: Seq[String], screen: Screen) {
+    /** The corpus (`r` = 0) or incoming (`r` = 1) half by `idCol`. */
+    def half(idCol: String, r: Int): Column = expr(s"$idCol div $parity") % 2 === r
+  }
+
+  private val ImageAHash = Modality(20, Multimodal.syntheticBmp,
+    Multimodal.imageAHash(_, _, _).toDF(), Multimodal.imageAHashSafe,
+    "img_ahash_safe", Multimodal.ImagePoisons, Seq("id", "width", "height", "ahash"),
+    Screen("ahash", concat(col("width").cast("string"), lit("x"),
+      col("height").cast("string")), bandBits = 12, maxHamming = 4))
+
+  // (id div 2) parity puts each content's {v0, v1} in the corpus and
+  // {v2, v3} in the batch, so every transcode family straddles
+  private val VideoPHash = Modality(2, Multimodal.syntheticVideoMp4,
+    Multimodal.videoPerceptualHash(_, _, _).toDF(),
+    Multimodal.videoPerceptualHashSafe(_, _, _),
+    "vid_phash_safe", Multimodal.VideoPoisons,
+    Seq("id", "width", "height", "n_key", "sig"),
+    Screen("sig", concat(col("width").cast("string"), lit("x"),
+      col("height").cast("string"), lit(":"), col("n_key").cast("string")),
+      bandBits = 16, maxHamming = 6))
+
+  /** [[screenStream]] over modality `m`'s strict signatures: clean
+    * assets of the even half as the corpus, of the odd half arriving as
+    * a stream, decoded and signed inside the micro-batch. */
+  private def dedupStream(spark: SparkSession, dir: String, m: Modality,
+                          tag: String, purpose: String): DataFrame = {
+    def signed(events: DataFrame) = m.sign(
+      MediaKeys.payloads(MediaKeys.spread(events), m.clean, "payload"), "id", "payload")
+    screenStream(
+      signed(spark.read.parquet(s"$dir/events.parquet").where(m.half("event_id", 0))),
+      signed(mediaEvents(spark, dir).where(m.half("event_id", 1))),
+      m.screen, tag, purpose, dir)
+  }
+
+  /** The QUARANTINE tier at the STREAM boundary: in a stream, a corrupt
+    * asset is strictly WORSE than in batch — the failed micro-batch
+    * retries the same files forever and the pipeline wedges. Incoming
+    * assets (the odd half's clean asset plus, per 5th source row, one of
+    * the modality's corruption kinds) safe-decode INSIDE the per-batch
+    * sink: malformed payloads become per-asset quarantine rows
+    * `(ok=false, reason=decode:<kind>, dup=false)`; good payloads screen
+    * against the standing corpus index and emit
+    * `(ok=true, dup=<has a corpus near-dup>)`. The standing index is the
+    * PERSISTED safe-signature artifact (its ok rows carry exactly the
+    * strict decode's signatures, spec-pinned), so the stream scans a
+    * columnar artifact instead of re-decoding half the corpus per run —
+    * the production shape. Every asset is seen in exactly one
+    * micro-batch and the corpus is static, so per-asset verdicts are
+    * independent of batch slicing — stream output ≡ the batch
+    * computation, which is what the oracle replays. (Contract: `dup` is
+    * vs the CORPUS only; batch-internal pairs are the all-pairs ops'
+    * job.) */
+  private def quarantineStream(spark: SparkSession, dir: String, m: Modality,
+                               tag: String, purpose: String): DataFrame = {
+    import spark.implicits._
+    val sig = m.sigCols.map(col)
+    val corpus = spark.read
+      .parquet(s"${graft.SparkEntry.quarantineSignatureIndex(spark, dir)}/${m.artifact}")
+      .where(col("ok") && col("id") < Multimodal.QBase && m.half("id", 0))
+      .select(sig: _*)
+    val incoming = mediaEvents(spark, dir).where(m.half("event_id", 1))
+    val (clean, poisons) = (m.clean, m.poisons) // the task closure's only captures
+    val batches = perBatchSink(incoming, workDir(purpose, dir), "out") { (b, write) =>
+      val assets = MediaKeys.spread(b)
+        .mapPartitions(_.flatMap(e =>
+          Iterator((e, clean(e))) ++ Multimodal.poisoned(e, poisons)))
+        .toDF("id", "payload")
+      // decode once per micro-batch: the safe frame feeds the
+      // quarantine rows, the screen, AND the verdict join
+      val safe = m.safe(assets, "id", "payload").localCheckpoint(true)
+      val dupIds = m.screen.hits(corpus, safe.where(col("ok")).select(sig: _*), tag)
+        .select(col("batch_id").as("id")).distinct()
+        .withColumn("dup", lit(true))
+      write(safe.select(col("id"), col("ok"), col("reason"))
+        .join(dupIds, Seq("id"), "left")
+        .select(col("id"), col("ok"), col("reason"),
+          (col("ok") && coalesce(col("dup"), lit(false))).as("dup")))
+      Dedup.releaseOwnCheckpoint(safe)
+    }
+    spark.read.parquet(batches: _*)
   }
 
   /** GC terminated streaming work dirs (VERDICT r6 #7): the durable
@@ -136,16 +316,8 @@ object StreamingIngest {
     * Returns the rows read back from the parquet sink — for a bounded
     * run that is exactly the batch aggregation restricted to closed
     * windows, which is what the oracle checks. */
-  def windowCountsAppend(spark: SparkSession, dir: String): DataFrame = {
-    val work = workDir("stream_append", dir)
-    val q = windowCountsAgg(eventsStream(spark, dir)).writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/checkpoint")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$work/out")
-  }
+  def windowCountsAppend(spark: SparkSession, dir: String): DataFrame =
+    runToParquet(windowCountsAgg(eventsStream(spark, dir)), "stream_append", dir)(())
 
   /** Custom stateful aggregation via `mapGroupsWithState` (the
     * KeyValueGroupedDataset path for state machines the built-in windows
@@ -261,208 +433,29 @@ object StreamingIngest {
 
   /** The incremental IMAGE near-dup screen as a stream — new image
     * batches arriving continuously, screened against the standing
-    * corpus aHash index ([[graft.ops.Multimodal.incrementalScreen]],
-    * the media analog of [[incrementalDedupStream]]): the per-row
-    * decode + fingerprint runs inside the micro-batch (mapPartitions
-    * on the streaming frame — embarrassingly parallel, no shuffle),
-    * the band join and the Hamming confirm are STREAM-STATIC joins
-    * (the batch hash is carried through the band join precisely so no
-    * stream-stream join arises), and duplicate multi-band hits dedup
-    * through the stateful `dropDuplicates` operator. No per-batch
-    * candCap: `row_number` windows are illegal on streams, so the
-    * streaming twin emits every confirmed pair (the oracle applies the
-    * same uncapped rule). Result equals the batch screen minus the cap
-    * — hash-gated against the same CTE chain.
-    *
-    * Sink is the DURABLE parquet path ([[windowCountsAppend]]'s
-    * posture), not the memory sink: the uncapped pair stream is the
-    * one streaming gate whose result is corpus-sized (≈2M rows at
-    * sf0.1), and a memory sink serializes all of it through the
-    * driver — the parallel parquet write is what production runs
-    * anyway. */
-  def imageDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    def hashes(df: DataFrame) = Multimodal.imageAHash(
-      MediaKeys.payloads(MediaKeys.spread(df), Multimodal.syntheticBmp, "img"),
-      "id", "img").toDF()
-    // MATERIALIZE the standing index (eager localCheckpoint): the
-    // corpus feeds BOTH sides of the screen (band index + hash confirm)
-    // and a lazy plan re-decodes it per consumer per micro-batch —
-    // worse, the planner's size underestimate of the derived frame
-    // picks a BROADCAST for the stream-static joins, which at 10× data
-    // dies with "not enough memory to build and broadcast" (measured;
-    // streaming has no AQE to re-plan it). The checkpointed frame
-    // reports conservative stats, so the joins plan as shuffles — the
-    // only shape that survives a corpus-scale static side.
-    val corpus = hashes(spark.read.parquet(s"$dir/events.parquet")
-      .where(expr("event_id div 20") % 2 === 0)).localCheckpoint(true)
-    // bounded micro-batches: a corpus-scale source in ONE AvailableNow
-    // batch holds the whole run's pair state at once no matter how the
-    // dedup ages it (measured OOM at 10×); file-granular batches keep a
-    // source row's band hits co-batch (the dedup-exactness invariant)
-    // while the watermark purges pair state BETWEEN batches
-    val batch = hashes(spark.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(s"$dir/events.*")
-      .where(expr("event_id div 20") % 2 === 1))
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "ahash",
-        group = concat(col("width").cast("string"), lit("x"),
-          col("height").cast("string")),
-        bandBits = 12, numBands = 4, maxHamming = 4, bucketCap = 64,
-        metric = "image_ahash_stream", observed = false, noBroadcast = true)
-      // multi-band hits of one pair are born in ONE micro-batch (a
-      // source row's band rows never straddle batches), so
-      // watermark-aged dedup state is EXACT here — not the lossy
-      // streamingDedupLive trade — while bounding state to ~one
-      // micro-batch's pairs. The plain stateful dropDuplicates kept
-      // every emitted pair forever: state grew with the OUTPUT and
-      // OOMed the 10× scale run (measured). current_timestamp() is
-      // the batch-constant trigger time; exactness needs only co-batch
-      // retention, so 1 second of slack lets state purge between the
-      // bounded micro-batches instead of accumulating across them.
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 second")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    runToParquet(confirmed, "stream_img_dedup", dir) {
-      graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    }
-  }
+    * corpus aHash index: the media analog of [[incrementalDedupStream]]
+    * through [[screenStream]], the per-row decode + fingerprint running
+    * inside the micro-batch (mapPartitions on the streaming frame —
+    * embarrassingly parallel, no shuffle). Result equals the batch
+    * screen minus the cap — hash-gated against the same CTE chain. */
+  def imageDedupStream(spark: SparkSession, dir: String): DataFrame =
+    dedupStream(spark, dir, ImageAHash, "image_ahash_stream", "stream_img_dedup")
 
-  /** The QUARANTINE tier at the STREAM boundary (round 12, completing
-    * VERDICT r11 #1): in a stream, a corrupt asset is strictly WORSE
-    * than in batch — the failed micro-batch retries the same files
-    * forever and the pipeline wedges. Incoming assets (including a
-    * poisoned one per 5th source row: truncated BMP, CRC-valid PNG
-    * bomb, flipped PNG checksum) safe-decode INSIDE `foreachBatch`:
-    * malformed payloads become per-asset quarantine rows
-    * `(ok=false, reason=decode:<kind>, dup=false)`; good payloads
-    * screen against the standing corpus index (the shuffle-join /
-    * checkpointed-static shapes of [[imageDedupStream]]) and emit
-    * `(ok=true, dup=<has a corpus near-dup>)`. Every asset is seen in
-    * exactly one micro-batch and the corpus is static, so per-asset
-    * verdicts are independent of batch slicing — stream output ≡ the
-    * batch computation, which is what the oracle replays. (Contract:
-    * `dup` is vs the CORPUS only; batch-internal pairs are the
-    * all-pairs ops' job.) */
-  def mediaQuarantineStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val QBase = 10000000L
-    // The standing corpus index is the PERSISTED safe-signature artifact
-    // (r15, VERDICT r14 #7): ok rows of img_ahash_safe carry exactly the
-    // strict decode's signatures (spec-pinned; the from-index book's
-    // hash gate is the proof), so the stream reads a columnar parquet
-    // artifact instead of re-decoding half the corpus per run — the
-    // production shape (incoming bytes decode in-batch; the standing
-    // index never does).
-    val corpus = spark.read
-      .parquet(s"${graft.SparkEntry.quarantineSignatureIndex(spark, dir)}/img_ahash_safe")
-      .where(col("ok") && col("id") < QBase && (expr("id div 20") % 2 === 0))
-      .select("id", "width", "height", "ahash")
-    val work = workDir("stream_media_quarantine", dir)
-    val incoming = spark.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(s"$dir/events.*")
-      .where(expr("event_id div 20") % 2 === 1)
-    val q = incoming.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val assets = MediaKeys.spread(b)
-          .mapPartitions(_.flatMap { e =>
-            val clean = Seq((e, Multimodal.syntheticBmp(e)))
-            val poison =
-              if (e % 5 == 0) Seq((QBase + e, ((e / 5) % 3) match {
-                case 0 => Multimodal.poisonTruncated(Multimodal.syntheticBmp(QBase + e))
-                case 1 => Multimodal.poisonPngBomb()
-                case _ => Multimodal.poisonPngBadCrc(QBase + e)
-              }))
-              else Nil
-            (clean ++ poison).iterator
-          }).toDF("id", "img")
-        // decode once per micro-batch: the safe frame feeds the
-        // quarantine rows, the screen, AND the verdict join
-        val safe = Multimodal.imageAHashSafe(assets, "id", "img").toDF()
-          .localCheckpoint(true)
-        val ok = safe.where(col("ok"))
-          .select("id", "width", "height", "ahash")
-        val dupIds = Multimodal.incrementalScreen(corpus, ok,
-            hashCol = "ahash",
-            group = concat(col("width").cast("string"), lit("x"),
-              col("height").cast("string")),
-            bandBits = 12, numBands = 4, maxHamming = 4, bucketCap = 64,
-            metric = "media_quarantine_stream", observed = false,
-            noBroadcast = true)
-          .select(col("batch_id").as("id")).distinct()
-          .withColumn("dup", lit(true))
-        val out = safe.select(col("id"), col("ok"), col("reason"))
-          .join(dupIds, Seq("id"), "left")
-          .select(col("id"), col("ok"), col("reason"),
-            (col("ok") && coalesce(col("dup"), lit(false))).as("dup"))
-        // idempotent per-batch dir (the span/ANN index streams' MERGE
-        // posture): a checkpoint-replayed micro-batch rewrites its own
-        // directory instead of appending duplicate verdict rows
-        out.write.mode("overwrite").parquet(s"$work/out/batch_$id")
-        graft.ops.Dedup.releaseOwnCheckpoint(safe)
-        ()
-      }
-      .option("checkpointLocation", s"$work/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$work/out/*")
-  }
+  /** The image [[quarantineStream]] (poison kinds: truncated BMP,
+    * CRC-valid PNG bomb, flipped PNG checksum), screened with
+    * [[imageDedupStream]]'s aHash screen. */
+  def mediaQuarantineStream(spark: SparkSession, dir: String): DataFrame =
+    quarantineStream(spark, dir, ImageAHash, "media_quarantine_stream",
+      "stream_media_quarantine")
 
   /** The incremental VIDEO perceptual screen as a stream — new clips
     * arriving continuously, parsed + keyframe-decoded + signed INSIDE
-    * the micro-batch (mapPartitions on the streaming frame), screened
-    * against the standing clip-signature index through the same
-    * stream-safe confirm core as [[imageDedupStream]]
-    * ([[graft.ops.Multimodal.incrementalScreen]] — batch signature
-    * carried through the band join, so both joins are stream-static).
-    * No per-batch candCap (`row_number` windows are illegal on
-    * streams); durable parquet sink for the same corpus-sized-result
-    * reason as the image twin. Stream == batch screen minus the cap,
-    * hash-gated against the same CTE chain uncapped. */
-  def videoDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    def sigs(df: DataFrame) = Multimodal.videoPerceptualHash(
-      MediaKeys.payloads(MediaKeys.spread(df), Multimodal.syntheticVideoMp4, "vid"),
-      "id", "vid").toDF()
-    // (id div 2) parity puts each content's {v0, v1} in the corpus and
-    // {v2, v3} in the batch — every transcode family straddles
-    // same eager materialization as the image twin (see the comment
-    // there): one decode of the standing index, conservative stats →
-    // the stream-static joins shuffle instead of broadcasting a
-    // corpus-scale side (the broadcast OOMed at 10×, measured)
-    val corpus = sigs(spark.read.parquet(s"$dir/events.parquet")
-      .where(expr("event_id div 2") % 2 === 0)).localCheckpoint(true)
-    // bounded micro-batches, same invariant as the image twin
-    val batch = sigs(spark.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(s"$dir/events.*")
-      .where(expr("event_id div 2") % 2 === 1))
-    val confirmed = Multimodal.incrementalScreen(corpus, batch,
-        hashCol = "sig",
-        group = concat(col("width").cast("string"), lit("x"),
-          col("height").cast("string"), lit(":"), col("n_key").cast("string")),
-        bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-        metric = "video_phash_stream", observed = false, noBroadcast = true)
-      // same exact watermark-aged dedup as the image twin (see there):
-      // pair duplicates are co-batch by construction, so state is
-      // bounded at ~one micro-batch instead of the whole output
-      .withColumn("arr_ts", current_timestamp())
-      .withWatermark("arr_ts", "1 minute")
-      .dropDuplicatesWithinWatermark("batch_id", "corpus_id")
-      .drop("arr_ts")
-    runToParquet(confirmed, "stream_vid_dedup", dir) {
-      graft.ops.Dedup.releaseLocalCheckpoint(corpus)
-    }
-  }
+    * the micro-batch, screened against the standing clip-signature
+    * index through [[screenStream]], like [[imageDedupStream]]. Stream
+    * == batch screen minus the cap, hash-gated against the same CTE
+    * chain uncapped. */
+  def videoDedupStream(spark: SparkSession, dir: String): DataFrame =
+    dedupStream(spark, dir, VideoPHash, "video_phash_stream", "stream_vid_dedup")
 
   /** Streaming INTO a live database: watermark-closed windows upserted
     * per micro-batch into a JDBC store via `foreachBatch` + the MERGE
@@ -471,24 +464,23 @@ object StreamingIngest {
     * batch, and the keyed MERGE makes the replay a no-op (the same
     * idempotence contract as the batch engine's chunk writes).
     *
-    * The sink takes the same `(dialect, writeParallelism)` posture as
-    * `JdbcTransfer.transfer` (VERDICT r3): against a server-grade store
-    * each batch writes per-partition in parallel; only in-process
-    * embedded URLs default to one writer (the store serializes anyway).
+    * The MERGE dialect comes from the URL, as in the transfer job
+    * (Derby when the URL names no known store). Against a server-grade
+    * store each batch writes per-partition in parallel; in-process
+    * embedded URLs use one writer (the store serializes anyway).
     * The target table is probe-then-created so a RERUN — exactly the
     * checkpoint-replay scenario the exactly-once story rests on — falls
     * through to the idempotent MERGE instead of dying on
     * table-already-exists (ADVICE r3). */
   def windowCountsToJdbc(spark: SparkSession, dir: String, url: String,
-                         table: String,
-                         dialect: graft.sinks.JdbcUpsert.Dialect = graft.sinks.JdbcUpsert.Derby,
-                         writeParallelism: Int = 0): Unit = {
+                         table: String): Unit = {
     import graft.sinks.JdbcUpsert
+    val dialect = graft.engine.JdbcTransferJob.dialectFor(url).getOrElse(JdbcUpsert.Derby)
     if (!graft.sources.JdbcCatalog.tableExists(url, table))
       graft.sources.JdbcCatalog.execute(url, s"CREATE TABLE $table (" +
         "w_start TIMESTAMP NOT NULL, event_type VARCHAR(64) NOT NULL, " +
         "cnt BIGINT, PRIMARY KEY (w_start, event_type))")
-    val parallelism = JdbcUpsert.effectiveWriteParallelism(url, writeParallelism)
+    val parallelism = JdbcUpsert.effectiveWriteParallelism(url)
     // identity includes the TABLE: two streams to different tables must
     // never share (and wipe) one checkpoint
     val work = workDir("sjdbc", s"$dir $url $table")
@@ -521,12 +513,10 @@ object StreamingIngest {
     *
     * Returns per-batch `(batch_id, rows, slept_ms)` observability rows;
     * sustained throughput is bounded by `rowsPerSec` plus the limiter's
-    * 1-second burst credit. `sink` receives each admitted batch (the
-    * production variant wires the JDBC/parquet sinks here). */
+    * 1-second burst credit. */
   def ratedIngest(spark: SparkSession, dir: String, rowsPerSec: Long,
                   maxFilesPerTrigger: Int = 1,
-                  limiter: Option[graft.engine.RateLimiter] = None,
-                  sink: DataFrame => Unit = _ => ()): DataFrame = {
+                  limiter: Option[graft.engine.RateLimiter] = None): DataFrame = {
     import spark.implicits._
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val src = spark.readStream.schema(schema)
@@ -539,7 +529,7 @@ object StreamingIngest {
         val n = batch.count()
         val slept = lim.acquire(n)
         stats.add((id, n, slept))
-        sink(batch)
+        ()
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -681,14 +671,11 @@ object StreamingIngest {
     * its documents against the standing corpus gram set (any gram hit
     * → rejected, the `dedup_span_index_lifecycle` admission rule) and
     * the ADMITTED documents' gram counts merge into the index store
-    * from `foreachBatch` — the span analog of [[windowCountsToJdbc]]'s
-    * MERGE sink, in the log-structured form a parquet store supports:
-    * one `(g, df)` increment directory per micro-batch, compacted by
-    * the additive groupBy on read (exactly
-    * [[graft.ops.Curation.spanIndexAppend]]'s arithmetic). Exactly-once
-    * lands by the same composition as the JDBC sink: a
-    * checkpoint-replayed batch rewrites its OWN deterministic
-    * `batch_<id>` directory (mode overwrite), so replay is a no-op.
+    * through [[perBatchSink]] — the span analog of
+    * [[windowCountsToJdbc]]'s MERGE sink, in the log-structured form a
+    * parquet store supports: one `(g, df)` increment directory per
+    * micro-batch, compacted by the additive groupBy on read (exactly
+    * [[graft.ops.Curation.spanIndexAppend]]'s arithmetic).
     *
     * Admission deliberately screens against the ORIGINAL index
     * SNAPSHOT, not the growing one: that makes the admitted set — and
@@ -708,25 +695,15 @@ object StreamingIngest {
     // AND the base of the final merge (a lazy plan would re-derive the
     // corpus explode per micro-batch — the streaming-media lesson)
     val index0 = Curation.spanIndexBuild(corpus).localCheckpoint(true)
-    val work = workDir("stream_span_index", dir)
-    val q = documentsRaw(spark, dir).where(col("doc_id") % 2 === 1)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val dupDocs = Curation.stride1Grams(b, 10)
-          .join(index0.select("g"), Seq("g"), "left_semi")
-          .select("doc_id").distinct()
-        val admitted = b.join(dupDocs, Seq("doc_id"), "left_anti")
-        Curation.spanIndexBuild(admitted).write.mode("overwrite")
-          .parquet(s"$work/increments/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$work/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val incDirs = Option(new java.io.File(s"$work/increments").listFiles())
-      .toSeq.flatten.filter(_.isDirectory).sortBy(_.getName)
-    val maintained = incDirs
-      .map(f => spark.read.parquet(f.getAbsolutePath))
+    val increments = perBatchSink(documentsRaw(spark, dir).where(col("doc_id") % 2 === 1),
+        workDir("stream_span_index", dir), "increments") { (b, write) =>
+      val dupDocs = Curation.stride1Grams(b, 10)
+        .join(index0.select("g"), Seq("g"), "left_semi")
+        .select("doc_id").distinct()
+      write(Curation.spanIndexBuild(b.join(dupDocs, Seq("doc_id"), "left_anti")))
+    }
+    val maintained = increments
+      .map(spark.read.parquet(_))
       .foldLeft(index0)(_ unionByName _)
       .groupBy("g").agg(sum(col("df")).as("df"))
       .localCheckpoint(true)
@@ -737,75 +714,13 @@ object StreamingIngest {
   /** [[mediaQuarantineStream]]'s VIDEO twin — the decode-heaviest
     * stream (container parse + per-keyframe image decode per asset),
     * where an unisolated corrupt clip is the most expensive possible
-    * wedge. Poison kinds per 5th source row: truncated container,
-    * `stsz` bomb (cap fires before table materialization), corrupt
-    * keyframe payload inside a VALID container (parse succeeds, the
-    * keyframe image decode quarantines — the video-specific hazard).
-    * Good clips screen against the standing perceptual signature index
-    * with [[videoDedupStream]]'s shapes. */
-  def videoQuarantineStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Multimodal
-    import spark.implicits._
-    val evSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val QBase = 10000000L
-    // standing clip index from the persisted safe artifact — same move
-    // as [[mediaQuarantineStream]] (r15, VERDICT r14 #7): parse + decode
-    // of half the clip corpus per run replaced by a parquet scan of
-    // vid_phash_safe's ok rows (≡ the strict videoPerceptualHash,
-    // spec-pinned via the from-index book's shared oracle)
-    val corpus = spark.read
-      .parquet(s"${graft.SparkEntry.quarantineSignatureIndex(spark, dir)}/vid_phash_safe")
-      .where(col("ok") && col("id") < QBase && (expr("id div 2") % 2 === 0))
-      .select("id", "width", "height", "n_key", "sig")
-    val work = workDir("stream_vid_quarantine", dir)
-    val incoming = spark.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(s"$dir/events.*")
-      .where(expr("event_id div 2") % 2 === 1)
-    val q = incoming.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val assets = MediaKeys.spread(b)
-          .mapPartitions(_.flatMap { e =>
-            val clean = Seq((e, Multimodal.syntheticVideoMp4(e)))
-            val poison =
-              if (e % 5 == 0) Seq((QBase + e, ((e / 5) % 3) match {
-                case 0 => Multimodal.poisonTruncated(
-                  Multimodal.syntheticVideoMp4(QBase + e), 16)
-                case 1 => Multimodal.poisonMp4Bomb(
-                  Multimodal.syntheticVideoMp4(QBase + e))
-                case _ => Multimodal.poisonMp4Keyframe(
-                  Multimodal.syntheticVideoMp4(QBase + e))
-              }))
-              else Nil
-            (clean ++ poison).iterator
-          }).toDF("id", "vid")
-        val safe = Multimodal.videoPerceptualHashSafe(assets, "id", "vid").toDF()
-          .localCheckpoint(true)
-        val ok = safe.where(col("ok"))
-          .select("id", "width", "height", "n_key", "sig")
-        val dupIds = Multimodal.incrementalScreen(corpus, ok,
-            hashCol = "sig",
-            group = concat(col("width").cast("string"), lit("x"),
-              col("height").cast("string"), lit(":"),
-              col("n_key").cast("string")),
-            bandBits = 16, numBands = 4, maxHamming = 6, bucketCap = 64,
-            metric = "video_quarantine_stream", observed = false,
-            noBroadcast = true)
-          .select(col("batch_id").as("id")).distinct()
-          .withColumn("dup", lit(true))
-        val out = safe.select(col("id"), col("ok"), col("reason"))
-          .join(dupIds, Seq("id"), "left")
-          .select(col("id"), col("ok"), col("reason"),
-            (col("ok") && coalesce(col("dup"), lit(false))).as("dup"))
-        out.write.mode("overwrite").parquet(s"$work/out/batch_$id")
-        graft.ops.Dedup.releaseOwnCheckpoint(safe)
-        ()
-      }
-      .option("checkpointLocation", s"$work/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$work/out/*")
-  }
+    * wedge. Its poison kinds include a corrupt keyframe payload inside a
+    * VALID container: the parse succeeds and only the keyframe image
+    * decode quarantines, the video-specific hazard. Good clips screen
+    * with [[videoDedupStream]]'s perceptual screen. */
+  def videoQuarantineStream(spark: SparkSession, dir: String): DataFrame =
+    quarantineStream(spark, dir, VideoPHash, "video_quarantine_stream",
+      "stream_vid_quarantine")
 
   /** Stream-MAINTAINED IVF vector index (round 12): the ANN sibling of
     * [[spanIndexMaintainStream]], completing the set — every standing
@@ -814,8 +729,8 @@ object StreamingIngest {
     * and each batch's cell assignments (`Similarity.ivfAssign` against
     * the FROZEN coarse centroids — the `ann_index_lifecycle` append
     * contract, so there is no global state to drift) land as one
-    * idempotent per-batch increment directory (checkpoint replay
-    * rewrites its own dir — the parquet analog of the MERGE sink). The
+    * [[perBatchSink]] increment directory (checkpoint replay rewrites
+    * its own dir — the parquet analog of the MERGE sink). The
     * probe then reads the UNION of generations; because assignment is
     * per-vector against frozen centroids, stream-appended ≡ rebuilt
     * over the full collection — the gate's oracle replays the
@@ -832,43 +747,21 @@ object StreamingIngest {
     val work = workDir("stream_ann_index", dir)
     Similarity.ivfAssign(all.where(col("vec_id") % 2 === 0), cents)
       .write.mode("overwrite").parquet(s"$work/increments/gen_0")
-    val q = spark.readStream.schema(embSchema)
+    val added = spark.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/embeddings.*")
       .where(col("vec_id") % 2 === 1)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val bv = b.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("emb"))
-        Similarity.ivfAssign(bv, cents).write.mode("overwrite")
-          .parquet(s"$work/increments/batch_$id")
-        ()
-      }
-      .option("checkpointLocation", s"$work/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // enumerate the increment dirs instead of globbing (VERDICT r17
-    // #6): a glob path makes FileStreamSink probe `*/_spark_metadata`
-    // and log a fatal-looking FileNotFoundException stack trace on
-    // every passing run
-    val incrementDirs = Option(new java.io.File(s"$work/increments")
-        .listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory) // every generation: gen_0 AND batch_* dirs
-      .map(_.getAbsolutePath).sorted
-    require(incrementDirs.nonEmpty, s"no index increments under $work/increments")
-    val index = spark.read.parquet(incrementDirs.toIndexedSeq: _*)
+    // every generation: gen_0 AND the batch_* dirs
+    val generations = perBatchSink(added, work, "increments") { (b, write) =>
+      write(Similarity.ivfAssign(b.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("emb")), cents))
+    }
+    val index = spark.read.parquet(generations: _*)
     val out = Similarity.ivfProbe(index, all, cents).localCheckpoint(true)
     graft.ops.Dedup.releaseOwnCheckpoint(cents)
     out
   }
 
-  /** Streaming CMS cell maintenance — the frequency-sketch twin of
-    * [[hllRegisters]] (VERDICT r7 #7): `Sketch.cmsSketch` is a pure
-    * explode + groupBy/count whose cells are ADDITIVE under union, so
-    * the same code runs on the document stream and the complete-mode
-    * state IS the corpus sketch — bounded at 4×1024 counter rows no
-    * matter how many documents flow. The gate's oracle replays the
-    * batch build: stream == batch by hash. */
   /** DSIR scoring as a STREAM — the serving shape of the
     * [[graft.ops.TextAnalysis.dsirBucketRatios]] artifact: the dense
     * bucket-ratio model is fitted ONCE on the standing corpus (the
@@ -895,6 +788,13 @@ object StreamingIngest {
     runToMemory(scored, "graft_dsirsc_", "append")
   }
 
+  /** Streaming CMS cell maintenance — the frequency-sketch twin of
+    * [[hllRegisters]] (VERDICT r7 #7): `Sketch.cmsSketch` is a pure
+    * explode + groupBy/count whose cells are ADDITIVE under union, so
+    * the same code runs on the document stream and the complete-mode
+    * state IS the corpus sketch — bounded at 4×1024 counter rows no
+    * matter how many documents flow. The gate's oracle replays the
+    * batch build: stream == batch by hash. */
   def cmsCells(spark: SparkSession, dir: String): DataFrame =
     runToMemory(graft.ops.Sketch.cmsSketch(documentsRaw(spark, dir)),
       "graft_cms_", "complete")

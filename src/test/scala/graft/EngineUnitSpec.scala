@@ -269,11 +269,9 @@ class EngineUnitSpec extends AnyFunSuite {
 
   test("write parallelism policy: embedded URLs serialize, servers keep partitioning") {
     import graft.sinks.JdbcUpsert.effectiveWriteParallelism
-    assert(effectiveWriteParallelism("jdbc:derby:/tmp/x/db", 0) == 1)
-    assert(effectiveWriteParallelism("jdbc:derby://host:1527/db", 0) == 0)
-    assert(effectiveWriteParallelism("jdbc:postgresql://h/db", 0) == 0)
-    // an explicit request always wins
-    assert(effectiveWriteParallelism("jdbc:derby:/tmp/x/db", 3) == 3)
+    assert(effectiveWriteParallelism("jdbc:derby:/tmp/x/db") == 1)
+    assert(effectiveWriteParallelism("jdbc:derby://host:1527/db") == 0)
+    assert(effectiveWriteParallelism("jdbc:postgresql://h/db") == 0)
   }
 
   test("CLI autodetect sniffs backend from path (R11)") {

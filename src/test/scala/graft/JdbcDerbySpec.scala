@@ -649,19 +649,15 @@ class JdbcDerbySpec extends SparkTestBase {
     assert(back.agg(sum("v")).head.getDouble(0) == (1 to 120).map(_ * 1.0).sum)
   }
 
-  test("streaming JDBC sink at writeParallelism > 1 and across a rerun (ADVICE r3)") {
+  test("streaming JDBC sink across a rerun converges (ADVICE r3)") {
     import graft.streaming.StreamingIngest
-    // parallel writers against the embedded store are safe (process-wide
-    // lock) — this exercises the writeParallelism plumbing live
-    StreamingIngest.windowCountsToJdbc(spark, sf, url, "stream_par",
-      writeParallelism = 3)
+    StreamingIngest.windowCountsToJdbc(spark, sf, url, "stream_par")
     val first = JdbcTransfer.readAll(spark, url, "stream_par")
     val n = first.count()
     assert(n > 0)
     // rerun: probe-then-create must fall through to the idempotent MERGE
     // instead of dying on table-already-exists
-    StreamingIngest.windowCountsToJdbc(spark, sf, url, "stream_par",
-      writeParallelism = 3)
+    StreamingIngest.windowCountsToJdbc(spark, sf, url, "stream_par")
     val second = JdbcTransfer.readAll(spark, url, "stream_par")
     assert(second.count() == n, "rerun must converge, not duplicate")
   }

@@ -1975,6 +1975,43 @@ class OpsSpec extends SparkTestBase {
       s"unregistered workDir purposes leak from the prune GC: ${used.diff(registered)}")
   }
 
+  test("streaming workDir refuses a purpose the prune registry does not name") {
+    // purposes reach workDir through helpers too, out of the lint's sight
+    val e = intercept[IllegalArgumentException](
+      StreamingIngest.workDir("stream_unregistered", sf))
+    assert(e.getMessage.contains("'stream_unregistered'"))
+  }
+
+  test("per-batch sink: a replayed micro-batch rewrites its own dir, exactly once") {
+    val src = java.nio.file.Files.createTempDirectory("graft-pbs-src").toString
+    val work = java.nio.file.Files.createTempDirectory("graft-pbs-work").toString
+    try {
+      val ids = events.select(col("event_id").cast("long").as("id"))
+      ids.repartition(4).write.mode("overwrite").parquet(s"$src/in")
+      val schema = spark.read.parquet(s"$src/in").schema
+      def run(): Seq[Long] = {
+        val dirs = StreamingIngest.perBatchSink(spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(s"$src/in"), work, "out") {
+          (b, write) => write(b)
+        }
+        spark.read.parquet(dirs: _*).collect().map(_.getLong(0)).toSeq.sorted
+      }
+      val first = run()
+      assert(first == ids.collect().map(_.getLong(0)).toSeq.sorted,
+        "every row lands once")
+      // forget the last batch's commit: the rerun re-executes batch n
+      // with the same offsets and the same id
+      val commits = new java.io.File(s"$work/checkpoint/commits")
+      val n = commits.list().filter(_.forall(_.isDigit)).map(_.toInt).max
+      assert(n >= 1, "a multi-file source runs several micro-batches")
+      Seq(s"$n", s".$n.crc").foreach(f => new java.io.File(commits, f).delete())
+      val second = run()
+      assert(new java.io.File(commits, s"$n").exists(), s"batch $n must re-run")
+      assert(second.length == first.length && second == first,
+        "the replay must neither duplicate nor lose rows")
+    } finally Seq(src, work).foreach(d => graft.util.Fs.deleteRecursive(new java.io.File(d)))
+  }
+
   test("codec fuzz: random and bit-flipped inputs fail loudly or decode, never escape") {
     import graft.ops.{Bmp, Gif, Png, Wav}
     val rnd = new scala.util.Random(31337)
