@@ -16,14 +16,16 @@ final case class Checkpoint(
     lastUpdated: Long,
     complete: Boolean,
     chunkIndex: Int = -1,
-    /** Hash-bucket path only: the bucket count the run chunked with.
-      * Resume MUST reuse it — recomputing from a changed row count or
-      * config remaps `pmod(hash(pk), n)` and loses/duplicates rows. */
+    /** Read only, to recognise a legacy plan: the bucket count of a v3
+      * parquet hash-bucket checkpoint. The parquet engine restarts such a
+      * plan when it is in flight; nothing writes this field any more. */
     bucketCount: Int = -1,
-    /** Range path only: the full chunk plan (string-encoded upper bounds,
-      * last = the exact key max). Persisted at plan time so a resume
-      * CONTINUES the same plan instead of re-probing + re-quantiling the
-      * remainder — the fixed resume cost drops to a checkpoint read. */
+    /** Single-column key plans: string-encoded chunk upper bounds (last =
+      * the exact key max). Persisted so a resume CONTINUES the same plan
+      * instead of re-planning the remainder — the fixed resume cost drops
+      * to a checkpoint read. The live JDBC engine stores the whole plan
+      * and indexes it by `chunkIndex`; the parquet engine stores the
+      * bounds of the chunks after `chunkIndex`. */
     bounds: Seq[String] = Nil,
     /** Row count at plan time (progress denominator on resume). */
     totalRows: Long = -1L,
@@ -32,10 +34,10 @@ final case class Checkpoint(
       * column plans keep using `bounds` so v1 checkpoints stay readable. */
     boundCols: Seq[Seq[String]] = Nil,
     /** The key columns (in key-sequence order) the persisted plan was
-      * computed OVER. Chunk membership — range bounds and hash buckets
-      * alike — is a function of the key, so resuming a plan under a
-      * different key silently remaps chunks and loses rows; readers
-      * refuse on mismatch. Empty in pre-v3 files (legacy guards apply). */
+      * computed OVER. Chunk membership is a function of the key, so
+      * resuming a plan under a different key silently remaps chunks and
+      * loses rows; readers refuse on mismatch. Empty in pre-v3 files
+      * (legacy guards apply). */
     keyCols: Seq[String] = Nil,
     /** On-disk format version this checkpoint was written with. A reader
       * older than the file REFUSES rather than silently misreading a
@@ -63,9 +65,11 @@ object Checkpoint {
   /** Current on-disk format. v1 = flat single-column `bounds`;
     * v2 adds `bound_cols` (composite-key tuple bounds) and the
     * `version` field itself; v3 adds `key_cols` (the plan's key
-    * identity). Readers accept any version ≤ current (missing = 1) and
-    * refuse anything newer. */
-  val FormatVersion = 3
+    * identity); v4 drops `bucket_count` and gives parquet plans of any
+    * key, composite ones as `bound_cols` tuples (an older reader would
+    * take an empty `bounds` for "no plan"). Readers accept any version ≤
+    * current (missing = 1) and refuse anything newer. */
+  val FormatVersion = 4
 
   def path(dir: String, kind: String, table: String): Path =
     Paths.get(dir, s"${kind}_$table.checkpoint")
@@ -122,7 +126,7 @@ object Checkpoint {
     val bcs = cp.boundCols
       .map(_.map(q).mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val kcs = cp.keyCols.map(q).mkString("[", ", ", "]")
-    s"""{"version": ${cp.version}, "last_key": $keys, "last_updated": ${q(ts)}, "complete": ${cp.complete}, "chunk_index": ${cp.chunkIndex}, "bucket_count": ${cp.bucketCount}, "bounds": $bs, "bound_cols": $bcs, "key_cols": $kcs, "total_rows": ${cp.totalRows}}"""
+    s"""{"version": ${cp.version}, "last_key": $keys, "last_updated": ${q(ts)}, "complete": ${cp.complete}, "chunk_index": ${cp.chunkIndex}, "bounds": $bs, "bound_cols": $bcs, "key_cols": $kcs, "total_rows": ${cp.totalRows}}"""
   }
 
   private[graft] def fromJson(s: String): Option[Checkpoint] = {

@@ -6,7 +6,8 @@ import scala.util.Try
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -16,7 +17,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Driver-side footer reads that plan a parquet transfer with no Spark
   * job: one footer per data file of a `<table>.parquet` source gives the
   * Spark schema (when every file carries the same one), the row count,
-  * and per-row-group key min/max/null-count statistics.
+  * the key columns' NULL counts, and a single integer key's
+  * per-row-group min/max.
   *
   * Every `Left` is a reason to fall back to the Spark planners; the
   * engine logs it verbatim. */
@@ -52,6 +54,16 @@ private[graft] object ParquetFooters {
       }
     }
 
+    /** NULLs in top-level columns `cols`, when every non-empty row group
+      * carries their null counts. */
+    def nulls(cols: Seq[String]): Option[Long] = {
+      val counts = for {
+        b <- metas.flatMap(_.getBlocks.asScala) if b.getRowCount > 0
+        c <- cols
+      } yield stats(b, c).map(_.getNumNulls)
+      if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+    }
+
     /** Key statistics of top-level column `key`, or the reason they
       * cannot plan range chunks. */
     def keyStats(key: String): Either[String, KeyStats] = {
@@ -69,9 +81,7 @@ private[graft] object ParquetFooters {
       }
       if (!signedInt) return Left(s"key '$key' is not a signed INT32/INT64 column")
       val blocks = metas.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0).map { b =>
-        b -> b.getColumns.asScala.find(_.getPath.toArray.toSeq == Seq(key))
-          .flatMap(c => Option(c.getStatistics))
-          .filter(s => s.isNumNullsSet && (s.hasNonNullValue || s.getNumNulls == b.getRowCount))
+        b -> stats(b, key).filter(s => s.hasNonNullValue || s.getNumNulls == b.getRowCount)
       }
       if (blocks.exists(_._2.isEmpty))
         return Left(s"a row group lacks statistics or a null count for key '$key'")
@@ -85,6 +95,12 @@ private[graft] object ParquetFooters {
       else Right(KeyStats(blocks.map(_._1.getRowCount).sum, nulls, groups))
     }
   }
+
+  /** Row group `b`'s statistics of top-level column `key`, when they
+    * carry a null count. */
+  private def stats(b: BlockMetaData, key: String): Option[Statistics[_]] =
+    b.getColumns.asScala.find(_.getPath.toArray.toSeq == Seq(key))
+      .flatMap(c => Option(c.getStatistics)).filter(_.isNumNullsSet)
 
   /** Reads the footer of every data file of `source` (a directory of
     * part files, or one file). Declines a directory holding any visible

@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,45 +52,60 @@ object TransferControl {
   * completion marker.
   *
   * Chunking IS the keyset scan, distributed (SURVEY §4: "keyset
-  * pagination → range-partitioned parallel read"):
-  *  - numeric PK → range chunks over the *remaining* rows (`WHERE pk >
-  *    lastKey`, exactly the reference's resume predicate
-  *    `mysql.go:617-631`); each chunk is internally a parallel Spark
-  *    job, so "batch" granularity costs no serialism;
-  *  - non-numeric PK → deterministic hash buckets (`pmod(hash(pk), n)`),
-  *    the Cassandra token-range analog (S4, `cassandra.go:1066-1142`);
-  *    the bucket count is PERSISTED in the checkpoint and reused on
-  *    resume — recomputing it from a changed row count or config would
-  *    remap `pmod(hash(pk), n)` and silently lose or duplicate rows.
+  * pagination → range-partitioned parallel read"): every key Spark can
+  * order — numeric, string, date/timestamp, decimal, composite — is cut
+  * into contiguous key ranges, chunk j being `key > bound(j-1) AND key
+  * <= bound(j)` (the reference's resume predicate `pk > lastKey`,
+  * `mysql.go:617-631`). A composite key compares lexicographically over
+  * the whole tuple, in the expanded form `k1 > a OR (k1 = a AND k2 > b)`
+  * the parquet reader can push down, so a low-cardinality leading column
+  * still yields a full-width plan. The first chunk's only lower bound is
+  * the resume cursor, if any, and the last chunk has no upper bound, so
+  * every row lands in exactly one chunk whatever the bounds; bounds only
+  * shape chunk balance. Each chunk is internally a parallel Spark job, so
+  * "batch" granularity costs no serialism.
   *
   * Planning reads the source's own metadata, like the reference's
   * indexed-PK plan plus a `COUNT(*)` the database answers without
   * reading rows: [[ParquetFooters]] reads one footer per data file on
   * the driver, so no Spark job runs before the first wave. The footers
   * give the schema (when every file carries the same Spark schema; else
-  * Spark infers it, one job), the hash path's row count, and the range
-  * path's bounds from per-row-group key min/max/null counts. The Spark
-  * planners stay as the fallback — a `source.count()` for hash buckets,
-  * one aggregate (row count, exact max, NULL probe, approximate
-  * quantiles) for ranges — whenever the footers cannot plan: a key that
-  * is not a signed INT32/INT64 column, a row group without key
-  * statistics or a null count, row groups that overlap on the key, a
-  * visible source entry that is not a regular `.parquet` file, more
-  * files than `spark.sql.sources.parallelPartitionDiscovery.threshold`
-  * (footers are read serially), or an extension above a stored cursor.
-  * Each table logs the planner it used, with the fallback reason.
+  * Spark infers it, one job), the row count, the key's NULL counts, and
+  * — for a single signed INT32/INT64 key — the bounds themselves, from
+  * per-row-group key min/max. Every other key, and every footer
+  * fallback, is planned by ONE aggregate over the key columns only: the
+  * exact max key tuple and a sorted Bernoulli sample of key tuples whose
+  * size the chunk count sets. It runs only when a bound is used — a wave
+  * that ends below the top, a cancel that flushes a partial wave, or the
+  * completion cursor of a single numeric key — so a table that fits in
+  * one wave runs no planning job. The footer bounds fall back for a row
+  * group without key statistics or a null count and for row groups that
+  * overlap on the key. The footers give no plan at all — the row and
+  * NULL counts then come from one `count()` job — for a visible source
+  * entry that is not a regular `.parquet` file, more files than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (footers are
+  * read serially), a row group without a key null count, or an extension
+  * above a stored cursor. Each table logs the planner it used, with the
+  * fallback reason.
   *
-  * Both range bounds are applied to the SOURCE key, BEFORE column
-  * transformations (like the reference, which paginates on the raw PK
-  * and transforms only in the SELECT list, `mysql.go:599-631`) — a
-  * transform that rewrites the PK column must not shift chunk membership.
-  * Integral keys are chunked and checkpointed in their own domain
-  * (Long/Decimal), never through Double: snowflake-scale ids >= 2^53
-  * would round, and a rounded-down resume bound re-transfers rows.
+  * Bounds are applied to the SOURCE key, BEFORE column transformations
+  * (like the reference, which paginates on the raw PK and transforms
+  * only in the SELECT list, `mysql.go:599-631`) — a transform that
+  * rewrites the PK column must not shift chunk membership. Bounds travel
+  * as strings rendered by Spark itself (timestamps as epoch
+  * microseconds, binary as hex), and back through a Spark cast, so the
+  * driver never compares key values: 64-bit ids >= 2^53 keep every
+  * digit, and a timestamp bound means the same instant in every session
+  * time zone.
+  *
+  * The plan's bounds, the row total and the key identity live in the
+  * checkpoint, which always records the bounds of the chunks still
+  * ahead of it, so a resume continues the same plan by chunk index — no
+  * re-plan, no re-count.
   *
   * Chunks are range-disjoint, so up to `chunk_parallelism` consecutive
   * chunks run as one [[Waves]] wave: one query over the wave's key range
-  * (or bucket range) writing `mode=overwrite` into ONE subdirectory,
+  * writing `mode=overwrite` into ONE subdirectory,
   * `chunk-<first chunk index>`. The checkpoint only ever records a
   * fully-committed prefix and always lands on a wave's last chunk, so a
   * wave dir is either wholly at or below the checkpoint or wholly above
@@ -109,6 +124,7 @@ final class TableTransferJob(
     control: TransferControl = new TransferControl,
     log: String => Unit = s => System.err.println(s"[transfer] $s"),
     sharedLimiter: Option[RateLimiter] = None) {
+  import TableTransferJob.Key
 
   /** Process-wide rows/sec budget: one limiter shared by every table job
     * of a run (TransferRunner injects it); standalone jobs fall back to
@@ -148,8 +164,7 @@ final class TableTransferJob(
     // A complete checkpoint skips (R6) — unless the mapping opted into
     // incremental sync (same contract as the live JDBC path): the
     // complete checkpoint becomes the BASE the delta extends.
-    val incBase = if (table.incremental) cp0.filter(_.complete) else None
-    if (cp0.exists(_.complete) && incBase.isEmpty) {
+    if (cp0.exists(_.complete) && !table.incremental) {
       log(s"${table.name}: checkpoint complete, skipping (R6)")
       return TransferOutcome.SkippedComplete
     }
@@ -184,30 +199,30 @@ final class TableTransferJob(
     }
 
     val pk = pkCols
-    val firstPk = pk.head
-    val srcNumericPk = source.schema(firstPk).dataType.isInstanceOf[NumericType]
+    val types = pk.map(c => source.schema(c).dataType)
+    val keyName = pk.mkString(", ")
+    // the one key shape whose completion cursor an increment extends
+    val numericKey = pk.size == 1 && types.head.isInstanceOf[NumericType]
 
-    // Incremental extension: the range path's resume cursor (`lastKey`,
-    // the exact key max at completion) already makes the planner chunk
-    // only `pk > cursor` — so extending a COMPLETE range checkpoint is
-    // exactly "strip the complete flag": the delta plans above the old
-    // max and its chunk dirs append after the published prefix. The
-    // cursor orders on a SINGLE numeric key; hash-bucketed and
-    // composite-range bases have no usable key order, so they degrade
-    // to a full idempotent re-transfer (chunk dirs wiped and rewritten)
-    // with a log line instead of silently missing rows. Append-only
-    // contract: rows inserted at or below the old max are not re-read.
-    var extendedBase = false
-    val cp: Option[Checkpoint] = incBase match {
-      case Some(base) if base.bucketCount <= 0 && srcNumericPk && pk.size == 1 =>
+    // Resume state. An incremental run over a COMPLETE checkpoint extends
+    // a single numeric key above its completion cursor (`lastKey`, the
+    // exact key max): the delta plans only `pk > cursor` and its chunk
+    // dirs append after the published prefix. Every other key degrades to
+    // a full idempotent re-transfer (chunk dirs wiped and rewritten) with
+    // a log line instead of silently missing rows: VARCHAR and composite
+    // rows can arrive anywhere in the key order. Append-only contract:
+    // rows inserted at or below the old max are not re-read. An in-flight
+    // checkpoint of an older format (v3 hash buckets, or a plan this
+    // engine does not index the same way) restarts cleanly.
+    val cp: Option[Checkpoint] = cp0 match {
+      case Some(base) if base.complete && numericKey && base.lastKey.contains(pk.head) =>
+        checkKey(base, pk)
         log(s"${table.name}: incremental — extending above the last synced key")
-        extendedBase = true
-        Some(base.copy(complete = false))
-      case Some(base) =>
-        log(s"${table.name}: incremental over a " +
-          s"${if (base.bucketCount > 0) "hash-bucketed" else "composite-key"} plan " +
-          "degrades to a full idempotent re-transfer (the parquet range " +
-          "cursor orders on a single numeric key)")
+        Some(base.copy(complete = false, bounds = Nil, boundCols = Nil))
+      case Some(base) if base.complete =>
+        log(s"${table.name}: incremental over key ($keyName) degrades to a full " +
+          "idempotent re-transfer (the parquet range cursor orders on a single " +
+          "numeric key)")
         // The old COMPLETE state must not survive the wipe below: a
         // crash between cleanupChunksAbove(-1) and the re-transfer's
         // first checkpoint save would otherwise leave destroyed chunk
@@ -216,64 +231,119 @@ final class TableTransferJob(
         Checkpoint.delete(mig.checkpointDir, kind, cpName)
         Files.deleteIfExists(Paths.get(destDir, "_GRAFT_COMPLETE"))
         None
-      case None => cp0
+      case Some(c) if c.version < Checkpoint.FormatVersion =>
+        checkKey(c, pk)
+        log(s"${table.name}: restarting — the in-flight checkpoint holds a v${c.version} " +
+          s"${if (c.bucketCount > 0) "hash-bucket" else "range"} plan, which this " +
+          "engine does not resume")
+        Checkpoint.delete(mig.checkpointDir, kind, cpName)
+        None
+      case other =>
+        other.foreach(checkKey(_, pk))
+        other
     }
 
     // A crash can leave chunk dirs written AFTER the last checkpoint save
-    // (cadence saves at-most-per-chunk, and parallel dispatch can finish
-    // chunks above the prefix): on resume those ranges are re-chunked
-    // with fresh bounds, so stale dirs above the checkpoint would
-    // duplicate rows. Drop them first — checkpoint is truth. (For an
-    // incremental DEGRADE, cp is None, so this wipes every chunk dir and
-    // the rewrite starts clean.)
+    // (cadence saves at-most-per-wave): on resume those ranges are
+    // rewritten, so stale dirs above the checkpoint would duplicate rows.
+    // Drop them first — checkpoint is truth. (With no checkpoint this
+    // wipes every chunk dir and the rewrite starts clean.)
     cleanupChunksAbove(cp.map(_.chunkIndex).getOrElse(-1))
-    // Chunk membership (range bounds AND hash buckets) is a function of
-    // the key: resuming a plan computed over a different key remaps
-    // chunks and silently loses or duplicates rows. v3 checkpoints carry
-    // the plan's key identity — refuse any mismatch outright (the
-    // mode-specific guards below then only have to police legacy files).
-    cp.filter(_.keyCols.nonEmpty).foreach { c =>
-      require(c.keyCols.map(_.toLowerCase) == pk.map(_.toLowerCase),
-        s"checkpoint for '${table.name}' was planned over key " +
-          s"(${c.keyCols.mkString(", ")}) but the spec now keys on " +
-          s"(${pk.mkString(", ")}) — clear the checkpoint to restart")
+    val startChunk = cp.map(_.chunkIndex).getOrElse(-1) + 1
+    // the upper bound of the last committed chunk
+    val cursor: Option[Key] = cp.filter(_.lastKey.nonEmpty).map(c => pk.map(c.lastKey))
+    val stored = cp.map(c => if (pk.size == 1) c.bounds.map(Seq(_)) else c.boundCols)
+      .filter(_.nonEmpty)
+    val rows = cursor.fold(source)(k => source.where(compare(pk, types, k, _ > _, _ > _)))
+
+    val (total: Long, chunks: Int, eager: Option[Seq[Key]]) = stored match {
+      case Some(b) =>
+        log(s"${table.name}: planner checkpoint (stored plan)")
+        (cp.get.totalRows, b.size, Some(b))
+      case None =>
+        // The footers plan a whole table; the rows above a stored cursor
+        // (an incremental extension) are counted by Spark.
+        val whole = footers.filterOrElse(_ => cursor.isEmpty, "extension above a stored cursor")
+        val fromFooters = for {
+          f <- whole
+          _ <- Either.cond(pk.size == 1, (), s"key ($keyName) is composite")
+          k <- f.keyStats(pk.head)
+        } yield (f, k)
+        logPlanner(fromFooters.map(_._1))
+        val (n0, nulls) = fromFooters.toOption.map { case (_, k) => (k.rows, k.nulls) }
+          .orElse(whole.toOption.flatMap(f => f.nulls(pk).map(f.rows -> _)))
+          .getOrElse(countRows(rows, pk))
+        // range predicates are null-rejecting, so NULL keys would be
+        // silently dropped — refuse them, like the reference refuses
+        // PK-less tables, mysql.go:216-218
+        require(nulls == 0,
+          s"table '${table.name}' has $nulls NULL values in key '$keyName' " +
+            "— refusing (rows would be lost by range chunking)")
+        if (n0 == 0) {
+          // Incremental no-op: the on-disk state (complete checkpoint,
+          // marker, publish layout, registration) is already exactly
+          // right — running finish() would rewrite a partitioned
+          // -final layout and drop/recreate the registered table on
+          // every scheduled re-run that found nothing new.
+          if (cursor.isDefined) {
+            log(s"${table.name}: incremental — no rows above the last synced key")
+            return TransferOutcome.Completed
+          }
+          // one empty wave, so the destination reads back as an empty
+          // table with the source's columns
+          writeWave(ExpressionValidator.applyAll(source, table).limit(0), startChunk)
+          return finish(startChunk, None, 0L)
+        }
+        val n = chunkCount(n0)
+        fromFooters match {
+          case Right((_, k)) =>
+            val b = ParquetFooters.rangeBounds(k.groups, n).map(v => Seq(v.toString))
+            (n0, b.size, Some(b))
+          // a single numeric key's completion cursor needs the plan
+          case Left(_) if numericKey =>
+            (n0, n, Some(sampledBounds(rows, pk, types, n0, n)))
+          case Left(_) => (n0, n, None)
+        }
     }
-    val numericPk = srcNumericPk
-    // Chunking mode. Fresh runs: numeric single-column keys take the
-    // range path (quantile bounds + parquet min/max pruning); composite
-    // keys take it only when the LEADING column's cardinality can
-    // actually resolve the target chunk count — quantile bounds over a
-    // 5-value column dedup to ≤5 giant chunks (the same degeneracy the
-    // live path fixed with full-tuple plans; here hash buckets over the
-    // FULL key are the cardinality-independent alternative). Resumes:
-    // the checkpoint's persisted mode fields decide — chunk membership
-    // must never shift mid-transfer; a mode that contradicts the
-    // current key type refuses loudly.
-    val useRange = cp match {
-      case Some(c) if c.bucketCount > 0 =>
-        // A hash checkpoint is legal for any non-numeric key and for any
-        // COMPOSITE numeric-leading key (the cardinality probe is
-        // approximate and data can drift, so the persisted mode wins).
-        // A single-column numeric key NEVER writes one — this state can
-        // only mean the key changed since the checkpoint, and resuming
-        // would remap bucket membership and silently lose rows. Probing
-        // rangeResolvable here would excuse exactly that corruption when
-        // the new key happens to be low-cardinality.
-        require(!numericPk || pk.size > 1,
-          s"checkpoint for '${table.name}' was written by the hash-bucket " +
-            "path but the key now takes the range path — clear the " +
-            "checkpoint to restart")
-        false
-      case Some(c) if c.bounds.nonEmpty =>
-        require(numericPk,
-          s"checkpoint for '${table.name}' was written by the range path " +
-            "but the key is now non-numeric — clear the checkpoint to restart")
-        true
-      case _ =>
-        numericPk && (pk.size == 1 || rangeResolvable(source, firstPk))
+    var plan = eager
+    def bounds: Seq[Key] = plan.getOrElse {
+      val b = sampledBounds(rows, pk, types, total, chunks)
+      plan = Some(b); b
     }
-    if (useRange) runRangeChunks(source, footers, firstPk, cp, extendedBase)
-    else runHashChunks(source, footers, pk, cp)
+    // bound of this run's chunk j (j = -1: the resume cursor)
+    def bound(j: Int): Option[Key] = if (j < 0) cursor else Some(bounds(j))
+    // checkpoint through this run's chunk j, with the bounds still ahead
+    def save(j: Int): Unit = {
+      val ahead = plan.fold(Seq.empty[Key])(_.drop(j + 1))
+      Checkpoint.save(mig.checkpointDir, kind, cpName, Checkpoint(
+        keyMap(pk, bound(j)), System.currentTimeMillis(), complete = false,
+        startChunk + j, bounds = if (pk.size == 1) ahead.map(_.head) else Nil,
+        totalRows = total, boundCols = if (pk.size == 1) Nil else ahead, keyCols = pk))
+    }
+    // persist a plan computed up front so any resume continues it; a
+    // sampled plan is persisted by the first checkpoint that uses it
+    if (stored.isEmpty && plan.isDefined) save(-1)
+
+    val waves = new Waves(mig, table.name, total, control, limiter, log)
+    waves.run(chunks) { (f, l) =>
+      // Both bounds on the SOURCE key, BEFORE transformation — a
+      // transform targeting the PK column must not shift chunk
+      // membership (ADVICE r2; reference paginates on the raw PK,
+      // mysql.go:599-631). A wave ending at the last chunk takes
+      // everything above its lower bound.
+      val lo = bound(f - 1).map(compare(pk, types, _, _ > _, _ > _))
+      val hi = if (l == chunks - 1) None else bound(l).map(compare(pk, types, _, _ <= _, _ < _))
+      val wave = (lo ++ hi).reduceOption(_ && _).fold(source)(source.where)
+      writeWave(ExpressionValidator.applyAll(wave, table), startChunk + f)
+      // the last chunk's checkpoint is the completion save in finish()
+    }(l => if (l < chunks - 1) save(l)) match {
+      case Some(k) =>
+        log(s"${table.name}: interrupted, checkpoint at chunk ${startChunk + k - 1}")
+        TransferOutcome.Interrupted(k)
+      case None =>
+        log(waves.stats.report())
+        finish(startChunk + chunks - 1, plan.map(_.last), total)
+    }
   }
 
   /** The one log line naming a table's planner. */
@@ -281,15 +351,22 @@ final class TableTransferJob(
     log(s"${table.name}: planner " + planner.fold(reason => s"aggregate: $reason",
       f => s"footers (${f.files} files, ${f.rowGroups} row groups)"))
 
-  /** Can quantile bounds over `pkCol` alone resolve a useful chunk
-    * count? One aggregate probe (composite numeric-leading keys only):
-    * the approximate distinct count must comfortably exceed the chunk
-    * target, else the range plan degenerates and hash buckets win. */
-  private def rangeResolvable(source: DataFrame, pkCol: String): Boolean = {
-    val probe = source.agg(count(lit(1)).as("n"),
-      approx_count_distinct(col(pkCol)).as("d")).head()
-    probe.getLong(1) >= 4L * chunkCount(probe.getLong(0))
-  }
+  /** Chunk membership is a function of the key: resuming a plan computed
+    * over a different key remaps chunks and silently loses or duplicates
+    * rows. v3+ checkpoints carry the plan's key identity; older files
+    * name their key through the resume cursor's columns. Refuse any
+    * mismatch outright. */
+  private def checkKey(c: Checkpoint, pk: Seq[String]): Unit =
+    if (c.keyCols.nonEmpty)
+      require(c.keyCols.map(_.toLowerCase) == pk.map(_.toLowerCase),
+        s"checkpoint for '${table.name}' was planned over key " +
+          s"(${c.keyCols.mkString(", ")}) but the spec now keys on " +
+          s"(${pk.mkString(", ")}) — clear the checkpoint to restart")
+    else
+      require(c.lastKey.keySet.subsetOf(pk.toSet),
+        s"checkpoint for '${table.name}' stores a resume cursor for key " +
+          s"(${c.lastKey.keys.mkString(", ")}) but the spec now keys on " +
+          s"(${pk.mkString(", ")}) — clear the checkpoint to restart")
 
   private def cleanupChunksAbove(idx: Int): Unit = {
     val d = new java.io.File(destDir)
@@ -303,234 +380,52 @@ final class TableTransferJob(
   private def chunkCount(total: Long): Int =
     ChunkSizing.chunkCount(total, mig.batchSize, mig.checkpointRowThreshold)
 
-  // -- PK value codec ----------------------------------------------------
+  /** Rows to plan and their NULL keys (a NULL in any key column), in one
+    * job — the plan's row count when the footers cannot give it. */
+  private def countRows(rows: DataFrame, pk: Seq[String]): (Long, Long) = {
+    val r = rows.agg(count(lit(1)),
+      count(when(pk.map(col(_).isNull).reduce(_ || _), 1))).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
-  /** Key values move through chunk bounds, checkpoint strings, and
-    * resume filters in the key's OWN domain. The previous Double routing
-    * lost precision on 64-bit ids >= 2^53 (ADVICE r2): a rounded-down
-    * resume bound re-transfers (bound, trueBound] and duplicates rows. */
-  private sealed trait KeyCodec {
-    def fromRow(v: Any): Any
-    def parse(s: String): Any
-    def fmt(v: Any): String
-    def lt(a: Any, b: Any): Boolean
+  /** The planning aggregate, over the key columns of `rows` only: the
+    * exact max key tuple and a sorted Bernoulli sample of key tuples,
+    * [[TableTransferJob.SamplePerChunk]] per chunk whatever the table's
+    * size. Bound j of n is the sample's j/n point; the last is the exact
+    * max. Bounds never decrease, and an equal pair only leaves a chunk
+    * empty. */
+  private def sampledBounds(rows: DataFrame, pk: Seq[String], types: Seq[DataType],
+                            total: Long, n: Int): Seq[Key] = {
+    def encode(t: Column): Column = array(pk.zip(types).map { case (c, dt) =>
+      TableTransferJob.encode(t.getField(c), dt)
+    }: _*)
+    val fraction = math.min(1.0, TableTransferJob.SamplePerChunk.toDouble * n / total)
+    val r = rows.select(struct(pk.map(col): _*).as("k"), (rand(0) < fraction).as("s"))
+      .agg(encode(max(col("k"))),
+        transform(array_sort(collect_list(when(col("s"), col("k")))), encode(_))).head()
+    val top = r.getSeq[String](0).toSeq
+    val sample = r.getSeq[collection.Seq[String]](1).map(_.toSeq)
+    (1 until n).map { j =>
+      if (sample.isEmpty) top else sample((j * sample.size + n - 1) / n - 1)
+    } :+ top
   }
-  private object LongKey extends KeyCodec {
-    def fromRow(v: Any): Any = v.asInstanceOf[Number].longValue
-    def parse(s: String): Any =
-      s.toLongOption.getOrElse(s.toDouble.toLong) // legacy "42.0" checkpoints
-    def fmt(v: Any): String = v.toString
-    def lt(a: Any, b: Any): Boolean = a.asInstanceOf[Long] < b.asInstanceOf[Long]
-  }
-  private object DecimalKey extends KeyCodec {
-    private def bd(v: Any): java.math.BigDecimal = v match {
-      case d: java.math.BigDecimal => d
-      case d: scala.math.BigDecimal => d.bigDecimal
-      case other => new java.math.BigDecimal(other.toString)
+
+  /** `key > k` (`_ > _, _ > _`) or `key <= k` (`_ <= _, _ < _`) over
+    * the key tuple, lexicographic, in the expanded form the parquet
+    * reader pushes down: `k1 > a OR (k1 = a AND k2 > b)`. */
+  private def compare(pk: Seq[String], types: Seq[DataType], k: Key,
+                      last: (Column, Column) => Column,
+                      step: (Column, Column) => Column): Column = {
+    val cs = pk.zip(types).zip(k).map { case ((c, dt), v) =>
+      (col(c), TableTransferJob.decode(v, dt))
     }
-    def fromRow(v: Any): Any = bd(v)
-    def parse(s: String): Any = new java.math.BigDecimal(s)
-    def fmt(v: Any): String = bd(v).toPlainString
-    def lt(a: Any, b: Any): Boolean = bd(a).compareTo(bd(b)) < 0
-  }
-  private object DoubleKey extends KeyCodec {
-    def fromRow(v: Any): Any = v.asInstanceOf[Number].doubleValue
-    def parse(s: String): Any = s.toDouble
-    /** Integer-valued keys render without a trailing `.0` so the
-      * string-encoded lastKey matches the reference's convention. */
-    def fmt(v: Any): String = {
-      val d = v.asInstanceOf[Double]
-      if (d == math.rint(d) && !d.isInfinite) d.toLong.toString else d.toString
-    }
-    def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Double] < b.asInstanceOf[Double]
-  }
-  private def keyCodec(dt: DataType): KeyCodec = dt match {
-    case ByteType | ShortType | IntegerType | LongType => LongKey
-    case _: DecimalType => DecimalKey
-    case _ => DoubleKey
-  }
-
-  /** The fallback range planner: ONE aggregate over the rows to plan —
-    * row count, TRUE max of the key in its native type (the plan's final
-    * bound must cover every row — a quantile max can undershoot), a
-    * NULL-key probe, and the quantile sketch. The chunk count n depends
-    * on the row count of this same pass, so the sketch is read on a
-    * fixed maxChunks-point grid: bound j of n is grid point
-    * ceil(j·maxChunks/n) − 1, i.e. exactly the j/n quantile whenever n
-    * divides maxChunks. */
-  private def aggregatePlan(rows: DataFrame, pkCol: String,
-                            codec: KeyCodec): TableTransferJob.KeyPlan = {
-    val grid = (1 to maxChunks).map(g => lit(g.toDouble / maxChunks))
-    val probe = rows.agg(
-      count(lit(1)).as("n"),
-      max(col(pkCol)).as("mx"),
-      count(when(col(pkCol).isNull, 1)).as("nulls"),
-      percentile_approx(col(pkCol), array(grid: _*), lit(10000)).as("q")).head()
-    TableTransferJob.KeyPlan(probe.getLong(0), probe.getLong(2), { n =>
-      // percentile_approx keeps the key's native type (no Double
-      // round-trip); the last bound is replaced by the exact max.
-      val sketch = probe.getSeq[Any](3)
-      val qb = (1 to n).map(j => sketch((j * maxChunks + n - 1) / n - 1))
-        .map(codec.fromRow).distinct.sortWith(codec.lt)
-      (qb.dropRight(1) :+ codec.fromRow(probe.get(1))).distinct
-    })
-  }
-
-  /** Numeric-PK path: contiguous key ranges, resume via `pk > lastKey`.
-    *
-    * The chunk PLAN (upper bounds, last = exact key max) is computed once
-    * — from the footers, else by [[aggregatePlan]] — and persisted in the
-    * checkpoint; a resume continues the same plan from the last completed
-    * bound — no re-plan, so resume overhead is a checkpoint read (mirrors
-    * the hash path's persisted bucket count). */
-  private def runRangeChunks(source: DataFrame,
-                             footers: Either[String, ParquetFooters.Footers],
-                             pkCol: String, cp: Option[Checkpoint],
-                             extendedBase: Boolean = false): TransferOutcome = {
-    val codec = keyCodec(source.schema(pkCol).dataType)
-    // Legacy (pre-v3) files carry no key_cols; their lastKey map is keyed
-    // by the column the plan was computed over, so a cursor stored under
-    // a DIFFERENT name is a key swap — restarting the plan would rewrite
-    // every bound into fresh chunk dirs while the old prefix dirs
-    // survive, duplicating rows on read-back. Refuse instead.
-    cp.filter(c => c.keyCols.isEmpty && c.lastKey.nonEmpty).foreach { c =>
-      require(c.lastKey.contains(pkCol),
-        s"checkpoint for '${table.name}' stores a resume cursor for key " +
-          s"(${c.lastKey.keys.mkString(", ")}) but the spec now keys on " +
-          s"'$pkCol' — clear the checkpoint to restart")
-    }
-    val lastKey = cp.flatMap(_.lastKey.get(pkCol)).map(codec.parse)
-    val startChunk = cp.map(_.chunkIndex).getOrElse(-1) + 1
-    val stored = cp.filter(c => c.bounds.nonEmpty && c.totalRows >= 0)
-
-    val (planBounds: Seq[Any], total: Long) = stored match {
-      case Some(c) =>
-        log(s"${table.name}: planner checkpoint (stored plan)")
-        (c.bounds.map(codec.parse), c.totalRows)
-      case None =>
-        // The footers plan a whole table; the rows above a stored cursor
-        // (an incremental extension) take the aggregate over `pk > cursor`.
-        val fromFooters = for {
-          f <- footers
-          _ <- Either.cond(lastKey.isEmpty, (), "extension above a stored cursor")
-          _ <- Either.cond(codec eq LongKey, (),
-            s"key '$pkCol' is not a signed INT32/INT64 column")
-          k <- f.keyStats(pkCol)
-        } yield (f, k)
-        logPlanner(fromFooters.map(_._1))
-        val plan = fromFooters match {
-          case Right((_, k)) =>
-            TableTransferJob.KeyPlan(k.rows, k.nulls,
-              n => ParquetFooters.rangeBounds(k.groups, n))
-          case Left(_) => aggregatePlan(
-            lastKey.fold(source)(k => source.where(col(pkCol) > lit(k))), pkCol, codec)
-        }
-        val n0 = plan.rows
-        // range predicates are null-rejecting, so NULL keys would be
-        // silently dropped — refuse them, like the reference refuses
-        // PK-less tables, mysql.go:216-218
-        require(plan.nulls == 0,
-          s"table '${table.name}' has ${plan.nulls} NULL values in key " +
-            s"'$pkCol' — refusing (rows would be lost by range chunking)")
-        if (n0 == 0) {
-          // Incremental no-op: the on-disk state (complete checkpoint,
-          // marker, publish layout, registration) is already exactly
-          // right — running finish() would rewrite a partitioned
-          // -final layout and drop/recreate the registered table on
-          // every scheduled re-run that found nothing new.
-          if (extendedBase) {
-            log(s"${table.name}: incremental — no rows above the last synced key")
-            return TransferOutcome.Completed
-          }
-          // one empty wave, like the hash path's, so the destination
-          // reads back as an empty table with the source's columns
-          writeWave(ExpressionValidator.applyAll(source, table).limit(0), startChunk)
-          return finish(startChunk, lastKey.map(k => Map(pkCol -> codec.fmt(k))))
-        }
-        (plan.bounds(chunkCount(n0)), n0)
-    }
-    val boundsStr = planBounds.map(codec.fmt)
-    def save(lk: Option[Any], idx: Int, complete: Boolean): Unit =
-      Checkpoint.save(mig.checkpointDir, kind, cpName,
-        Checkpoint(lk.map(k => Map(pkCol -> codec.fmt(k))).getOrElse(Map.empty),
-          System.currentTimeMillis(), complete, idx,
-          bounds = boundsStr, totalRows = total, keyCols = pkCols))
-    // persist the plan up front so any resume continues it
-    if (stored.isEmpty) save(lastKey, startChunk - 1, complete = false)
-
-    // bounds still ahead of the resume cursor (a completed chunk's bound
-    // IS an element of the plan, so strict > resumes exactly after it)
-    val todo = lastKey match {
-      case Some(k) => planBounds.filter(b => codec.lt(k, b))
-      case None => planBounds
-    }
-    if (todo.isEmpty)
-      return finish(startChunk, Some(Map(pkCol -> codec.fmt(planBounds.last))))
-
-    // bound of todo chunk j (j = -1: the resume cursor)
-    def bound(j: Int): Option[Any] = if (j < 0) lastKey else Some(todo(j))
-    val waves = new Waves(mig, table.name, total, control, limiter, log)
-    waves.run(todo.length) { (f, l) =>
-      // Both bounds on the SOURCE key, BEFORE transformation — a
-      // transform targeting the PK column must not shift chunk
-      // membership (ADVICE r2; reference paginates on the raw PK,
-      // mysql.go:599-631). A wave ending at the last chunk takes
-      // everything above its lower bound (the planned bound is the exact
-      // max; the open top end also absorbs any rows above a legacy
-      // checkpoint's undershot max).
-      val lo = bound(f - 1).map(col(pkCol) > lit(_))
-      val hi = if (l == todo.length - 1) None else bound(l).map(col(pkCol) <= lit(_))
-      val wave = (lo ++ hi).reduceOption(_ && _).fold(source)(source.where)
-      writeWave(ExpressionValidator.applyAll(wave, table), startChunk + f)
-    }(l => save(bound(l), startChunk + l, complete = false)) match {
-      case Some(k) =>
-        log(s"${table.name}: interrupted, checkpoint at chunk ${startChunk + k - 1}")
-        TransferOutcome.Interrupted(k)
-      case None =>
-        log(waves.stats.report())
-        finish(startChunk + todo.length - 1,
-          Some(Map(pkCol -> codec.fmt(planBounds.last))))
+    cs.init.foldRight(last(cs.last._1, cs.last._2)) { case ((c, v), rest) =>
+      step(c, v) || (c === v && rest)
     }
   }
 
-  /** Non-numeric-PK path: deterministic hash buckets (token-range
-    * analog); resume = skip bucket indices <= checkpointed. The bucket
-    * count comes from the CHECKPOINT on resume (ADVICE r2): recomputing
-    * it from a changed source count or config would remap
-    * `pmod(hash(pk), n)` across buckets and lose/duplicate rows. */
-  private def runHashChunks(source: DataFrame,
-                            footers: Either[String, ParquetFooters.Footers],
-                            pk: Seq[String],
-                            cp: Option[Checkpoint]): TransferOutcome = {
-    // Row count comes from the CHECKPOINT on resume (it was persisted at
-    // plan time, like the range path's totalRows) — a resume must not pay
-    // a full count scan just to size progress (VERDICT r3 #8). A fresh
-    // plan counts from the footers, else with one `count()`.
-    val total = cp.map(_.totalRows).filter(_ >= 0) match {
-      case Some(t) =>
-        log(s"${table.name}: planner checkpoint (stored plan)")
-        t
-      case None =>
-        logPlanner(footers)
-        footers.fold(_ => source.count(), _.rows)
-    }
-    val n = cp.map(_.bucketCount).filter(_ > 0).getOrElse(chunkCount(total))
-    val doneBucket = cp.map(_.chunkIndex).getOrElse(-1)
-    val bucketExpr = pmod(hash(pk.map(col): _*), lit(n))
-    val waves = new Waves(mig, table.name, total, control, limiter, log)
-    waves.run(n - doneBucket - 1) { (f, l) =>
-      val (b0, b1) = (doneBucket + 1 + f, doneBucket + 1 + l)
-      writeWave(ExpressionValidator.applyAll(
-        source.where(bucketExpr.between(b0, b1)), table), b0)
-    }(l => saveCp(None, doneBucket + 1 + l, complete = false, bucketCount = n,
-      totalRows = total)) match {
-      case Some(k) => TransferOutcome.Interrupted(k)
-      case None =>
-        log(waves.stats.report())
-        finish(n - 1, None, bucketCount = n, totalRows = total)
-    }
-  }
+  private def keyMap(pk: Seq[String], k: Option[Key]): Map[String, String] =
+    k.fold(Map.empty[String, String])(pk.zip(_).toMap)
 
   /** Idempotent wave write into `chunk-<idx>` (idx = the wave's first
     * chunk) with retry; returns rows written. The count rides the write
@@ -548,17 +443,8 @@ final class TableTransferJob(
     }
   }
 
-  private def saveCp(lastKey: Option[Map[String, String]], chunkIdx: Int,
-                     complete: Boolean, bucketCount: Int = -1,
-                     totalRows: Long = -1L): Unit =
-    Checkpoint.save(mig.checkpointDir, kind, cpName,
-      Checkpoint(lastKey.getOrElse(Map.empty), System.currentTimeMillis(),
-        complete, chunkIdx, bucketCount, totalRows = totalRows,
-        keyCols = pkCols))
-
-  private def finish(lastChunk: Int, lastKey: Option[Map[String, String]],
-                     bucketCount: Int = -1,
-                     totalRows: Long = -1L): TransferOutcome = {
+  private def finish(lastChunk: Int, lastKey: Option[Key],
+                     totalRows: Long): TransferOutcome = {
     val hasChunks = Option(new java.io.File(destDir).listFiles())
       .getOrElse(Array.empty).exists(f => f.isDirectory && f.getName.startsWith("chunk-"))
     // Publish step: when the spec asks for a partitioned target layout,
@@ -614,17 +500,38 @@ final class TableTransferJob(
       spark.sql(s"CREATE TABLE $ident USING parquet " +
         s"OPTIONS (path '$escaped'$opts)")
     }
-    saveCp(lastKey, lastChunk, complete = true, bucketCount = bucketCount,
-      totalRows = totalRows)
+    Checkpoint.save(mig.checkpointDir, kind, cpName,
+      Checkpoint(keyMap(pkCols, lastKey), System.currentTimeMillis(),
+        complete = true, lastChunk, totalRows = totalRows, keyCols = pkCols))
     Files.writeString(Paths.get(destDir, "_GRAFT_COMPLETE"), "")
     TransferOutcome.Completed
   }
 }
 
 object TableTransferJob {
-  /** A range plan before sizing: the rows to plan, their NULL keys, and
-    * the upper bounds of `n` chunks over them (last = the exact key max). */
-  private final case class KeyPlan(rows: Long, nulls: Long, bounds: Int => Seq[Any])
+  /** A key tuple, one Spark-rendered string per key column
+    * ([[encode]]). */
+  private type Key = Seq[String]
+
+  /** Sampled key tuples per planned chunk. */
+  private val SamplePerChunk = 32
+
+  /** A key value as the string a checkpoint stores: Spark's own cast,
+    * except timestamps (epoch microseconds: a rendered local time would
+    * depend on the session time zone) and binary (hex). [[decode]]
+    * inverts it exactly. */
+  private def encode(c: Column, dt: DataType): Column = dt match {
+    case TimestampType => unix_micros(c).cast(StringType)
+    case BinaryType => hex(c)
+    case _ => c.cast(StringType)
+  }
+
+  /** The key literal a stored string stands for. */
+  private def decode(v: String, dt: DataType): Column = dt match {
+    case TimestampType => timestamp_micros(lit(v.toLong))
+    case BinaryType => unhex(lit(v))
+    case _ => lit(v).cast(dt)
+  }
 
   /** Escape a Spark SQL backtick-quoted identifier: backticks double
     * (the identifier analog of `''` in string literals). */

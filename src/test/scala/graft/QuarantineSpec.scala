@@ -10,6 +10,7 @@ import graft.ops.{Bmp, Mp4, Multimodal, Png, Wav}
   * byte-identical to the strict paths'. */
 class QuarantineSpec extends SparkTestBase {
   import spark.implicits._
+  import Multimodal.QBase
 
   private val cleanIds = (0L until 24L).toSeq
 
@@ -252,38 +253,27 @@ class QuarantineSpec extends SparkTestBase {
   // ---- the poisoned book: good verdicts byte-identical, corrupt rows
   //      quarantined with the fixture-pinned reasons --------------------
 
-  private val QBase = 10000000L
-
   private def cleanBook(): DataFrame =
     Multimodal.mediaAdmissionBookSafe(
       bin(Multimodal.syntheticBmp, "img"), bin(Multimodal.syntheticWav, "clip"),
       bin(Multimodal.syntheticVideoMp4, "vid"), bin(Multimodal.syntheticMp4, "vid"))
 
+  /** The clean corpora plus the poisoned-ingest fixtures' corrupt assets:
+    * the image and perceptual video kinds are the gates' own; the audio
+    * and exact-MP4 kinds exist only here. */
   private def poisonedBook(): DataFrame = {
-    def withPoison(good: DataFrame, c: String,
-                   gen: (Long, Int) => Array[Byte], k: Int): DataFrame =
-      good.unionByName(cleanIds.filter(_ % 5 == 0)
-        .map(e => (QBase + e, gen(e, ((e / 5) % k).toInt))).toDF("id", c))
+    def withPoison(good: DataFrame, c: String, kinds: Seq[Long => Array[Byte]]): DataFrame =
+      good.unionByName(cleanIds.flatMap(Multimodal.poisoned(_, kinds)).toDF("id", c))
     Multimodal.mediaAdmissionBookSafe(
-      withPoison(bin(Multimodal.syntheticBmp, "img"), "img", (e, kind) => kind match {
-        case 0 => Multimodal.poisonTruncated(Multimodal.syntheticBmp(QBase + e))
-        case 1 => Multimodal.poisonPngBomb()
-        case _ => Multimodal.poisonPngBadCrc(QBase + e)
-      }, 3),
-      withPoison(bin(Multimodal.syntheticWav, "clip"), "clip", (e, kind) => kind match {
-        case 0 => Multimodal.poisonTruncated(Multimodal.syntheticWav(QBase + e))
-        case _ => Multimodal.poisonWavBadMagic(QBase + e)
-      }, 2),
-      withPoison(bin(Multimodal.syntheticVideoMp4, "vid"), "vid", (e, kind) => kind match {
-        case 0 => Multimodal.poisonTruncated(Multimodal.syntheticVideoMp4(QBase + e), 16)
-        case 1 => Multimodal.poisonMp4Bomb(Multimodal.syntheticVideoMp4(QBase + e))
-        case _ => Multimodal.poisonMp4Keyframe(Multimodal.syntheticVideoMp4(QBase + e))
-      }, 3),
-      withPoison(bin(Multimodal.syntheticMp4, "vid"), "vid", (e, kind) => kind match {
-        case 0 => Multimodal.poisonTruncated(Multimodal.syntheticMp4(QBase + e), 16)
-        case 1 => Multimodal.poisonMp4Bomb(Multimodal.syntheticMp4(QBase + e))
-        case _ => Multimodal.syntheticMp4(QBase + e) // exact tier stays good
-      }, 3))
+      withPoison(bin(Multimodal.syntheticBmp, "img"), "img", Multimodal.ImagePoisons),
+      withPoison(bin(Multimodal.syntheticWav, "clip"), "clip", Seq(
+        e => Multimodal.poisonTruncated(Multimodal.syntheticWav(QBase + e)),
+        e => Multimodal.poisonWavBadMagic(QBase + e))),
+      withPoison(bin(Multimodal.syntheticVideoMp4, "vid"), "vid", Multimodal.VideoPoisons),
+      withPoison(bin(Multimodal.syntheticMp4, "vid"), "vid", Seq(
+        e => Multimodal.poisonTruncated(Multimodal.syntheticMp4(QBase + e), 16),
+        e => Multimodal.poisonMp4Bomb(Multimodal.syntheticMp4(QBase + e)),
+        e => Multimodal.syntheticMp4(QBase + e)))) // exact tier stays good
   }
 
   // ---- mismatched tier id sets: full-outer join, never a silent drop --

@@ -369,7 +369,7 @@ class TransferJobSpec extends SparkTestBase {
     assert(cp.lastKey("id") == (base + 99L).toString)
   }
 
-  test("hash-bucket resume reuses the persisted bucket count (ADVICE r2)") {
+  test("a string-key resume under a new batch size continues its stored plan") {
     import spark.implicits._
     val work = Files.createTempDirectory("xferbkt").toString
     (1 to 40).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
@@ -380,16 +380,21 @@ class TransferJobSpec extends SparkTestBase {
       EndpointSpec("parquet", path = s"$work/dest"),
       MigrationSpec(batchSize = batch, checkpointRowThreshold = batch,
         checkpointDir = s"$work/cp", rateLimit = 100000000))
-    // first run with batch=5 → 8 buckets; kill early
+    // first run with batch=5 → 8 chunks; killed after the first chunk
     val first = new TableTransferJob(spark, spec(5), t, KillAfter(1), _ => ()).run()
-    assert(first.isInstanceOf[TransferOutcome.Interrupted])
+    assert(first == TransferOutcome.Interrupted(1))
     val cp = Checkpoint.load(s"$work/cp", "parquet",
       TableTransferJob.checkpointName(spec(5), t)).get
-    assert(cp.bucketCount == 8, s"expected 8 buckets persisted, got ${cp.bucketCount}")
-    // resume with a CHANGED batch size — must keep the original 8-bucket
-    // mapping, else pmod(hash(pk), n) remaps and loses/duplicates rows
-    val second = new TableTransferJob(spark, spec(20), t, new TransferControl, _ => ()).run()
+    assert(cp.chunkIndex == 0 && cp.bounds.size == 7 && cp.lastKey.contains("sku"), cp)
+    // resume with a CHANGED batch size: the 7 stored chunks still run
+    // (re-planning at batch=20 would cut 2 chunks), above the cursor
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val second = new TableTransferJob(spark, spec(20), t, new TransferControl,
+      s => { lines.add(s); () }).run()
     assert(second == TransferOutcome.Completed)
+    assert(lines.toArray.exists(_.toString.endsWith("planner checkpoint (stored plan)")))
+    assert(Checkpoint.load(s"$work/cp", "parquet",
+      TableTransferJob.checkpointName(spec(20), t)).get.chunkIndex == 7)
     val dest = TableTransferJob.readTarget(spark, spec(20), "items")
     assert(dest.count() == 40)
     assert(dest.select("sku").distinct().count() == 40)
@@ -490,28 +495,6 @@ class TransferJobSpec extends SparkTestBase {
     assert(out.head.outcome.failed.get.getMessage.contains("allowlist"))
   }
 
-  test("composite key with a LOW-CARDINALITY numeric leading column routes to hash buckets") {
-    // l_linenumber has ≤7 distinct values: quantile bounds over it would
-    // dedup to ≤7 giant chunks (the degeneracy the live path fixed with
-    // full-tuple plans) — the parquet engine must pick the
-    // cardinality-independent hash-bucket mode instead, and the
-    // kill/resume cycle must follow the persisted mode.
-    val t = TableMapping("lineitem", targetName = Some("li_lowcard"),
-      primaryKey = Some("l_linenumber,l_orderkey"))
-    val (spec, _) = freshSpec(Seq(t), batch = 500)
-    new TableTransferJob(spark, spec, t, KillAfter(2), _ => ()).run()
-    val cp = Checkpoint.load(spec.migration.checkpointDir, "parquet",
-      TableTransferJob.checkpointName(spec, t)).get
-    assert(cp.bucketCount > 1 && cp.bounds.isEmpty,
-      s"expected the hash-bucket mode with >1 chunk, got $cp")
-    val out = new TableTransferJob(spark, spec, t, new TransferControl, _ => ()).run()
-    assert(out == TransferOutcome.Completed)
-    val dest = TableTransferJob.readTarget(spark, spec, "li_lowcard")
-    val src = graft.sources.Tables(spark, sf, "lineitem")
-    assert(dest.count() == src.count())
-    assert(dest.except(src).isEmpty && src.except(dest).isEmpty)
-  }
-
   test("an interrupted run refuses to resume under a DIFFERENT key (both modes)") {
     // Chunk membership is a function of the key; resuming another key's
     // plan remaps chunks (lost or duplicated rows). v3 checkpoints carry
@@ -558,41 +541,203 @@ class TransferJobSpec extends SparkTestBase {
   }
 
   test("a hash checkpoint under a now-single-numeric key refuses to resume") {
-    // A single-column numeric key NEVER writes a hash checkpoint, so
-    // finding one can only mean the key changed since the interrupted
-    // run; resuming would remap bucket membership and silently lose
-    // rows. Low cardinality of the new key is NOT an excuse (the guard
-    // must not consult the probe): l_linenumber alone is exactly the
-    // low-card case a probe would wave through.
+    // A v3 in-flight hash-bucket checkpoint, as the bucket chunker wrote
+    // it, found under a CHANGED key: the key-identity guard refuses
+    // before the legacy restart, so a key change is never absorbed
+    // silently. Low cardinality of the new key is NOT an excuse:
+    // l_linenumber alone is exactly the low-card case.
     val t = TableMapping("lineitem", targetName = Some("li_keyswap"),
       primaryKey = Some("l_linenumber,l_orderkey"))
     val (spec, _) = freshSpec(Seq(t), batch = 500)
-    new TableTransferJob(spark, spec, t, KillAfter(2), _ => ()).run()
-    assert(Checkpoint.load(spec.migration.checkpointDir, "parquet",
-      TableTransferJob.checkpointName(spec, t)).get.bucketCount > 1)
+    writeLegacyBuckets(spec, t, complete = false)
     val swapped = t.copy(primaryKey = Some("l_linenumber"))
     val e = intercept[IllegalArgumentException] {
       new TableTransferJob(spark, spec, swapped, new TransferControl, _ => ()).run()
     }
-    // the v3 key-identity guard fires first (it subsumes the
-    // mode-specific hash-bucket guard, which still polices legacy files)
+    // the v3 key-identity guard (the second message is the deleted
+    // hash-path guard's)
     assert(e.getMessage.contains("planned over key") ||
       e.getMessage.contains("hash-bucket path"), e.getMessage)
   }
 
+  /** A v3 hash-bucket checkpoint as the bucket chunker wrote it (8
+    * buckets, key (l_linenumber, l_orderkey)); an in-flight one also
+    * leaves its first wave dir, holding bucket 0..3's rows. */
+  private def writeLegacyBuckets(spec: TransferSpec, t: TableMapping,
+                                 complete: Boolean): Unit = {
+    import org.apache.spark.sql.functions._
+    val chunk = if (complete) 7 else 3
+    val cp = Paths.get(spec.migration.checkpointDir,
+      s"parquet_${TableTransferJob.checkpointName(spec, t)}.checkpoint")
+    Files.createDirectories(cp.getParent)
+    Files.writeString(cp, s"""{"version": 3, "last_key": {}, "last_updated": "2026-10-01T00:00:00Z", "complete": $complete, "chunk_index": $chunk, "bucket_count": 8, "bounds": [], "bound_cols": [], "key_cols": ["l_linenumber", "l_orderkey"], "total_rows": 6000}""")
+    val src = graft.sources.Tables(spark, sf, "lineitem")
+    val bucket = pmod(hash(col("l_linenumber"), col("l_orderkey")), lit(8))
+    val dest = s"${spec.destination.path}/${t.target}"
+    if (complete) (0 to 7 by 4).foreach { b =>
+      src.where(bucket.between(b, b + 3)).write.parquet(f"$dest/chunk-$b%05d")
+    } else src.where(bucket.between(0, 3)).write.parquet(s"$dest/chunk-00000")
+    if (complete) Files.writeString(Paths.get(dest, "_GRAFT_COMPLETE"), "")
+  }
+
+  test("legacy v3 hash-bucket checkpoints: in flight restarts cleanly, complete skips, incremental degrades") {
+    val t = TableMapping("lineitem", targetName = Some("li_legacy"),
+      primaryKey = Some("l_linenumber,l_orderkey"))
+    val src = graft.sources.Tables(spark, sf, "lineitem")
+    def run(spec: TransferSpec, m: TableMapping): (TransferOutcome, Seq[String]) = {
+      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val out = new TableTransferJob(spark, spec, m, new TransferControl,
+        s => { lines.add(s); () }).run()
+      (out, lines.toArray.map(_.toString).toSeq)
+    }
+    def sameAsSource(spec: TransferSpec): Unit = {
+      val dest = TableTransferJob.readTarget(spark, spec, t.target)
+      assert(dest.count() == src.count())
+      assert(dest.except(src).isEmpty && src.except(dest).isEmpty)
+    }
+    // in flight: one logged reason, the checkpoint and every chunk dir
+    // dropped, a fresh range plan — the destination equals a fresh run
+    val (inflight, _) = freshSpec(Seq(t), batch = 500)
+    writeLegacyBuckets(inflight, t, complete = false)
+    val (out, lines) = run(inflight, t)
+    assert(out == TransferOutcome.Completed)
+    assert(lines.count(_.contains("restarting")) == 1, lines)
+    assert(lines.exists(_.contains("holds a v3 hash-bucket plan")), lines)
+    sameAsSource(inflight)
+    val cp = Checkpoint.load(inflight.migration.checkpointDir, "parquet",
+      TableTransferJob.checkpointName(inflight, t)).get
+    assert(cp.complete && cp.version == Checkpoint.FormatVersion && cp.bucketCount < 0, cp)
+    assert(!Files.readString(Checkpoint.path(inflight.migration.checkpointDir, "parquet",
+      TableTransferJob.checkpointName(inflight, t))).contains("bucket_count"))
+    // complete: R6 skips it
+    val (done, _) = freshSpec(Seq(t), batch = 500)
+    writeLegacyBuckets(done, t, complete = true)
+    assert(run(done, t)._1 == TransferOutcome.SkippedComplete)
+    // complete under incremental: the full idempotent re-transfer
+    val inc = t.copy(incremental = true)
+    val (again, incLines) = run(done, inc)
+    assert(again == TransferOutcome.Completed)
+    assert(incLines.exists(_.contains("degrades to a full idempotent re-transfer")), incLines)
+    sameAsSource(done)
+  }
+
   test("composite key with a high-cardinality leading column keeps the range path") {
-    // lineitem's real key order (l_orderkey leading) resolves the chunk
-    // target fine — the probe must NOT push it onto the hash path (range
-    // chunks keep parquet min/max row-group pruning).
+    // lineitem's real key order (l_orderkey leading): the plan is one of
+    // (l_orderkey, l_linenumber) tuples, so chunks keep parquet min/max
+    // row-group pruning on the leading column.
     val t = TableMapping("lineitem", targetName = Some("li_range"))
     val (spec, _) = freshSpec(Seq(t), batch = 500)
     new TableTransferJob(spark, spec, t, KillAfter(1), _ => ()).run()
     val cp = Checkpoint.load(spec.migration.checkpointDir, "parquet",
       TableTransferJob.checkpointName(spec, t)).get
-    assert(cp.bounds.nonEmpty && cp.bucketCount <= 0,
-      s"expected the range mode, got $cp")
+    assert(cp.boundCols.nonEmpty && cp.boundCols.forall(_.size == 2),
+      s"expected a tuple range plan, got $cp")
     assert(new TableTransferJob(spark, spec, t, new TransferControl, _ => ()).run()
       == TransferOutcome.Completed)
+  }
+
+  // --- one range path for every key type ---------------------------------
+
+  /** Transfers `<work>/src/t.parquet` (as `write` leaves it) keyed on `pk`
+    * twice: uninterrupted, and killed mid-plan then resumed — the resume
+    * under session time zone `resumeZone` when given. Both destinations
+    * must hold exactly the source's rows. */
+  private def checkKillResume(pk: String, resumeZone: Option[String] = None)
+                             (write: String => Unit): Unit = {
+    import org.apache.spark.sql.Row
+    val work = Files.createTempDirectory("xferkey").toString
+    write(s"$work/src/t.parquet")
+    val t = TableMapping("t", primaryKey = Some(pk))
+    def spec(leg: String) = TransferSpec(
+      EndpointSpec("parquet", path = s"$work/src", tables = Seq(t)),
+      EndpointSpec("parquet", path = s"$work/$leg"),
+      MigrationSpec(batchSize = 20, checkpointRowThreshold = 20,
+        checkpointDir = s"$work/cp-$leg", rateLimit = 100000000))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Row, Int] =
+      df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val source = rows(spark.read.parquet(s"$work/src/t.parquet"))
+    assert(source.values.sum == 200)
+    assert(new TableTransferJob(spark, spec("full"), t, log = _ => ()).run() ==
+      TransferOutcome.Completed)
+    // 10 chunks: the first wave, then one chunk of the second, commit
+    assert(new TableTransferJob(spark, spec("killed"), t, KillAfter(5), _ => ()).run() ==
+      TransferOutcome.Interrupted(5))
+    val cp = Checkpoint.load(s"$work/cp-killed", "parquet",
+      TableTransferJob.checkpointName(spec("killed"), t)).get
+    assert(cp.chunkIndex == 4 && cp.lastKey.contains(pk) && cp.bounds.size == 5, cp)
+    val zone = "spark.sql.session.timeZone"
+    val before = spark.conf.get(zone)
+    resumeZone.foreach(spark.conf.set(zone, _))
+    try assert(new TableTransferJob(spark, spec("killed"), t, log = _ => ()).run() ==
+      TransferOutcome.Completed)
+    finally spark.conf.set(zone, before)
+    assert(rows(TableTransferJob.readTarget(spark, spec("full"), "t")) == source)
+    assert(rows(TableTransferJob.readTarget(spark, spec("killed"), "t")) == source,
+      "resumed destination differs from an uninterrupted run")
+  }
+
+  private def keyed(key: org.apache.spark.sql.Column)(dir: String): Unit =
+    spark.range(0, 200, 1, 4).select(key.as("k"), org.apache.spark.sql.functions.col("id"))
+      .write.parquet(dir)
+
+  test("kill + resume = uninterrupted on a non-ASCII string key") {
+    import org.apache.spark.sql.functions._
+    val prefixes = array(Seq("a", "é", "ж", "日本", "😀", "Ω", "z").map(lit): _*)
+    checkKillResume("k")(keyed(concat(element_at(prefixes,
+      (pmod(col("id") * 7, lit(7L)) + 1).cast("int")), col("id").cast("string"))))
+  }
+
+  test("kill + resume = uninterrupted on a date key") {
+    import org.apache.spark.sql.functions._
+    checkKillResume("k")(keyed(date_add(lit("1969-12-01").cast("date"),
+      (col("id") * 37 % 9001).cast("int"))))
+  }
+
+  test("kill + resume = uninterrupted on a timestamp key, resumed in another session time zone") {
+    import org.apache.spark.sql.functions._
+    checkKillResume("k", resumeZone = Some("Asia/Kathmandu"))(
+      keyed(timestamp_micros(lit(1700000000000000L) + col("id") * 3600000123L)))
+  }
+
+  test("kill + resume = uninterrupted on a decimal key") {
+    import org.apache.spark.sql.functions._
+    checkKillResume("k")(keyed((col("id") * 1.25 - 100).cast("decimal(20,4)")))
+  }
+
+  test("kill + resume = uninterrupted on a double key") {
+    import org.apache.spark.sql.functions._
+    checkKillResume("k")(keyed(col("id") * 0.1 - 7.3))
+  }
+
+  test("kill + resume = uninterrupted on a long key above 2^53, planned by the sample") {
+    import org.apache.spark.sql.functions._
+    // two files interleaved on the key: the footers decline (row groups
+    // overlap), so the bounds come from the sample aggregate
+    checkKillResume("k") { dir =>
+      val big = lit((1L << 53) + 1L) + col("id")
+      spark.range(0, 200, 2, 1).select(big.as("k"), col("id")).write.parquet(dir)
+      spark.range(1, 200, 2, 1).select(big.as("k"), col("id")).write.mode("append").parquet(dir)
+    }
+  }
+
+  test("NULL keys are refused before any write: a string key, a composite key's second column") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("xfernk").toString
+    Seq[(Long, String)]((1L, "a"), (2L, null), (3L, "c"))
+      .toDF("id", "name").write.parquet(s"$work/src/t.parquet")
+    for ((target, key) <- Seq("by_name" -> "name", "by_id_name" -> "id,name")) {
+      val t = TableMapping("t", targetName = Some(target), primaryKey = Some(key))
+      val spec = TransferSpec(
+        EndpointSpec("parquet", path = s"$work/src", tables = Seq(t)),
+        EndpointSpec("parquet", path = s"$work/dest"),
+        MigrationSpec(checkpointDir = s"$work/cp", rateLimit = 100000000))
+      val e = intercept[IllegalArgumentException] {
+        new TableTransferJob(spark, spec, t, new TransferControl, _ => ()).run()
+      }
+      assert(e.getMessage.contains("has 1 NULL values in key"), e.getMessage)
+      assert(!new java.io.File(s"$work/dest/$target").list().exists(_.startsWith("chunk-")),
+        s"$target: a wave was written before the refusal")
+    }
   }
 
   // --- waves: up to chunk_parallelism plan chunks per query -------------
@@ -625,7 +770,7 @@ class TransferJobSpec extends SparkTestBase {
       assert(done.complete && chunks == 4, s"expected a 4-chunk plan, got $done")
       assert(chunkDirs(ref, t.target) == waveStarts(0, chunks, p))
       val expect = rows(ref)
-      assert(expect.values.sum == expectedCustomer.count())
+      assert(expect.values.sum == graft.sources.Tables(spark, sf, t.name).count())
       for (k <- 0 to chunks) withClue(s"chunk_parallelism $p, kill point $k: ") {
         val spec = specFor(p)
         val out = run(spec, KillAfter(k))
@@ -656,6 +801,23 @@ class TransferJobSpec extends SparkTestBase {
   test("wave contract on the hash path: every chunk_parallelism and kill point") {
     checkWaveContract(customerXform.copy(targetName = Some("cust_waves_hash"),
       primaryKey = Some("c_name")), batch = 38)
+  }
+
+  test("wave contract on a composite key with a low-cardinality leading column") {
+    // l_linenumber has 7 values: the plan ranks the whole
+    // (l_linenumber, l_orderkey) tuple, so it still cuts 4 chunks
+    val t = TableMapping("lineitem", targetName = Some("li_waves_lowcard"),
+      primaryKey = Some("l_linenumber,l_orderkey"))
+    checkWaveContract(t, batch = 1500)
+    // …of about 1,500 rows each: bounds on the leading column alone
+    // could only cut at its 7 values (918 rows for l_linenumber = 7)
+    val (s, _) = freshSpec(Seq(t), batch = 1500)
+    val spec = s.copy(migration = s.migration.copy(chunkParallelism = 1))
+    assert(new TableTransferJob(spark, spec, t, log = _ => ()).run() == TransferOutcome.Completed)
+    val sizes = chunkDirs(spec, t.target).toSeq.sorted.map { i =>
+      spark.read.parquet(f"${spec.destination.path}/${t.target}/chunk-$i%05d").count()
+    }
+    assert(sizes.size == 4 && sizes.forall(n => math.abs(n - 1500) <= 400), sizes)
   }
 
   /** Runs `body` and returns the Spark jobs it submitted plus, per query,
@@ -726,27 +888,53 @@ class TransferJobSpec extends SparkTestBase {
     assert(TableTransferJob.readTarget(spark, spec, "t").count() == 800)
   }
 
-  test("counters: a hash table's file scans read every row once per wave") {
+  /** 320 string keys `k000..k319`, 10 chunks at batch 32; the sample
+    * then holds every key, so bound j is exactly key 32(j+1)−1 and the
+    * three waves at chunk_parallelism 4 cover 128, 128 and 64 keys.
+    * Returns the rows the wave writes' file scans read. */
+  private def stringWaveScans(write: (org.apache.spark.sql.DataFrame, String) => Unit): Long = {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferwaveh").toString
-    (1 to 400).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
-      .write.parquet(s"$work/src/items.parquet")
+    val work = Files.createTempDirectory("xferwaves").toString
+    val keys = (0 until 320).map(i => (f"k$i%03d", i.toDouble)).toDF("sku", "price")
+    write(keys, s"$work/src/items.parquet")
     val t = TableMapping("items", primaryKey = Some("sku"))
     val spec = TransferSpec(
       EndpointSpec("parquet", path = s"$work/src", tables = Seq(t)),
       EndpointSpec("parquet", path = s"$work/dest"),
-      MigrationSpec(batchSize = 40, checkpointRowThreshold = 40,
+      MigrationSpec(batchSize = 32, checkpointRowThreshold = 32,
         checkpointDir = s"$work/cp", rateLimit = 100000000, chunkParallelism = 4))
     val (_, queries) = countQueries {
       assert(new TableTransferJob(spark, spec, t, log = _ => ()).run() ==
         TransferOutcome.Completed)
     }
-    val n = Checkpoint.load(s"$work/cp", "parquet", TableTransferJob.checkpointName(spec, t))
-      .get.bucketCount
-    assert(n == 10)
-    val waves = (n + 3) / 4
-    assert(queries.map(_._1).count(_.startsWith("chunk-")) == waves, queries)
-    assert(queries.map(_._2).sum == waves * 400L, queries)
+    assert(Checkpoint.load(s"$work/cp", "parquet", TableTransferJob.checkpointName(spec, t))
+      .get.chunkIndex == 9, "expected a 10-chunk plan")
+    val waves = queries.filter(_._1.startsWith("chunk-"))
+    assert(waves.map(_._1) == Seq("chunk-00000", "chunk-00004", "chunk-00008"), queries)
+    val dest = TableTransferJob.readTarget(spark, spec, "items")
+    assert(dest.count() == 320 && dest.except(keys).isEmpty)
+    waves.map(_._2).sum
+  }
+
+  test("counters: a string table clustered on the key reads each source row once over all its waves") {
+    // one file per 32-key run, in key order: each wave's key range
+    // prunes every file outside it (hash buckets read all 320 per wave)
+    val scanned = stringWaveScans { (df, dir) =>
+      (0 until 10).foreach { f =>
+        df.where(df("price") >= f * 32.0 && df("price") < (f + 1) * 32.0).coalesce(1)
+          .write.mode("append").parquet(dir)
+      }
+    }
+    assert(scanned == 320L, scanned)
+  }
+
+  test("counters: a randomly ordered string table reads every row once per wave") {
+    // one row group in random key order: no wave can prune it — what
+    // the hash-bucket chunker read on every table
+    val scanned = stringWaveScans { (df, dir) =>
+      df.orderBy(org.apache.spark.sql.functions.rand(7)).coalesce(1).write.parquet(dir)
+    }
+    assert(scanned == 3 * 320L, scanned)
   }
 
   test("an empty source completes; a one-bucket empty wave leaves a readable destination") {
