@@ -1,15 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `sbt "runMain graft.Verify <sfDir> <outDir> [gate,gate,...]"`. */
 object Verify {
+  val Usage = "usage: graft.Verify <sfDir> <outDir> [gate,gate,...]"
+
+  /** `(sfDir, outDir, only)`, or the usage text for a wrong argument
+    * count. The optional third argument is a comma-separated gate filter
+    * (local iteration only — the driver always calls with two). */
+  def parseArgs(args: Array[String]): Either[String, (String, String, Option[Set[String]])] =
+    args match {
+      case Array(s, o)    => Right((s, o, None))
+      case Array(s, o, f) => Right((s, o, Some(f.split(',').toSet)))
+      case _              => Left(Usage)
+    }
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
-    // iteration only — the driver always calls with two args)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+    val (sfDir, outDir, only) = parseArgs(args) match {
+      case Right(parsed) => parsed
+      case Left(usage) =>
+        System.err.println(usage)
+        sys.exit(2)
     }
     val spark = Sessions.builder("graft-verify", Sessions.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -26,14 +38,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // Escaped JSON (graft.util.Fs) — a tab or CR in builder-authored SQL
-    // would otherwise make the driver's json.load fail and silently zero
-    // the round's correctness.
-    import graft.util.Fs.{jsonEscape => q}
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    DumpOracle.write(outDir, only)
     spark.stop()
   }
 }

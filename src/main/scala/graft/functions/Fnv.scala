@@ -68,11 +68,4 @@ object Fnv {
   /** Column API: `fnv32(col, seed)`. */
   def fnv32(c: Column, seed: Long): Column =
     GraftShim.column(Fnv1a32(GraftShim.expression(c), seed))
-
-  /** The SAME hash in portable DuckDB SQL (for oracle construction):
-    * left-fold of the code-point list, 32-bit wrap via `% 2^32`. */
-  def duckdbSql(x: String, seed: Long): String =
-    s"list_reduce(list_prepend($seed::BIGINT, " +
-      s"list_transform(range(1, length($x)+1), i -> unicode(substr($x, i, 1)))), " +
-      "(h, c) -> (xor(h, c) * 16777619) % 4294967296)"
 }

@@ -32,11 +32,11 @@ import org.apache.spark.sql.functions.{floor, lit}
   * SUMS of pinned doubles are order-sensitive in the last ulp — run
   * them through DECIMAL, as the logprob and ADC aggregates do.)
   *
-  * [[fxSql]] is the DuckDB twin for NEW oracle strings (interpolated
-  * the way `Fnv.duckdbSql` is). The existing oracle corpus spells the
-  * idiom inline; `PortableSpec`'s oracle scan enforces the contract
-  * over ALL of them — no `round(` anywhere, and every floor-scale
-  * multiply carries its `+ 0.5` — so a hand-typed copy cannot drift.
+  * The DuckDB oracle (the Spark-free `oracle` module, which cannot
+  * call this object) spells the same idiom inline; `PortableSpec`'s
+  * oracle scan enforces the contract over every oracle string — no
+  * `round(` anywhere, and every floor-scale multiply carries its
+  * `+ 0.5` — so a hand-typed copy cannot drift.
   */
 object Portable {
   /** Half-up at `n` decimals: floor(x·10^n + 0.5)/10^n. */
@@ -49,11 +49,4 @@ object Portable {
     * Spark's floor returns BIGINT; cast DuckDB's to match when the
     * value is hashed. */
   def fxInt(c: Column): Column = floor(c + lit(0.5))
-
-  /** DuckDB twin of [[fx]] for oracle SQL interpolation. */
-  def fxSql(e: String, n: Int): String =
-    s"floor(($e) * 1e$n + 0.5) / 1e$n"
-
-  /** DuckDB twin of [[fxInt]] (emits BIGINT to match Spark's floor). */
-  def fxIntSql(e: String): String = s"floor(($e) + 0.5)::BIGINT"
 }

@@ -120,8 +120,10 @@ final case class MediaKey(family: String, key: SigKey,
 /** The twelve invariant-key media families — the ONE place a family is
   * defined. A new family is one more row here; its gate bodies, band
   * constants, checkpoint discipline and stream sink come from
-  * [[MediaKey]]. (The DuckDB oracle CTEs stay independent of this
-  * table on purpose: they re-derive each key from closed form.) */
+  * [[MediaKey]]. The DuckDB oracle re-derives each key from closed
+  * form in its own table (`graft.oracle.OracleSql.invariantFamilies`);
+  * it lives in the `oracle` module, which has neither Spark nor this
+  * object on its classpath, so the compiler keeps it independent. */
 object MediaKeys {
 
   private[ops] val BandBits = 16

@@ -7,18 +7,12 @@ attributable gate-by-gate before a full Verify pass.
 Usage: python3 tools/oracle_profile.py /root/testdata/sf0.01 /tmp/oracle_dump [name ...]
 """
 import sys, os, json, time
-import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from oracle_compare import connect
 
 
 def main(sf_dir, out_dir, only):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = connect(sf_dir)
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     rows = []
     for name in sorted(oracle):
