@@ -18,7 +18,7 @@ object OracleSql {
   val Basis1: Long = 0x811C9DC5L
   /** Second seed of the Carter-Wegman pair (`Fnv.Basis2`). */
   val Basis2: Long = 0x811C9DC5L ^ 0x5BD1E995L
-  /** MinHash modulus (`Dedup.MinhashP`). */
+  /** MinHash modulus (`MinHash.P`). */
   val MinhashP: Long = 1000000007L
   /** HLL estimate numerator α·m²·2^61·100 at m = 4096 (`Sketch.HllEstC`). */
   val HllEstC: BigInt = BigInt("2789659346160465465354889886")

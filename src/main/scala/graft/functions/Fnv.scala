@@ -11,11 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Catalyst `Expression` with whole-stage codegen — the preferred
   * extension tier (custom `Expression` beats a Scala UDF, SURVEY §2.8).
   *
-  * Why it exists: the MinHash pipeline hashes every shingle of every
-  * document — the single hottest inner loop in the engine
-  * (`ops/Dedup.minhashLsh`). md5 there costs a MessageDigest round per
-  * shingle; this is one branch-free integer loop, inlined into the
-  * generated stage code.
+  * Why it exists: the per-token hashes of the text operators (content-
+  * defined chunk boundaries, hashed n-gram features) run once per word
+  * of every document; md5 there costs a MessageDigest round per token,
+  * this is one branch-free integer loop, inlined into the generated
+  * stage code. The MinHash signer ([[MinHashSig]]) folds the same hash
+  * over each shingle's words in its own kernel, without building the
+  * shingle string; [[Fnv.hash32]] is the reference it must equal.
   *
   * Why code points, not bytes: the DuckDB oracle reproduces the hash in
   * portable SQL (`unicode(substr(x, i, 1))` + `list_reduce`), and code

@@ -28,24 +28,15 @@ object Curation {
     * shingles, never raw text). A document shorter than n words has NO
     * n-grams → empty array (under Spark's ANSI default an unguarded
     * element_at past the end would THROW, not return null). Callers
-    * must pass a words column materialized behind a repartition —
-    * referencing `split(text)` inline would let CollapseProject re-run
-    * the split once per window (the O(len²) pathology
-    * `Dedup.shingleSets` measured at 14×). */
+    * pass the `Dedup.withWords` column: it references `w` several
+    * times, so CollapseProject never inlines the split into the
+    * per-window lambda (the O(len²) pathology measured at 14×). */
   private def shingleHashes(w: Column, n: Int): Column = {
     val cnt = size(w) - (n - 1)
     when(cnt > 0, array_distinct(transform(
       sequence(lit(0), cnt - 1),
       i => md5(concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*)))))
       .otherwise(array().cast("array<string>"))
-  }
-
-  /** (doc_id, words) with the split materialized behind a shuffle
-    * boundary so downstream per-window lambdas reference the ARRAY, not
-    * the split expression. */
-  private def withWords(docs: DataFrame): DataFrame = {
-    val parts = docs.sparkSession.sparkContext.defaultParallelism
-    docs.select(col("doc_id"), words.as("w")).repartition(parts)
   }
 
   /** Exact n-gram Jaccard near-duplicate pairs — the exact counterpart
@@ -171,7 +162,7 @@ object Curation {
     * broadcast hard limit). */
   private def sharedShinglePairs(docs: DataFrame, n: Int, dfCap: Int,
                                  maxPairs: Long = DefaultMaxPairs): DataFrame = {
-    val ws = withWords(docs)
+    val ws = Dedup.withWords(docs)
     // (doc_id, one row per shingle) — one explode
     val idx = ws.select(col("doc_id"),
       explode(shingleHashes(col("w"), n)).as("s"))
@@ -253,7 +244,7 @@ object Curation {
                                   bucketCap: Int): DataFrame = {
     val cand = Dedup.lshCandidatePairs(Dedup.bandedKeys(docs, numHashes, bands, n),
       bucketCap, "screened_pairs_buckets_")
-    val ws = withWords(docs)
+    val ws = Dedup.withWords(docs)
     val idx = ws.select(col("doc_id"), explode(shingleHashes(col("w"), n)).as("s"))
     // df cap over the FULL corpus — the rare subuniverse must match the
     // exhaustive op's, not shrink to the candidate docs'
@@ -308,7 +299,7 @@ object Curation {
     * sides are DataFrames of (id, text)). */
   def contamination(docs: DataFrame, benchMaxId: Long = 20, n: Int = 3,
                     minShared: Long = 2): DataFrame = {
-    val shingled = withWords(docs)
+    val shingled = Dedup.withWords(docs)
       .select(col("doc_id"), explode(shingleHashes(col("w"), n)).as("sh"))
     val bench = shingled.where(col("doc_id") < benchMaxId)
       .select(col("doc_id").as("bench_id"), col("sh"))
@@ -340,33 +331,43 @@ object Curation {
   /** Repetition statistics — the Gopher/RefinedWeb-style intra-document
     * repetition filters: fraction of duplicated words and the fraction
     * of all bigrams taken by the single most frequent bigram (high
-    * values flag boilerplate/spam for removal before training). One
-    * explode + two hash aggregations, shuffled on (doc_id[, bigram]). */
+    * values flag boilerplate/spam for removal before training). One row
+    * per input document, `doc_id` the key; NULL text keeps its row
+    * (`n_words` and `dup_word_frac` NULL, `top_bigram_frac` 0.0).
+    *
+    * Scale shape: the text crosses one repartition (as in
+    * `Dedup.withWords`, which drops null text), then one narrow
+    * projection over the words array ([[repetitionSignals]]) — no
+    * explode, no aggregation, no join back on doc_id. */
   def repetitionStats(docs: DataFrame): DataFrame = {
     val parts = docs.sparkSession.sparkContext.defaultParallelism
-    val w = docs.select(col("doc_id"), words.as("w")).repartition(parts)
-    val base = w.select(col("doc_id"),
-      size(col("w")).cast("bigint").as("n_words"),
-      fx(lit(1.0) - size(array_distinct(col("w"))).cast("double") /
-        size(col("w")).cast("double"), 6).as("dup_word_frac"))
-    // single-word docs have NO bigrams: filter before the explode
-    // (sequence(0, -1) would step backwards and index element 0), and
-    // left-join them back with a 0.0 fraction
-    val bigrams = w.where(size(col("w")) >= 2)
-      .select(col("doc_id"), size(col("w")).as("n"),
-        explode(sequence(lit(0), size(col("w")) - 2)).as("i"), col("w"))
-      .select(col("doc_id"), (col("n") - 1).cast("bigint").as("n_bigrams"),
-        concat_ws(" ", element_at(col("w"), col("i") + 1),
-          element_at(col("w"), col("i") + 2)).as("bg"))
-    val top = bigrams.groupBy("doc_id", "n_bigrams", "bg")
-      .agg(count(lit(1)).as("c"))
-      .groupBy("doc_id", "n_bigrams").agg(max(col("c")).as("top"))
-      .select(col("doc_id"),
-        fx(col("top").cast("double") / col("n_bigrams").cast("double"), 6)
-          .as("top_bigram_frac"))
-    base.join(top, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("n_words"), col("dup_word_frac"),
-        coalesce(col("top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
+    docs.select(col("doc_id"), col("text")).repartition(parts)
+      .select(col("doc_id"), words.as("w"))
+      .select(col("doc_id") +: repetitionSignals(col("w")): _*)
+  }
+
+  /** `n_words`, `dup_word_frac` and `top_bigram_frac` of a words
+    * column, as per-row expressions. The top bigram's count is
+    * the longest run in the SORTED bigram array (equal bigrams sit side
+    * by side), folded left to right as (previous, current run, best
+    * finished run); a doc with fewer than two words has no bigram and
+    * scores 0.0. */
+  private def repetitionSignals(w: Column): Seq[Column] = {
+    val n = size(w)
+    val bigrams = zip_with(slice(w, lit(1), n - 1), slice(w, lit(2), n - 1),
+      (a, b) => concat_ws(" ", a, b))
+    val topRun = aggregate(array_sort(bigrams),
+      struct(lit(null).cast("string").as("p"), lit(0).as("r"), lit(0).as("b")),
+      (acc, x) => when(x === acc.getField("p"),
+          struct(x.as("p"), (acc.getField("r") + 1).as("r"), acc.getField("b").as("b")))
+        .otherwise(struct(x.as("p"), lit(1).as("r"),
+          greatest(acc.getField("b"), acc.getField("r")).as("b"))),
+      acc => greatest(acc.getField("b"), acc.getField("r")))
+    Seq(n.cast("bigint").as("n_words"),
+      fx(lit(1.0) - size(array_distinct(w)).cast("double") / n.cast("double"), 6)
+        .as("dup_word_frac"),
+      when(n >= 2, fx(topRun.cast("double") / (n - 1).cast("double"), 6))
+        .otherwise(lit(0.0)).as("top_bigram_frac"))
   }
 
   /** Deterministic weighted mixture sampling + shuffle — training-set
@@ -508,7 +509,7 @@ object Curation {
     * chunk hash (uniform by construction), never on raw text; no
     * cartesian, no driver-side state. */
   def paragraphDedup(docs: DataFrame, chunkWords: Int = 10): DataFrame = {
-    val ws = withWords(docs).where(size(col("w")) >= 1)
+    val ws = Dedup.withWords(docs).where(size(col("w")) >= 1)
     val chunks = ws
       .select(col("doc_id"),
         explode(sequence(lit(0),
@@ -589,7 +590,7 @@ object Curation {
     * document, md5-keyed: `(doc_id, pos, g)`, `pos` 1-based. The shared
     * front half of the span family. */
   private[graft] def stride1Grams(docs: DataFrame, gramWords: Int): DataFrame =
-    withWords(docs).where(size(col("w")) >= gramWords)
+    Dedup.withWords(docs).where(size(col("w")) >= gramWords)
       .select(col("doc_id"),
         explode(sequence(lit(1),
           (size(col("w")) - lit(gramWords) + 1))).as("pos"),
@@ -696,7 +697,7 @@ object Curation {
     * kept/removed word counters. Duplicate coverage rows are harmless
     * (anti-join semantics). */
   private def trimByCoverage(base: DataFrame, covered: DataFrame): DataFrame = {
-    val positioned = withWords(base)
+    val positioned = Dedup.withWords(base)
       .select(col("doc_id"), posexplode(col("w")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("word"))
@@ -762,7 +763,7 @@ object Curation {
     * on doc_id then md5, no cartesian, no driver state. */
   def cdcChunkDedup(docs: DataFrame, boundaryMod: Int = 8): DataFrame = {
     import graft.functions.Fnv
-    val ws = withWords(docs).where(size(col("w")) >= 1)
+    val ws = Dedup.withWords(docs).where(size(col("w")) >= 1)
     val tok = ws.select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "word")))
       .withColumn("trig",
         when(Fnv.fnv32(col("word"), Fnv.Basis1) % boundaryMod === 0, 1L)
@@ -830,24 +831,31 @@ object Curation {
     * bucket → integer weight in [-half, half) via a Knuth
     * multiplicative hash; document score = mean token weight, scaled to
     * [-1, 1]. The weight sum stays in INTEGER arithmetic until the
-    * final division, so summation order cannot move the result.
+    * final division, so summation order cannot move the result. One
+    * row per document with text (`doc_id` the key); NULL text has no
+    * row.
     *
-    * Scale shape: explode + one hash aggregation on doc_id; fully
-    * codegen'd expressions, no UDF, no vocabulary on the driver. */
+    * Scale shape: one narrow projection over the words array
+    * ([[qualityWeightSum]]): no explode, no aggregation on doc_id, no
+    * vocabulary on the driver. */
   def qualityClassifier(docs: DataFrame, buckets: Int = 1024,
                         half: Int = 1024): DataFrame = {
-    val bucket = conv(substring(md5(col("tok")), 1, 8), 16, 10)
-      .cast("bigint") % buckets
-    val iw = (bucket * 2654435761L) % (2L * half) - half
-    docs.select(col("doc_id"), explode(words).as("tok"))
-      .select(col("doc_id"), iw.as("iw"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"), sum(col("iw")).as("sw"))
-      .select(col("doc_id"), col("n_tokens"),
-        fx(col("sw").cast("double") /
-          (col("n_tokens").cast("double") * half), 6).as("score"),
-        when(col("sw") > 0, 1).otherwise(0).as("keep"))
+    val sw = qualityWeightSum(col("w"), buckets, half)
+    Dedup.withWords(docs)
+      .select(col("doc_id"), size(col("w")).cast("bigint").as("n_tokens"),
+        qualityScore(sw, col("w"), half).as("score"),
+        when(sw > 0, 1).otherwise(0).as("keep"))
   }
+
+  /** The classifier's integer weight sum over a words column. */
+  private def qualityWeightSum(w: Column, buckets: Int, half: Int): Column =
+    aggregate(w, lit(0L), (acc, tok) => acc +
+      (conv(substring(md5(tok), 1, 8), 16, 10).cast("bigint") % buckets *
+        2654435761L) % (2L * half) - half)
+
+  /** Mean token weight scaled to [-1, 1], at 6 dp. */
+  private def qualityScore(sw: Column, w: Column, half: Int): Column =
+    fx(sw.cast("double") / (size(w).cast("double") * half), 6)
 
   /** Quality-aware SURVIVORSHIP over near-dup clusters — the policy a
     * real curation pipeline applies after dedup finds the clusters:
@@ -890,24 +898,29 @@ object Curation {
     * drop side of [[graft.ops.Dedup.minhashLsh]] pairs). A document
     * survives iff NO reason fires; `reasons` is the sorted
     * comma-joined code list (`""` for keepers) so downstream audits
-    * can group drops by cause.
+    * can group drops by cause. One row per document with text,
+    * `doc_id` the key.
     *
-    * Scale shape: each signal is its own gated operator's pipeline
-    * (no new shuffle classes); the composition is three equi-joins on
-    * doc_id. Thresholds are calibration knobs, not contracts — the
-    * defaults fire meaningfully on the synthetic corpus and the
-    * oracle pins whatever is configured. */
+    * Scale shape: every per-document signal is built in ONE projection
+    * over the words frame (`Dedup.withWords`) — no explode, no
+    * aggregation on doc_id — followed by the one left join with the
+    * near-dup drop set. The LSH pass reads the same exchange, so the
+    * query reads the documents once. Thresholds are
+    * calibration knobs, not contracts — the defaults fire meaningfully
+    * on the synthetic corpus and the oracle pins whatever is
+    * configured. */
   def curationPipeline(docs: DataFrame,
                        minWords: Int = 15, maxWords: Int = 90,
                        maxTopBigram: Double = 0.1, maxDupWord: Double = 0.68,
                        minScore: Double = -0.25): DataFrame = {
     val none = array().cast("array<string>")
-    val rep = repetitionStats(docs)
-    val q = qualityClassifier(docs).select(col("doc_id"), col("score"))
+    val w = col("w")
     val nd = Dedup.minhashLsh(docs)
       .select(col("doc_b").as("doc_id")).distinct()
       .withColumn("ndup", lit(1))
-    rep.join(q, "doc_id")
+    Dedup.withWords(docs)
+      .select(col("doc_id") +: repetitionSignals(w) :+
+        qualityScore(qualityWeightSum(w, 1024, 1024), w, 1024).as("score"): _*)
       .join(nd, Seq("doc_id"), "left_outer")
       .withColumn("reasons", concat_ws(",", array_sort(flatten(array(
         when(col("n_words") < minWords || col("n_words") > maxWords,
@@ -975,7 +988,7 @@ object Curation {
       "need 0 < stride <= window")
     // the token array is bound as a LAMBDA VARIABLE (transform over a
     // one-element array): inline, the per-chunk slice would re-evaluate
-    // split(text) once per window — the O(len²) pathology withWords
+    // split(text) once per window — the O(len²) pathology `Dedup.withWords`
     // exists to prevent, avoided here without its shuffle
     val chunks = element_at(transform(array(split(col("text"), " ")), w => {
       val n = size(w)

@@ -21,25 +21,59 @@ object Dedup {
   import graft.functions.Portable.fx
 
 
-  /** (doc_id, shingle set) with the words array MATERIALIZED behind a
-    * repartition boundary. Two reasons, both measured: (a) an inline
-    * `split()` inside the transform lambda is re-evaluated per element
-    * (CollapseProject inlines projections — O(len²) work per doc);
-    * (b) small single-file tables arrive as one input split, so the
-    * CPU-heavy shingling would run in a single task. The exchange fixes
-    * both: split computes once per row, and downstream work spreads
-    * across the cluster. */
-  private[graft] def shingleSets(docs: DataFrame, n: Int): DataFrame = {
+  /** `(doc_id, w)`: the ONE words frame of the text signals — one row
+    * per document with text (`doc_id` is the key: null keys and null
+    * text leave here, as no signal is defined for them), spread by one
+    * round-robin exchange ([[spreadText]]) and split on one space right
+    * after it. The exchange exists because small single-file tables
+    * arrive as one input split, so the CPU-heavy signals would run in a
+    * single task; it carries the text, not the array (in traced
+    * `curate_text --scale 20`, carrying the `array<string>` measured
+    * 37.3 MB of `ops.Dedup.shuffle_bytes`, the text 21.1 MB). Every
+    * consumer built over the same `docs` plans the same
+    * exchange, so one query reads the documents once and reuses the
+    * shuffle. A consumer that references `w` only once, inside a
+    * per-window lambda, would let CollapseProject inline the split into
+    * the lambda (re-run per window, O(len²) per doc): every consumer
+    * here references it more than once, or outside a lambda. */
+  private[graft] def withWords(docs: DataFrame): DataFrame =
+    spreadText(docs).select(col("doc_id"), split(col("text"), " ").as("w"))
+
+  /** `(doc_id, text)` behind the one round-robin exchange of [[withWords]]. */
+  private def spreadText(docs: DataFrame): DataFrame = {
     val parts = docs.sparkSession.sparkContext.defaultParallelism
-    val cnt = size(col("w")) - (n - 1)
-    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+    docs.where(col("doc_id").isNotNull && col("text").isNotNull)
+      .select(col("doc_id"), col("text"))
       .repartition(parts)
-      .select(col("doc_id"),
-        when(cnt > lit(0),
-          array_distinct(transform(sequence(lit(0), cnt - 1),
-            i => concat_ws(" ", (0 until n).map(j => element_at(col("w"), i + j + 1)): _*))))
-          .otherwise(array().cast("array<string>")).as("sh"))
   }
+
+  /** The DISTINCT word n-gram shingle set of a words column: `n`
+    * consecutive words joined by one space; empty below `n` words
+    * (under ANSI an unguarded element_at past the end throws). */
+  private[graft] def shingleSet(w: Column, n: Int): Column = {
+    val cnt = size(w) - (n - 1)
+    when(cnt > lit(0),
+      array_distinct(transform(sequence(lit(0), cnt - 1),
+        i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** `(doc_id, sh)` over [[withWords]]. */
+  private[graft] def shingleSets(docs: DataFrame, n: Int): DataFrame =
+    withWords(docs).select(col("doc_id"), shingleSet(col("w"), n).as("sh"))
+
+  /** `(doc_id, sh)` for the docs in `ids` only — the exact-Jaccard
+    * confirm's shingle sets, built from the exchange the signer read
+    * ([[spreadText]] over the same `docs`), split only after the join
+    * has kept the candidates. An INNER join on the distinct ids, not a
+    * semi join: the optimizer pushes a semi join below the exchange
+    * (and so plans a second scan), while this join keeps the exchange
+    * shared. */
+  private def candidateShingleSets(docs: DataFrame, ids: DataFrame,
+                                   n: Int): DataFrame =
+    spreadText(docs).join(ids.distinct(), "doc_id")
+      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), shingleSet(col("w"), n).as("sh"))
 
   /** Exact dedup: group by content hash, keep the smallest doc_id as the
     * canonical representative (hash-groupBy — one shuffle on md5(text),
@@ -48,120 +82,59 @@ object Dedup {
     docs.groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Carter-Wegman hash family base: two independent FNV-1a 32-bit
-    * hashes of the shingle (native codegen'd `Fnv1a32` expression —
-    * replaced md5+hex-conv, the engine's hottest inner loop);
-    * h_j = (h1 + j·h2) mod P. 32-bit values keep j·h2 inside BIGINT
-    * for any j, portable to plain SQL. */
-  private[graft] val MinhashP = 1000000007L
-
   /** The LSH index rows `(doc_id, bk)` — one band key per (doc, band):
-    * [[minhashSignatures]] banded by [[bandSignatures]]. Factored out so
-    * [[minhashLsh]] (all-pairs within one corpus) and
-    * [[incrementalNearDups]] (new batch vs existing corpus) share one
-    * signature pipeline; a production flow persists this frame as the
-    * corpus index and re-reads it per batch. */
+    * [[signatures]] banded by [[bandSignatures]]. Shared by every
+    * corpus-side screen ([[cappedBuckets]], [[incrementalNearDups]],
+    * [[indexAppend]], `Curation`'s band-screened confirms); a
+    * production flow persists this frame as the corpus index and
+    * re-reads it per batch. */
   private[graft] def bandedKeys(docs: DataFrame, numHashes: Int, bands: Int,
                                 shingleLen: Int): DataFrame =
-    bandSignatures(minhashSignatures(docs, numHashes, shingleLen), numHashes, bands)
+    bandSignatures(signatures(withWords(docs), numHashes, shingleLen),
+      numHashes, bands)
 
-  /** The MinHash signature rows `(doc_id, g0 … g{numHashes-1})`.
-    *
-    * Explode a cheap INTEGER sequence and build each shingle string once
-    * per output row. Building the shingle ARRAY and exploding it
-    * re-evaluates the whole array construction in the Filter and again
-    * inside Generate (CollapseProject inlining) — measured 14× slower at
-    * sf0.1. Duplicate shingles are kept: the min-aggregation over a
-    * multiset equals the min over its set, so signatures are unchanged
-    * and the oracle stays as-is. */
-  private[graft] def minhashSignatures(docs: DataFrame, numHashes: Int,
-                                       shingleLen: Int): DataFrame = {
-    val parts = docs.sparkSession.sparkContext.defaultParallelism
-    val cnt = size(col("w")) - (shingleLen - 1)
-    val shingled = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .repartition(parts) // materialize w; spread single-split sources
-      .where(cnt > 0)
-      .select(col("doc_id"), col("w"), explode(sequence(lit(0), cnt - 1)).as("i"))
-      .select(col("doc_id"), concat_ws(" ",
-        (0 until shingleLen).map(j => element_at(col("w"), col("i") + j + 1)): _*).as("s"))
-    val hashed = shingled.select(col("doc_id"),
-      graft.functions.Fnv.fnv32(col("s"), graft.functions.Fnv.Basis1).as("h1"),
-      graft.functions.Fnv.fnv32(col("s"), graft.functions.Fnv.Basis2).as("h2"))
-    val sigAggs = (0 until numHashes).map { j =>
-      min(pmod(col("h1") + lit(j.toLong) * col("h2"), lit(MinhashP))).as(s"g$j")
-    }
-    hashed.groupBy("doc_id").agg(sigAggs.head, sigAggs.tail: _*)
-  }
+  /** `(doc_id, g)`: each document's MinHash signature array
+    * (`graft.functions.MinHashSig`, the one signer — one narrow
+    * projection over a [[withWords]] frame, no shuffle). `g` is NULL
+    * for a document shorter than `shingleLen` words; [[bandKeys]]
+    * drops it. */
+  private[graft] def signatures(words: DataFrame, numHashes: Int,
+                                shingleLen: Int): DataFrame =
+    words.select(col("doc_id"),
+      graft.functions.MinHash.signatures(col("w"), numHashes, shingleLen).as("g"))
 
-  /** Bands a [[minhashSignatures]] frame into `(doc_id, bk)` rows: band
-    * b's key is the md5 of its `numHashes / bands` signature values and
-    * b itself. */
-  private[graft] def bandSignatures(sig: DataFrame, numHashes: Int,
-                                    bands: Int): DataFrame = {
+  /** The band keys of a signature array `g`, as an array (NULL for a
+    * NULL signature, so an `explode` drops the doc): band b's key is
+    * the md5 of its `numHashes / bands` signature values and b itself. */
+  private[graft] def bandKeys(g: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
-    val bandKeys = (0 until bands).map { b =>
+    when(g.isNotNull, array((0 until bands).map { b =>
       md5(concat_ws("|",
-        (0 until r).map(i => col(s"g${b * r + i}").cast("string")) :+ lit(b.toString): _*))
-    }
-    sig.select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
+        (0 until r).map(i => element_at(g, b * r + i + 1).cast("string"))
+          :+ lit(b.toString): _*))
+    }: _*))
   }
 
-  /** Aggregation-free band rows for STREAMING inputs: the same 12
-    * minhashes and 4 band keys as [[bandedKeys]], but each signature is
-    * an `array_min` over the row's own shingle multiset instead of a
-    * `groupBy(doc_id)` min — a streaming frame can band its rows in
-    * append mode (a streaming aggregation could not feed a join).
-    * Returns one row per (doc, band): `(doc_id, sh, bk)` where `sh` is
-    * the DISTINCT shingle set carried for the exact-Jaccard confirm.
-    *
-    * CollapseProject discipline (the batch pipeline's measured 14×
-    * hazard, here with three expensive stages): the first repartition
-    * materializes `w` so the shingle lambda references an attribute;
-    * the shingle set and the hash-pair array are each bound as LAMBDA
-    * VARIABLES (`transform(array(expr), v -> …)` — a lambda argument
-    * evaluates once however often the body references it), so
-    * shingles→hash-pairs→signatures is single-evaluation end to end
-    * without extra shuffles; the second repartition materializes the
-    * (sh, g) struct before the 4 band keys reference `g` 12 times. */
+  /** Bands a [[signatures]] frame into `(doc_id, bk)` rows. */
+  private[graft] def bandSignatures(sig: DataFrame, numHashes: Int,
+                                    bands: Int): DataFrame =
+    sig.select(col("doc_id"), explode(bandKeys(col("g"), numHashes, bands)).as("bk"))
+
+  /** Band rows for STREAMING inputs: the same signatures and band keys
+    * as [[bandedKeys]], one row per (doc, band) `(doc_id, sh, bk)`,
+    * where `sh` is the DISTINCT shingle set carried for the
+    * exact-Jaccard confirm. Every column is a per-row projection, so a
+    * streaming frame bands its rows in append mode (a streaming
+    * aggregation could not feed a join). */
   private[graft] def narrowBandRows(docs: DataFrame, numHashes: Int = 12,
                                     bands: Int = 4,
-                                    shingleLen: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val parts = docs.sparkSession.sparkContext.defaultParallelism
-    val cnt = size(col("w")) - (shingleLen - 1)
-    val shExpr = array_distinct(
-      transform(sequence(lit(0), cnt - 1),
-        i => concat_ws(" ",
-          (0 until shingleLen).map(j => element_at(col("w"), i + j + 1)): _*)))
-    def hpExpr(sh: Column): Column = transform(sh, s => struct(
-      graft.functions.Fnv.fnv32(s, graft.functions.Fnv.Basis1).as("h1"),
-      graft.functions.Fnv.fnv32(s, graft.functions.Fnv.Basis2).as("h2")))
-    // g = the 12 signatures, with the hash-pair array lambda-bound so
-    // it evaluates once per row, not once per signature
-    def sigsExpr(sh: Column): Column = element_at(
-      transform(array(hpExpr(sh)), hp =>
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          j => array_min(transform(hp,
-            h => pmod(h.getField("h1") + j.cast("long") * h.getField("h2"),
-              lit(MinhashP)))))), 1)
-    val sigs = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .repartition(parts)
-      .where(cnt > 0)
-      .select(col("doc_id"), element_at(
-        transform(array(shExpr), sh =>
-          struct(sh.as("sh"), sigsExpr(sh).as("g"))), 1).as("t"))
-      .repartition(parts)
-      .select(col("doc_id"), col("t.sh").as("sh"), col("t.g").as("g"))
-    val bandKeys = (0 until bands).map { b =>
-      md5(concat_ws("|",
-        (0 until r).map(i => element_at(col("g"), b * r + i + 1).cast("string"))
-          :+ lit(b.toString): _*))
-    }
-    sigs.select(col("doc_id"), col("sh"),
-      explode(array(bandKeys: _*)).as("bk"))
-  }
+                                    shingleLen: Int = 3): DataFrame =
+    withWords(docs)
+      .select(col("doc_id"), shingleSet(col("w"), shingleLen).as("sh"),
+        graft.functions.MinHash.signatures(col("w"), numHashes, shingleLen).as("g"))
+      .select(col("doc_id"), col("sh"),
+        explode(bandKeys(col("g"), numHashes, bands)).as("bk"))
 
   /** Gated recall of the banded-minhash SCREEN against the exhaustive
     * exact-Jaccard pair set — the text-dedup sibling of
@@ -212,7 +185,7 @@ object Dedup {
                 thresholdsPct: Seq[Int] = Seq(50)): DataFrame = {
     val scored = graft.ops.Curation.ngramJaccardScored(docs)
       .localCheckpoint(true)
-    val sig = minhashSignatures(docs, numHashes, shingleLen).localCheckpoint(true)
+    val sig = signatures(withWords(docs), numHashes, shingleLen).localCheckpoint(true)
     val cands = bandsList.map { b =>
       b -> lshCandidatePairs(bandSignatures(sig, numHashes, b), bucketCap,
         s"lsh_recall_b${b}_buckets_").localCheckpoint(true)
@@ -245,29 +218,27 @@ object Dedup {
   /** MinHash + banded LSH near-dup pairs with an exact n-gram Jaccard
     * confirmation on the candidates.
     *
-    * shingle → k minhashes (Carter-Wegman over the shingle md5, min over
-    * ints) → b bands of r rows; docs sharing a band key become
-    * candidates (equi-join on the band key = the bucket-join; with
-    * k=12, b=4, r=3 a 0.9-Jaccard pair is missed with probability
-    * (1-0.9³)⁴ ≈ 5e-3, a 0.98 pair with ≈ 1.3e-5) → exact Jaccard on
-    * candidate pairs only, threshold filter kills LSH false positives.
+    * shingle → k minhashes (Carter-Wegman over the shingle's FNV-1a
+    * pair, min over ints) → b bands of r rows; docs sharing a band key
+    * become candidates (with k=12, b=4, r=3 a 0.9-Jaccard pair is
+    * missed with probability (1-0.9³)⁴ ≈ 5e-3, a 0.98 pair with
+    * ≈ 1.3e-5) → exact Jaccard on candidate pairs only, threshold
+    * filter kills LSH false positives.
     *
-    * Shape at scale: explode shingles → per-shingle hash ONCE → map-side
-    * partial min-agg, one shuffle on doc_id → band explode → shuffle
-    * equi-join on band key. No cartesian anywhere.
+    * Shape at scale: the documents are read and shuffled ONCE
+    * ([[withWords]]); the signer is one narrow projection over that
+    * words frame (no per-shingle rows, no doc_id shuffle) → band
+    * explode → capped buckets on the band key. The confirm builds
+    * shingle sets only for candidate docs, from the same exchange
+    * (reused, not re-read). No cartesian anywhere.
     */
   def minhashLsh(docs: DataFrame, numHashes: Int = 12, bands: Int = 4,
                  shingleLen: Int = 3, threshold: Double = 0.5,
                  bucketCap: Int = 256): DataFrame = {
     val cand = lshCandidatePairs(bandedKeys(docs, numHashes, bands, shingleLen),
       bucketCap, "minhash_lsh_buckets_")
-
-    // Exact-Jaccard confirm needs DISTINCT shingle sets — but only for
-    // docs that actually appear in a candidate pair (a small fraction of
-    // the corpus): semi-join down first, then build the sets.
-    val candIds = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-    val shc = shingleSets(docs.join(candIds, Seq("doc_id"), "left_semi"), shingleLen)
+    val shc = candidateShingleSets(docs,
+      cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")), shingleLen)
     val sa = shc.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
     val sb = shc.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
@@ -282,8 +253,8 @@ object Dedup {
     * [[Curation]].
     *
     * Candidate pairs via group-by-band + in-bucket pair expansion: the
-    * same candidate set as a band-key self-join, but the (md5+agg-heavy)
-    * signature pipeline runs ONCE instead of once per join side.
+    * same candidate set as a band-key self-join, but the band index
+    * (signatures + md5 band keys) is built ONCE, not once per join side.
     *
     * Degenerate bands (boilerplate-heavy corpora collapse thousands of
     * docs onto one band key) are CAPPED by [[cappedBucketsFromIndex]],
@@ -384,10 +355,13 @@ object Dedup {
   }
 
   /** Exact Jaccard of two distinct-set array columns, rounded to 6 dp —
-    * the confirm of every shingle-set screen. */
-  private[graft] def jaccard(a: Column, b: Column): Column =
-    fx(size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double"), 6)
+    * the confirm of every shingle-set screen. Both sides are sets, so
+    * |A ∪ B| = |A| + |B| − |A ∩ B|: one hash intersection per pair, no
+    * union array built. */
+  private[graft] def jaccard(a: Column, b: Column): Column = {
+    val i = size(array_intersect(a, b))
+    fx(i.cast("double") / (size(a) + size(b) - i).cast("double"), 6)
+  }
 
   /** A fresh observation name under `prefix`: one `observe` per frame
     * build, so repeated builds never collide. */
@@ -439,11 +413,12 @@ object Dedup {
       .join(cBuckets, "bk")
       .select(col("doc_id").as("batch_id"), explode(col("ids")).as("corpus_id"))
       .distinct()
-    // confirm only the docs that appear in candidates (semi-join down
-    // before the shingle-set build, same as the LSH confirm stage)
-    val shB = shingleSets(batch.join(
-        cand.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi"), shingleLen)
+    // shingle sets only for the docs that appear in candidates: the
+    // batch's from the exchange it was signed from, the corpus's
+    // from the candidate docs alone (semi-join down before the split,
+    // so the standing corpus is never split or shuffled whole)
+    val shB = candidateShingleSets(batch,
+        cand.select(col("batch_id").as("doc_id")), shingleLen)
       .select(col("doc_id").as("batch_id"), col("sh").as("shb"))
     val shC = shingleSets(corpus.join(
         cand.select(col("corpus_id").as("doc_id")).distinct(),

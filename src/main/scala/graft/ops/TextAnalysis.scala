@@ -452,7 +452,7 @@ object TextAnalysis {
     * edits the way an md5 cannot (two docs sharing their minimum shingle
     * hash share at least one shingle). */
   def fingerprint(docs: DataFrame): DataFrame = {
-    val p = graft.ops.Dedup.MinhashP
+    val p = graft.functions.MinHash.P
     val w = words
     val cnt = size(w) - 2
     val shingleHashes = transform(

@@ -113,7 +113,7 @@ class CassandraDdlSpec extends SparkTestBase {
   }
 
   test("transfer to a cassandra destination writes the _cassandra.ddl sidecar") {
-    val work = java.nio.file.Files.createTempDirectory("cassddl").toString
+    val work = tempDir("cassddl")
     spark.range(2).selectExpr("id",
       "named_struct('email', concat('u', id, '@x.io'), " +
         "'addr', named_struct('street', 'Main St', 'zip', 12345)) AS contact",

@@ -642,6 +642,42 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
+  test("property: repetitionStats matches brute force (ties, one word, empty and null text)") {
+    import spark.implicits._
+    def fx6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+    def expected(text: String): (Option[Long], Option[Double], Double) =
+      if (text == null) (None, None, 0.0)
+      else {
+        val w = text.split(" ", -1)
+        val n = w.length
+        val top = if (n < 2) 0.0 else {
+          val bg = w.sliding(2).map(_.mkString(" ")).toSeq
+          fx6(bg.groupBy(identity).values.map(_.size).max.toDouble / (n - 1).toDouble)
+        }
+        (Some(n.toLong), Some(fx6(1.0 - w.distinct.length.toDouble / n.toDouble)), top)
+      }
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("alpha", "beta", "gamma", "", "été")
+    val fixed = Seq(
+      1L -> "a b a b c d c d", // two bigrams tie for the top count
+      2L -> "solo",
+      3L -> "",
+      4L -> null,
+      5L -> "x x x x",
+      6L -> "p  q  p  q") // empty words make bigrams too
+    val random = (100L until 160L).map(i =>
+      i -> Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val rows = fixed ++ random
+    val got = Curation.repetitionStats(rows.toDF("doc_id", "text")).collect()
+      .map(r => r.getLong(0) -> ((Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Double]), r.getDouble(3)))).toMap
+    assert(got.size == rows.size, "one row per document, null text included")
+    rows.foreach { case (id, text) =>
+      assert(got(id) == expected(text), s"doc $id '$text'")
+    }
+    assert(got(1L)._3 == fx6(2.0 / 7.0) && got(2L)._3 == 0.0 && got(4L) == ((None, None, 0.0)))
+  }
+
   test("shard dealing is rank-driven, not id-driven (degenerate-formula guard)") {
     import spark.implicits._
     // four docs in the SAME rank group (ids ≡ 0 mod 16) with distinct

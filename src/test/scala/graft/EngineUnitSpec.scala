@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.TransferSpec
 import graft.engine._
@@ -8,7 +7,7 @@ import graft.engine._
 /** Unit tests for the engine-internal machinery: checkpoint atomicity +
   * JSON round-trip, cadence policy, rate-limiter math, retry/backoff,
   * progress stats, YAML spec loading with reference-parity defaults. */
-class EngineUnitSpec extends AnyFunSuite {
+class EngineUnitSpec extends SparkTestBase {
 
   // --- Checkpoint (R4) --------------------------------------------------
 
@@ -18,7 +17,7 @@ class EngineUnitSpec extends AnyFunSuite {
   }
 
   test("checkpoint save is atomic and leaves no tmp files") {
-    val dir = java.nio.file.Files.createTempDirectory("cp").toString
+    val dir = tempDir("cp")
     val cp = Checkpoint(Map("id" -> "42"), 1L, complete = true, 3)
     Checkpoint.save(dir, "parquet", "users", cp)
     assert(Checkpoint.load(dir, "parquet", "users").contains(cp))
@@ -31,7 +30,7 @@ class EngineUnitSpec extends AnyFunSuite {
   }
 
   test("checkpoint save fsyncs its directory after the rename; round-trips, leaves no tmp") {
-    val dir = java.nio.file.Files.createTempDirectory("cpdur")
+    val dir = java.nio.file.Paths.get(tempDir("cpdur"))
     // the directory fsync is best-effort; on this platform's file
     // systems a directory opens, and a missing one reports false
     assert(Checkpoint.forceDir(dir))
@@ -58,7 +57,7 @@ class EngineUnitSpec extends AnyFunSuite {
   }
 
   test("corrupt checkpoint reads as None, not a crash") {
-    val dir = java.nio.file.Files.createTempDirectory("cp").toString
+    val dir = tempDir("cp")
     java.nio.file.Files.writeString(
       Checkpoint.path(dir, "parquet", "t"), "{not json")
     assert(Checkpoint.load(dir, "parquet", "t").isEmpty)
@@ -101,7 +100,7 @@ class EngineUnitSpec extends AnyFunSuite {
     assert(e.getMessage.contains(s"v${Checkpoint.FormatVersion + 1}"))
     // the refusal must escape load() too — None would mean "no
     // checkpoint" and silently restart the transfer on a fresh plan
-    val dir = java.nio.file.Files.createTempDirectory("cp").toString
+    val dir = tempDir("cp")
     java.nio.file.Files.writeString(Checkpoint.path(dir, "jdbc", "t"), future)
     intercept[CheckpointFormatException](Checkpoint.load(dir, "jdbc", "t"))
     // …while a GARBLED file (no trustworthy version claim) still

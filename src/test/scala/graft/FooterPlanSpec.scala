@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import scala.util.Try
 
@@ -38,7 +37,7 @@ class FooterPlanSpec extends SparkTestBase {
 
   /** A source table `t` (`<work>/src/t.parquet`) with rows (id, v). */
   private def sourceDir(): String =
-    s"${Files.createTempDirectory("fplan")}/src/t.parquet"
+    s"${tempDir("fplan")}/src/t.parquet"
 
   /** Writes (id, v) rows with parquet-mr directly: no Spark schema in
     * the footer. `id` is the parquet declaration of the key column. */
@@ -64,7 +63,7 @@ class FooterPlanSpec extends SparkTestBase {
   private def transfer(src: String, mapping: TableMapping = TableMapping("t",
                          primaryKey = Some("id")),
                        control: TransferControl = new TransferControl,
-                       work: String = Files.createTempDirectory("fplanx").toString)
+                       work: String = tempDir("fplanx"))
       : (Either[String, TransferOutcome], String, Map[Row, Int], Seq[String]) = {
     val spec = TransferSpec(
       EndpointSpec("parquet", path = src.stripSuffix("/t.parquet"), tables = Seq(mapping)),
@@ -189,7 +188,7 @@ class FooterPlanSpec extends SparkTestBase {
 
   test("every fallback to the aggregate planner logs its reason") {
     def planner(dir: String, mapping: TableMapping = TableMapping("t", primaryKey = Some("id")),
-                work: String = Files.createTempDirectory("fplanr").toString): String = {
+                work: String = tempDir("fplanr")): String = {
       val (out, line, dest, _) = transfer(dir, mapping, work = work)
       assert(out == Right(TransferOutcome.Completed), out)
       assert(dest.values.sum == spark.read.parquet(dir).count())
@@ -227,14 +226,14 @@ class FooterPlanSpec extends SparkTestBase {
     // an incremental run plans the rows above its stored cursor with the
     // aggregate; a resume continues its stored plan
     val inc = sourceDir()
-    val work = Files.createTempDirectory("fplani").toString
+    val work = tempDir("fplani")
     val incremental = TableMapping("t", primaryKey = Some("id"), incremental = true)
     rows(300).coalesce(1).write.parquet(inc)
     assert(planner(inc, incremental, work) == "footers (1 files, 1 row groups)")
     rows(400).where(col("id") > 300).coalesce(1).write.mode("append").parquet(inc)
     assert(planner(inc, incremental, work) == "aggregate: extension above a stored cursor")
     val resumed = sourceDir()
-    val rwork = Files.createTempDirectory("fplanr").toString
+    val rwork = tempDir("fplanr")
     rows(800).coalesce(1).write.parquet(resumed)
     val killed = transfer(resumed, control = TransferControl.cancelAfterChecks(2), work = rwork)
     assert(killed._1 == Right(TransferOutcome.Interrupted(2)), killed._1)

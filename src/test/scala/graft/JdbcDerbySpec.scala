@@ -116,8 +116,12 @@ object ParallelStore {
 class JdbcDerbySpec extends SparkTestBase {
 
   private lazy val work = {
-    val dir = java.nio.file.Files.createTempDirectory("derby").toString
-    System.setProperty("derby.system.home", dir) // keeps derby.log out of the repo
+    val dir = tempDir("derby")
+    // derby.log goes to this suite's temp dir, not the repo. The system
+    // home stays where it is: the engine keeps the home it booted with
+    // for the whole JVM, and a temp-dir home deleted with this suite
+    // reappeared, empty, later in the run.
+    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
     // fast deadlock detection: concurrent MERGE writers can deadlock on
     // index page locks; the sink's per-statement Retry absorbs the abort
     System.setProperty("derby.locks.deadlockTimeout", "2")
@@ -752,7 +756,7 @@ class JdbcDerbySpec extends SparkTestBase {
   test("cross-database transfer mirrors and MERGEs into the DESTINATION database") {
     import graft.engine.{JdbcTransferJob, TransferOutcome}
     seedUsers("xdb_src", 120)
-    val destWork = java.nio.file.Files.createTempDirectory("derbydst").toString
+    val destWork = tempDir("derbydst")
     val destUrl = s"jdbc:derby:$destWork/db2;create=true"
     val mig2 = MigrationSpec(batchSize = 500, rateLimit = 1000000000,
       checkpointDir = s"$work/cp_xdb")

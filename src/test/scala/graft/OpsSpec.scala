@@ -1335,7 +1335,7 @@ class OpsSpec extends SparkTestBase {
     // leaves the other column's per-file span at ~the full range
     val o = docs.sparkSession.read.parquet(s"$sf/orders.parquet")
       .select("o_orderkey", "o_custkey")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     Layout.writeZOrdered(o, s"$dir/z", "o_orderkey", "o_custkey", numFiles = 8)
     o.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey")
       .write.parquet(s"$dir/naive")
@@ -1366,7 +1366,7 @@ class OpsSpec extends SparkTestBase {
 
   test("compaction: fewer files, identical content, clustering preserved") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact")
     val docs2 = docs
     docs2.repartition(48).write.parquet(s"$dir/frag")
     def files(p: String) = new java.io.File(p).listFiles()
@@ -1911,7 +1911,7 @@ class OpsSpec extends SparkTestBase {
   test("streaming rate limit: micro-batch sizing + per-batch charges against the global budget") {
     import org.apache.spark.sql.functions._
     // multi-file backlog so maxFilesPerTrigger actually splits it
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rated").toString
+    val tmp = tempDir("graft-rated")
     events.repartition(4).write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val total = events.count()
     // frozen clock: each acquire's sleep is exactly the ideal-time
@@ -1983,8 +1983,8 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("per-batch sink: a replayed micro-batch rewrites its own dir, exactly once") {
-    val src = java.nio.file.Files.createTempDirectory("graft-pbs-src").toString
-    val work = java.nio.file.Files.createTempDirectory("graft-pbs-work").toString
+    val src = tempDir("graft-pbs-src")
+    val work = tempDir("graft-pbs-work")
     try {
       val ids = events.select(col("event_id").cast("long").as("id"))
       ids.repartition(4).write.mode("overwrite").parquet(s"$src/in")

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Fnv
-import graft.ops.{Dedup, Sketch}
+import graft.functions.{Fnv, MinHash}
+import graft.ops.Sketch
 import graft.oracle.OracleSql
 
 /** The oracle module cannot see the product, so it restates the few
@@ -15,7 +15,7 @@ class OracleConstantsSpec extends AnyFunSuite {
   test("the oracle's copies of product constants equal the product's") {
     assert(OracleSql.Basis1 == Fnv.Basis1)
     assert(OracleSql.Basis2 == Fnv.Basis2)
-    assert(OracleSql.MinhashP == Dedup.MinhashP)
+    assert(OracleSql.MinhashP == MinHash.P)
     assert(OracleSql.HllEstC == Sketch.HllEstC)
     assert(OracleSql.HllSPrimeSafeMin == Sketch.HllSPrimeSafeMin)
   }

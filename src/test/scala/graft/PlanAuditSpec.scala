@@ -192,11 +192,41 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("minhash signatures: partial min-agg before the doc_id shuffle, codegen'd fnv") {
+    // The per-document min over shingle hashes is taken whole inside the
+    // map-side signer, so none of it waits for a shuffle keyed by doc_id:
+    // between the signer and its documents scan sits no hash exchange.
     val plan = executedPlan("dedup_minhash_lsh")
-    assert(plan.contains("partial_min") || plan.contains("partial min"),
-      s"signature aggregation not map-side partial:\n${plan.take(3000)}")
-    assert(plan.contains("graft_fnv1a32"), "fnv expression missing from the plan")
+    val lines = plan.split("== Initial Plan ==").head.split("\n").toSeq
+    val signer = lines.indexWhere(_.contains("graft_minhash"))
+    assert(signer >= 0, s"signer missing from the plan:\n${plan.take(3000)}")
+    val below = lines.drop(signer + 1)
+    val toScan = below.take(below.indexWhere(_.contains("FileScan parquet")) + 1)
+    assert(toScan.exists(_.contains("documents.parquet")),
+      s"signer does not read the documents:\n${plan.take(3000)}")
+    assert(!toScan.exists(_.contains("hashpartitioning")),
+      s"a hash shuffle sits under the signer:\n${toScan.mkString("\n")}")
     assert(!plan.contains("CartesianProduct"))
+    // the FNV-1a shingle hashing runs in the kernel, called from generated code
+    import org.apache.spark.sql.functions._
+    val df = graft.sources.Tables(spark, sf, "documents")
+      .select(graft.functions.MinHash.signatures(split(col("text"), " "), 12, 3).as("g"))
+    val codegen = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
+    assert(codegen.contains("graft.functions.MinHash.sign("),
+      s"signer not in generated code:\n${codegen.take(2000)}")
+  }
+
+  test("minhash signatures: one codegen'd signer over one documents scan, no doc_id aggregation") {
+    val plan = executedPlan("dedup_minhash_lsh")
+    assert(plan.contains("graft_minhash"), s"signer missing from the plan:\n${plan.take(3000)}")
+    assert(!plan.contains("partial_min"),
+      s"signatures must not aggregate per doc_id:\n${plan.take(3000)}")
+    // the confirm's shingle sets come from the signer's words exchange
+    // (reused), so the final plan reads the documents once
+    val finalPlan = plan.split("== Initial Plan ==").head
+    val scans = "FileScan parquet".r.findAllIn(finalPlan).length
+    assert(scans == 1 && finalPlan.contains("documents.parquet"),
+      s"$scans file scans in the final plan:\n$finalPlan")
   }
 
   test("ANN cosine is the native codegen'd kernel, not a HOF lambda chain") {
@@ -256,7 +286,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("nested-field projection prunes the parquet read schema (struct pruning)") {
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("nestprune").toString
+    val work = tempDir("nestprune")
     graft.sources.Tables(spark, sf, "events").select(
       col("event_id"),
       struct(col("event_type").as("etype"),

@@ -307,7 +307,7 @@ class QuarantineSpec extends SparkTestBase {
   // ---- content-keyed artifact caches: in-JVM regeneration rebuilds ----
 
   test("mediaSignatureIndex rebuilds when the fixture regenerates in place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ixkey").toFile
+    val dir = new java.io.File(tempDir("graft-ixkey"))
     try {
       def writeEvents(n: Int): Unit =
         spark.range(n).select(col("id").as("event_id"),

@@ -126,7 +126,7 @@ class SinkAndSkewSpec extends SparkTestBase {
 
   test("partition_by publishes a hive-partitioned final layout") {
     import graft.core._
-    val work = java.nio.file.Files.createTempDirectory("xferp").toString
+    val work = tempDir("xferp")
     val t = TableMapping("orders", partitionBy = Seq("o_orderstatus"))
     val spec = TransferSpec(
       EndpointSpec("parquet", path = sf, tables = Seq(t)),

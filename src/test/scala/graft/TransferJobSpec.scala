@@ -29,7 +29,7 @@ class TransferJobSpec extends SparkTestBase {
 
   private def freshSpec(tables: Seq[TableMapping],
                         batch: Int = 50): (TransferSpec, String) = {
-    val work = Files.createTempDirectory("xfer").toString
+    val work = tempDir("xfer")
     val spec = TransferSpec(
       source = EndpointSpec("parquet", path = sf, tables = tables),
       destination = EndpointSpec("parquet", path = s"$work/dest"),
@@ -94,7 +94,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("parquet incremental: completed transfer extends with ONLY the appended key tail") {
     import org.apache.spark.sql.functions._
-    val work = Files.createTempDirectory("pinc").toString
+    val work = tempDir("pinc")
     val src0 = graft.sources.Tables(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     src0.where(col("o_orderkey") < 800).write.parquet(s"$work/src/orders_inc.parquet")
@@ -139,7 +139,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("parquet incremental over a hash-bucketed key degrades to a correct full re-transfer") {
     import org.apache.spark.sql.functions._
-    val work = Files.createTempDirectory("pinch").toString
+    val work = tempDir("pinch")
     val src0 = graft.sources.Tables(spark, sf, "customer")
       .select(concat(lit("K"), col("c_custkey")).as("ckey"), col("c_acctbal"))
     val firstHalf = src0.where(pmod(crc32(col("ckey")), lit(2)) === 0)
@@ -268,7 +268,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("NULL primary keys are refused, not silently dropped") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("xfern").toString
+    val work = tempDir("xfern")
     Seq[(java.lang.Long, String)]((1L, "a"), (null, "b"), (3L, "c"))
       .toDF("id", "v").write.parquet(s"$work/src/t.parquet")
     val t = TableMapping("t", primaryKey = Some("id"))
@@ -296,7 +296,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("non-numeric PK falls back to deterministic hash buckets (token analog)") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferh").toString
+    val work = tempDir("xferh")
     Seq(("a", 1.0), ("b", 2.0), ("c", 3.0), ("d", 4.0), ("e", 5.0), ("f", 6.0))
       .toDF("sku", "price").write.parquet(s"$work/src/items.parquet")
     val t = TableMapping("items", primaryKey = Some("sku"),
@@ -319,7 +319,7 @@ class TransferJobSpec extends SparkTestBase {
   test("transform rewriting the PK column does not shift chunk membership (ADVICE r2)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val work = Files.createTempDirectory("xferpk").toString
+    val work = tempDir("xferpk")
     (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v")
       .write.parquet(s"$work/src/t.parquet")
     // transform REWRITES the pk: id -> id * 1000. Bounds must apply to the
@@ -342,7 +342,7 @@ class TransferJobSpec extends SparkTestBase {
   test("integral PKs above 2^53 keep exact bounds (no double rounding; ADVICE r2)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val work = Files.createTempDirectory("xfersnow").toString
+    val work = tempDir("xfersnow")
     // snowflake-style ids: consecutive longs where double rounds to even
     val base = (1L << 53) + 1L
     (0L until 100L).map(i => (base + i, i)).toDF("id", "v")
@@ -371,7 +371,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("a string-key resume under a new batch size continues its stored plan") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferbkt").toString
+    val work = tempDir("xferbkt")
     (1 to 40).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
       .write.parquet(s"$work/src/items.parquet")
     val t = TableMapping("items", primaryKey = Some("sku"))
@@ -402,7 +402,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("hash-bucket resume skips the full count scan (VERDICT r3 #8)") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferbnc").toString
+    val work = tempDir("xferbnc")
     (1 to 40).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
       .write.parquet(s"$work/src/items.parquet")
     val t = TableMapping("items", primaryKey = Some("sku"))
@@ -465,7 +465,7 @@ class TransferJobSpec extends SparkTestBase {
   test("nested struct/array/map columns survive the chunked transfer intact") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val work = Files.createTempDirectory("xfernst").toString
+    val work = tempDir("xfernst")
     val src = (1L to 120L).map(i => (i, (s"t$i", i * 2), Seq(i * 1.0, i * 2.0)))
       .toDF("id", "meta", "vals")
     src.write.parquet(s"$work/src/docs.parquet")
@@ -645,7 +645,7 @@ class TransferJobSpec extends SparkTestBase {
   private def checkKillResume(pk: String, resumeZone: Option[String] = None)
                              (write: String => Unit): Unit = {
     import org.apache.spark.sql.Row
-    val work = Files.createTempDirectory("xferkey").toString
+    val work = tempDir("xferkey")
     write(s"$work/src/t.parquet")
     val t = TableMapping("t", primaryKey = Some(pk))
     def spec(leg: String) = TransferSpec(
@@ -722,7 +722,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("NULL keys are refused before any write: a string key, a composite key's second column") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xfernk").toString
+    val work = tempDir("xfernk")
     Seq[(Long, String)]((1L, "a"), (2L, null), (3L, "c"))
       .toDF("id", "name").write.parquet(s"$work/src/t.parquet")
     for ((target, key) <- Seq("by_name" -> "name", "by_id_name" -> "id,name")) {
@@ -866,7 +866,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("counters: an 8-chunk range table at chunk_parallelism 4 plans from its footers and runs two wave writes") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferwave").toString
+    val work = tempDir("xferwave")
     (1L to 800L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
       .write.parquet(s"$work/src/t.parquet")
     val t = TableMapping("t", primaryKey = Some("id"))
@@ -894,7 +894,7 @@ class TransferJobSpec extends SparkTestBase {
     * Returns the rows the wave writes' file scans read. */
   private def stringWaveScans(write: (org.apache.spark.sql.DataFrame, String) => Unit): Long = {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferwaves").toString
+    val work = tempDir("xferwaves")
     val keys = (0 until 320).map(i => (f"k$i%03d", i.toDouble)).toDF("sku", "price")
     write(keys, s"$work/src/items.parquet")
     val t = TableMapping("items", primaryKey = Some("sku"))
@@ -939,7 +939,7 @@ class TransferJobSpec extends SparkTestBase {
 
   test("an empty source completes; a one-bucket empty wave leaves a readable destination") {
     import spark.implicits._
-    val work = Files.createTempDirectory("xferempty").toString
+    val work = tempDir("xferempty")
     Seq.empty[(String, Long, Double)].toDF("sku", "id", "price")
       .write.parquet(s"$work/src/items.parquet")
     val hashT = TableMapping("items", primaryKey = Some("sku"))

@@ -11,7 +11,7 @@ class UpsertBucketedSpec extends SparkTestBase {
   test("bucketed join-merge: no Exchange in plan, same result as windowed merge") {
     import spark.implicits._
     val db = "graft_bucket_test"
-    val loc = java.nio.file.Files.createTempDirectory("bucketdb").toString
+    val loc = tempDir("bucketdb")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
     try {
       val base = (1L to 1000L).map(i => (i, s"name$i", i * 1.0)).toDF("k", "name", "v")

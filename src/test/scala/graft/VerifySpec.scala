@@ -2,12 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.Verify`'s argument contract and the one `oracle_sql.json`
   * writer, without a SparkSession (and without `main`, whose `sys.exit`
   * would end the test JVM). */
-class VerifySpec extends AnyFunSuite {
+class VerifySpec extends SparkTestBase {
 
   test("two or three arguments parse; any other count is the usage text") {
     assert(Verify.parseArgs(Array("sf", "out")) == Right(("sf", "out", None)))
@@ -18,7 +17,7 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("DumpOracle.write renders the oracle map, or only the named gates") {
-    val dir = Files.createTempDirectory("oracle-dump").toString
+    val dir = tempDir("oracle-dump")
     try {
       assert(DumpOracle.write(dir, None) == SparkEntry.oracleSql.size)
       val one = Set("a1_count")

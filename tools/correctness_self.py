@@ -9,7 +9,8 @@ harness failure from a real regression. This sibling mirrors
 `CORRECTNESS_SELF.json` with per-gate
 {rows_match, schema_match, hash_match, err, oracle_ms} plus a fingerprint that
 provably changes across runs (wall-clock), trees (content digest of every
-tracked source byte) and commits (git HEAD) — so any future empty/failed
+source byte — tracked files in a checkout, the walked tree outside one)
+and commits (git HEAD, null outside a checkout, with a dirty-tree flag) — so any future empty/failed
 driver artifact is diagnosable in one diff.
 
 Usage:
@@ -26,12 +27,33 @@ SKIP_FILES = {"LEAKCHECK.json", "LEAKCHECK_SELF.json",
               "CORRECTNESS_SELF.json"}  # self-reference
 
 
+# build and run outputs, as in .gitignore: walked trees skip them
+SKIP_DIRS = {".git", "target", ".bench_build", ".bsp", ".metals", ".bloop",
+             "spark-warehouse", "metastore_db", "data", "__pycache__"}
+
+
+def git(*args):
+    """stdout of a git command in ROOT, or None outside a checkout."""
+    out = subprocess.run(["git", *args], cwd=ROOT, capture_output=True, text=True)
+    return out.stdout if out.returncode == 0 else None
+
+
+def source_files():
+    """Tracked files in a checkout; outside one (a `git archive` export)
+    every file under ROOT outside the build-output dirs."""
+    listed = git("ls-files")
+    if listed is not None:
+        return [f for f in listed.splitlines() if f]
+    files = []
+    for d, dirs, names in os.walk(ROOT):
+        dirs[:] = [x for x in dirs if x not in SKIP_DIRS]
+        files += [os.path.relpath(os.path.join(d, n), ROOT) for n in names]
+    return files
+
+
 def tree_sha256():
-    out = subprocess.run(["git", "ls-files"], cwd=ROOT,
-                         capture_output=True, text=True)
-    files = [f for f in out.stdout.splitlines() if f] if out.returncode == 0 else []
     digest = hashlib.sha256()
-    for rel in sorted(files):
+    for rel in sorted(source_files()):
         if not rel.endswith(EXTS) or os.path.basename(rel) in SKIP_FILES:
             continue
         path = os.path.join(ROOT, rel)
@@ -61,12 +83,16 @@ def main(sf_dir, out_dir):
         n_fail += not ok
         if not ok:
             print(f"FAIL {name}: {g}")
-    head = subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT,
-                          capture_output=True, text=True).stdout.strip() or "unknown"
+    # outside a checkout there is no commit to name; inside one, a dirty
+    # tree is not the commit HEAD names
+    head = (git("rev-parse", "HEAD") or "").strip() or None
+    status = git("status", "--porcelain", "--untracked-files=no")
+    dirty = None if status is None else bool(status.strip())
     result = {
         "scan_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "scan_wall_ns": time.time_ns(),          # changes EVERY run
-        "git_head": head,                         # changes per commit
+        "git_head": head,                         # changes per commit; null outside a checkout
+        "git_dirty": dirty,                       # uncommitted edits to tracked files
         "tree_sha256": tree_sha256(),             # changes per content edit
         "sf_dir": sf_dir,
         "gate_count": len(oracle),
@@ -80,7 +106,8 @@ def main(sf_dir, out_dir):
         json.dump(result, f, indent=2)
         f.write("\n")
     print(f"{out}: {n_pass} pass / {n_fail} fail / {len(oracle)} total "
-          f"(tree {result['tree_sha256'][:12]}, head {head[:8]})")
+          f"(tree {result['tree_sha256'][:12]}, head {(head or 'none')[:8]}"
+          f"{', dirty' if dirty else ''})")
     return 1 if n_fail else 0
 
 
