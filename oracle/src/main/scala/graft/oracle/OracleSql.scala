@@ -2738,11 +2738,11 @@ object OracleSql {
   /** The family posture, stated once: 16-bit × 4 bands, buckets capped
     * at the 64 smallest ids, exact Hamming ≤ 6 confirms, 4 best
     * partners per id. */
-  private final val BandBits = 16
-  private final val NumBands = 4
-  private final val BucketCap = 64
-  private final val MaxHamming = 6
-  private final val Partners = 4
+  final val BandBits = 16
+  final val NumBands = 4
+  final val BucketCap = 64
+  final val MaxHamming = 6
+  final val Partners = 4
 
   /** Screen split for fixtures that flag their copies: the batch is the
     * rows `rel` marks `is_batch = 1`. */
@@ -2872,7 +2872,7 @@ object OracleSql {
   ).flatten
 
   /** Scale-invariant VIDEO thumb-signature CTEs (mirrors
-    * `Multimodal.videoScaleInvariantHash` over the closed-form
+    * `Multimodal.videoInvariantHash(Keyframes, ScaleRule)` over the closed-form
     * transcode fixtures of `Multimodal.syntheticVideoMp4`): originals
     * at id 2e (kk = 1), NN-2× rescaled transcodes of every 7th at id
     * 2e+1 (kk = 2 rows read source pixels through the double-floor
@@ -2925,7 +2925,7 @@ object OracleSql {
       |  FROM svfh GROUP BY id)""".stripMargin
 
   /** Scale+stride-invariant video signature CTEs (mirrors
-    * `Multimodal.videoScaleInvariantHashTimeAligned` over the
+    * `Multimodal.videoInvariantHash(TimelineSlots, ScaleRule)` over the
     * keyStride-varying `syntheticVideoMp4T` fixtures): originals at 2e
     * (kk = 1), NN-2×
     * re-muxed rescales of every 7th at 2e+1 (kk = 2, double-floor
@@ -3023,12 +3023,12 @@ object OracleSql {
     * NN thumbs, the shared integer aHash threshold rule (bit 63 as the
     * two's-complement constant). Ends defining `sah(id, ahash)` and
     * `imgs(id, …, is_batch)`.
-    *  - Scale (`Multimodal.imageScaleInvariantHash`, every 7th): the
+    *  - Scale (`Multimodal.imageInvariantHash(ScaleRule)`, every 7th): the
     *    copies are NN-2× re-uploads, so k = 2 rows read source pixels
     *    through the double-floor `((x·k·w // 8) // k)` — the
     *    floor-composition identity makes them collide with their
     *    originals; id spaces provably disjoint at any sweep scale.
-    *  - Crop (`Multimodal.imageCropInvariantHash`, every FIFTH): the
+    *  - Crop (`Multimodal.imageInvariantHash(CropRule)`, every FIFTH): the
     *    copies are letterboxed then NN-2×-upscaled. The contentBox trim
     *    provably recovers the exact original rectangle (no content row
     *    or column of the coprime-stride formulas is uniform —
@@ -3063,7 +3063,7 @@ object OracleSql {
       |  FROM g JOIN tt ON g.id = tt.id GROUP BY tt.id)""".stripMargin
 
   /** Mirror-invariant canonical-thumb CTEs (r17, mirrors
-    * `Multimodal.imageMirrorInvariantHash` over the mirrored-then-
+    * `Multimodal.imageInvariantHash(MirrorRule)` over the mirrored-then-
     * NN-2×-upscaled fixtures): originals at 2e, composed copies of
     * every THIRD at 2e+1. Both orientations' thumbs replay over the
     * ORIGINAL pixel formulas — orientation 0 samples sx = ⌊x·w/8⌋,
@@ -3105,7 +3105,7 @@ object OracleSql {
 
   /** Rotation-invariant (full dihedral orbit) canonical-thumb CTEs
     * (r18, VERDICT r17 #4 — mirrors
-    * `Multimodal.imageRotationInvariantHash` over the rotated-then-
+    * `Multimodal.imageInvariantHash(RotationRule)` over the rotated-then-
     * NN-2×-upscaled fixtures): originals at 2e, composed copies of
     * every FOURTH at 2e+1. All EIGHT orientations' thumbs replay over
     * the ORIGINAL pixel formulas — per orientation `o` the oriented
@@ -3114,7 +3114,7 @@ object OracleSql {
     * back to original coordinates (o0 identity, o1 r90, o2 r180,
     * o3 r270, o4–o7 their mirrors: the engine's physical-array
     * `rot90`/`mirrorH` compositions, coordinate-derived in the
-    * Scaladoc of `imageRotationInvariantHash`) — and the canonical
+    * Scaladoc of `Multimodal.RotationRule`) — and the canonical
     * hash is the signed least() of the eight. Copy rows carry the SAME
     * formulas: D4 is a group, so a copy rotated/mirrored by any
     * element has the original's orientation SET (the orbit lemma), and
@@ -3162,7 +3162,7 @@ object OracleSql {
       |rah AS (SELECT id, min(ahash) AS ahash FROM roah GROUP BY id)""".stripMargin
 
   /** Mirror-invariant VIDEO clip-signature CTEs (r18, VERDICT r17 #3 —
-    * mirrors `Multimodal.videoMirrorInvariantHash` over the
+    * mirrors `Multimodal.videoInvariantHash(Keyframes, MirrorRule)` over the
     * frame-mirrored-then-NN-2×-rescaled `syntheticVideoMp4` fixtures):
     * originals at 2e, composed copies of every THIRD at 2e+1. Per
     * keyframe f ∈ {0,2,4} below nf, BOTH orientations' fixed 8×8 NN
@@ -3220,7 +3220,7 @@ object OracleSql {
       |  FROM vmmin GROUP BY id)""".stripMargin
 
   /** Rotation-invariant VIDEO clip-signature CTEs (r18 — mirrors
-    * `Multimodal.videoRotationInvariantHash` over the frame-rotated-
+    * `Multimodal.videoInvariantHash(Keyframes, RotationRule)` over the frame-rotated-
     * then-NN-2×-rescaled `syntheticVideoMp4` fixtures): originals at
     * 2e, composed copies of every FOURTH at 2e+1. Per keyframe
     * f ∈ {0,2,4} below nf, all EIGHT orientations' fixed 8×8 NN thumbs
@@ -3284,7 +3284,7 @@ object OracleSql {
       |  FROM vrmin GROUP BY id)""".stripMargin
 
   /** Crop/letterbox-invariant VIDEO thumb-signature CTEs (r17, mirrors
-    * `Multimodal.videoCropInvariantHash` over the letterboxed-then-
+    * `Multimodal.videoInvariantHash(Keyframes, CropRule)` over the letterboxed-then-
     * NN-2×-rescaled `syntheticVideoMp4` fixtures): originals at 2e
     * (kk = 1), composed copies of every FIFTH at 2e+1 (kk = 2). The
     * per-keyframe contentBox trim cancels the pads and the box thumb's

@@ -2112,20 +2112,19 @@ object SparkEntry {
     * (the text sibling of [[mediaSignatureIndex]], built once per JVM
     * per corpus): the composition gate reads the verdict column it
     * needs instead of re-running the whole curation pipeline the
-    * `pipeline_pretrain_surgical` gate already pays for. Same
-    * content-keyed scratch discipline. */
+    * `pipeline_pretrain_surgical` gate already pays for. Same scratch
+    * discipline. */
   private val textAdmitCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[graft] def surgicalAdmittedDocsPath(s: SparkSession, d: String): String = {
-    // the cache key IS the content key (ADVICE r12): keying on the dir
-    // string alone would pin the first build for the JVM's lifetime even
-    // if the fixtures are regenerated in place mid-session — size+mtime
-    // in the key makes an in-JVM regeneration rebuild the artifact
+    // the map key is the content key (size+mtime): an in-JVM fixture
+    // regeneration rebuilds the artifact; the dir is keyed on `d` alone,
+    // so a regeneration rebuilds in place instead of leaving a new dir
     val doc = new java.io.File(s"$d/documents.parquet")
     val key = s"$d:${doc.length}:${doc.lastModified}"
     textAdmitCache.computeIfAbsent(key, _ => {
-      val out = graft.util.Fs.workDir("text_admit", key)
+      val out = graft.util.Fs.workDir("text_admit", d)
       graft.util.Fs.deleteRecursive(new java.io.File(out))
       val book = surgicalPretrainBook(s, d) // checkpoint-backed (r19)
       book.select("doc_id").distinct()
@@ -2136,19 +2135,17 @@ object SparkEntry {
   }
 
   private[graft] def mediaSignatureIndex(s: SparkSession, d: String): String = {
-    // deterministic, content-keyed scratch (not a fresh tempdir per
-    // JVM): bounded /tmp usage across rounds, and the events
-    // size+mtime key invalidates when the driver regenerates the
-    // fixtures in place (the BenchScale fingerprint lesson). The MAP
-    // key is the same content key (ADVICE r12): keying on the dir
-    // string would pin the first build for the JVM's lifetime across
-    // an in-place fixture regeneration. Wiped and rebuilt on first
-    // touch per JVM — the artifact is cheap to rebuild and a
+    // one deterministic scratch dir per fixture dir (not a fresh
+    // tempdir per JVM, nor one per fixture version): /tmp holds one
+    // artifact per fixture however often it is regenerated. The MAP key
+    // is the content key (events size+mtime), so an in-place fixture
+    // regeneration rebuilds the artifact within a JVM. Wiped and rebuilt
+    // on first touch per JVM — the artifact is cheap to rebuild and a
     // half-written dir from a killed JVM must never be trusted.
     val ev = new java.io.File(s"$d/events.parquet")
     val key = s"$d:${ev.length}:${ev.lastModified}"
     mediaIndexCache.computeIfAbsent(key, _ => {
-      val out = graft.util.Fs.workDir("media_index", key)
+      val out = graft.util.Fs.workDir("media_index", d)
       graft.util.Fs.deleteRecursive(new java.io.File(out))
       // fused decode (r14): bytes parse ONCE per modality; the pinned
       // fused frame writes both tier artifacts (identical rows to the
@@ -2236,12 +2233,12 @@ object SparkEntry {
     * [[mediaSignatureIndex]]: six parquet frames carrying per-asset
     * `(ok, reason, …signature columns)`, so the quarantine book (and any
     * later consumer of quarantine verdicts) reads columnar artifacts
-    * instead of re-decoding. Same content-keyed scratch discipline. */
+    * instead of re-decoding. Same scratch discipline. */
   private[graft] def quarantineSignatureIndex(s: SparkSession, d: String): String = {
     val ev = new java.io.File(s"$d/events.parquet")
     val key = s"$d:${ev.length}:${ev.lastModified}"
     quarantineIndexCache.computeIfAbsent(key, _ => {
-      val out = graft.util.Fs.workDir("quarantine_index", key)
+      val out = graft.util.Fs.workDir("quarantine_index", d)
       graft.util.Fs.deleteRecursive(new java.io.File(out))
       val (imgBin, audBin, vidPBin, vidEBin) = poisonedMediaCorpora(s, d)
       import graft.ops.Multimodal

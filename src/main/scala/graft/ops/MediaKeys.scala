@@ -126,11 +126,19 @@ final case class MediaKey(family: String, key: SigKey,
   * object on its classpath, so the compiler keeps it independent. */
 object MediaKeys {
 
-  private[ops] val BandBits = 16
-  private[ops] val NumBands = 4
-  private[ops] val MaxHamming = 6
-  private[ops] val BucketCap = 64
-  private[ops] val CandCap = 4
+  private[graft] val BandBits = 16
+  private[graft] val NumBands = 4
+  private[graft] val MaxHamming = 6
+  private[graft] val BucketCap = 64
+  private[graft] val CandCap = 4
+
+  /** The signature shape every family shares: a frame rule thumbs to a
+    * `ThumbSide`² grid (one 64-bit aHash), a clip packs at most
+    * `FramesPerClip` 16-bit frame folds into one BIGINT, and an audio
+    * key samples `AudioSlots` energy slots (63 delta bits). */
+  final val ThumbSide = 8
+  final val FramesPerClip = 4
+  final val AudioSlots = 64
 
   /** Event-id scan SPREAD before the generate/decode `mapPartitions`:
     * the events fixture is ONE parquet file with ONE row group, so
@@ -164,6 +172,15 @@ object MediaKeys {
     ids.mapPartitions(_.map(e => (e, gen(e)))).toDF("id", c)
   }
 
+  private def imageKey(rule: FrameRule, group: String, tag: String): SigKey =
+    SigKey(imageInvariantHash(rule)(_, _, _).toDF(), "ahash", lit(group), tag)
+
+  private def videoKey(sampler: FrameSampler, rule: FrameRule, group: Column,
+                       tag: String): SigKey =
+    SigKey(videoInvariantHash(sampler, rule)(_, _, _).toDF(), "sig", group, tag)
+
+  /** The keyframe-sampled keys' group: `n_key` stays in it, because
+    * different keyframe counts occupy different bit ranges. */
   private def videoGroup(prefix: String): Column =
     concat(lit(prefix), col("n_key").cast("string"))
 
@@ -172,7 +189,7 @@ object MediaKeys {
 
   /** Every 7th asset re-uploaded as a nearest-neighbor 2× upscale. */
   val ImageScale = MediaKey("image_scale",
-    SigKey(imageScaleInvariantHash(_, _, _).toDF(), "ahash", lit("thumb"), "img_si"),
+    imageKey(ScaleRule, "thumb", "img_si"),
     syntheticBmp, e => nnUpscale2x(syntheticBmp(e)), _ % 7 == 0,
     "streaming_scale_invariant_dedup", "img_si_stream", "stream_si_dedup")
 
@@ -181,12 +198,9 @@ object MediaKeys {
     syntheticWavMixed, e => zohUpsample2x(syntheticWavMixed(e)), _ % 7 == 0,
     "streaming_rate_invariant_dedup", "aud_ri_stream", "stream_ri_dedup")
 
-  /** Every 7th clip re-encoded NN-2×-upscaled, keyframe placement kept;
-    * `n_key` stays in the group (different keyframe counts occupy
-    * different bit ranges). */
+  /** Every 7th clip re-encoded NN-2×-upscaled, keyframe placement kept. */
   val VideoScale = MediaKey("video_scale",
-    SigKey(videoScaleInvariantHash(_, _, _).toDF(), "sig", videoGroup("vthumb:"),
-      "vid_si"),
+    videoKey(Keyframes, ScaleRule, videoGroup("vthumb:"), "vid_si"),
     syntheticVideoMp4, e => nnUpscaleVideo2x(syntheticVideoMp4(e)), _ % 7 == 0,
     "streaming_video_scale_invariant_dedup", "vid_si_stream", "stream_vsi_dedup")
 
@@ -194,8 +208,7 @@ object MediaKeys {
     * AND keyframe-re-placed. `n_key` is the constant slot count, so the
     * group is corpus-wide. */
   val VideoScaleTime = MediaKey("video_scale_time",
-    SigKey(videoScaleInvariantHashTimeAligned(_, _, _).toDF(), "sig",
-      lit("vthumb_t"), "vid_sti"),
+    videoKey(TimelineSlots, ScaleRule, lit("vthumb_t"), "vid_sti"),
     syntheticVideoMp4T, e => nnUpscaleVideo2x(syntheticVideoMp4T(e)), _ % 7 == 0,
     "streaming_video_scale_time_invariant_dedup", "vid_sti_stream",
     "stream_vsti_dedup")
@@ -203,7 +216,7 @@ object MediaKeys {
   /** Every 5th asset letterboxed (pads 1+e%3 / 1+e%2 / 2 / 1) then
     * NN-2×-upscaled. */
   val ImageCrop = MediaKey("image_crop",
-    SigKey(imageCropInvariantHash(_, _, _).toDF(), "ahash", lit("cbox"), "img_ci"),
+    imageKey(CropRule, "cbox", "img_ci"),
     syntheticBmp,
     e => nnUpscale2x(letterbox(syntheticBmp(e),
       1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)),
@@ -212,8 +225,7 @@ object MediaKeys {
 
   /** Every 5th clip letterboxed per frame then NN-2×-rescaled. */
   val VideoCrop = MediaKey("video_crop",
-    SigKey(videoCropInvariantHash(_, _, _).toDF(), "sig", videoGroup("vcbox:"),
-      "vid_ci"),
+    videoKey(Keyframes, CropRule, videoGroup("vcbox:"), "vid_ci"),
     syntheticVideoMp4,
     e => nnUpscaleVideo2x(letterboxVideo(syntheticVideoMp4(e),
       1 + (e % 3).toInt, 1 + (e % 2).toInt, 2, 1)),
@@ -233,30 +245,27 @@ object MediaKeys {
 
   /** Every 3rd asset horizontally mirrored then NN-2×-upscaled. */
   val ImageMirror = MediaKey("image_mirror",
-    SigKey(imageMirrorInvariantHash(_, _, _).toDF(), "ahash", lit("mthumb"), "img_mi"),
+    imageKey(MirrorRule, "mthumb", "img_mi"),
     syntheticBmp, e => nnUpscale2x(mirrorBmp(syntheticBmp(e))), _ % 3 == 0,
     "streaming_mirror_invariant_dedup", "img_mi_stream", "stream_mi_dedup")
 
   /** Every 4th asset rotated 90°·(1 + e%3) then NN-2×-upscaled. */
   val ImageRotation = MediaKey("image_rotation",
-    SigKey(imageRotationInvariantHash(_, _, _).toDF(), "ahash", lit("rthumb"),
-      "img_ri"),
+    imageKey(RotationRule, "rthumb", "img_ri"),
     syntheticBmp, e => nnUpscale2x(rotateBmp(syntheticBmp(e), 1 + (e % 3).toInt)),
     _ % 4 == 0,
     "streaming_rotation_invariant_dedup", "img_roti_stream", "stream_roti_dedup")
 
   /** Every 3rd clip frame-mirrored then NN-2×-rescaled. */
   val VideoMirror = MediaKey("video_mirror",
-    SigKey(videoMirrorInvariantHash(_, _, _).toDF(), "sig", videoGroup("vmthumb:"),
-      "vid_mi"),
+    videoKey(Keyframes, MirrorRule, videoGroup("vmthumb:"), "vid_mi"),
     syntheticVideoMp4, e => nnUpscaleVideo2x(mirrorVideoMp4(syntheticVideoMp4(e))),
     _ % 3 == 0,
     "streaming_video_mirror_invariant_dedup", "vid_mi_stream", "stream_vmi_dedup")
 
   /** Every 4th clip rotated 90°·(1 + e%3) per frame then NN-2×-rescaled. */
   val VideoRotation = MediaKey("video_rotation",
-    SigKey(videoRotationInvariantHash(_, _, _).toDF(), "sig", videoGroup("vrthumb:"),
-      "vid_roti"),
+    videoKey(Keyframes, RotationRule, videoGroup("vrthumb:"), "vid_roti"),
     syntheticVideoMp4,
     e => nnUpscaleVideo2x(rotateVideoMp4(syntheticVideoMp4(e), 1 + (e % 3).toInt)),
     _ % 4 == 0,

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
+import MediaKeys.{AudioSlots, FramesPerClip, ThumbSide}
+
 /** Multimodal column handling: media payloads ride through the engine as
   * opaque `binary` columns with typed metadata alongside (SURVEY §1.3:
   * Cassandra `blob` → `BinaryType`). Every decoder is a per-payload
@@ -888,67 +890,30 @@ object Multimodal {
       bandBits = 16, numBands = 4, maxHamming = maxHamming,
       bucketCap = bucketCap, candCap = candCap, metric = "video_phash_incr")
 
-  /** TIME-ALIGNED perceptual video signature — the sampler for
-    * transcoders that RE-PLACE keyframes (a different `keyStride`
-    * moves the `stss` set, so [[videoPerceptualHash]]'s stride-aligned
-    * sampling hashes different frames and the signatures diverge even
-    * for identical content; spec-proven). Slots are fractions of the
-    * CONTENT TIMELINE via the real `stts` decode timestamps: slot k of
-    * `nSamples` hashes the last frame whose dts ≤ k/nSamples of the
-    * clip duration — invariant to timescale, frame-duration, AND
-    * keyframe placement, because decode order and timestamps are
-    * container facts the transcoder must preserve to be a transcode.
-    * Frames are decoded per slot (fixtures are intra-only; a
-    * production decoder seeks the preceding keyframe and rolls
-    * forward — same tables, noted not built). Output shape identical
-    * to [[videoPerceptualHash]] with `n_key = nSamples` always, so the
-    * SAME pairs/clusters/incremental machinery consumes either
-    * signature.
-    *
-    * EDIT LISTS (round 12, VERDICT r11 #8): a re-muxed file can carry
-    * an `elst` that maps presentation time 0 to media time M (the
-    * priming-samples / codec-delay pattern) — reading `stts` only
-    * would sample the skipped priming frames and misalign every slot.
-    * Slot targets therefore live on the PRESENTATION timeline: slot k
-    * targets media time `M + k·presDur/nSamples`, where presDur is
-    * the elst segment duration (falling back to the mvhd duration for
-    * un-edited files, where M = 0 and behavior is bit-identical to
-    * before). Spec'd both directions: an elst-edited re-mux signatures
-    * identically to its plain original, and ignoring the offset
-    * provably picks different frames on the same fixture. (Fixtures
-    * share one timescale for movie and media, as [[Mp4.encode]]
-    * writes; a deployment with split timescales rescales segDur.) */
+  /** TIME-ALIGNED perceptual video signature: [[videoPerceptualHash]]'s
+    * per-frame rule over the [[TimelineSlots]] sampler instead of the
+    * `stss` keyframes, so a transcode that RE-PLACES keyframes (a
+    * different `keyStride`) signatures like its original. Frames are
+    * decoded per slot (fixtures are intra-only; a production decoder
+    * seeks the preceding keyframe and rolls forward). Output shape is
+    * [[videoPerceptualHash]]'s with `n_key` = [[MediaKeys.FramesPerClip]],
+    * so the same pairs and screens consume either signature; a
+    * sample-less clip is refused `malformed`. */
   def videoPerceptualHashTimeAligned(df: DataFrame, idCol: String,
-                                     binCol: String, nSamples: Int = 4)
-      : Dataset[VideoPerceptualHash] = {
-    require(nSamples >= 1 && nSamples <= 4,
-      s"nSamples must be in [1, 4] (16-bit folds in one BIGINT), got $nSamples")
+                                     binCol: String): Dataset[VideoPerceptualHash] =
     signPayloads(df, idCol, binCol)(() => (id, bytes) => {
       val m = Mp4.parse(bytes)
       Decode.req(m.samples.nonEmpty, "malformed", s"video $id has no samples")
-      var w = 0L; var h = 0L; var sig = 0L
-      val presDur = if (m.editDuration > 0) m.editDuration else m.duration
-      // cache per distinct frame: slots often repeat a frame on
-      // short clips, and decode is the expensive step
-      val foldCache = scala.collection.mutable.Map.empty[Int, Long]
-      (0 until nSamples).foreach { k =>
-        val target = m.editMediaTime + k.toLong * presDur / nSamples
-        // last frame with dts <= target; dts is non-decreasing
-        val s = m.samples.takeWhile(_.dts <= target).lastOption
-          .getOrElse(m.samples.head)
-        val fold = foldCache.getOrElseUpdate(s.index, {
-          val (fw, fh, px) = decodeImagePayload(m.sampleBytes(bytes, s))
-          Decode.req(w == 0L || (fw == w && fh == h), "malformed",
-            s"video $id: frame ${s.index} is ${fw}x$fh, expected ${w}x$h")
-          w = fw; h = fh
-          val hash = aHashBits(px)
-          (hash ^ (hash >>> 16) ^ (hash >>> 32)) & 0xFFFFL
-        })
-        sig |= fold << (16 * k)
+      var w = 0L; var h = 0L
+      val sig = packFrames(m, bytes, TimelineSlots(m)) { (s, fw, fh, px) =>
+        Decode.req(w == 0L || (fw == w && fh == h), "malformed",
+          s"video $id: frame ${s.index} is ${fw}x$fh, expected ${w}x$h")
+        w = fw; h = fh
+        val hash = aHashBits(px)
+        (hash ^ (hash >>> 16) ^ (hash >>> 32)) & 0xFFFFL
       }
-      VideoPerceptualHash(id, w, h, nSamples.toLong, sig)
+      VideoPerceptualHash(id, w, h, FramesPerClip, sig)
     })
-  }
 
   /** Deterministic MP4 fixture family for TRANSCODE dedup: ids group
     * into CONTENTS of four VARIANTS (`c = id/4`, `v = id%4`) that
@@ -1378,29 +1343,38 @@ object Multimodal {
       }
     }
 
-  final case class ScaleInvariantHash(id: Long, ahash: Long)
+  /** A frame rule: one decoded frame `(w, h, packed 0xRRGGBB px)` → its
+    * 64-bit thumb hash. There is one rule per invariance axis, and the
+    * image key and the video key of that axis share it: the image key
+    * is the rule on the decoded payload ([[imageInvariantHash]]), the
+    * video key is the rule on each sampled frame, folded to 16 bits
+    * ([[videoInvariantHash]]). Every rule ends in [[nnThumbAHash]], so
+    * dimensions drop out of every key and brightness invariance comes
+    * from [[aHashBits]]. */
+  type FrameRule = (Int, Int, Array[Int]) => Long
 
-  /** The invariant-key family's ONE fixed-grid thumb rule (factored
-    * per ADVICE r16 #3 — previously duplicated across the image, video
-    * and time-aligned keys, where a drift would silently desynchronize
-    * the keys from each other and from the shared oracle CTEs):
-    * nearest-neighbor-sample the `bw`×`bh` region of `px` anchored at
-    * (`bx`, `by`) onto the fixed `thumbW`×`thumbH` grid, then the ONE
-    * shared [[aHashBits]] rule. The NN index map `bx + x·bw/thumbW`
-    * composes exactly under integer rescaling (double-floor identity)
-    * AND under border offsets (the crop-invariant keys pass the
-    * content box; the scale keys pass the full frame: bx=by=0,
-    * bw=w0, bh=h0). */
+  /** A frame sampler: the frames of a parsed clip that sign it, in slot
+    * order — at most [[MediaKeys.FramesPerClip]], one frame may fill
+    * several slots. An empty pick means the clip has no signature. */
+  type FrameSampler = Mp4.Movie => IndexedSeq[Mp4.Sample]
+
+  final case class ImageInvariantHash(id: Long, ahash: Long)
+  final case class VideoInvariantHash(id: Long, n_key: Long, sig: Long)
+
+  /** Nearest-neighbor-sample the `bw`×`bh` region of `px` anchored at
+    * (`bx`, `by`) onto the fixed [[MediaKeys.ThumbSide]]² grid, then
+    * [[aHashBits]]. The index map `bx + ⌊x·bw/t⌋` composes exactly under
+    * integer rescaling and under border offsets (below). */
   private[graft] def nnThumbAHash(w0: Long, px: Array[Int],
-                                  bx: Long, by: Long, bw: Long, bh: Long,
-                                  thumbW: Int, thumbH: Int): Long = {
-    val out = new Array[Int](thumbW * thumbH)
+                                  bx: Long, by: Long, bw: Long, bh: Long): Long = {
+    val t = ThumbSide
+    val out = new Array[Int](t * t)
     var y = 0
-    while (y < thumbH) {
-      val sy = (by + y * bh / thumbH).toInt
+    while (y < t) {
+      val sy = (by + y * bh / t).toInt
       var x = 0
-      while (x < thumbW) {
-        out(y * thumbW + x) = px(sy * w0.toInt + (bx + x * bw / thumbW).toInt)
+      while (x < t) {
+        out(y * t + x) = px(sy * w0.toInt + (bx + x * bw / t).toInt)
         x += 1
       }
       y += 1
@@ -1408,47 +1382,139 @@ object Multimodal {
     aHashBits(out)
   }
 
-  /** The video family's ONE 64→16-bit XOR fold (r18: factored from
-    * [[thumbFold]] so the orbit-canonical video keys can fold a
-    * min-over-orientations hash through the SAME rule). */
+  /** The video keys' 64→16-bit XOR fold of a frame's thumb hash. */
   private[graft] def fold16(hash: Long): Long =
     (hash ^ (hash >>> 16) ^ (hash >>> 32) ^ (hash >>> 48)) & 0xFFFFL
 
-  /** [[nnThumbAHash]] XOR-folded to the video family's 16-bit per-frame
-    * signature field — the second half of the shared rule (ADVICE
-    * r16 #3). */
-  private[graft] def thumbFold(w0: Long, px: Array[Int],
-                               bx: Long, by: Long, bw: Long, bh: Long,
-                               thumbW: Int, thumbH: Int): Long =
-    fold16(nnThumbAHash(w0, px, bx, by, bw, bh, thumbW, thumbH))
+  /** SCALE: the full-frame thumb. A re-scaled copy is the most common
+    * near-duplicate after re-encoding, and the dimension-grouped keys
+    * ([[imageAHashPairs]], [[videoPerceptualPairs]]) cannot compare it
+    * with its original. NN sampling composes EXACTLY under integer
+    * rescaling — for any factor k, `⌊⌊x·k·w0/t⌋/k⌋ = ⌊x·w0/t⌋` (the
+    * double-floor identity) — so an NN k×-rescaled copy has the
+    * bit-identical thumb. The gate oracles replay the double floor in
+    * closed form. */
+  val ScaleRule: FrameRule = (w, h, px) => nnThumbAHash(w, px, 0, 0, w, h)
 
-  /** SCALE-INVARIANT image signature (r14): nearest-neighbor thumb to
-    * a FIXED `thumbW`×`thumbH` grid (classic 8×8 aHash domain; aspect
-    * deliberately ignored — the thumb is a signature space, not a
-    * display artifact), then the ONE shared [[aHashBits]] rule.
+  /** CROP: [[contentBox]] trim, then the thumb over the box. A
+    * letterboxed or pillarboxed copy changes every full-frame thumb
+    * cell, so [[ScaleRule]] misses it; the trim recovers the exact
+    * source rectangle first. The box thumb composes with rescaling like
+    * the full-frame one: an NN k×-upscale maps the box to
+    * (k·bx, k·by, k·bw, k·bh) and ⌊(k·bx + ⌊x·k·bw/t⌋)/k⌋ = bx + ⌊x·bw/t⌋,
+    * so a letterboxed AND rescaled copy still collides at Hamming 0.
     *
-    * Why it exists: [[imageAHashPairs]] groups candidates by exact
-    * dimensions, so a re-SCALED copy of an image — the most common
-    * image near-duplicate on the web after re-encoding — can never
-    * pair with its original. The fixed-grid thumb removes dimensions
-    * from the key entirely. And nearest-neighbor sampling composes
-    * EXACTLY under integer rescaling: for any integer factor k,
-    * `floor(floor(x·k·w0/t)/k) = floor(x·w0/t)`, so an NN k×-rescaled
-    * copy produces the bit-IDENTICAL thumb and collides at Hamming 0 —
-    * spec-proven, and the gate's oracle replays the double-floor from
-    * closed form. Brightness invariance is inherited from aHash. */
-  def imageScaleInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                              thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol) { () => (id, bytes) =>
-      val (w0, h0, px) = decodeImagePayload(bytes)
-      ScaleInvariantHash(id, nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH))
-    }
+    * LIMITATION: [[contentBox]] trims rows and columns EXACTLY equal to
+    * the corner pixel, so the invariance holds for clean (bit-uniform)
+    * borders — the fixtures and the common hard-matte transcode. On lossy
+    * corpora a corner watermark, JPEG-noisy borders or content rows that
+    * match the corner colour can trim original and copy asymmetrically:
+    * the key degrades to a miss, never a false merge (a wrong box only
+    * moves the thumb domain). Such corpora want a majority-border or
+    * tolerance-based trim in front; the banding is unchanged. */
+  val CropRule: FrameRule = (w, h, px) => {
+    val (bx, by, bw, bh) = contentBox(w, h, px)
+    nnThumbAHash(w, px, bx, by, bw, bh)
   }
+
+  /** MIRROR: the signed minimum of the thumb hash over both horizontal
+    * orientations of the frame. Orbit canonicalization is the exact
+    * route: mirror is an involution, so a mirrored copy's orientation
+    * set {H(m(px)), H(px)} IS the original's — identical min, Hamming 0.
+    * Each orientation is hashed as a physical array, never by permuting
+    * thumb cells: NN sampling does not commute with reflection
+    * (w−1−⌊x·w/t⌋ ≠ ⌊(t−1−x)·w/t⌋ in general). NN 2× upscale does
+    * commute with mirror (⌊(2w−1−x)/2⌋ = w−1−⌊x/2⌋), so a mirrored AND
+    * rescaled copy still collides. On video the min is taken before the
+    * fold: folding first would canonicalize 16-bit projections of
+    * different orientations only by accident. */
+  val MirrorRule: FrameRule = (w, h, px) =>
+    math.min(ScaleRule(w, h, px), ScaleRule(w, h, mirrorH(w, h, px)))
+
+  /** ROTATION: [[d4MinThumb]], the mirror rule's orbit argument lifted
+    * to the whole dihedral group D4 — a copy rotated or mirrored by any
+    * group element has the same orientation set as its original. A
+    * 90°-rotated copy swaps the dimensions, so every other key misses
+    * it (the mirror orbit contains no rotation). rot90 commutes with NN
+    * 2× upscale by the mirror rule's parity identity on the swapped
+    * coordinate, so a rotated AND rescaled copy still collides. */
+  val RotationRule: FrameRule = d4MinThumb
+
+  /** The first [[MediaKeys.FramesPerClip]] `stss` keyframes in decode
+    * order. Keyframe-less clips have no signature. */
+  val Keyframes: FrameSampler = _.samples.filter(_.keyframe).take(FramesPerClip)
+
+  /** [[MediaKeys.FramesPerClip]] slots on the CONTENT timeline: slot k
+    * takes the last frame whose `stts` dts ≤ k/FramesPerClip of the
+    * presented extent. A transcoder that re-places keyframes moves the
+    * `stss` set, so [[Keyframes]] hashes different frames; decode order
+    * and timestamps are container facts a transcode preserves, so the
+    * slots do not move — invariant to timescale, frame duration and
+    * keyframe placement. Targets live on the PRESENTATION timeline: an
+    * `elst` mapping presentation 0 to media time M (priming samples)
+    * puts slot k at `M + k·presDur/FramesPerClip`, with presDur the
+    * edit's duration (the `mvhd` duration and M = 0 for un-edited
+    * files); reading `stts` alone would sample the skipped priming
+    * frames. Fixtures share one timescale for movie and media, as
+    * [[Mp4.encode]] writes. Sample-less clips have no signature. */
+  val TimelineSlots: FrameSampler = m =>
+    if (m.samples.isEmpty) Vector.empty
+    else {
+      val presDur = if (m.editDuration > 0) m.editDuration else m.duration
+      (0 until FramesPerClip).map { k =>
+        val target = m.editMediaTime + k.toLong * presDur / FramesPerClip
+        m.samples.takeWhile(_.dts <= target).lastOption.getOrElse(m.samples.head)
+      }
+    }
+
+  /** ORs `fold(frame) << 16k` over the sampled frames, decoding each
+    * distinct frame once (slots repeat frames on short clips). */
+  private def packFrames(m: Mp4.Movie, bytes: Array[Byte],
+                         frames: IndexedSeq[Mp4.Sample])(
+      fold: (Mp4.Sample, Long, Long, Array[Int]) => Long): Long = {
+    val folds = scala.collection.mutable.Map.empty[Int, Long]
+    var sig = 0L
+    var k = 0
+    while (k < frames.length) {
+      val s = frames(k)
+      sig |= folds.getOrElseUpdate(s.index, {
+        val (w, h, px) = decodeImagePayload(m.sampleBytes(bytes, s))
+        fold(s, w, h, px)
+      }) << (16 * k)
+      k += 1
+    }
+    sig
+  }
+
+  /** The image key of one axis: decode, then `rule`. */
+  def imageInvariantHash(rule: FrameRule)(df: DataFrame, idCol: String,
+                                          binCol: String): Dataset[ImageInvariantHash] =
+    signPayloads(df, idCol, binCol) { () => (id, bytes) =>
+      val (w, h, px) = decodeImagePayload(bytes)
+      ImageInvariantHash(id, rule(w.toInt, h.toInt, px))
+    }
+
+  /** The video key of one (sampler, rule) pair: each sampled frame
+    * decodes, `rule` hashes it and [[fold16]] packs it at bits
+    * [16k, 16k+16) of the clip signature (slot 3 reaches the sign bit);
+    * `n_key` is the number of frames. Frames thumb independently, so
+    * mixed-dimension clips are legal here. A clip the sampler finds no
+    * frame in DROPS under an observed counter ([[dropCounted]]). */
+  def videoInvariantHash(sampler: FrameSampler, rule: FrameRule)(
+      df: DataFrame, idCol: String, binCol: String): Dataset[VideoInvariantHash] =
+    dropCounted(df, idCol, binCol, "video_key_drops_", "frameless_dropped") {
+      (id, bytes) =>
+        val m = Mp4.parse(bytes)
+        val frames = sampler(m)
+        if (frames.isEmpty) None
+        else Some(VideoInvariantHash(id, frames.length.toLong,
+          packFrames(m, bytes, frames)((_, w, h, px) =>
+            fold16(rule(w.toInt, h.toInt, px)))))
+    }
 
   /** Nearest-neighbor 2× upscale (decode → re-encode at doubled dims,
     * target (x, y) reads source (x/2, y/2)) — the cross-resolution
-    * duplicate generator the scale-invariant gate and its spec share. */
+    * duplicate generator the scale-invariant gates and spec share. */
   def nnUpscale2x(bytes: Array[Byte]): Array[Byte] = {
     val (w0, h0, px) = decodeImagePayload(bytes)
     val w = w0.toInt; val h = h0.toInt
@@ -1458,17 +1524,13 @@ object Multimodal {
     })
   }
 
-  /** Content box of a decoded frame — the integer-exact
-    * letterbox/pillarbox detector (r17, VERDICT r16 #3): trim rows,
-    * then columns, that are UNIFORMLY equal to the corner pixel
-    * px(0, 0) (the border reference). Returns (bx, by, bw, bh); a
-    * fully-uniform frame keeps the whole frame (a flat image's content
-    * IS its border color — trimming it to nothing would leave no
-    * signature domain). Integer-exact and oracle-replayable: on the
-    * gate fixtures the trim provably recovers the EXACT original pixel
-    * rectangle (no content row or column of the coprime-moduli
-    * formulas can be uniform — spec-proven), so the oracle replays the
-    * key with no border arithmetic at all. */
+  /** Content box of a decoded frame, (bx, by, bw, bh): trim rows, then
+    * columns, that are UNIFORMLY equal to the corner pixel px(0, 0). A
+    * fully uniform frame keeps the whole frame (its content IS its
+    * border colour). Integer-exact: on the gate fixtures the trim
+    * recovers the exact original rectangle (no content row or column of
+    * the coprime-moduli formulas is uniform), so the oracle replays the
+    * crop key with no border arithmetic. */
   private[graft] def contentBox(w: Int, h: Int, px: Array[Int]): (Int, Int, Int, Int) = {
     val border = px(0)
     def rowAllBorder(y: Int): Boolean = {
@@ -1495,49 +1557,7 @@ object Multimodal {
     }
   }
 
-  /** CROP/LETTERBOX-INVARIANT image signature (r17, VERDICT r16 #3):
-    * [[contentBox]] trim, then the family's fixed-grid NN thumb +
-    * shared aHash rule over the BOX ([[nnThumbAHash]] with box
-    * anchors). Why it exists: a letterboxed or pillarboxed re-upload —
-    * the most common layout transcode after rescaling — changes EVERY
-    * fixed-grid thumb cell, so [[imageScaleInvariantHash]] provably
-    * misses it (border pixels enter the thumb), and the
-    * dimension-grouped [[imageAHashPairs]] cannot even compare the
-    * pair (the canvas dims differ). The trim removes the border BEFORE
-    * the thumb, so a letterboxed copy's signature is bit-IDENTICAL to
-    * its original's (the box recovers the exact source rectangle —
-    * content rows of the fixtures are never uniform, so the trim stops
-    * exactly at the border). And the NN box thumb composes under
-    * integer rescaling exactly like the full-frame thumb (floor
-    * identity with box offsets: an NN k×-upscale maps the box to
-    * (k·bx, k·by, k·bw, k·bh) and ⌊(k·bx + ⌊x·k·bw/t⌋)/k⌋ =
-    * bx + ⌊x·bw/t⌋), so the key absorbs letterbox AND rescale
-    * COMPOSED — the gate fixtures are NN-2×-upscaled letterboxes, and
-    * both invariances are spec-proven both directions.
-    *
-    * LIMITATION (ADVICE r17 #3): [[contentBox]] trims rows/columns
-    * EXACTLY equal to the corner pixel px(0,0), so the Hamming-0
-    * letterbox invariance holds for clean (bit-uniform) borders — the
-    * fixture class and the common hard-matte transcode. On lossy
-    * real-world corpora a corner watermark, JPEG-noisy borders, or
-    * content edge rows that happen to match the corner color can trim
-    * the original and the copy ASYMMETRICALLY, degrading this key to a
-    * miss (never a false merge — a wrong box only moves the thumb
-    * domain). Point this key at such corpora with a majority-border or
-    * tolerance-based trim in front; the signature/banding machinery is
-    * unchanged by the box rule. */
-  def imageCropInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                             thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol) { () => (id, bytes) =>
-      val (w0, h0, px) = decodeImagePayload(bytes)
-      val (bx, by, bw, bh) = contentBox(w0.toInt, h0.toInt, px)
-      ScaleInvariantHash(id, nnThumbAHash(w0, px, bx, by, bw, bh, thumbW, thumbH))
-    }
-  }
-
-  /** Horizontal mirror of a decoded pixel array — the orbit element
-    * the mirror-invariant key canonicalizes over. */
+  /** Horizontal mirror of a decoded pixel array. */
   private[graft] def mirrorH(w: Int, h: Int, px: Array[Int]): Array[Int] = {
     val out = new Array[Int](px.length)
     var y = 0
@@ -1547,36 +1567,6 @@ object Multimodal {
       y += 1
     }
     out
-  }
-
-  /** MIRROR-INVARIANT image signature (r17): the minimum of the
-    * fixed-grid thumb hash over BOTH horizontal orientations of the
-    * decoded array — orbit canonicalization, the only exact route. Why
-    * not "thumb then flip the cells": NN sampling does NOT commute
-    * with reflection (w−1−⌊x·w/t⌋ ≠ ⌊(t−1−x)·w/t⌋ in general), so a
-    * cell-permuted hash would drift by a bit or two and the invariance
-    * claim would be approximate. Hashing each PHYSICAL orientation and
-    * taking the signed min is exact by set equality: mirror is an
-    * involution, so the copy's orientation set {H(m(px)), H(m(m(px)))}
-    * IS the original's {H(px), H(m(px))} — identical min, Hamming 0.
-    * And it composes with the scale key's axis: NN 2× upscale commutes
-    * with mirror EXACTLY (⌊(2w−1−x)/2⌋ = w−1−⌊x/2⌋ for both parities),
-    * so a mirrored-AND-rescaled re-upload (the gate fixture) still
-    * collides — spec-proven both directions. Why it exists: a mirrored
-    * re-upload preserves dimensions AND brightness statistics, so the
-    * dimension-grouped key compares it but at a large Hamming
-    * distance, and the scale/crop keys hash different bits — every
-    * current key provably misses it. */
-  def imageMirrorInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                               thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol) { () => (id, bytes) =>
-      val (w0, h0, px) = decodeImagePayload(bytes)
-      val plain = nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH)
-      val flipped = nnThumbAHash(w0, mirrorH(w0.toInt, h0.toInt, px),
-        0, 0, w0, h0, thumbW, thumbH)
-      ScaleInvariantHash(id, math.min(plain, flipped))
-    }
   }
 
   /** Horizontal-mirror generator (decode → flip each row → re-encode) —
@@ -1591,9 +1581,8 @@ object Multimodal {
     })
   }
 
-  /** 90°-clockwise rotation of a decoded pixel array — the second
-    * generator of the dihedral orbit (r18, VERDICT r17 #4). Output
-    * dims are (h, w); out(x, y) = in(y, h−1−x). */
+  /** 90°-clockwise rotation of a decoded pixel array. Output dims are
+    * (h, w); out(x, y) = in(y, h−1−x). */
   private[graft] def rot90(w: Int, h: Int, px: Array[Int]): Array[Int] = {
     val out = new Array[Int](px.length)
     var y = 0
@@ -1605,22 +1594,20 @@ object Multimodal {
     out
   }
 
-  /** Signed minimum of the fixed-grid thumb hash over all EIGHT
-    * physical orientations of a decoded frame — the four rotations and
-    * their mirrors, the full dihedral orbit (iterated [[rot90]] +
-    * [[mirrorH]]; never by permuting thumb cells, which NN sampling
-    * does not commute with). */
-  private[graft] def d4MinThumb(w0: Int, h0: Int, px: Array[Int],
-                                thumbW: Int, thumbH: Int): Long = {
+  /** Signed minimum of the thumb hash over all EIGHT physical
+    * orientations of a frame — the four rotations and their mirrors
+    * (iterated [[rot90]] + [[mirrorH]]; never by permuting thumb cells,
+    * which NN sampling commutes with neither reflection nor transpose).
+    * The square thumb grid keeps odd rotations comparable. */
+  private[graft] def d4MinThumb(w0: Int, h0: Int, px: Array[Int]): Long = {
     var arr = px
     var w = w0
     var h = h0
     var best = Long.MaxValue
     var r = 0
     while (r < 4) {
-      val plain = nnThumbAHash(w, arr, 0, 0, w, h, thumbW, thumbH)
-      val mirrored = nnThumbAHash(w, mirrorH(w, h, arr), 0, 0, w, h,
-        thumbW, thumbH)
+      val plain = nnThumbAHash(w, arr, 0, 0, w, h)
+      val mirrored = nnThumbAHash(w, mirrorH(w, h, arr), 0, 0, w, h)
       if (plain < best) best = plain
       if (mirrored < best) best = mirrored
       arr = rot90(w, h, arr)
@@ -1628,40 +1615,6 @@ object Multimodal {
       r += 1
     }
     best
-  }
-
-  /** ROTATION-INVARIANT image signature (r18, VERDICT r17 #4 — the D4
-    * completion of [[imageMirrorInvariantHash]]): the signed minimum of
-    * the fixed-grid thumb hash over ALL EIGHT orientations of the
-    * decoded array — the four rotations and their mirrors, the full
-    * dihedral orbit. Why it exists: a 90°-rotated re-upload SWAPS the
-    * dimensions, so every prior key misses it — the dimension-grouped
-    * key can't even compare the pair, the scale/crop keys hash the
-    * uploaded orientation's bits, and the mirror key canonicalizes
-    * only over {identity, mirror}, which doesn't contain any rotation
-    * (spec-asserted per key). Exactness is the mirror key's orbit
-    * argument lifted to the whole group: D4 is a group, so a copy
-    * rotated/mirrored by any element has the SAME orientation SET as
-    * its original — identical min, Hamming 0. Each orientation is
-    * hashed as a PHYSICAL array (iterated [[rot90]] + [[mirrorH]]),
-    * never by permuting thumb cells: NN sampling commutes with neither
-    * reflection NOR transpose, so a cell-permuted shortcut would be
-    * approximate (the mirror key's lesson, squared). And the orbit
-    * composes with the scale axis: NN 2× upscale commutes EXACTLY with
-    * mirror (r17) and with rot90 (⌊(2h−1−x)/2⌋ = h−1−⌊x/2⌋ — the same
-    * parity identity on the swapped coordinate), so a
-    * rotated-AND-rescaled re-upload still collides — the gate fixtures
-    * compose both, spec-proven both directions. Requires a SQUARE
-    * thumb (odd rotations swap dims; an 8×6 thumb would compare
-    * incomparable grids). */
-  def imageRotationInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                                 thumbW: Int = 8, thumbH: Int = 8): Dataset[ScaleInvariantHash] = {
-    require(thumbW == thumbH, "rotation orbit needs a square thumb grid")
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol) { () => (id, bytes) =>
-      val (w0, h0, px) = decodeImagePayload(bytes)
-      ScaleInvariantHash(id, d4MinThumb(w0.toInt, h0.toInt, px, thumbW, thumbH))
-    }
   }
 
   /** 90°-clockwise-rotation generator over encoded bytes (decode →
@@ -1708,429 +1661,58 @@ object Multimodal {
       })
   }
 
-  final case class VideoScaleInvariantHash(id: Long, n_key: Long, sig: Long)
-
-  /** SCALE-INVARIANT video signature (r16) — closes the last gap in the
-    * invariant-key family (VERDICT r15 #1): [[videoPerceptualPairs]]
-    * groups candidates by exact `width×height:n_key`, so a re-SCALED
-    * video transcode — the most common video re-encode on the web — is
-    * structurally invisible to every video key the engine had. The fix
-    * is the image family's ([[imageScaleInvariantHash]], r14): each
-    * `stss` keyframe decodes and routes through the FIXED
-    * `thumbW`×`thumbH` nearest-neighbor thumb BEFORE [[aHashBits]], so
-    * dimensions drop out of the signature entirely; the per-frame
-    * 64-bit thumb hash XOR-folds to 16 bits and packs into one BIGINT
-    * clip signature (frame k at bits [16k, 16k+16)), the
-    * [[videoPerceptualHash]] shape. NN thumb sampling composes EXACTLY
-    * under integer rescaling (`floor(floor(x·k·w0/t)/k) = floor(x·w0/t)`),
-    * so an NN k×-rescaled transcode produces the bit-IDENTICAL
-    * signature and collides at Hamming 0 — spec-proven both directions
-    * (the dimension-grouped key provably cannot see the same pair).
-    * Brightness invariance is inherited from aHash; keyframe-less
-    * clips DROP with an observable counter (the [[videoPerceptualHash]]
-    * batch posture); mixed-dimension keyframes are legal HERE (each
-    * frame thumbs to the fixed grid independently — dimension equality
-    * was only ever a comparability requirement of the un-thumbed key). */
-  def videoScaleInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                              maxKeyframes: Int = 4, thumbW: Int = 8,
-                              thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    require(maxKeyframes >= 1 && maxKeyframes <= 4,
-      s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    dropCounted(df, idCol, binCol, "video_si_drops_", "keyframeless_dropped")(
-      videoSiOne(_, _, maxKeyframes, thumbW, thumbH))
-  }
-
-  /** Per-clip body of [[videoScaleInvariantHash]] (factored for the
-    * spec's invariance proofs): real container parse, per-keyframe
-    * decode → fixed-grid NN thumb → shared aHash rule → 16-bit fold.
-    * None for a clip with no `stss` keyframes (no perceptual identity
-    * here — same contract as [[videoPHashOne]]). */
-  private[graft] def videoSiOne(id: Long, bytes: Array[Byte], maxKeyframes: Int,
-                                thumbW: Int, thumbH: Int): Option[VideoScaleInvariantHash] = {
+  /** Re-encode a clip with `edit` applied to every frame — the video
+    * duplicate generators below. Keyframe PLACEMENT is preserved (an
+    * invariance claim samples the same frame indices on both sides):
+    * the encoder writes uniform-stride `stss`, so the source's sync set
+    * must BE a uniform stride pattern starting at frame 0 (true of every
+    * fixture), and any other clip is refused `malformed` under the
+    * generator's `name`. Container timing is normalized and PNG frames
+    * come back as BMP — transcode axes no invariant key reads. */
+  private def reencodeFrames(name: String, bytes: Array[Byte])(
+      edit: Array[Byte] => Array[Byte]): Array[Byte] = {
     val m = Mp4.parse(bytes)
-    val keys = m.samples.filter(_.keyframe).take(maxKeyframes)
-    if (keys.isEmpty) None
-    else {
-      var sig = 0L
-      var k = 0
-      while (k < keys.length) {
-        val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, keys(k)))
-        sig |= thumbFold(w0, px, 0, 0, w0, h0, thumbW, thumbH) << (16 * k)
-        k += 1
-      }
-      Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
-    }
-  }
-
-  /** SCALE- AND STRIDE-INVARIANT video signature (r16) — the
-    * composition of [[videoScaleInvariantHash]]'s fixed-grid thumb with
-    * [[videoPerceptualHashTimeAligned]]'s content-timeline sampling: a
-    * transcode that RESCALES and RE-PLACES KEYFRAMES evades both
-    * parents (the thumb key samples the `stss` set, which a different
-    * keyStride moves; the time-aligned key groups by dimensions, which
-    * a rescale changes) — this key samples slot k of `nSamples` at the
-    * last frame whose dts ≤ k/nSamples of the presentation extent
-    * (elst-aware, the aligned sampler's exact rule) and routes each
-    * sampled frame through the fixed `thumbW`×`thumbH` NN thumb before
-    * [[aHashBits]]. Invariant to container timing, keyframe placement,
-    * AND spatial resolution at once; 16-bit folds pack by slot (slot 3
-    * wraps into the sign bit — the aligned key's oracle precedent).
-    * `n_key` is always `nSamples`, so the one corpus-wide group needs
-    * no dimension key at all. Sample-less clips DROP with an
-    * observable counter (ADVICE r16 #2 — the [[videoScaleInvariantHash]]
-    * posture; the old throw would poison-retry a micro-batch forever
-    * in the `MediaKeys.VideoScaleTime` stream leg,
-    * the exact hazard the r12 quarantine tier was built for). */
-  def videoScaleInvariantHashTimeAligned(df: DataFrame, idCol: String,
-                                         binCol: String, nSamples: Int = 4,
-                                         thumbW: Int = 8, thumbH: Int = 8)
-      : Dataset[VideoScaleInvariantHash] = {
-    require(nSamples >= 1 && nSamples <= 4,
-      s"nSamples must be in [1, 4] (16-bit folds in one BIGINT), got $nSamples")
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    dropCounted(df, idCol, binCol, "video_sti_drops_", "sampleless_dropped")(
-      videoStiOne(_, _, nSamples, thumbW, thumbH))
-  }
-
-  /** Per-clip body of [[videoScaleInvariantHashTimeAligned]] (factored
-    * for the spec's invariance proofs — the [[videoSiOne]] shape): real
-    * container parse, elst-aware slot targets, per-sampled-frame
-    * decode → fixed-grid NN thumb → shared fold. None for a clip with
-    * no samples (no perceptual identity here — same contract as
-    * [[videoSiOne]], ADVICE r16 #2). */
-  private[graft] def videoStiOne(id: Long, bytes: Array[Byte], nSamples: Int,
-                                 thumbW: Int, thumbH: Int): Option[VideoScaleInvariantHash] = {
-    val m = Mp4.parse(bytes)
-    if (m.samples.isEmpty) None
-    else {
-      val presDur = if (m.editDuration > 0) m.editDuration else m.duration
-      var sig = 0L
-      // decode+thumb once per distinct frame: slots repeat frames on
-      // short clips and decode is the expensive step (the aligned
-      // sampler's cache shape)
-      val foldCache = scala.collection.mutable.Map.empty[Int, Long]
-      var k = 0
-      while (k < nSamples) {
-        val target = m.editMediaTime + k.toLong * presDur / nSamples
-        val s = m.samples.takeWhile(_.dts <= target).lastOption
-          .getOrElse(m.samples.head)
-        val fold = foldCache.getOrElseUpdate(s.index, {
-          val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, s))
-          thumbFold(w0, px, 0, 0, w0, h0, thumbW, thumbH)
-        })
-        sig |= fold << (16 * k)
-        k += 1
-      }
-      Some(VideoScaleInvariantHash(id, nSamples.toLong, sig))
-    }
-  }
-
-  /** Nearest-neighbor 2× video upscale: parse the container, decode
-    * every sample payload, NN 2× upscale each frame ([[nnUpscale2x]]'s
-    * pixel rule — target (x, y) reads source (x/2, y/2)), and
-    * re-encode — the cross-resolution duplicate generator the video
-    * scale-invariant gates and spec share. Keyframe PLACEMENT is
-    * preserved (the invariance claim samples the same frame indices on
-    * both sides): the encoder writes uniform-stride `stss`, so the
-    * source's sync set must BE a uniform stride pattern (true of every
-    * fixture; loud refusal otherwise). Container timing is normalized
-    * in the re-encode — an additional re-mux axis this key never
-    * reads — and PNG frames come back as BMP (a frame-codec transcode
-    * axis, pixels identical). */
-  def nnUpscaleVideo2x(bytes: Array[Byte]): Array[Byte] = {
-    val m = Mp4.parse(bytes)
-    Decode.req(m.samples.nonEmpty, "malformed",
-      "nnUpscaleVideo2x: clip has no samples")
+    Decode.req(m.samples.nonEmpty, "malformed", s"$name: clip has no samples")
     val keyIdx = m.samples.filter(_.keyframe).map(_.index)
     Decode.req(keyIdx.headOption.contains(0), "malformed",
-      "nnUpscaleVideo2x: first sample is not a sync sample — the " +
+      s"$name: first sample is not a sync sample — the " +
         "uniform-stride re-encoder cannot preserve keyframe placement")
     val stride = if (keyIdx.length > 1) keyIdx(1) - keyIdx(0)
                  else m.samples.length
     Decode.req(keyIdx == (0 until m.samples.length by stride).toVector,
       "malformed",
-      "nnUpscaleVideo2x: source stss is not a uniform stride pattern — " +
+      s"$name: source stss is not a uniform stride pattern — " +
         "the re-encoder cannot preserve keyframe placement")
-    val frames = m.samples.map(s => nnUpscale2x(m.sampleBytes(bytes, s)))
-    Mp4.encode(frames, timescale = 1000, delta = 40, keyStride = stride)
+    Mp4.encode(m.samples.map(s => edit(m.sampleBytes(bytes, s))),
+      timescale = 1000, delta = 40, keyStride = stride)
   }
 
-  /** CROP/LETTERBOX-INVARIANT video signature (r17, VERDICT r16 #3 —
-    * the video leg): per `stss` keyframe, [[contentBox]] trim THEN the
-    * fixed-grid NN thumb before [[aHashBits]], 16-bit folds packed by
-    * keyframe order (the [[videoScaleInvariantHash]] shape with the
-    * box anchors). A letterboxed re-encode changes every cell of the
-    * full-frame thumb, so the scale-invariant key provably misses it,
-    * and the dimension-grouped perceptual key cannot even compare the
-    * pair; the per-frame trim recovers the exact source rectangle, so
-    * a letterboxed AND NN-rescaled transcode (the gate fixtures
-    * compose both) collides with its original at Hamming 0 —
-    * spec-proven both directions. Keyframe-less clips DROP with an
-    * observable counter (the family posture). Shares
-    * [[imageCropInvariantHash]]'s LIMITATION (ADVICE r17 #3): the
-    * corner-pixel-equality border rule is exact for clean mattes, and
-    * asymmetric trims on noisy real-world borders degrade the key to a
-    * miss, never a false merge. */
-  def videoCropInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                             maxKeyframes: Int = 4, thumbW: Int = 8,
-                             thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    require(maxKeyframes >= 1 && maxKeyframes <= 4,
-      s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    dropCounted(df, idCol, binCol, "video_ci_drops_", "keyframeless_dropped")(
-      videoCiOne(_, _, maxKeyframes, thumbW, thumbH))
-  }
+  /** [[nnUpscale2x]] on every frame. */
+  def nnUpscaleVideo2x(bytes: Array[Byte]): Array[Byte] =
+    reencodeFrames("nnUpscaleVideo2x", bytes)(nnUpscale2x)
 
-  /** Per-clip body of [[videoCropInvariantHash]] (factored for the
-    * spec's invariance proofs): real container parse, per-keyframe
-    * decode → [[contentBox]] trim → fixed-grid NN box thumb → shared
-    * fold. None for a clip with no `stss` keyframes (same contract as
-    * [[videoSiOne]]). */
-  private[graft] def videoCiOne(id: Long, bytes: Array[Byte], maxKeyframes: Int,
-                                thumbW: Int, thumbH: Int): Option[VideoScaleInvariantHash] = {
-    val m = Mp4.parse(bytes)
-    val keys = m.samples.filter(_.keyframe).take(maxKeyframes)
-    if (keys.isEmpty) None
-    else {
-      var sig = 0L
-      var k = 0
-      while (k < keys.length) {
-        val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, keys(k)))
-        val (bx, by, bw, bh) = contentBox(w0.toInt, h0.toInt, px)
-        sig |= thumbFold(w0, px, bx, by, bw, bh, thumbW, thumbH) << (16 * k)
-        k += 1
-      }
-      Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
-    }
-  }
-
-  /** Letterbox every frame and re-encode — the cross-layout duplicate
-    * generator the video crop-invariant gates and spec share (the
-    * video sibling of [[letterbox]]). Keyframe PLACEMENT is preserved
-    * under the same uniform-stride requirement as [[nnUpscaleVideo2x]]
-    * (the invariance claim samples the same frame indices on both
-    * sides); container timing is normalized in the re-encode and PNG
-    * frames come back as BMP — both additional transcode axes the
-    * crop key never reads. */
+  /** [[letterbox]] on every frame. */
   def letterboxVideo(bytes: Array[Byte], padL: Int, padT: Int, padR: Int,
-                     padB: Int): Array[Byte] = {
-    val m = Mp4.parse(bytes)
-    Decode.req(m.samples.nonEmpty, "malformed",
-      "letterboxVideo: clip has no samples")
-    val keyIdx = m.samples.filter(_.keyframe).map(_.index)
-    Decode.req(keyIdx.headOption.contains(0), "malformed",
-      "letterboxVideo: first sample is not a sync sample — the " +
-        "uniform-stride re-encoder cannot preserve keyframe placement")
-    val stride = if (keyIdx.length > 1) keyIdx(1) - keyIdx(0)
-                 else m.samples.length
-    Decode.req(keyIdx == (0 until m.samples.length by stride).toVector,
-      "malformed",
-      "letterboxVideo: source stss is not a uniform stride pattern — " +
-        "the re-encoder cannot preserve keyframe placement")
-    val frames = m.samples.map(s =>
-      letterbox(m.sampleBytes(bytes, s), padL, padT, padR, padB))
-    Mp4.encode(frames, timescale = 1000, delta = 40, keyStride = stride)
-  }
+                     padB: Int): Array[Byte] =
+    reencodeFrames("letterboxVideo", bytes)(letterbox(_, padL, padT, padR, padB))
 
-  /** MIRROR-INVARIANT video signature (r18, VERDICT r17 #3 — the video
-    * orientation leg): per `stss` keyframe, hash BOTH horizontal
-    * orientations of the decoded frame through the fixed-grid NN thumb
-    * ([[nnThumbAHash]] on the physical array and on its [[mirrorH]]),
-    * keep the signed min, THEN [[fold16]] — 16-bit folds packed by
-    * keyframe order (the [[videoScaleInvariantHash]] shape with the
-    * orbit-min inserted before the fold). A frame-mirrored re-upload
-    * preserves dimensions, brightness statistics, frame count and
-    * keyframe placement, so EVERY existing video key provably misses
-    * it: the dimension-grouped perceptual key compares the pair only
-    * at a large Hamming distance, and the scale/crop/time-aligned keys
-    * hash the uploaded orientation's bits (spec-asserted per key).
-    * Mirroring a video mirrors every frame and moves nothing in time,
-    * so per-frame orbit canonicalization is exact by the image key's
-    * orbit-set argument applied frame-wise — and it composes with the
-    * scale axis (mirror∘NN-2× = NN-2×∘mirror, the r17 parity
-    * identity), so a mirrored-AND-rescaled transcode (the gate
-    * fixtures compose both) collides at Hamming 0, spec-proven both
-    * directions. The min is taken over the 64-bit hashes BEFORE the
-    * fold (folding first would canonicalize 16-bit projections of
-    * DIFFERENT orientations into one value only by accident).
-    * Keyframe-less clips DROP with an observable counter (the family
-    * posture). */
-  def videoMirrorInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                               maxKeyframes: Int = 4, thumbW: Int = 8,
-                               thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    require(maxKeyframes >= 1 && maxKeyframes <= 4,
-      s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    dropCounted(df, idCol, binCol, "video_mi_drops_", "keyframeless_dropped")(
-      videoMiOne(_, _, maxKeyframes, thumbW, thumbH))
-  }
+  /** [[rotateBmp]] on every frame. */
+  def rotateVideoMp4(bytes: Array[Byte], turns: Int): Array[Byte] =
+    reencodeFrames("rotateVideoMp4", bytes)(rotateBmp(_, turns))
 
-  /** Per-clip body of [[videoMirrorInvariantHash]] (factored for the
-    * spec's invariance proofs): real container parse, per-keyframe
-    * decode → orbit-min of the two orientations' fixed-grid thumbs →
-    * shared fold. None for a clip with no `stss` keyframes (same
-    * contract as [[videoSiOne]]). */
-  private[graft] def videoMiOne(id: Long, bytes: Array[Byte], maxKeyframes: Int,
-                                thumbW: Int, thumbH: Int): Option[VideoScaleInvariantHash] = {
-    val m = Mp4.parse(bytes)
-    val keys = m.samples.filter(_.keyframe).take(maxKeyframes)
-    if (keys.isEmpty) None
-    else {
-      var sig = 0L
-      var k = 0
-      while (k < keys.length) {
-        val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, keys(k)))
-        val plain = nnThumbAHash(w0, px, 0, 0, w0, h0, thumbW, thumbH)
-        val mirrored = nnThumbAHash(w0, mirrorH(w0.toInt, h0.toInt, px),
-          0, 0, w0, h0, thumbW, thumbH)
-        sig |= fold16(math.min(plain, mirrored)) << (16 * k)
-        k += 1
-      }
-      Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
-    }
-  }
-
-  /** ROTATION-INVARIANT video signature (r18 — the D4 completion for
-    * clips, pairing [[imageRotationInvariantHash]] with
-    * [[videoMirrorInvariantHash]]): per `stss` keyframe, hash ALL
-    * EIGHT physical orientations of the decoded frame (iterated
-    * [[rot90]] + [[mirrorH]] — the full dihedral orbit) through the
-    * fixed-grid NN thumb, keep the signed min, THEN [[fold16]]; 16-bit
-    * folds packed by keyframe order. Why it exists: a 90°-rotated
-    * re-upload — the portrait/landscape phone transcode — swaps the
-    * frame dimensions, so every other video key misses it: the
-    * dimension-grouped key can't compare, the scale/crop keys hash the
-    * uploaded orientation, and the mirror key's {id, mirror} orbit
-    * contains no rotation. Rotating a clip rotates every frame and
-    * moves nothing in time, so per-frame orbit canonicalization is
-    * exact by the image key's group-orbit argument applied frame-wise,
-    * and composes with NN 2× rescaling (rot90 and mirror both commute
-    * with the upscale — the parity identities, spec-proven). Requires
-    * a SQUARE thumb; keyframe-less clips DROP with an observable
-    * counter (the family posture). */
-  def videoRotationInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                                 maxKeyframes: Int = 4, thumbW: Int = 8,
-                                 thumbH: Int = 8): Dataset[VideoScaleInvariantHash] = {
-    require(thumbW == thumbH, "rotation orbit needs a square thumb grid")
-    require(thumbW * thumbH <= 64, "thumb must fit one 64-bit hash")
-    require(maxKeyframes >= 1 && maxKeyframes <= 4,
-      s"maxKeyframes must be in [1, 4] (16-bit folds in one BIGINT), got $maxKeyframes")
-    dropCounted(df, idCol, binCol, "video_roti_drops_", "keyframeless_dropped")(
-      videoRoOne(_, _, maxKeyframes, thumbW, thumbH))
-  }
-
-  /** Per-clip body of [[videoRotationInvariantHash]] (factored for the
-    * spec's invariance proofs): real container parse, per-keyframe
-    * decode → signed min over the eight orientations' fixed-grid
-    * thumbs → shared fold. None for a clip with no `stss` keyframes
-    * (same contract as [[videoSiOne]]). */
-  private[graft] def videoRoOne(id: Long, bytes: Array[Byte], maxKeyframes: Int,
-                                thumbW: Int, thumbH: Int): Option[VideoScaleInvariantHash] = {
-    val m = Mp4.parse(bytes)
-    val keys = m.samples.filter(_.keyframe).take(maxKeyframes)
-    if (keys.isEmpty) None
-    else {
-      var sig = 0L
-      var k = 0
-      while (k < keys.length) {
-        val (w0, h0, px) = decodeImagePayload(m.sampleBytes(bytes, keys(k)))
-        sig |= fold16(d4MinThumb(w0.toInt, h0.toInt, px, thumbW, thumbH)) << (16 * k)
-        k += 1
-      }
-      Some(VideoScaleInvariantHash(id, keys.length.toLong, sig))
-    }
-  }
-
-  /** Rotate every frame by `turns`×90° clockwise and re-encode — the
-    * cross-rotation duplicate generator the video rotation-invariant
-    * gates and spec share (the video sibling of [[rotateBmp]]).
-    * Keyframe PLACEMENT is preserved under the same uniform-stride
-    * requirement as [[nnUpscaleVideo2x]]; container timing is
-    * normalized and PNG frames come back as BMP — both additional
-    * transcode axes the rotation key never reads. */
-  def rotateVideoMp4(bytes: Array[Byte], turns: Int): Array[Byte] = {
-    val m = Mp4.parse(bytes)
-    Decode.req(m.samples.nonEmpty, "malformed",
-      "rotateVideoMp4: clip has no samples")
-    val keyIdx = m.samples.filter(_.keyframe).map(_.index)
-    Decode.req(keyIdx.headOption.contains(0), "malformed",
-      "rotateVideoMp4: first sample is not a sync sample — the " +
-        "uniform-stride re-encoder cannot preserve keyframe placement")
-    val stride = if (keyIdx.length > 1) keyIdx(1) - keyIdx(0)
-                 else m.samples.length
-    Decode.req(keyIdx == (0 until m.samples.length by stride).toVector,
-      "malformed",
-      "rotateVideoMp4: source stss is not a uniform stride pattern — " +
-        "the re-encoder cannot preserve keyframe placement")
-    val frames = m.samples.map(s => rotateBmp(m.sampleBytes(bytes, s), turns))
-    Mp4.encode(frames, timescale = 1000, delta = 40, keyStride = stride)
-  }
-
-  /** Mirror every frame and re-encode — the cross-orientation
-    * duplicate generator the video mirror-invariant gates and spec
-    * share (the video sibling of [[mirrorBmp]]). Keyframe PLACEMENT is
-    * preserved under the same uniform-stride requirement as
-    * [[nnUpscaleVideo2x]] (the invariance claim samples the same frame
-    * indices on both sides); container timing is normalized in the
-    * re-encode and PNG frames come back as BMP — both additional
-    * transcode axes the mirror key never reads. */
-  def mirrorVideoMp4(bytes: Array[Byte]): Array[Byte] = {
-    val m = Mp4.parse(bytes)
-    Decode.req(m.samples.nonEmpty, "malformed",
-      "mirrorVideoMp4: clip has no samples")
-    val keyIdx = m.samples.filter(_.keyframe).map(_.index)
-    Decode.req(keyIdx.headOption.contains(0), "malformed",
-      "mirrorVideoMp4: first sample is not a sync sample — the " +
-        "uniform-stride re-encoder cannot preserve keyframe placement")
-    val stride = if (keyIdx.length > 1) keyIdx(1) - keyIdx(0)
-                 else m.samples.length
-    Decode.req(keyIdx == (0 until m.samples.length by stride).toVector,
-      "malformed",
-      "mirrorVideoMp4: source stss is not a uniform stride pattern — " +
-        "the re-encoder cannot preserve keyframe placement")
-    val frames = m.samples.map(s => mirrorBmp(m.sampleBytes(bytes, s)))
-    Mp4.encode(frames, timescale = 1000, delta = 40, keyStride = stride)
-  }
+  /** [[mirrorBmp]] on every frame. */
+  def mirrorVideoMp4(bytes: Array[Byte]): Array[Byte] =
+    reencodeFrames("mirrorVideoMp4", bytes)(mirrorBmp)
 
   final case class RateInvariantHash(id: Long, rfp: Long)
 
-  /** RATE-INVARIANT audio signature (r15) — the audio leg of the
-    * scale-invariant family, completing it across modalities (image:
-    * [[imageScaleInvariantHash]], r14; video's timescale invariance is
-    * the time-aligned sampler, `multimodal_video_phash_aligned`):
-    * nearest-neighbor-sample the per-frame exact integer energy
-    * sequence (Σ_c v², channel-folded) onto a FIXED `slots`-slot grid,
-    * then delta-sign bits across the grid — slot w sets bit w iff
-    * slot w+1's energy strictly exceeds slot w's (≤63 bits, sign-safe).
-    *
-    * Why it exists: [[audioFingerprintPairs]] groups candidates by
-    * exact (channels, n_windows), so a RESAMPLED copy of a clip — the
-    * most common audio near-duplicate after re-encoding — can never
-    * pair with its original. The fixed grid removes the frame count
-    * (and with it the sample rate) from the key entirely, and NN frame
-    * sampling composes EXACTLY under integer zero-order-hold
-    * upsampling: `floor(floor(w·k·nf/slots)/k) = floor(w·nf/slots)`,
-    * so a ZOH k×-upsampled copy produces the bit-IDENTICAL signature
-    * and collides at Hamming 0 — spec-proven, oracle-replayed via the
-    * double-floor. Invariances inherited from the energy delta-sign
-    * rule: uniform gain (energies scale by g², no comparison flips)
-    * and channel duplication (mono→L=R stereo doubles every frame
-    * energy) — both spec-proven. */
-  def audioRateInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                             slots: Int = 64): Dataset[RateInvariantHash] = {
-    require(slots <= 64, "delta bits must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol)(() => (id, bytes) =>
-      RateInvariantHash(id, rateInvariantBits(Wav.decode(bytes), slots)))
-  }
-
-  /** Per-clip body of [[audioRateInvariantHash]] (factored for the
-    * spec's invariance proofs): per-original-frame exact energy, NN
-    * slot map `floor(w·nf/slots)`, strict-greater delta-sign bits. */
-  private[graft] def rateInvariantBits(clip: Wav.Clip, slots: Int): Long = {
+  /** Per-frame exact integer energy Σ_c v² (channel-folded) — the
+    * audio keys' signal. Uniform gain scales every energy by g² and
+    * mono→L=R stereo doubles every one, so no delta sign below flips;
+    * an L/R swap leaves every sum unchanged. */
+  private def frameEnergies(clip: Wav.Clip): Array[Long] = {
     val ch = math.max(clip.channels, 1)
     val nf = clip.samples.length / ch
-    if (nf == 0) return 0L // headers-only clip: empty signature
     val e = new Array[Long](nf)
     var f = 0
     while (f < nf) {
@@ -2138,15 +1720,62 @@ object Multimodal {
       while (c < ch) { val v = clip.samples(f * ch + c).toLong; s += v * v; c += 1 }
       e(f) = s; f += 1
     }
+    e
+  }
+
+  /** The audio keys' one signature loop: NN-sample the `n` frames from
+    * `f0` onto [[MediaKeys.AudioSlots]] slots (slot w reads frame
+    * `f0 + ⌊w·n/AudioSlots⌋`) and set bit w iff slot w+1's energy
+    * strictly exceeds slot w's (63 bits, sign-safe). The slot map
+    * composes EXACTLY under zero-order-hold k× upsampling —
+    * `⌊⌊w·k·n/AudioSlots⌋/k⌋ = ⌊w·n/AudioSlots⌋`, the double-floor
+    * identity — so a ZOH-k× copy has the bit-identical signature. */
+  private def deltaSignBits(e: Array[Long], f0: Int, n: Long): Long = {
     var fp = 0L
     var w = 0
-    while (w + 1 < slots) {
-      if (e(((w + 1).toLong * nf / slots).toInt) > e((w.toLong * nf / slots).toInt))
+    while (w + 1 < AudioSlots) {
+      if (e(f0 + ((w + 1).toLong * n / AudioSlots).toInt) >
+          e(f0 + (w.toLong * n / AudioSlots).toInt))
         fp |= 1L << w
       w += 1
     }
     fp
   }
+
+  /** RATE: [[deltaSignBits]] over the whole clip. The fixed slot grid
+    * removes the frame count — and with it the sample rate — from the
+    * key, so a resampled copy, which [[audioFingerprintPairs]] cannot
+    * compare (it groups by exact (channels, n_windows)), collides with
+    * its original. A headers-only clip signs 0. */
+  private[graft] def rateInvariantBits(clip: Wav.Clip): Long = {
+    val e = frameEnergies(clip)
+    if (e.isEmpty) 0L else deltaSignBits(e, 0, e.length)
+  }
+
+  /** TRIM: [[deltaSignBits]] over the energy span, onset f0 = first
+    * frame with energy > 0 to the last such frame. Leading or trailing
+    * silence shifts every slot of the rate key; silence has EXACTLY
+    * zero energy (no threshold), so the onset anchor removes the
+    * padding from the key. A ZOH-k× copy has onset k·f0 + lead and span
+    * k·n, so a silence-padded AND resampled copy still collides. An
+    * empty or silence-only clip signs 0. */
+  private[graft] def trimInvariantBits(clip: Wav.Clip): Long = {
+    val e = frameEnergies(clip)
+    val f0 = e.indexWhere(_ != 0L)
+    if (f0 < 0) 0L else deltaSignBits(e, f0, e.lastIndexWhere(_ != 0L) - f0 + 1)
+  }
+
+  /** The audio rate key: [[rateInvariantBits]] per decoded clip. */
+  def audioRateInvariantHash(df: DataFrame, idCol: String,
+                             binCol: String): Dataset[RateInvariantHash] =
+    signPayloads(df, idCol, binCol)(() => (id, bytes) =>
+      RateInvariantHash(id, rateInvariantBits(Wav.decode(bytes))))
+
+  /** The audio trim key: [[trimInvariantBits]] per decoded clip. */
+  def audioTrimInvariantHash(df: DataFrame, idCol: String,
+                             binCol: String): Dataset[RateInvariantHash] =
+    signPayloads(df, idCol, binCol)(() => (id, bytes) =>
+      RateInvariantHash(id, trimInvariantBits(Wav.decode(bytes))))
 
   /** Zero-order-hold 2× upsample (decode → re-encode at doubled rate,
     * frame f reads source frame f/2 — the cheap sample-and-hold
@@ -2154,9 +1783,8 @@ object Multimodal {
     * gates and spec share, the audio sibling of [[nnUpscale2x]]. */
   def zohUpsample2x(bytes: Array[Byte]): Array[Byte] = {
     val clip = Wav.decode(bytes)
-    // loud resample-specific refusal (ADVICE r15 #2): Wav.decode only
-    // requires sampleRate > 0, so a hostile rate > 2^30 would overflow
-    // the doubling negative and die inside Wav.encode with a generic
+    // Wav.decode only requires sampleRate > 0: a rate over 2^30 would
+    // overflow when doubled and die inside Wav.encode with a generic
     // 'bad clip shape' — name the upsample in the failure instead
     Decode.req(clip.sampleRate <= Int.MaxValue / 2, "malformed",
       s"zohUpsample2x: sample rate ${clip.sampleRate} would overflow when doubled")
@@ -2164,66 +1792,6 @@ object Multimodal {
     val nf = clip.samples.length / ch
     Wav.encode(clip.channels, clip.sampleRate * 2, nf * 2,
       (f, c) => clip.samples((f / 2) * ch + c))
-  }
-
-  /** TRIM-INVARIANT audio signature (r17, VERDICT r16 #4 — the audio
-    * analog of the crop key): anchor the fixed slot grid at the ENERGY
-    * ONSET instead of frame 0. Per-frame exact integer energies
-    * (Σ_c v², channel-folded — the [[audioRateInvariantHash]] rule),
-    * then f0 = first frame with energy > 0, f1 = last, span
-    * n = f1−f0+1; slot w samples frame `f0 + ⌊w·n/slots⌋` and bit w is
-    * the strict delta-sign to slot w+1. Why it exists: leading or
-    * trailing silence — the most common audio re-upload edit after
-    * rate change — shifts every fixed 64-slot window, so
-    * [[audioRateInvariantHash]] provably misses the padded copy, and
-    * the (channels, n_windows)-grouped [[audioFingerprintPairs]]
-    * cannot even compare it (the frame count changes). The onset
-    * anchor removes the padding from the key entirely; silence frames
-    * have EXACTLY zero energy (an integer rule, no threshold tuning),
-    * and the NN slot map composes under ZOH upsampling exactly as the
-    * rate key's (a ZOH-k× copy has onset k·f0 + lead and span k·n, and
-    * ⌊⌊w·k·n/slots⌋/k⌋ = ⌊w·n/slots⌋), so a SILENCE-PADDED ZOH-k×
-    * re-upload — the gate fixtures compose both — produces the
-    * bit-IDENTICAL signature, spec-proven both directions. Gain and
-    * channel-duplication invariance inherited from the energy
-    * delta-sign rule. A silence-only (or empty) clip gets the empty
-    * signature 0. */
-  def audioTrimInvariantHash(df: DataFrame, idCol: String, binCol: String,
-                             slots: Int = 64): Dataset[RateInvariantHash] = {
-    require(slots <= 64, "delta bits must fit one 64-bit hash")
-    signPayloads(df, idCol, binCol)(() => (id, bytes) =>
-      RateInvariantHash(id, trimInvariantBits(Wav.decode(bytes), slots)))
-  }
-
-  /** Per-clip body of [[audioTrimInvariantHash]] (factored for the
-    * spec's invariance proofs): exact frame energies, onset/tail scan,
-    * span-anchored NN slot map, strict-greater delta-sign bits. */
-  private[graft] def trimInvariantBits(clip: Wav.Clip, slots: Int): Long = {
-    val ch = math.max(clip.channels, 1)
-    val nf = clip.samples.length / ch
-    if (nf == 0) return 0L // headers-only clip: empty signature
-    val e = new Array[Long](nf)
-    var f = 0
-    while (f < nf) {
-      var s = 0L; var c = 0
-      while (c < ch) { val v = clip.samples(f * ch + c).toLong; s += v * v; c += 1 }
-      e(f) = s; f += 1
-    }
-    var f0 = 0
-    while (f0 < nf && e(f0) == 0L) f0 += 1
-    if (f0 == nf) return 0L // silence-only clip: empty signature
-    var f1 = nf - 1
-    while (e(f1) == 0L) f1 -= 1
-    val n = (f1 - f0 + 1).toLong
-    var fp = 0L
-    var w = 0
-    while (w + 1 < slots) {
-      if (e(f0 + ((w + 1).toLong * n / slots).toInt) >
-          e(f0 + (w.toLong * n / slots).toInt))
-        fp |= 1L << w
-      w += 1
-    }
-    fp
   }
 
   /** Silence-pad generator: re-encode with `leadFrames` zero frames
@@ -2244,19 +1812,16 @@ object Multimodal {
         else clip.samples((f - leadFrames) * ch + c))
   }
 
-  /** Channel-swap generator (r18, VERDICT r17 #3 — the audio
-    * orientation axis): re-encode with the channel assignment
-    * REVERSED (frame f, channel c reads source channel ch−1−c) —
-    * a stereo L/R swap, the audio analog of [[mirrorBmp]]. The
-    * per-frame energy Σ_c v² sums over ALL channels, so EVERY
+  /** Channel-swap generator: re-encode with the channel assignment
+    * REVERSED (frame f, channel c reads source channel ch−1−c) — a
+    * stereo L/R swap, the audio analog of [[mirrorBmp]]. Every
     * energy-derived key ([[rateInvariantBits]], [[trimInvariantBits]],
-    * [[windowFpOf]]) absorbs this edit by construction (spec-proven) —
-    * which is exactly why the gates compose it with a ZOH resample:
-    * the composed copy defeats the (channels, n_windows)-grouped exact
-    * window key (frame count changes) AND the byte-exact sample
-    * fingerprint (interleaved order changes, spec-asserted), leaving
-    * the fixed-grid energy keys as the only catchers. Swap commutes
-    * with ZOH upsampling exactly (both act per-frame on disjoint
+    * [[windowFpOf]]) absorbs it by construction, which is why the gates
+    * compose it with a ZOH resample: the composed copy defeats the
+    * (channels, n_windows)-grouped window key (frame count changes) and
+    * the byte-exact sample fingerprint (interleaved order changes),
+    * leaving the fixed-grid energy keys as the only catchers. Swap
+    * commutes with ZOH upsampling (both act per frame on disjoint
     * axes). */
   def swapChannels(bytes: Array[Byte]): Array[Byte] = {
     val clip = Wav.decode(bytes)

@@ -2411,7 +2411,7 @@ class OpsSpec extends SparkTestBase {
     val up = ids.map(id =>
       (1000L + id, Multimodal.nnUpscale2x(Multimodal.syntheticBmp(id))))
       .toDF("id", "img")
-    val sigs = Multimodal.imageScaleInvariantHash(
+    val sigs = Multimodal.imageInvariantHash(Multimodal.ScaleRule)(
       orig.unionByName(up), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     // the floor-composition identity: thumb(NN-2x(img)) == thumb(img)
@@ -2422,7 +2422,7 @@ class OpsSpec extends SparkTestBase {
     assert(ids.map(sigs(_)).distinct.size == ids.size)
     // the pairs gate surfaces each cross-resolution duplicate at 0
     val pairs = MediaKeys.ImageScale.key.pairs(
-      Multimodal.imageScaleInvariantHash(
+      Multimodal.imageInvariantHash(Multimodal.ScaleRule)(
         orig.unionByName(up), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
@@ -2444,8 +2444,8 @@ class OpsSpec extends SparkTestBase {
     // the INCREMENTAL screen: a batch of rescaled re-uploads hits the
     // standing corpus's thumb index at hamming 0, one row per upload
     val screened = MediaKeys.ImageScale.key.screen(
-        Multimodal.imageScaleInvariantHash(orig, "id", "img").toDF(),
-        Multimodal.imageScaleInvariantHash(up, "id", "img").toDF())
+        Multimodal.imageInvariantHash(Multimodal.ScaleRule)(orig, "id", "img").toDF(),
+        Multimodal.imageInvariantHash(Multimodal.ScaleRule)(up, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
       assert(screened.contains((1000L + id, id, 0L)),
@@ -2460,7 +2460,7 @@ class OpsSpec extends SparkTestBase {
     val up = ids.map(id =>
       (2 * id + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(id))))
       .toDF("id", "vid")
-    val sigs = Multimodal.videoScaleInvariantHash(
+    val sigs = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(
       orig.unionByName(up), "id", "vid").collect()
       .map(r => r.id -> (r.n_key, r.sig)).toMap
     // the floor-composition identity per keyframe: thumb(NN-2x(frame))
@@ -2472,7 +2472,7 @@ class OpsSpec extends SparkTestBase {
     assert(ids.map(id => sigs(2 * id)).distinct.size == ids.size)
     // the pairs gate surfaces each cross-resolution transcode at 0
     val pairs = MediaKeys.VideoScale.key.pairs(
-      Multimodal.videoScaleInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(
         orig.unionByName(up), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
@@ -2493,8 +2493,8 @@ class OpsSpec extends SparkTestBase {
     // the INCREMENTAL screen: a batch of rescaled transcodes hits the
     // standing corpus's signature index at hamming 0, one row per clip
     val screened = MediaKeys.VideoScale.key.screen(
-        Multimodal.videoScaleInvariantHash(orig, "id", "vid").toDF(),
-        Multimodal.videoScaleInvariantHash(up, "id", "vid").toDF())
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(orig, "id", "vid").toDF(),
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(up, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
       assert(screened.contains((2 * id + 1, 2 * id, 0L)),
@@ -2506,8 +2506,6 @@ class OpsSpec extends SparkTestBase {
       Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4(9L)))
     assert(m0.samples.map(_.keyframe) == m1.samples.map(_.keyframe),
       "nnUpscaleVideo2x moved the keyframe set")
-    // (the upscaler's non-uniform-stss refusal is defensive only: the
-    // uniform-stride encoder cannot produce a violating fixture)
   }
 
   test("scale+stride-invariant video signature: invariant to rescale AND keyframe re-placement; both parents provably miss one axis") {
@@ -2519,7 +2517,7 @@ class OpsSpec extends SparkTestBase {
     val up = ids.map(id =>
       (2 * id + 1, Multimodal.nnUpscaleVideo2x(Multimodal.syntheticVideoMp4T(id))))
       .toDF("id", "vid")
-    val sigs = Multimodal.videoScaleInvariantHashTimeAligned(
+    val sigs = Multimodal.videoInvariantHash(Multimodal.TimelineSlots, Multimodal.ScaleRule)(
       orig.unionByName(up), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     // axis 1 — rescale+re-mux: the NN-2× copy (timing normalized, PNG
@@ -2533,7 +2531,7 @@ class OpsSpec extends SparkTestBase {
       "cross-stride variants should collide under the combo key")
     // …which the stss-sampled THUMB key provably cannot do (different
     // stss sets hash different frames / different n_key groups)
-    val stssSigs = Multimodal.videoScaleInvariantHash(orig, "id", "vid")
+    val stssSigs = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(orig, "id", "vid")
       .collect().map(r => r.id -> (r.n_key, r.sig)).toMap
     assert(stssSigs(2 * 4L) != stssSigs(2 * 5L),
       "stss-sampled thumb key unexpectedly absorbed keyframe re-placement")
@@ -2548,7 +2546,7 @@ class OpsSpec extends SparkTestBase {
       s"expected a malformed refusal, got $refused")
     // the combo pairs gate surfaces every rescaled copy at Hamming 0
     val pairs = MediaKeys.VideoScaleTime.key.pairs(
-      Multimodal.videoScaleInvariantHashTimeAligned(
+      Multimodal.videoInvariantHash(Multimodal.TimelineSlots, Multimodal.ScaleRule)(
         orig.unionByName(up), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
@@ -2557,8 +2555,8 @@ class OpsSpec extends SparkTestBase {
     // the INCREMENTAL screen: a batch of rescaled+re-muxed transcodes
     // hits the standing corpus index at hamming 0, one row per clip
     val screened = MediaKeys.VideoScaleTime.key.screen(
-        Multimodal.videoScaleInvariantHashTimeAligned(orig, "id", "vid").toDF(),
-        Multimodal.videoScaleInvariantHashTimeAligned(up, "id", "vid").toDF())
+        Multimodal.videoInvariantHash(Multimodal.TimelineSlots, Multimodal.ScaleRule)(orig, "id", "vid").toDF(),
+        Multimodal.videoInvariantHash(Multimodal.TimelineSlots, Multimodal.ScaleRule)(up, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (id <- ids)
       assert(screened.contains((2 * id + 1, 2 * id, 0L)),
@@ -2599,7 +2597,7 @@ class OpsSpec extends SparkTestBase {
       (2 * e + 1, Multimodal.nnUpscale2x(
         Multimodal.letterbox(Multimodal.syntheticBmp(e), pl, pt, pr, pb)))
     }.toDF("id", "img")
-    val sigs = Multimodal.imageCropInvariantHash(
+    val sigs = Multimodal.imageInvariantHash(Multimodal.CropRule)(
       orig.unionByName(boxed), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     for (e <- ids)
@@ -2608,7 +2606,7 @@ class OpsSpec extends SparkTestBase {
     // distinct contents stay distinct; originals carry the SCALE key's
     // signature (no border → full-frame box → same thumb domain)
     assert(ids.map(e => sigs(2 * e)).distinct.size == ids.size)
-    val scaleSigs = Multimodal.imageScaleInvariantHash(orig, "id", "img")
+    val scaleSigs = Multimodal.imageInvariantHash(Multimodal.ScaleRule)(orig, "id", "img")
       .collect().map(r => r.id -> r.ahash).toMap
     for (e <- ids)
       assert(sigs(2 * e) == scaleSigs(2 * e),
@@ -2616,7 +2614,7 @@ class OpsSpec extends SparkTestBase {
     // 3) BOTH parents provably miss the pair: the scale key thumbs the
     //    full canvas (border pixels enter → different signature), and
     //    the dimension-grouped key can't even compare (dims differ)
-    val scaleBoth = Multimodal.imageScaleInvariantHash(
+    val scaleBoth = Multimodal.imageInvariantHash(Multimodal.ScaleRule)(
       orig.unionByName(boxed), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     assert(ids.exists(e => scaleBoth(2 * e) != scaleBoth(2 * e + 1)),
@@ -2625,7 +2623,7 @@ class OpsSpec extends SparkTestBase {
     info(s"scale-invariant parent blind on $scaleBlind/${ids.size} letterboxed copies")
     // 4) the pairs gate surfaces each cross-layout duplicate at 0
     val pairs = MediaKeys.ImageCrop.key.pairs(
-      Multimodal.imageCropInvariantHash(
+      Multimodal.imageInvariantHash(Multimodal.CropRule)(
         orig.unionByName(boxed), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2634,8 +2632,8 @@ class OpsSpec extends SparkTestBase {
     // 5) the INCREMENTAL screen: boxed re-uploads hit the standing
     //    content-box index at hamming 0
     val screened = MediaKeys.ImageCrop.key.screen(
-        Multimodal.imageCropInvariantHash(orig, "id", "img").toDF(),
-        Multimodal.imageCropInvariantHash(boxed, "id", "img").toDF())
+        Multimodal.imageInvariantHash(Multimodal.CropRule)(orig, "id", "img").toDF(),
+        Multimodal.imageInvariantHash(Multimodal.CropRule)(boxed, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
       assert(screened.contains((2 * e + 1, 2 * e, 0L)),
@@ -2658,7 +2656,7 @@ class OpsSpec extends SparkTestBase {
       (2 * e + 1, Multimodal.nnUpscaleVideo2x(
         Multimodal.letterboxVideo(Multimodal.syntheticVideoMp4(e), pl, pt, pr, pb)))
     }.toDF("id", "vid")
-    val sigs = Multimodal.videoCropInvariantHash(
+    val sigs = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.CropRule)(
       orig.unionByName(boxed), "id", "vid").collect()
       .map(r => r.id -> (r.n_key, r.sig)).toMap
     // per-keyframe trim recovery + floor composition: the packed clip
@@ -2676,7 +2674,7 @@ class OpsSpec extends SparkTestBase {
     // BOTH parents provably miss: the full-frame scale-invariant key
     // sees border pixels (different signature), the dimension-grouped
     // perceptual key can't compare (canvas dims differ)
-    val scaleBoth = Multimodal.videoScaleInvariantHash(
+    val scaleBoth = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(
       orig.unionByName(boxed), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     assert(ids.exists(e => scaleBoth(2 * e) != scaleBoth(2 * e + 1)),
@@ -2685,7 +2683,7 @@ class OpsSpec extends SparkTestBase {
       s"${ids.count(e => scaleBoth(2 * e) != scaleBoth(2 * e + 1))}/${ids.size} copies")
     // the pairs gate surfaces each transcode at 0
     val pairs = MediaKeys.VideoCrop.key.pairs(
-      Multimodal.videoCropInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.CropRule)(
         orig.unionByName(boxed), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2693,8 +2691,8 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-layout video pair for $e: ${pairs.mkString(",")}")
     // the INCREMENTAL screen mirrors the batch hits
     val screened = MediaKeys.VideoCrop.key.screen(
-        Multimodal.videoCropInvariantHash(orig, "id", "vid").toDF(),
-        Multimodal.videoCropInvariantHash(boxed, "id", "vid").toDF())
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.CropRule)(orig, "id", "vid").toDF(),
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.CropRule)(boxed, "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
       assert(screened.contains((2 * e + 1, 2 * e, 0L)),
@@ -2711,7 +2709,7 @@ class OpsSpec extends SparkTestBase {
     val flipped = ids.map(e =>
       (2 * e + 1, Multimodal.nnUpscale2x(Multimodal.mirrorBmp(
         Multimodal.syntheticBmp(e))))).toDF("id", "img")
-    val sigs = Multimodal.imageMirrorInvariantHash(
+    val sigs = Multimodal.imageInvariantHash(Multimodal.MirrorRule)(
       orig.unionByName(flipped), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     for (e <- ids)
@@ -2722,7 +2720,7 @@ class OpsSpec extends SparkTestBase {
     val mirrorOnly = ids.map(e =>
       (3000L + e, Multimodal.mirrorBmp(Multimodal.syntheticBmp(e))))
       .toDF("id", "img")
-    val sigsM = Multimodal.imageMirrorInvariantHash(
+    val sigsM = Multimodal.imageInvariantHash(Multimodal.MirrorRule)(
       orig.unionByName(mirrorOnly), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     for (e <- ids)
@@ -2730,12 +2728,12 @@ class OpsSpec extends SparkTestBase {
         s"plain mirror of $e changed the mirror-invariant signature")
     // 2) every OTHER image key provably misses: the scale and crop keys
     //    hash the uploaded orientation only (different bits)
-    val scaleBoth = Multimodal.imageScaleInvariantHash(
+    val scaleBoth = Multimodal.imageInvariantHash(Multimodal.ScaleRule)(
       orig.unionByName(mirrorOnly), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     assert(ids.exists(e => scaleBoth(2 * e) != scaleBoth(3000L + e)),
       "scale-invariant key unexpectedly absorbed the mirror for every id")
-    val cropBoth = Multimodal.imageCropInvariantHash(
+    val cropBoth = Multimodal.imageInvariantHash(Multimodal.CropRule)(
       orig.unionByName(mirrorOnly), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     assert(ids.exists(e => cropBoth(2 * e) != cropBoth(3000L + e)),
@@ -2744,7 +2742,7 @@ class OpsSpec extends SparkTestBase {
       s"${ids.size}, crop key blind on ${ids.count(e => cropBoth(2 * e) != cropBoth(3000L + e))}/${ids.size}")
     // 3) the pairs gate surfaces each cross-orientation duplicate at 0
     val pairs = MediaKeys.ImageMirror.key.pairs(
-      Multimodal.imageMirrorInvariantHash(
+      Multimodal.imageInvariantHash(Multimodal.MirrorRule)(
         orig.unionByName(flipped), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2752,8 +2750,8 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-orientation pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
     val screened = MediaKeys.ImageMirror.key.screen(
-        Multimodal.imageMirrorInvariantHash(orig, "id", "img").toDF(),
-        Multimodal.imageMirrorInvariantHash(flipped, "id", "img").toDF())
+        Multimodal.imageInvariantHash(Multimodal.MirrorRule)(orig, "id", "img").toDF(),
+        Multimodal.imageInvariantHash(Multimodal.MirrorRule)(flipped, "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
       assert(screened.contains((2 * e + 1, 2 * e, 0L)),
@@ -2769,7 +2767,7 @@ class OpsSpec extends SparkTestBase {
     //    the parity identity on the swapped coordinate) — canonicalizes
     //    to the same signature
     def key(rows: Seq[(Long, Array[Byte])]): Map[Long, Long] =
-      Multimodal.imageRotationInvariantHash(
+      Multimodal.imageInvariantHash(Multimodal.RotationRule)(
         rows.toDF("id", "img"), "id", "img").collect()
         .map(r => r.id -> r.ahash).toMap
     val origRows = ids.map(e => (2 * e, Multimodal.syntheticBmp(e)))
@@ -2810,12 +2808,12 @@ class OpsSpec extends SparkTestBase {
       (3000L + e, Multimodal.rotateBmp(Multimodal.syntheticBmp(e), 1)))
     def blind(keyed: Map[Long, Long]): Int =
       ids.count(e => keyed(2 * e) != keyed(3000L + e))
-    val mirrorBoth = Multimodal.imageMirrorInvariantHash(
+    val mirrorBoth = Multimodal.imageInvariantHash(Multimodal.MirrorRule)(
       (origRows ++ rotOnly).toDF("id", "img"), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     assert(blind(mirrorBoth) > 0,
       "mirror key unexpectedly absorbed the rotation for every id")
-    val scaleBoth = Multimodal.imageScaleInvariantHash(
+    val scaleBoth = Multimodal.imageInvariantHash(Multimodal.ScaleRule)(
       (origRows ++ rotOnly).toDF("id", "img"), "id", "img").collect()
       .map(r => r.id -> r.ahash).toMap
     assert(blind(scaleBoth) > 0,
@@ -2826,7 +2824,7 @@ class OpsSpec extends SparkTestBase {
     val upRot = ids.map(e => (2 * e + 1, Multimodal.nnUpscale2x(
       Multimodal.rotateBmp(Multimodal.syntheticBmp(e), 1 + (e % 3).toInt))))
     val pairs = MediaKeys.ImageRotation.key.pairs(
-      Multimodal.imageRotationInvariantHash(
+      Multimodal.imageInvariantHash(Multimodal.RotationRule)(
         (origRows ++ upRot).toDF("id", "img"), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2834,9 +2832,9 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-rotation pair for $e: ${pairs.mkString(",")}")
     // 5) the INCREMENTAL screen mirrors the batch hits
     val screened = MediaKeys.ImageRotation.key.screen(
-        Multimodal.imageRotationInvariantHash(
+        Multimodal.imageInvariantHash(Multimodal.RotationRule)(
           origRows.toDF("id", "img"), "id", "img").toDF(),
-        Multimodal.imageRotationInvariantHash(
+        Multimodal.imageInvariantHash(Multimodal.RotationRule)(
           upRot.toDF("id", "img"), "id", "img").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2848,7 +2846,7 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     val ids = Seq(1L, 2L, 9L, 14L)
     def vkey(rows: Seq[(Long, Array[Byte])]): Map[Long, Long] =
-      Multimodal.videoMirrorInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.MirrorRule)(
         rows.toDF("id", "vid"), "id", "vid").collect()
         .map(r => r.id -> r.sig).toMap
     val origRows = ids.map(e => (2 * e, Multimodal.syntheticVideoMp4(e)))
@@ -2877,12 +2875,12 @@ class OpsSpec extends SparkTestBase {
     //    hash the uploaded orientation's thumb bits
     def blind(keyed: Map[Long, Long]): Int =
       ids.count(e => keyed(2 * e) != keyed(2 * e + 1))
-    val scaleBoth = Multimodal.videoScaleInvariantHash(
+    val scaleBoth = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(
       (origRows ++ mirrored).toDF("id", "vid"), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     assert(blind(scaleBoth) > 0,
       "video scale key unexpectedly absorbed the frame mirror for every id")
-    val cropBoth = Multimodal.videoCropInvariantHash(
+    val cropBoth = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.CropRule)(
       (origRows ++ mirrored).toDF("id", "vid"), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     assert(blind(cropBoth) > 0,
@@ -2891,7 +2889,7 @@ class OpsSpec extends SparkTestBase {
       s"crop key blind on ${blind(cropBoth)}/${ids.size} mirrored transcodes")
     // 3) the pairs gate surfaces each cross-orientation transcode at 0
     val pairs = MediaKeys.VideoMirror.key.pairs(
-      Multimodal.videoMirrorInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.MirrorRule)(
         (origRows ++ mirUp).toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2899,9 +2897,9 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-orientation video pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
     val screened = MediaKeys.VideoMirror.key.screen(
-        Multimodal.videoMirrorInvariantHash(
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.MirrorRule)(
           origRows.toDF("id", "vid"), "id", "vid").toDF(),
-        Multimodal.videoMirrorInvariantHash(
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.MirrorRule)(
           mirUp.toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2913,7 +2911,7 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     val ids = Seq(1L, 2L, 9L, 14L)
     def vkey(rows: Seq[(Long, Array[Byte])]): Map[Long, Long] =
-      Multimodal.videoRotationInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.RotationRule)(
         rows.toDF("id", "vid"), "id", "vid").collect()
         .map(r => r.id -> r.sig).toMap
     val origRows = ids.map(e => (2 * e, Multimodal.syntheticVideoMp4(e)))
@@ -2945,12 +2943,12 @@ class OpsSpec extends SparkTestBase {
       Multimodal.syntheticVideoMp4(e), 1)))
     def blind(keyed: Map[Long, Long]): Int =
       ids.count(e => keyed(2 * e) != keyed(2 * e + 1))
-    val mirrorBoth = Multimodal.videoMirrorInvariantHash(
+    val mirrorBoth = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.MirrorRule)(
       (origRows ++ rotOnly).toDF("id", "vid"), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     assert(blind(mirrorBoth) > 0,
       "video mirror key unexpectedly absorbed the rotation for every clip")
-    val scaleBoth = Multimodal.videoScaleInvariantHash(
+    val scaleBoth = Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.ScaleRule)(
       (origRows ++ rotOnly).toDF("id", "vid"), "id", "vid").collect()
       .map(r => r.id -> r.sig).toMap
     assert(blind(scaleBoth) > 0,
@@ -2962,7 +2960,7 @@ class OpsSpec extends SparkTestBase {
       Multimodal.rotateVideoMp4(Multimodal.syntheticVideoMp4(e),
         1 + (e % 3).toInt))))
     val pairs = MediaKeys.VideoRotation.key.pairs(
-      Multimodal.videoRotationInvariantHash(
+      Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.RotationRule)(
         (origRows ++ upRot).toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2970,9 +2968,9 @@ class OpsSpec extends SparkTestBase {
         s"missing cross-rotation video pair for $e: ${pairs.mkString(",")}")
     // 4) the INCREMENTAL screen mirrors the batch hits
     val screened = MediaKeys.VideoRotation.key.screen(
-        Multimodal.videoRotationInvariantHash(
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.RotationRule)(
           origRows.toDF("id", "vid"), "id", "vid").toDF(),
-        Multimodal.videoRotationInvariantHash(
+        Multimodal.videoInvariantHash(Multimodal.Keyframes, Multimodal.RotationRule)(
           upRot.toDF("id", "vid"), "id", "vid").toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     for (e <- ids)
@@ -2992,11 +2990,11 @@ class OpsSpec extends SparkTestBase {
       val c = Wav.decode(Multimodal.syntheticWav(e))
       assert(c.channels == 2, s"fixture $e is not stereo")
       val s = Wav.decode(Multimodal.swapChannels(Multimodal.syntheticWav(e)))
-      assert(Multimodal.rateInvariantBits(c, 64) ==
-        Multimodal.rateInvariantBits(s, 64),
+      assert(Multimodal.rateInvariantBits(c) ==
+        Multimodal.rateInvariantBits(s),
         s"rate key moved under channel swap for $e")
-      assert(Multimodal.trimInvariantBits(c, 64) ==
-        Multimodal.trimInvariantBits(s, 64),
+      assert(Multimodal.trimInvariantBits(c) ==
+        Multimodal.trimInvariantBits(s),
         s"trim key moved under channel swap for $e")
       assert(Multimodal.windowFpOf(c, 4) == Multimodal.windowFpOf(s, 4),
         s"window fingerprint moved under channel swap for $e")
@@ -3051,7 +3049,7 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     import graft.ops.Wav
     val ids = Seq(1L, 2L, 9L, 14L)
-    def bits(clip: Wav.Clip): Long = Multimodal.trimInvariantBits(clip, 64)
+    def bits(clip: Wav.Clip): Long = Multimodal.trimInvariantBits(clip)
     // 1) onset-anchored floor composition, for general k and pads (not
     //    just the gate's 2×): ZOH k× + lead/trail silence leaves the
     //    signature bit-identical
@@ -3079,8 +3077,8 @@ class OpsSpec extends SparkTestBase {
       // BOTH parents provably miss: the fixed-grid rate key samples the
       // shifted grid (different bits), the (channels, n_windows) key
       // can't compare (frame counts differ)
-      assert(Multimodal.rateInvariantBits(c, 64) !=
-          Multimodal.rateInvariantBits(padded, 64),
+      assert(Multimodal.rateInvariantBits(c) !=
+          Multimodal.rateInvariantBits(padded),
         s"rate-invariant parent unexpectedly absorbed the padding for $id")
     }
     // 3) silence-only and empty clips: the empty signature, loudly 0
@@ -3133,7 +3131,7 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     import graft.ops.Wav
     val ids = Seq(1L, 2L, 9L, 14L)
-    def bits(clip: Wav.Clip): Long = Multimodal.rateInvariantBits(clip, 64)
+    def bits(clip: Wav.Clip): Long = Multimodal.rateInvariantBits(clip)
     // 1) floor-composition identity: ZOH k× upsampling (for any integer
     //    k, not just the gate's 2×) leaves the signature bit-identical
     for (id <- ids; k <- Seq(2, 3, 5)) {
@@ -3226,7 +3224,7 @@ class OpsSpec extends SparkTestBase {
     // to a ramp fails loudly instead of silently degrading the gate.
     def keys(gen: Long => Array[Byte], n: Int): Seq[Long] =
       (0 until n).map(id =>
-        Multimodal.rateInvariantBits(Wav.decode(gen(id.toLong)), 64))
+        Multimodal.rateInvariantBits(Wav.decode(gen(id.toLong))))
     val mixed = keys(Multimodal.syntheticWavMixed, 500)
     val ramp = keys(Multimodal.syntheticWav, 500)
     assert(mixed.distinct.size >= (mixed.size * 95) / 100,
@@ -3238,9 +3236,9 @@ class OpsSpec extends SparkTestBase {
     // and every ZOH copy still collides exactly (the gate's core claim)
     for (id <- 0L until 100L)
       assert(Multimodal.rateInvariantBits(
-          Wav.decode(Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(id))), 64)
+          Wav.decode(Multimodal.zohUpsample2x(Multimodal.syntheticWavMixed(id))))
         == Multimodal.rateInvariantBits(
-          Wav.decode(Multimodal.syntheticWavMixed(id)), 64),
+          Wav.decode(Multimodal.syntheticWavMixed(id))),
         s"ZOH copy of $id broke the composition identity")
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Fnv, MinHash}
-import graft.ops.Sketch
+import graft.ops.{MediaKeys, Sketch}
 import graft.oracle.OracleSql
 
 /** The oracle module cannot see the product, so it restates the few
@@ -18,6 +18,14 @@ class OracleConstantsSpec extends AnyFunSuite {
     assert(OracleSql.MinhashP == MinHash.P)
     assert(OracleSql.HllEstC == Sketch.HllEstC)
     assert(OracleSql.HllSPrimeSafeMin == Sketch.HllSPrimeSafeMin)
+  }
+
+  test("the oracle's invariant-family posture equals MediaKeys'") {
+    assert(OracleSql.BandBits == MediaKeys.BandBits)
+    assert(OracleSql.NumBands == MediaKeys.NumBands)
+    assert(OracleSql.BucketCap == MediaKeys.BucketCap)
+    assert(OracleSql.MaxHamming == MediaKeys.MaxHamming)
+    assert(OracleSql.Partners == MediaKeys.CandCap)
   }
 
   test("the oracle's FNV SQL renders the fold the engine's kernel computes") {

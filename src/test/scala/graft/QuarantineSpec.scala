@@ -250,6 +250,20 @@ class QuarantineSpec extends SparkTestBase {
     assert(q == Map(1L -> "decode:no_keyframes"))
   }
 
+  test("the video re-encoders refuse a keyframe-less clip, naming the generator") {
+    val clip = dropStss(Multimodal.syntheticVideoMp4(1L))
+    val generators = Seq[(String, Array[Byte] => Array[Byte])](
+      "nnUpscaleVideo2x" -> (Multimodal.nnUpscaleVideo2x(_)),
+      "letterboxVideo" -> (Multimodal.letterboxVideo(_, 1, 1, 2, 1)),
+      "rotateVideoMp4" -> (Multimodal.rotateVideoMp4(_, 1)),
+      "mirrorVideoMp4" -> (Multimodal.mirrorVideoMp4(_)))
+    for ((name, generate) <- generators) {
+      val e = intercept[graft.ops.DecodeException](generate(clip))
+      assert(e.kind == "malformed" && e.getMessage.contains(s"$name:"),
+        s"$name refused with ${e.kind}: ${e.getMessage}")
+    }
+  }
+
   // ---- the poisoned book: good verdicts byte-identical, corrupt rows
   //      quarantined with the fixture-pinned reasons --------------------
 
@@ -321,11 +335,35 @@ class QuarantineSpec extends SparkTestBase {
       Thread.sleep(20) // ensure a distinct mtime even on coarse clocks
       writeEvents(6)
       val p2 = SparkEntry.mediaSignatureIndex(spark, dir.getAbsolutePath)
-      assert(p2 != p1,
-        "an in-place fixture regeneration must produce a fresh artifact, " +
-          "not the stale first-build (dir-keyed cache bug)")
-      assert(spark.read.parquet(s"$p2/img_ahash").count() == 6)
+      assert(spark.read.parquet(s"$p2/img_ahash").count() == 6,
+        "an in-place fixture regeneration must rebuild the artifact, " +
+          "not serve the stale first build")
+      graft.util.Fs.deleteRecursive(new java.io.File(p2))
     } finally graft.util.Fs.deleteRecursive(dir)
+  }
+
+  test("artifact work dirs are keyed on the fixture dir: a re-stamped fixture rebuilds in one dir") {
+    val dir = tempDir("graft-ixdir")
+    val ev = new java.io.File(s"$dir/events.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), ev.toPath)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def dirsOf(purpose: String): Set[String] =
+      tmp.listFiles().filter(_.getName.startsWith(s"graft_${purpose}_"))
+        .map(_.getPath).toSet
+    val builds = Seq[(String, (org.apache.spark.sql.SparkSession, String) => String)](
+      "media_index" -> SparkEntry.mediaSignatureIndex,
+      "quarantine_index" -> SparkEntry.quarantineSignatureIndex)
+    val before = builds.map { case (p, _) => p -> dirsOf(p) }.toMap
+    val first = builds.map { case (p, build) => p -> build(spark, dir) }.toMap
+    assert(ev.setLastModified(ev.lastModified + 60000L), "could not re-stamp the fixture")
+    try {
+      for ((p, build) <- builds) {
+        val again = build(spark, dir)
+        assert(again == first(p), s"$p: a re-stamped fixture moved its work dir")
+        assert(dirsOf(p) -- before(p) == Set(first(p)),
+          s"$p: expected one new work dir, got ${dirsOf(p) -- before(p)}")
+      }
+    } finally first.values.foreach(d => graft.util.Fs.deleteRecursive(new java.io.File(d)))
   }
 
   test("poisoned admission book: good rows byte-identical, corrupt rows quarantined") {
