@@ -1019,6 +1019,15 @@ class OpsSpec extends SparkTestBase {
     assert(sPerQ.length == 5 && sPerQ.forall(_.getLong(1) <= 3))
   }
 
+  test("k-means quantizer: a collection with no vector below the seed bound fails, naming the bound") {
+    import org.apache.spark.sql.functions.col
+    // every vec_id is >= 100, so no vector seeds the k = 8 quantizer:
+    // training must refuse instead of returning zero centroids
+    val e = intercept[IllegalArgumentException](
+      Similarity.trainCentroids(emb.where(col("vec_id") >= 100), k = 8))
+    assert(e.getMessage.contains("vec_id < 8"), e.getMessage)
+  }
+
   test("grouped Lloyd's training decomposes exactly into per-group trainCentroids") {
     import org.apache.spark.sql.functions._
     // the PQ encoder's subspace slices, as groups: the ONE-job grouped

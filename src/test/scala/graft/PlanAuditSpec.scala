@@ -244,6 +244,25 @@ class PlanAuditSpec extends SparkTestBase {
       s"cosine not in generated code:\n${codegen.take(2000)}")
   }
 
+  test("Lloyd training's plan grows linearly: every extra round adds the same number of jobs") {
+    // a round that re-reads an unmaterialized previous round doubles the
+    // plan, and the job count with it, on every iteration
+    val emb = graft.sources.Tables(spark, sf, "embeddings")
+    val sc = spark.sparkContext
+    val jobs = (1 to 4).map { iters =>
+      org.apache.spark.TestBus.drain(sc)
+      val counter = graft.util.JobCounter.install(sc)
+      try {
+        graft.ops.Similarity.trainCentroids(emb, k = 8, iters = iters, scale = Some(6))
+          .collect()
+        org.apache.spark.TestBus.drain(sc)
+        counter.count
+      } finally sc.removeSparkListener(counter)
+    }
+    val steps = jobs.zip(jobs.tail).map { case (a, b) => b - a }
+    assert(steps.distinct.size == 1, s"jobs for 1..4 rounds: ${jobs.mkString(" / ")}")
+  }
+
   test("EXISTS/NOT EXISTS subqueries decorrelate to semi + anti joins") {
     val plan = executedPlan("join_exists_subquery")
     assert(plan.contains("LeftSemi"), s"EXISTS did not become a semi join:\n${plan.take(2000)}")
