@@ -494,17 +494,23 @@ object Dedup {
     * caller owns. (The name predates the star core; the benchmark
     * harness calls it by this name.)
     *
-    * 1. Seeding: [[contractEdges]]' union-find passes rewrite the pairs
-    *    as a near-star forest with the same components; its canonical
-    *    edge set (a < b, deduped, self-loops dropped) is checkpointed.
-    * 2. Driver finish: the checkpoint's observed probe carries the
-    *    residual edge count. Once 16 bytes × count fits
+    * 1. Pass 0: [[contractEdges]]' narrow per-partition union-find
+    *    pass rewrites each input partition's pairs as star edges, and
+    *    that frame is checkpointed — the ONLY read of `pairs`, so a lazy
+    *    pair frame is computed once. Its observed probe
+    *    (`graft-closure-seed-*`) carries the pass-0 edge count.
+    * 2. Driver finish: once 16 bytes × edge count fits
     *    `spark.sql.autoBroadcastJoinThreshold` — the conf that already
     *    bounds what a broadcast may carry; -1 disables the finish — the
-    *    residual edges are collected, [[ufStarEdges]] labels them on the
-    *    driver and the labels go back by broadcast join. Near-dup graphs
-    *    of a few thousand edges finish here, right after the seeding.
-    * 3. Above that size, ALTERNATING STAR CONTRACTION rounds (Kiveris
+    *    edges are collected, [[ufStarEdges]] labels them on the driver
+    *    and the labels go back by broadcast join. Near-dup graphs of a
+    *    few thousand edges finish here, right after pass 0: no shuffle.
+    * 3. Otherwise seeding: [[contractEdges]]' two neighborhood passes
+    *    run over the pass-0 checkpoint, which is released once their
+    *    canonical edge set (a < b, deduped, self-loops dropped) is
+    *    checkpointed (probe `graft-contract-*`); the driver finish is
+    *    checked again on that residual.
+    * 4. Above that size, ALTERNATING STAR CONTRACTION rounds (Kiveris
     *    et al. 2014, "Connected Components in MapReduce and Beyond"):
     *    large-star points every node's strictly-larger neighbors at its
     *    neighborhood minimum, small-star points the node and its smaller
@@ -553,9 +559,10 @@ object Dedup {
     // fires when localCheckpoint(true) materializes the frame, so it
     // costs no extra job. If the metrics ever fail to post, fall back
     // LOUDLY to the aggregation job rather than hang on Observation.get.
-    def checkpointed(e: DataFrame): (DataFrame, (Long, BigDecimal, BigDecimal, BigDecimal)) = {
+    def checkpointed(e: DataFrame, probeName: String = "graft-contract-")
+        : (DataFrame, (Long, BigDecimal, BigDecimal, BigDecimal)) = {
       val obs = org.apache.spark.sql.Observation(
-        "graft-contract-" + java.util.UUID.randomUUID().toString)
+        probeName + java.util.UUID.randomUUID().toString)
       val c = e.observe(obs, probeExprs.head, probeExprs.tail: _*)
         .localCheckpoint(true)
       val m = try observationGet(obs) catch { case scala.util.control.NonFatal(e2) =>
@@ -599,7 +606,15 @@ object Dedup {
     }
     def fitsDriver(edgeCount: Long): Boolean = 16L * edgeCount <= broadcastMax
 
-    var (edges, probe) = checkpointed(canonical(contractEdges(pairs).toDF("x", "y")))
+    // pass 0 is the one read of `pairs`; small graphs finish from it
+    val (stars, starsProbe) = checkpointed(localStars(pairs), "graft-closure-seed-")
+    var (edges, probe) =
+      if (fitsDriver(starsProbe._1)) (stars, starsProbe)
+      else {
+        val seeded = checkpointed(canonical(neighborhoodPasses(stars).toDF("x", "y")))
+        releaseOwnCheckpoint(stars)
+        seeded
+      }
     var converged = probe._1 == 0L // no edges: everything is a singleton
     var it = 0
     while (!converged && !fitsDriver(probe._1) && it < maxIters) {
@@ -670,7 +685,9 @@ object Dedup {
     *
     * Pass 0 ("aggregate before you shuffle" applied to connected
     * components): [[ufStarEdges]] over each INPUT partition's edges —
-    * one narrow mapPartitions pass, NO shuffle.
+    * one narrow mapPartitions pass, NO shuffle. [[propagateMinLabels]]
+    * checkpoints its output and runs passes 1-2 over that checkpoint
+    * only when it does not already fit the driver finish.
     *
     * Passes 1-2 (NEIGHBORHOOD passes): duplicate both edge orientations
     * and hash-shuffle by the first endpoint, so EVERY edge incident to
@@ -680,8 +697,7 @@ object Dedup {
     * (3,4),(3,5) connect through node 3 yet no (a) or (b) hash
     * co-locates the witnessing edges; the orientation duplicate does).
     * Each pass is one exchange of the (long, long) edge frame riding
-    * inside the closure's first checkpoint (measured ledgers in
-    * OPTIMIZATION_r19.md).
+    * inside the closure's seeded checkpoint.
     *
     * Correctness: replacing a partition's edge multiset with a star
     * over the same nodes preserves global connectivity (outputs only
@@ -696,22 +712,29 @@ object Dedup {
     * edges are dropped explicitly (a bare `.as[(Long, Long)]` turns a
     * null id into an encoder crash). The neighborhood passes' partition
     * count follows `spark.sql.shuffle.partitions`. */
-  private[graft] def contractEdges(pairs: DataFrame): DataFrame = {
-    val ss = pairs.sparkSession
-    import ss.implicits._
-    def neighborhoodPass(e: DataFrame): DataFrame =
-      e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-        .repartition(col("u"))
-        .as[(Long, Long)]
-        .mapPartitions(ufStarEdges)
-        .toDF("a", "b")
-    neighborhoodPass(neighborhoodPass(pairs.toDF("a", "b")
+  private[graft] def contractEdges(pairs: DataFrame): DataFrame =
+    neighborhoodPasses(localStars(pairs))
+
+  /** Pass 0 of [[contractEdges]]: `(a, b)` star edges, a < b. */
+  private def localStars(pairs: DataFrame): DataFrame =
+    ufPass(pairs.toDF("a", "b")
       .select(col("a").cast("long"), col("b").cast("long"))
-      .where(col("a").isNotNull && col("b").isNotNull)
-      .as[(Long, Long)]
-      .mapPartitions(ufStarEdges)
-      .toDF("a", "b")))
+      .where(col("a").isNotNull && col("b").isNotNull))
+
+  /** Passes 1-2 of [[contractEdges]] over pass 0's `(a, b)` edges. */
+  private def neighborhoodPasses(stars: DataFrame): DataFrame = {
+    def neighborhoodPass(e: DataFrame): DataFrame =
+      ufPass(e.select(col("a").as("u"), col("b").as("v"))
+        .union(e.select(col("b").as("u"), col("a").as("v")))
+        .repartition(col("u")))
+    neighborhoodPass(neighborhoodPass(stars))
+  }
+
+  /** [[ufStarEdges]] over each partition of a two-long-column frame. */
+  private def ufPass(e: DataFrame): DataFrame = {
+    val ss = e.sparkSession
+    import ss.implicits._
+    e.as[(Long, Long)].mapPartitions(ufStarEdges).toDF("a", "b")
   }
 
   /** Suppress ONLY the three benign WARN texts an intentional release

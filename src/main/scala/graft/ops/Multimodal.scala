@@ -1217,9 +1217,12 @@ object Multimodal {
     * inputs are id frames: `ids` the full asset universe (one column
     * `id`), `pairs` any [[bandedHammingPairs]] output (`id_a`, `id_b`).
     *
-    * Scale shape: union-find seeding, then a driver-side finish once
-    * the residual graph fits a broadcast, else star-contraction rounds
-    * — O(log² n) on ANY topology, which matters here: candCap prunes
+    * Scale shape: one narrow union-find pass over each partition of
+    * the pairs, checkpointed (the pairs' one read), then a driver-side
+    * finish once its edges fit a broadcast; else union-find seeding
+    * over two neighborhood exchanges, the same finish once the residual
+    * fits, and star-contraction rounds beyond — O(log² n) on ANY
+    * topology, which matters here: candCap prunes
     * perceptual-hash cliques into long chain-like subgraphs whose
     * eccentricity grows with corpus size. `maxIters` 25 bounds the
     * log²-many rounds with a wide margin; an unconverged closure
@@ -1235,7 +1238,7 @@ object Multimodal {
     * admission book's composition shape. The per-modality graphs are
     * disjoint by construction (an image never pairs with an audio
     * clip), so running [[mediaNearDupClusters]] once per modality pays
-    * the closure's fixed per-call job cost (seeding checkpoint, finish,
+    * the closure's fixed per-call job cost (pass-0 checkpoint, finish,
     * any star rounds — job overhead, not data, on near-dup subgraphs)
     * THREE times over. This variant makes the union id space
     * collision-free by encoding `id·k + code` (k = number of

@@ -549,13 +549,20 @@ class OpsSpec extends SparkTestBase {
       s"recall curve is flat ($ivfByProbe) — query window saturated")
   }
 
-  /** The closure core's two paths: the default conf finishes small
-    * residual graphs on the driver; a broadcast threshold of -1
-    * disables that finish, so every round runs distributed. */
-  private val closurePaths = Seq("driver-finish", "distributed")
-  private def onPath[T](path: String)(body: => T): T =
-    if (path == "distributed") withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
-    else body
+  /** The closure core's three paths: the default conf finishes small
+    * graphs on the driver straight after pass 0; a bound of 60 edges
+    * (960 bytes) sends a graph whose pass 0 leaves more edges than that
+    * through the neighborhood seeding first, and it finishes on the
+    * driver once its residual fits (the fixtures' redundant pass-0
+    * outputs — cycles, edges split over partitions — shrink there); a
+    * broadcast threshold of -1 disables the finish, so every round runs
+    * distributed. */
+  private val closurePaths = Seq("driver-finish", "seeded-finish", "distributed")
+  private def onPath[T](path: String)(body: => T): T = path match {
+    case "distributed" => withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    case "seeded-finish" => withConfs("spark.sql.autoBroadcastJoinThreshold" -> "960")(body)
+    case _ => body
+  }
   private def labelMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -597,12 +604,47 @@ class OpsSpec extends SparkTestBase {
       s"${(got.toSet -- want.toSet).take(5)} vs ${(want.toSet -- got.toSet).take(5)}")
 
   test("property: star contraction == union-find on random graphs, chains, cliques") {
-    for ((tag, n, edges) <- closureCases) {
+    for ((tag, n, edges) <- closureCases; path <- closurePaths) onPath(path) {
       val (ids, pairs) = closureInput(n, edges)
-      assertUnionFind(tag, labelMap(Dedup.propagateMinLabels(ids, pairs, 25)),
+      assertUnionFind(s"$tag/$path", labelMap(Dedup.propagateMinLabels(ids, pairs, 25)),
         dsuClusters(n, edges))
       Dedup.releaseLocalCheckpoint(
         Dedup.propagateMinLabels(ids, pairs, 25)) // exercise release path
+    }
+  }
+
+  /** A 40-clique hashed over 4 partitions: pass 0 leaves a star per
+    * partition, the seeding one 39-edge star. */
+  private def splitClique: (DataFrame, DataFrame, Seq[(Long, Long)]) = {
+    val edges = for (a <- 0L until 40L; b <- a + 1 until 40L) yield (a, b)
+    val (ids, pairs) = closureInput(40L, edges)
+    (ids, scatter(pairs, 4, 1L), edges)
+  }
+
+  test("the seeded finish closes a graph whose pass 0 exceeds the bound") {
+    import spark.implicits._
+    val (ids, pairs, edges) = splitClique
+    val pass0 = pairs.as[(Long, Long)].mapPartitions(Dedup.ufStarEdges).count()
+    assert(pass0 > 60, s"fixture broken: pass 0 leaves only $pass0 edges")
+    // with no star round allowed only a driver finish can close the graph
+    assert(onPath("seeded-finish")(labelMap(Dedup.propagateMinLabels(ids, pairs, 0)))
+      == dsuClusters(40L, edges))
+    intercept[IllegalStateException](
+      onPath("distributed")(Dedup.propagateMinLabels(ids, pairs, maxIters = 0)))
+  }
+
+  test("the closure evaluates its pair frame once on every path") {
+    import spark.implicits._
+    val (ids, scattered, edges) = splitClique
+    val reads = spark.sparkContext.longAccumulator("closure-pair-reads")
+    val pairs = scattered.as[(Long, Long)].map { e => reads.add(1L); e }
+      .toDF("doc_a", "doc_b")
+    for (path <- closurePaths) {
+      reads.reset()
+      assertUnionFind(path, onPath(path)(labelMap(Dedup.propagateMinLabels(ids, pairs, 25))),
+        dsuClusters(40L, edges))
+      assert(reads.value == edges.size,
+        s"$path: ${reads.value} pair evaluations for ${edges.size} pairs")
     }
   }
 
@@ -645,9 +687,10 @@ class OpsSpec extends SparkTestBase {
       Seq((59L, 100L))
     val ids = (0L until 120L).toDF("doc_id")
     val pairs = edges.toDF("doc_a", "doc_b")
-    val Seq(driver, distributed) = closurePaths.map(p =>
+    val labels = closurePaths.map(p =>
       onPath(p)(labelMap(Dedup.propagateMinLabels(ids, pairs, 25))))
-    assert(driver == distributed, "the closure core's two paths must agree")
+    val driver = labels.head
+    assert(labels.forall(_ == driver), "the closure core's paths must agree")
     assert(driver == dsuClusters(120L, edges))
     // the default conf really takes the driver finish: with no star
     // round allowed it still closes the graph, where -1 cannot

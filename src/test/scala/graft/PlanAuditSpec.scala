@@ -263,6 +263,26 @@ class PlanAuditSpec extends SparkTestBase {
     assert(steps.distinct.size == 1, s"jobs for 1..4 rounds: ${jobs.mkString(" / ")}")
   }
 
+  test("a closure whose pass-0 edges fit the broadcast bound finishes in 4 jobs") {
+    // pass 0's checkpoint, the driver collect, the labels' broadcast and
+    // the labelled output's checkpoint: the neighborhood exchanges and
+    // the canonical distinct of the seeding never run
+    import spark.implicits._
+    val ids = (0L until 200L).toDF("doc_id").localCheckpoint(true)
+    val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      .localCheckpoint(true)
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val counter = graft.util.JobCounter.install(sc)
+    val jobs = try {
+      val out = graft.ops.Dedup.propagateMinLabels(ids, pairs, maxIters = 15)
+      org.apache.spark.TestBus.drain(sc)
+      graft.ops.Dedup.releaseOwnCheckpoint(out)
+      counter.count
+    } finally sc.removeSparkListener(counter)
+    assert(jobs == 4, s"closure of a 200-node path ran $jobs jobs")
+  }
+
   test("EXISTS/NOT EXISTS subqueries decorrelate to semi + anti joins") {
     val plan = executedPlan("join_exists_subquery")
     assert(plan.contains("LeftSemi"), s"EXISTS did not become a semi join:\n${plan.take(2000)}")

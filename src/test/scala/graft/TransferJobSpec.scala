@@ -137,7 +137,7 @@ class TransferJobSpec extends SparkTestBase {
       log = _ => ()).run() == TransferOutcome.SkippedComplete)
   }
 
-  test("parquet incremental over a hash-bucketed key degrades to a correct full re-transfer") {
+  test("parquet incremental over a string key degrades to a correct full re-transfer") {
     import org.apache.spark.sql.functions._
     val work = tempDir("pinch")
     val src0 = graft.sources.Tables(spark, sf, "customer")
@@ -294,7 +294,7 @@ class TransferJobSpec extends SparkTestBase {
     assert(dest.except(expectedCustomer).isEmpty)
   }
 
-  test("non-numeric PK falls back to deterministic hash buckets (token analog)") {
+  test("non-numeric PK is chunked by sampled keyset ranges and resumes after a kill") {
     import spark.implicits._
     val work = tempDir("xferh")
     Seq(("a", 1.0), ("b", 2.0), ("c", 3.0), ("d", 4.0), ("e", 5.0), ("f", 6.0))
@@ -400,7 +400,7 @@ class TransferJobSpec extends SparkTestBase {
     assert(dest.select("sku").distinct().count() == 40)
   }
 
-  test("hash-bucket resume skips the full count scan (VERDICT r3 #8)") {
+  test("a string-key resume reads its row total from the checkpoint, not a count scan") {
     import spark.implicits._
     val work = tempDir("xferbnc")
     (1 to 40).map(i => (s"sku$i", i.toDouble)).toDF("sku", "price")
@@ -416,8 +416,8 @@ class TransferJobSpec extends SparkTestBase {
     val cp = Checkpoint.load(s"$work/cp", "parquet",
       TableTransferJob.checkpointName(spec, t)).get
     assert(cp.totalRows == 40,
-      s"hash checkpoint must persist the row total at plan time, got $cp")
-    // record every job call-site during the resume: bucket writes only —
+      s"string-key checkpoint must persist the row total at plan time, got $cp")
+    // record every job call-site during the resume: chunk writes only —
     // a `source.count()` would appear as "count at TableTransferJob..."
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -798,7 +798,7 @@ class TransferJobSpec extends SparkTestBase {
     checkWaveContract(customerXform.copy(targetName = Some("cust_waves_range")), batch = 38)
   }
 
-  test("wave contract on the hash path: every chunk_parallelism and kill point") {
+  test("wave contract on a sampled string key: every chunk_parallelism and kill point") {
     checkWaveContract(customerXform.copy(targetName = Some("cust_waves_hash"),
       primaryKey = Some("c_name")), batch = 38)
   }
